@@ -79,7 +79,7 @@ object Bench {
       s""""total_median":$totalMed,"queries_median":${obj(medians)},""" +
       s""""sf":"$sfDir"}"""
     println(fullLine)
-    // Measurement-reporting fix (r14, disclosed in OPTIMIZATION_r14.md):
+    // Measurement-reporting fix (r14):
     // the full line above is ~11 KB for 170 queries and has outlived the
     // driver's 2000-char stdout tail every round (BENCH_r01..r13 all carry
     // parsed:null), so no optimization round has earned driver-verified

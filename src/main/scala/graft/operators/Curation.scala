@@ -68,9 +68,9 @@ object Curation extends QueryModule {
     * pass re-reads those instead of re-running the kernel (completed
     * map stages are skipped; narrow stages are not).
     *
-    * MEASURED at 10⁷ rows (rung figures in OPTIMIZATION_r14.md) and
-    * adopted per the winner; the bench SF had already measured the two
-    * forms a wash in r13 (0.67/0.73 vs 0.58/0.75 — noise band). */
+    * [[piiRedact]] keeps `sortExchange = false` until that rung's 10⁷-row
+    * result is recorded; the bench SF measured the two forms a wash in
+    * r13 (0.67/0.73 vs 0.58/0.75 — noise band). */
   private[graft] def piiRedactWith(s: SparkSession, d: String,
       sortExchange: Boolean): DataFrame = {
     import s.implicits._

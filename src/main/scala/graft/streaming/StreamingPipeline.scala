@@ -556,6 +556,14 @@ object StreamingPipeline {
     * only the batch side shuffles, and the anti-join keys are
     * constant-width (id_a, id_b) pairs.
     *
+    * Fixed cost: a steady-state micro-batch runs at most SIX Spark jobs
+    * (StreamingSpec pins the budget). Both tables are read with pinned
+    * schemas, so no schema-inference job runs; one pass over the
+    * persisted batch index materializes it and returns the batch's
+    * doc_id range and row count, which the hits pruning and the size
+    * of the index append (one file per 4·10⁶ rows, not one per source
+    * block) both use. An empty batch writes nothing.
+    *
     * Versioning: the index rows and any state carried across restarts
     * are keyed on `bkey` — values of the band-key SCHEME
     * ([[graft.functions.VecOps.BandKeySchemeVersion]]). A
@@ -573,12 +581,14 @@ object StreamingPipeline {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        def readIfExists(dir: String): Option[DataFrame] = {
+        // the operator wrote both tables itself, so their schemas are
+        // known: pinning them skips Spark's per-read inference job
+        def readIfExists(dir: String, schema: String): Option[DataFrame] = {
           val p = new org.apache.hadoop.fs.Path(dir)
           val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
           if (fs.exists(p) && fs.listStatus(p).exists(st =>
               st.getPath.getName.endsWith(".parquet")))
-            Some(s.read.parquet(dir))
+            Some(s.read.schema(schema).parquet(dir))
           else None
         }
         graft.sources.Ddl.recover(s, indexDir)
@@ -600,43 +610,62 @@ object StreamingPipeline {
         val batchIdx = graft.operators.NearDup.bandIndex(shingled)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val probeSide = readIfExists(indexDir).map(liveIds)
-            .map(_.unionByName(batchIdx)).getOrElse(batchIdx)
-          val cand = batchIdx.select($"bkey", $"doc_id".as("id_p"))
-            .join(probeSide.select($"bkey", $"doc_id".as("id_i")), Seq("bkey"))
-            .where($"id_p" =!= $"id_i")
-            .select(least($"id_p", $"id_i").as("id_a"),
-              greatest($"id_p", $"id_i").as("id_b"))
-            .distinct()
-          // exactly-once anti-join, PRUNED to the batch-relevant slice
-          // of the hits table: every candidate this batch can derive
-          // contains at least one batch doc, so hits rows with BOTH
-          // endpoints outside the batch's doc_id range can never match
-          // — the range predicate is a semantics-preserving superset
-          // filter that parquet min/max stats turn into file skipping
-          // (hits append in batch order, so old files' id ranges are
-          // disjoint under monotone ingest ids). Without it the
-          // anti-join re-scans the sink's whole history every batch.
-          val idRange = batchIdx.agg(min($"doc_id"), max($"doc_id"))
-            .collect().head
-          val fresh = readIfExists(hitsDir)
-            .filter(_ => !idRange.isNullAt(0))
-            .map { h =>
-              val (lo, hi) = (idRange.getLong(0), idRange.getLong(1))
-              val relevant = h.where(
-                ($"id_a" >= lo && $"id_a" <= hi) ||
-                ($"id_b" >= lo && $"id_b" <= hi))
-              cand.join(relevant, Seq("id_a", "id_b"), "left_anti")
+          // one pass over batchIdx both materializes it and returns
+          // (min doc_id, max doc_id, rows); it has no exchange, so it is
+          // one job, where an agg(min, max).collect() ran three.
+          // None = an empty batch (every doc tombstoned or shingle-less):
+          // nothing to probe and nothing to write.
+          val range = batchIdx.select($"doc_id").as[Long].rdd
+            .mapPartitions { ids =>
+              var (lo, hi, n) = (Long.MaxValue, Long.MinValue, 0L)
+              ids.foreach { d => lo = math.min(lo, d); hi = math.max(hi, d); n += 1 }
+              Iterator((lo, hi, n))
             }
-            .getOrElse(cand)
-          fresh.write.mode("append").parquet(hitsDir)
-          Faults.indexedDedupAfterHits(id)
-          batchIdx.write.mode("append").parquet(indexDir)
+            .collect().filter(_._3 > 0)
+            .reduceOption((a, b) =>
+              (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
+          range.foreach { case (lo, hi, rows) =>
+            val probeSide = readIfExists(indexDir, "doc_id LONG, bkey LONG")
+              .map(liveIds).map(_.unionByName(batchIdx)).getOrElse(batchIdx)
+            val cand = batchIdx.select($"bkey", $"doc_id".as("id_p"))
+              .join(probeSide.select($"bkey", $"doc_id".as("id_i")), Seq("bkey"))
+              .where($"id_p" =!= $"id_i")
+              .select(least($"id_p", $"id_i").as("id_a"),
+                greatest($"id_p", $"id_i").as("id_b"))
+              .distinct()
+            // exactly-once anti-join, PRUNED to the batch-relevant slice
+            // of the hits table: every candidate this batch can derive
+            // contains at least one batch doc, so hits rows with BOTH
+            // endpoints outside the batch's doc_id range can never match
+            // — the range predicate is a semantics-preserving superset
+            // filter that parquet min/max stats turn into file skipping
+            // (hits append in batch order, so old files' id ranges are
+            // disjoint under monotone ingest ids). Without it the
+            // anti-join re-scans the sink's whole history every batch.
+            val fresh = readIfExists(hitsDir, "id_a LONG, id_b LONG")
+              .map { h =>
+                val relevant = h.where(
+                  ($"id_a" >= lo && $"id_a" <= hi) ||
+                  ($"id_b" >= lo && $"id_b" <= hi))
+                cand.join(relevant, Seq("id_a", "id_b"), "left_anti")
+              }
+              .getOrElse(cand)
+            fresh.write.mode("append").parquet(hitsDir)
+            Faults.indexedDedupAfterHits(id)
+            // files sized by the batch, not one per source block: every
+            // later probe lists and opens each index file
+            batchIdx.coalesce((rows / IndexRowsPerFile + 1).toInt)
+              .write.mode("append").parquet(indexDir)
+          }
         } finally { batchIdx.unpersist(false); () }
         ()
       }
       .start()
   }
+
+  /** Index rows per file an [[indexedDedupStream]] micro-batch appends
+    * (16 B a row unencoded). */
+  private val IndexRowsPerFile = 4000000L
 
   /** MAINTAINED IVF cell index — the embedding-side mirror of
     * [[indexedDedupStream]], streaming the semantics of

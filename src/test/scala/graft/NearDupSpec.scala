@@ -511,6 +511,15 @@ class NearDupSpec extends SparkSpecBase {
     assert(total >= 1000000000000L - 100L * got.size * 5 - got.size)
   }
 
+  test("pagerank: iters = 0 is rejected up front, not a division by zero") {
+    import spark.implicits._
+    val pairs = Seq((1L, 2L), (2L, 3L)).toDF("id_a", "id_b")
+    val e = intercept[IllegalArgumentException] {
+      NearDup.pageRankOnPairs(pairs, iters = 0)
+    }
+    assert(e.getMessage.contains("iters"), e.getMessage)
+  }
+
   test("cluster sizes: census reconciles with the labels") {
     import spark.implicits._
     // collect labels FIRST: clusterSizes re-runs dedupClusters, whose

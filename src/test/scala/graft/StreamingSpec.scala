@@ -1528,6 +1528,152 @@ class StreamingSpec extends SparkSpecBase {
     assert(graft.sources.Ddl.tombstonesOf(spark, indexDir).isEmpty)
   }
 
+  /** Text of a 41-token band-index test doc; `edit` replaces one token,
+    * which keeps the doc a near-dup twin of the unedited one. */
+  private def bandDoc(from: Int, word: String, edit: Int = -1): String =
+    (from to from + 40).map(i => if (i == edit) "EDITED" else s"$word$i")
+      .mkString(" ")
+
+  private def parquetFiles(dir: String): Set[String] =
+    Option(new java.io.File(dir).listFiles()).toSeq.flatten
+      .map(_.getName).filter(_.endsWith(".parquet")).toSet
+
+  /** Jobs started while `body` runs, by the streaming micro-batch id
+    * Spark tags them with. Listener events arrive asynchronously but in
+    * order, so once a marker job's start is seen every earlier job has
+    * been counted. */
+  private def jobsByBatch(body: => Unit): Map[Long, Int] = {
+    val sc = spark.sparkContext
+    val jobs = scala.collection.mutable.Map.empty[Long, Int]
+    val fence = new java.util.concurrent.CountDownLatch(1)
+    val marker = "jobsByBatch fence"
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val props = Option(e.properties)
+        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .foreach(b => jobs(b.toLong) = jobs.getOrElse(b.toLong, 0) + 1)
+        if (props.exists(_.getProperty("spark.job.description") == marker))
+          fence.countDown()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
+    } finally sc.removeSparkListener(listener)
+    jobs.toMap
+  }
+
+  test("maintained band index: a steady-state micro-batch runs at most six Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
+    val stream = MemoryStream[(Long, String)]
+    val q = StreamingPipeline.indexedDedupStream(
+      stream.toDF().toDF("doc_id", "text"), indexDir, hitsDir, ckpt)
+    def hits(): Set[(Long, Long)] =
+      spark.read.parquet(hitsDir).as[(Long, Long)].collect().toSet
+    try {
+      // steady state: both tables exist and hold rows before the
+      // measured batch
+      stream.addData((1L, bandDoc(1, "token")), (2L, bandDoc(100, "word")))
+      q.processAllAvailable()
+      stream.addData((3L, bandDoc(1, "token", edit = 20)))
+      q.processAllAvailable()
+      assert(hits() === Set((1L, 3L)), hits())
+      val jobs = jobsByBatch {
+        stream.addData((4L, bandDoc(100, "word", edit = 120)),
+          (5L, bandDoc(200, "term")))
+        q.processAllAvailable()
+      }
+      val batch = q.lastProgress.batchId
+      assert(q.lastProgress.numInputRows === 2L)
+      val n = jobs.getOrElse(batch, 0)
+      assert(n >= 1 && n <= 6, s"micro-batch $batch ran $n jobs: $jobs")
+      assert(hits() === Set((1L, 3L), (2L, 4L)), hits())
+    } finally q.stop()
+  }
+
+  test("maintained band index: a micro-batch of several source blocks " +
+    "appends one index file and finds the single-block hit set") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val docs = Seq(
+      (3L, bandDoc(1, "token", edit = 20)), (4L, bandDoc(200, "term")),
+      (5L, bandDoc(100, "word", edit = 120)), (6L, bandDoc(200, "term", edit = 220)),
+      (7L, bandDoc(300, "item")), (8L, bandDoc(1, "token", edit = 30)))
+    /** Seeds the index with docs 1 and 2, then ingests `blocks` as ONE
+      * micro-batch: they are queued while the query is stopped, so the
+      * restart reads them together. Returns the index files that batch
+      * appended and the final hit set. */
+    def run(blocks: Seq[Seq[(Long, String)]]): (Int, Set[(Long, Long)]) = {
+      val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
+      val stream = MemoryStream[(Long, String)]
+      def start() = StreamingPipeline.indexedDedupStream(
+        stream.toDF().toDF("doc_id", "text"), indexDir, hitsDir, ckpt)
+      val q1 = start()
+      try {
+        stream.addData((1L, bandDoc(1, "token")), (2L, bandDoc(100, "word")))
+        q1.processAllAvailable()
+      } finally q1.stop()
+      val before = parquetFiles(indexDir)
+      blocks.foreach(b => stream.addData(b: _*))
+      val q2 = start()
+      try {
+        q2.processAllAvailable()
+        assert(q2.recentProgress.count(_.numInputRows > 0) === 1)
+      } finally q2.stop()
+      val added = parquetFiles(indexDir) -- before
+      (added.size, spark.read.parquet(hitsDir).as[(Long, Long)].collect().toSet)
+    }
+    val (oneFiles, oneHits) = run(Seq(docs))
+    val (manyFiles, manyHits) = run(docs.grouped(2).toSeq)
+    assert(Set((1L, 3L), (1L, 8L), (2L, 5L), (4L, 6L)).subsetOf(oneHits),
+      oneHits)
+    assert(manyHits === oneHits)
+    assert(oneFiles === 1)
+    assert(manyFiles === 1, s"3 source blocks appended $manyFiles index files")
+  }
+
+  test("maintained band index: a trigger whose docs are all tombstoned " +
+    "writes nothing, and the next trigger still finds its twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
+    val stream = MemoryStream[(Long, String)]
+    def start() = StreamingPipeline.indexedDedupStream(
+      stream.toDF().toDF("doc_id", "text"), indexDir, hitsDir, ckpt)
+    def hits(): Set[(Long, Long)] =
+      spark.read.parquet(hitsDir).as[(Long, Long)].collect().toSet
+    val q1 = start()
+    try {
+      stream.addData((1L, bandDoc(1, "token")), (2L, bandDoc(100, "word")))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // retract two docs before they arrive: their whole trigger is dead
+    StreamingPipeline.takedownDocs(spark, indexDir, hitsDir, Seq(3L, 4L))
+    val index0 = parquetFiles(indexDir); val hits0 = parquetFiles(hitsDir)
+    val rows0 = spark.read.parquet(indexDir).count()
+    val q2 = start()
+    try {
+      stream.addData((3L, bandDoc(1, "token", edit = 20)),
+        (4L, bandDoc(100, "word", edit = 120)))
+      q2.processAllAvailable()
+      assert(q2.exception.isEmpty)
+      assert(q2.lastProgress.numInputRows === 2L)
+      assert(parquetFiles(indexDir) === index0)
+      assert(parquetFiles(hitsDir) === hits0)
+      assert(spark.read.parquet(indexDir).count() === rows0)
+      assert(hits() === Set.empty, hits())
+      stream.addData((5L, bandDoc(1, "token", edit = 30)))
+      q2.processAllAvailable()
+      assert(hits() === Set((1L, 5L)), hits())
+    } finally q2.stop()
+  }
+
   test("maintained IVF cell index, TWO-LEVEL quantizer: same hit " +
     "semantics, crash replay exact, restart rebuilds the structure") {
     implicit val sqlCtx = spark.sqlContext
