@@ -8,9 +8,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   /** Time each selected query `iters` times through the noop sink;
     * returns SUCCESSFUL iteration times sorted ascending per query (an
-    * empty seq = the query failed every iteration). Shared by the
-    * reporting main below and [[graft.tools.BenchGate]] so the gate
-    * measures exactly what the round artifact reports. */
+    * empty seq = the query failed every iteration; each failed
+    * iteration is named on stderr). Shared by the reporting main below
+    * and [[graft.tools.BenchGate]] so the gate measures exactly what the
+    * round artifact reports. */
   def time(spark: SparkSession, sfDir: String, iters: Int,
       selected: Seq[(String, (SparkSession, String) =>
         org.apache.spark.sql.DataFrame)]): Seq[(String, Seq[Double])] =
@@ -20,27 +21,15 @@ object Bench {
         try {
           fn(spark, sfDir).write.format("noop").mode("overwrite").save()
           Some((System.nanoTime() - t0) / 1e9)
-        } catch { case _: Throwable => None }
+        } catch { case e: Throwable => failed(name, e); None }
       }
       name -> times.sorted
     }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // one warm-up pass of the flagship so JVM/codegen startup isn't
-    // attributed to the first measured query
-    try SparkEntry.queries("q_delivery_gap")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    warmUp(spark, sfDir)
     // three timed iterations, report the min: machine noise on this
     // shared host swings single runs by 2x (an entire round-5 bench
     // window was contaminated that way), and min-of-3 gives one more
@@ -97,4 +86,18 @@ object Bench {
       s""""sf":"$sfDir"}""")
     spark.stop()
   }
+
+  /** One stderr line per failed run (a multi-line message is joined),
+    * so a `-1` in the report has a named cause; stdout keeps only the
+    * JSON lines. */
+  def failed(name: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
+      s"${e.getMessage}".linesIterator.mkString(" "))
+
+  /** One untimed pass of the flagship, so JVM/codegen startup isn't
+    * attributed to the first measured query. */
+  def warmUp(spark: SparkSession, sfDir: String): Unit =
+    try SparkEntry.queries("q_delivery_gap")(spark, sfDir)
+      .write.format("noop").mode("overwrite").save()
+    catch { case e: Throwable => failed("q_delivery_gap", e) }
 }

@@ -9,7 +9,7 @@ import graft.functions._
 /** SQL-surface registration of the native expressions, so `spark.sql`
   * users get the same operators as the Column API:
   *
-  *   SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   <session builder>.withExtensions(new GraftExtensions) ...
   *   spark.sql("SELECT simhash64(text), array_dot(a, b) FROM docs")
   *
   * (The `SparkSessionExtensions` hook is also where a custom
@@ -17,56 +17,19 @@ import graft.functions._
   * none — SURVEY §4.1: Catalyst covers every reference capability.)
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  import GraftExtensions.intArg
-
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      new FunctionIdentifier("simhash64"),
-      new ExpressionInfo(classOf[SimHash64].getName, "simhash64"),
-      (args: Seq[Expression]) => SimHash64(args.head)))
-    ext.injectFunction((
-      new FunctionIdentifier("array_dot"),
-      new ExpressionInfo(classOf[ArrayDot].getName, "array_dot"),
-      (args: Seq[Expression]) => ArrayDot(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("lsh_buckets"),
-      new ExpressionInfo(classOf[LshBucketsExpr].getName, "lsh_buckets"),
-      (args: Seq[Expression]) => LshBucketsExpr(args(0),
-        intArg(args(1), "tables"), intArg(args(2), "bits"))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_sig"),
-      new ExpressionInfo(classOf[MinHashSigExpr].getName, "minhash_sig"),
-      (args: Seq[Expression]) => MinHashSigExpr(args(0),
-        intArg(args(1), "perms"))))
-    ext.injectFunction((
-      new FunctionIdentifier("intersect_count"),
-      new ExpressionInfo(classOf[IntersectCountExpr].getName,
-        "intersect_count"),
-      (args: Seq[Expression]) => IntersectCountExpr(args(0), args(1))))
-    ext.injectFunction((
-      new FunctionIdentifier("text_shingles"),
-      new ExpressionInfo(classOf[TextShinglesExpr].getName, "text_shingles"),
-      (args: Seq[Expression]) => TextShinglesExpr(args(0),
-        intArg(args(1), "n"))))
-    ext.injectFunction((
-      new FunctionIdentifier("band_keys"),
-      new ExpressionInfo(classOf[BandKeysExpr].getName, "band_keys"),
-      (args: Seq[Expression]) => BandKeysExpr(args(0),
-        intArg(args(1), "bands"), intArg(args(2), "rows"))))
-    ext.injectFunction((
-      new FunctionIdentifier("minhash_band_keys"),
-      new ExpressionInfo(classOf[MinHashBandKeysExpr].getName,
-        "minhash_band_keys"),
-      (args: Seq[Expression]) => MinHashBandKeysExpr(args(0),
-        intArg(args(1), "perms"), intArg(args(2), "bands"))))
-    ext.injectFunction((
-      new FunctionIdentifier("pii_scan"),
-      new ExpressionInfo(classOf[PiiScanExpr].getName, "pii_scan"),
-      (args: Seq[Expression]) => PiiScanExpr(args.head)))
-  }
+  override def apply(ext: SparkSessionExtensions): Unit =
+    GraftExtensions.Functions.foreach { f =>
+      ext.injectFunction((new FunctionIdentifier(f.name),
+        new ExpressionInfo(f.cls.getName, f.name), f.build))
+    }
 }
 
 object GraftExtensions {
+
+  /** One SQL function: its name, the expression class it builds, and
+    * the builder from call arguments. */
+  final case class Fn(name: String, cls: Class[_ <: Expression],
+      build: Seq[Expression] => Expression)
 
   private def intArg(e: Expression, what: String): Int = e match {
     case Literal(v: Int, _) => v
@@ -74,31 +37,33 @@ object GraftExtensions {
       s"$what must be an integer literal, got $other")
   }
 
+  /** The single function table: builder-time injection ([[GraftExtensions]])
+    * and runtime registration ([[register]]) both iterate over it. */
+  val Functions: Seq[Fn] = Seq(
+    Fn("simhash64", classOf[SimHash64], args => SimHash64(args.head)),
+    Fn("array_dot", classOf[ArrayDot], args => ArrayDot(args(0), args(1))),
+    Fn("lsh_buckets", classOf[LshBucketsExpr], args =>
+      LshBucketsExpr(args(0), intArg(args(1), "tables"),
+        intArg(args(2), "bits"))),
+    Fn("minhash_sig", classOf[MinHashSigExpr], args =>
+      MinHashSigExpr(args(0), intArg(args(1), "perms"))),
+    Fn("intersect_count", classOf[IntersectCountExpr], args =>
+      IntersectCountExpr(args(0), args(1))),
+    Fn("text_shingles", classOf[TextShinglesExpr], args =>
+      TextShinglesExpr(args(0), intArg(args(1), "n"))),
+    Fn("band_keys", classOf[BandKeysExpr], args =>
+      BandKeysExpr(args(0), intArg(args(1), "bands"),
+        intArg(args(2), "rows"))),
+    Fn("minhash_band_keys", classOf[MinHashBandKeysExpr], args =>
+      MinHashBandKeysExpr(args(0), intArg(args(1), "perms"),
+        intArg(args(2), "bands"))))
+
   /** Runtime registration for an ALREADY-built session (builder-time
     * extensions only apply to new sessions; `getOrCreate` on an existing
     * one ignores `withExtensions`). */
   def register(spark: org.apache.spark.sql.SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
-    reg.createOrReplaceTempFunction("simhash64",
-      args => SimHash64(args.head), "built-in")
-    reg.createOrReplaceTempFunction("array_dot",
-      args => ArrayDot(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("lsh_buckets",
-      args => LshBucketsExpr(args(0), intArg(args(1), "tables"),
-        intArg(args(2), "bits")), "built-in")
-    reg.createOrReplaceTempFunction("minhash_sig",
-      args => MinHashSigExpr(args(0), intArg(args(1), "perms")), "built-in")
-    reg.createOrReplaceTempFunction("intersect_count",
-      args => IntersectCountExpr(args(0), args(1)), "built-in")
-    reg.createOrReplaceTempFunction("text_shingles",
-      args => TextShinglesExpr(args(0), intArg(args(1), "n")), "built-in")
-    reg.createOrReplaceTempFunction("band_keys",
-      args => BandKeysExpr(args(0), intArg(args(1), "bands"),
-        intArg(args(2), "rows")), "built-in")
-    reg.createOrReplaceTempFunction("minhash_band_keys",
-      args => MinHashBandKeysExpr(args(0), intArg(args(1), "perms"),
-        intArg(args(2), "bands")), "built-in")
-    reg.createOrReplaceTempFunction("pii_scan",
-      args => PiiScanExpr(args.head), "built-in")
+    Functions.foreach(f =>
+      reg.createOrReplaceTempFunction(f.name, f.build, "built-in"))
   }
 }

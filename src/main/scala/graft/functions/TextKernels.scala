@@ -124,155 +124,6 @@ object NormalizeText {
     GraftShims.column(NormalizeTextExpr(GraftShims.toExpression(c)))
 }
 
-/** Single-expression PII scan: the three match counts on the ORIGINAL
-  * text plus the email→ip→phone sequential redaction, in one call.
-  *
-  * Semantics are EXACTLY Spark's: the same `java.util.regex` engine
-  * Spark's regexp_* expressions run (counts = the find() loop behind
-  * regexp_extract_all's size; redaction = Matcher.replaceAll, identical
-  * to chained regexp_replace for these replacement literals, which
-  * contain no $ or \ references). What the fusion removes is the
-  * per-expression plumbing: ONE UTF8String→String conversion instead of
-  * six, no intermediate replaced-string columns materialized between
-  * the chain's links, no per-match UTF8String array built just to be
-  * size()d. The regex traversals themselves remain — hand-rolling
-  * leftmost-greedy-with-backtracking byte scanners for these patterns
-  * is a correctness minefield the measured win doesn't justify.
-  *
-  * Patterns are the conservative RE2-subset trio shared with the DuckDB
-  * oracle (kept in sync by [[graft.operators.Curation]] referencing
-  * these constants). */
-object PiiScan {
-  val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
-  val IpRe = "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
-  val PhoneRe = "\\b555-[0-9]{4}\\b"
-  private val email = java.util.regex.Pattern.compile(EmailRe)
-  private val ip = java.util.regex.Pattern.compile(IpRe)
-  private val phone = java.util.regex.Pattern.compile(PhoneRe)
-
-  private def count(p: java.util.regex.Pattern, in: String): Long = {
-    val m = p.matcher(in)
-    var c = 0L
-    while (m.find()) c += 1L
-    c
-  }
-
-  /** Codegen entry point: (n_emails, n_ips, n_phones, redacted). */
-  def eval(s: UTF8String): org.apache.spark.sql.catalyst.InternalRow = {
-    val str = s.toString
-    val redacted = phone.matcher(
-      ip.matcher(
-        email.matcher(str).replaceAll("<EMAIL>"))
-        .replaceAll("<IP>"))
-      .replaceAll("<PHONE>")
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](count(email, str), count(ip, str), count(phone, str),
-        UTF8String.fromString(redacted)))
-  }
-
-  /** Column API: struct<n_emails,n_ips,n_phones,redacted>. */
-  def pii_scan(c: Column): Column =
-    GraftShims.column(PiiScanExpr(GraftShims.toExpression(c)))
-}
-
-case class PiiScanExpr(child: Expression) extends UnaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_emails", LongType, false),
-    org.apache.spark.sql.types.StructField("n_ips", LongType, false),
-    org.apache.spark.sql.types.StructField("n_phones", LongType, false),
-    org.apache.spark.sql.types.StructField("redacted",
-      org.apache.spark.sql.types.StringType, false)))
-  override def nullSafeEval(v: Any): Any =
-    PiiScan.eval(v.asInstanceOf[UTF8String])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.PiiScan.eval($c)")
-  override protected def withNewChildInternal(c: Expression): PiiScanExpr =
-    copy(child = c)
-}
-
-/** Row-local duplicated-span token rewrite: the final stage of
-  * span_scrub — drop every token whose 1-based position falls inside
-  * any covered interval, rejoin with single spaces — as one primitive
-  * walk instead of a nested interpreted HOF
-  * (filter(tokens, !exists(iv, ...)) evaluates its lambda
-  * tokens × intervals times on the interpreted path).
-  *
-  * Token semantics are exactly `split(text, " ")` (Spark's limit −1
-  * split: runs of spaces yield empty tokens, trailing empties KEPT) and
-  * the rejoin is `array_join(..., " ")` — pinned against the HOF form
-  * by the gate hash. Intervals arrive as array<struct<s,e>> (disjoint
-  * islands); the walk sorts them by start and advances one pointer, so
-  * per-token work is O(1) amortized rather than O(intervals). */
-object ScrubSpans {
-  /** Codegen entry point: (n_tokens, clean_text). */
-  def eval(text: UTF8String,
-      iv: org.apache.spark.sql.catalyst.util.ArrayData)
-      : org.apache.spark.sql.catalyst.InternalRow = {
-    val str = text.toString
-    // split(" ", -1): single-space separator, empties kept
-    val toks = new scala.collection.mutable.ArrayBuffer[String]()
-    var start = 0
-    var i = 0
-    val n = str.length
-    while (i <= n) {
-      if (i == n || str.charAt(i) == ' ') {
-        toks += str.substring(start, i)
-        start = i + 1
-      }
-      i += 1
-    }
-    val m = iv.numElements()
-    val ss = new Array[Int](m)
-    val es = new Array[Int](m)
-    var k = 0
-    while (k < m) {
-      val row = iv.getStruct(k, 2)
-      ss(k) = row.getInt(0); es(k) = row.getInt(1)
-      k += 1
-    }
-    // sort intervals by start (collect_list order is not guaranteed)
-    val order = (0 until m).sortBy(ss)
-    val sb = new java.lang.StringBuilder(str.length)
-    var oi = 0 // index into order
-    var first = true
-    var t = 0
-    while (t < toks.length) {
-      val pos = t + 1 // 1-based
-      while (oi < m && es(order(oi)) < pos) oi += 1
-      val covered = oi < m && ss(order(oi)) <= pos && pos <= es(order(oi))
-      if (!covered) {
-        if (!first) sb.append(' ')
-        sb.append(toks(t))
-        first = false
-      }
-      t += 1
-    }
-    new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(
-      Array[Any](toks.length.toLong, UTF8String.fromString(sb.toString)))
-  }
-
-  /** Column API: struct<n_tokens,clean_text>. */
-  def scrub_spans(text: Column, iv: Column): Column =
-    GraftShims.column(ScrubSpansExpr(GraftShims.toExpression(text),
-      GraftShims.toExpression(iv)))
-}
-
-case class ScrubSpansExpr(left: Expression, right: Expression)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  override def dataType: DataType = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("n_tokens", LongType, false),
-    org.apache.spark.sql.types.StructField("clean_text",
-      org.apache.spark.sql.types.StringType, false)))
-  override def nullSafeEval(a: Any, b: Any): Any =
-    ScrubSpans.eval(a.asInstanceOf[UTF8String],
-      b.asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData])
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev,
-      (a, b) => s"graft.functions.ScrubSpans.eval($a, $b)")
-  override protected def withNewChildrenInternal(
-      l: Expression, r: Expression): ScrubSpansExpr = copy(l, r)
-}
-
 /** Native Catalyst expression form of [[NormalizeText]]. */
 case class NormalizeTextExpr(child: Expression) extends UnaryExpression {
   override def dataType: DataType =

@@ -28,13 +28,12 @@ object Curation extends QueryModule {
     size(regexp_extract_all(c, lit(re), lit(0))).cast("long")
 
   /** Conservative RE2-subset patterns (no lookaround, no backreference)
-    * so Java regex (Spark) and RE2 (DuckDB) agree match-for-match.
-    * The strings live on [[graft.functions.PiiScan]] (the fused kernel
-    * compiles them once); these aliases keep the oracle SQL and the
-    * regex-chain fallback reading from the same source. */
-  private[graft] val EmailRe = graft.functions.PiiScan.EmailRe
-  private[graft] val IpRe = graft.functions.PiiScan.IpRe
-  private[graft] val PhoneRe = graft.functions.PiiScan.PhoneRe
+    * so Java regex (Spark) and RE2 (DuckDB) agree match-for-match; the
+    * oracle SQL and the regex chain both read these. */
+  private[graft] val EmailRe = "[a-z0-9._%+-]+@[a-z0-9.-]+\\.[a-z]{2,}"
+  private[graft] val IpRe =
+    "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
+  private[graft] val PhoneRe = "\\b555-[0-9]{4}\\b"
 
   /** Redaction pipeline over a text column: emails, then IPv4s, then
     * phone-shaped numbers, each replaced by a typed tag. Email runs
@@ -85,33 +84,18 @@ object Curation extends QueryModule {
     val base = graft.ops.Par.spread(
       Tables.documents(s, d).select($"doc_id", planted.as("aug")),
       $"doc_id")
-    // DEFAULT: the 6-expression regexp chain. The fused
-    // single-expression kernel ([[graft.functions.PiiScan]] — same
-    // java.util.regex engine, one string conversion instead of six) was
-    // built and A/B'd per the round-9 plan and measured a WASH: sf0.1
-    // min-of-3 0.930 vs 0.928 s, 10⁶ single-run 4.41 vs 4.77 s (±8%
-    // host band) — the regex traversals dominate and Spark's regexp
-    // machinery already caches compiled patterns, so the plumbing the
-    // fusion removes wasn't the cost. Landed per the "only if faster"
-    // rule: chain stays default, kernel selectable
-    // (SPARK_GRAFT_PII=kernel) and fuzz-pinned for re-adjudication.
-    val scanned =
-      if (sys.env.getOrElse("SPARK_GRAFT_PII", "regex") == "regex")
-        base.select(
-          $"doc_id",
-          nMatches($"aug", EmailRe).as("n_emails"),
-          nMatches($"aug", IpRe).as("n_ips"),
-          nMatches($"aug", PhoneRe).as("n_phones"),
-          md5(redactPii($"aug")).as("red_fp"))
-      else
-        base.select($"doc_id",
-            graft.functions.PiiScan.pii_scan($"aug").as("p"))
-          .select(
-            $"doc_id",
-            $"p.n_emails".as("n_emails"),
-            $"p.n_ips".as("n_ips"),
-            $"p.n_phones".as("n_phones"),
-            md5($"p.redacted").as("red_fp"))
+    // The six-expression regexp chain is the only form: a fused
+    // single-expression kernel (same java.util.regex engine, one string
+    // conversion instead of six) measured a wash (kernel vs this chain:
+    // sf0.1 min-of-3 0.930 vs 0.928 s, 10⁶ single run 4.41 vs 4.77 s,
+    // ±8% host band) — the regex traversals dominate, and Spark already
+    // caches the compiled patterns.
+    val scanned = base.select(
+      $"doc_id",
+      nMatches($"aug", EmailRe).as("n_emails"),
+      nMatches($"aug", IpRe).as("n_ips"),
+      nMatches($"aug", PhoneRe).as("n_phones"),
+      md5(redactPii($"aug")).as("red_fp"))
     (if (sortExchange) scanned.repartition($"doc_id") else scanned)
       .orderBy($"doc_id")
   }
@@ -820,7 +804,7 @@ object Curation extends QueryModule {
                  - CAST(n_batch AS DOUBLE) / t_batch) AS share_gap
         FROM h CROSS JOIN t ORDER BY bucket""")),
     QueryDef(
-      "q_pii_redact", piiRedact(_, _), Some("""
+      "q_pii_redact", piiRedact(_, _), Some(s"""
         WITH a AS (
           SELECT doc_id,
                  text || ' mail u' || CAST(doc_id AS VARCHAR) || '@ex'
@@ -831,18 +815,18 @@ object Curation extends QueryModule {
           FROM documents)
         SELECT doc_id,
                CAST(len(regexp_extract_all(aug,
-                 '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}')) AS BIGINT)
+                 '$EmailRe')) AS BIGINT)
                  AS n_emails,
                CAST(len(regexp_extract_all(aug,
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b'))
+                 '$IpRe'))
                  AS BIGINT) AS n_ips,
-               CAST(len(regexp_extract_all(aug, '\b555-[0-9]{4}\b'))
+               CAST(len(regexp_extract_all(aug, '$PhoneRe'))
                  AS BIGINT) AS n_phones,
                md5(regexp_replace(regexp_replace(regexp_replace(aug,
-                 '[a-z0-9._%+-]+@[a-z0-9.-]+\.[a-z]{2,}', '<EMAIL>', 'g'),
-                 '\b[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\.[0-9]{1,3}\b',
+                 '$EmailRe', '<EMAIL>', 'g'),
+                 '$IpRe',
                  '<IP>', 'g'),
-                 '\b555-[0-9]{4}\b', '<PHONE>', 'g')) AS red_fp
+                 '$PhoneRe', '<PHONE>', 'g')) AS red_fp
         FROM a ORDER BY doc_id""")),
     QueryDef(
       "q_mix_sample", mixtureSample(_, _), Some(s"""

@@ -78,57 +78,33 @@ object NearDup extends QueryModule {
   /** Signature width shared with the streaming dedup. */
   private[graft] def permCount: Int = Perms
 
-  /** Distinct candidate pairs from a banded (doc_id, bkey) table.
+  /** Distinct candidate pairs from a banded (doc_id, bkey) table: a
+    * self-join on the single-long band key. The two sides are
+    * canonically identical, so Spark's ReuseExchange computes the
+    * shuffle ONCE; the sorted merge join streams runs without
+    * materializing per-bucket lists.
     *
-    * Two hash-identical forms, A/B'd at 10⁶ AND 10⁷ (ScaleBench
-    * `lsh_anatomy`, xor-checksum equal):
+    * Why the join is the only form (ScaleBench `lsh_anatomy`,
+    * xor-checksum equal): a single-shuffle bucket form (groupBy bkey,
+    * collect each bucket's id list, emit ordered pairs map-side) won
+    * slightly at 10⁶ (5.6 vs 6.3 s) but lost at 10⁷ — verified pairs
+    * 102.1 s against the join's 79.2 s (join candidates alone: 52.8 s).
+    * At 10⁷ rows per partition its collect_list object aggregate falls
+    * back to sort-based with a per-bucket array allocation, costing
+    * more than the merge join it avoids.
     *
-    *  - "join" (DEFAULT — the measured 10⁷ winner): self-join on the
-    *    single-long band key. The two sides are canonically identical,
-    *    so Spark's ReuseExchange computes the shuffle ONCE; the sorted
-    *    merge join streams runs without materializing per-bucket lists.
-    *    10⁷: candidates 52.8 s, verified pairs 79.2 s.
-    *  - "bucket" (SPARK_GRAFT_LSH_PAIRS=bucket): one explicit shuffle —
-    *    groupBy bkey, collect each bucket's id list, emit ordered pairs
-    *    map-side. Wins slightly at 10⁶ (5.6 vs 6.3 s) but loses at 10⁷
-    *    (verified 102.1 vs 79.2 s): at 10⁷ rows per partition the
-    *    collect_list object aggregate falls back to sort-based with a
-    *    per-bucket array allocation, costing more than the merge join
-    *    it avoids. Kept selectable — on a network-bound fabric where
-    *    moving the band stream into TWO join-side sorts is the binding
-    *    cost, the trade can reverse; re-adjudicate with the rung.
-    *
-    * Either way the per-bucket candidate count is governed by the
-    * duplicate-family size (LSH buckets are near-dup clusters, not
-    * corpus partitions), never a corpus² product. */
-  private[graft] def candidatesFromBands(banded: DataFrame,
-      form: String = sys.env.getOrElse("SPARK_GRAFT_LSH_PAIRS", "join"))
-      : DataFrame = {
+    * The per-bucket candidate count is governed by the duplicate-family
+    * size (LSH buckets are near-dup clusters, not corpus partitions),
+    * never a corpus² product. */
+  private[graft] def candidatesFromBands(banded: DataFrame): DataFrame = {
     val s = banded.sparkSession
     import s.implicits._
-    if (form == "join") {
-      val a = banded.select($"bkey", $"doc_id".as("id_a"))
-      val b = banded.select($"bkey", $"doc_id".as("id_b"))
-      a.join(b, Seq("bkey"))
-        .where($"id_a" < $"id_b")
-        .select($"id_a", $"id_b")
-        .distinct()
-    } else {
-      banded.groupBy($"bkey")
-        .agg(collect_list($"doc_id").as("ids"))
-        .where(size($"ids") > 1)
-        .select(array_sort($"ids").as("ids"))
-        // ordered pairs (i < j) from the sorted list; the lambda runs
-        // only on non-singleton buckets, so its interpreted evaluation
-        // is off the hot path (the hot path is the aggregate above)
-        .select(explode(flatten(transform($"ids", (x, i) =>
-          transform(
-            slice($"ids", i + lit(2),
-              greatest(size($"ids") - i - lit(1), lit(0))),
-            y => struct(x.as("id_a"), y.as("id_b")))))).as("p"))
-        .select($"p.id_a".as("id_a"), $"p.id_b".as("id_b"))
-        .distinct()
-    }
+    val a = banded.select($"bkey", $"doc_id".as("id_a"))
+    val b = banded.select($"bkey", $"doc_id".as("id_b"))
+    a.join(b, Seq("bkey"))
+      .where($"id_a" < $"id_b")
+      .select($"id_a", $"id_b")
+      .distinct()
   }
 
   /** Near-duplicate pairs: LSH candidates verified with exact shingle

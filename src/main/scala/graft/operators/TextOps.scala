@@ -520,36 +520,22 @@ object TextOps extends QueryModule {
       .select($"doc_id", $"text",
         coalesce($"iv", array().cast("array<struct<s:int,e:int>>")).as("iv"),
         coalesce($"covered", lit(0L)).as("n_covered"))
-    // DEFAULT: the higher-order-function rewrite. The native
-    // interval-walk kernel ([[graft.functions.ScrubSpans]]) was built
-    // and A/B'd per the round-9 plan and did NOT win — sf0.1 min-of-3
-    // 1.305 (hof) vs 1.294 s (kernel), 10⁶ single-run 23.4 vs 25.1 s:
+    // The higher-order-function rewrite is the only form: a native
+    // interval-walk kernel measured no faster (this form vs the kernel:
+    // sf0.1 min-of-3 1.305 vs 1.294 s, 10⁶ single run 23.4 vs 25.1 s) —
     // this query's cost is the duplicated-span join, and the covered
     // interval lists are short enough that the interpreted
-    // filter/exists lambda never shows. Landed per the "only if
-    // faster" rule: HOF stays default, kernel selectable
-    // (SPARK_GRAFT_SCRUB=kernel) and fuzz-pinned for re-adjudication.
-    if (sys.env.getOrElse("SPARK_GRAFT_SCRUB", "hof") == "hof")
-      joined
-        .select($"doc_id", split($"text", " ").as("t"), $"iv", $"n_covered")
-        .select($"doc_id",
-          size($"t").cast("long").as("n_tokens"),
-          $"n_covered",
-          array_join(
-            filter($"t", (x, idx) =>
-              !exists($"iv", v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
-            " ").as("clean_text"))
-        .orderBy($"doc_id")
-    else
-      joined
-        .select($"doc_id",
-          graft.functions.ScrubSpans.scrub_spans($"text", $"iv").as("sc"),
-          $"n_covered")
-        .select($"doc_id",
-          $"sc.n_tokens".as("n_tokens"),
-          $"n_covered",
-          $"sc.clean_text".as("clean_text"))
-        .orderBy($"doc_id")
+    // filter/exists lambda never shows.
+    joined
+      .select($"doc_id", split($"text", " ").as("t"), $"iv", $"n_covered")
+      .select($"doc_id",
+        size($"t").cast("long").as("n_tokens"),
+        $"n_covered",
+        array_join(
+          filter($"t", (x, idx) =>
+            !exists($"iv", v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
+          " ").as("clean_text"))
+      .orderBy($"doc_id")
   }
 
   /** Per-document NOVELTY score — the fraction of a document's DISTINCT

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-query bench regression gate — the ENFORCED form of
   * BENCH_BASELINE.md's per-query table, rebased in round 12 to the
   * ROUND-11 MEDIANS of record (bench_r11_full.json queries_median:
@@ -278,18 +276,8 @@ object BenchGate {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse(
       sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1"))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    try graft.SparkEntry.queries("q_delivery_gap")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
+    graft.Bench.warmUp(spark, sfDir)
     val iters = math.max(1,
       sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt)
     val timed = graft.Bench.time(spark, sfDir, iters,

@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Writes one `plans/<dir>/<query>_<suffix>.txt` file per requested
   * query with its `explain("formatted")` output — the before/after
@@ -23,16 +21,8 @@ object DumpPlanFiles {
     require(args.length >= 3, "usage: DumpPlanFiles <roundDir> <suffix> <query>...")
     val (dir, suffix, names) = (args(0), args(1), args.drop(2).toSeq)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-plan-files")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
+      appName = Some("graft-plan-files"), logLevel = "ERROR")
     val out = Paths.get(s"plans/$dir")
     Files.createDirectories(out)
     names.foreach { name =>

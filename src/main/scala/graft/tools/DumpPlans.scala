@@ -2,9 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
-import graft.SparkEntry
+import graft.{Sessions, SparkEntry}
 
 /** Writes PLANS.md: the formatted physical plan of each representative
   * query, as reviewable evidence of the scale-relevant plan properties
@@ -98,14 +96,8 @@ object DumpPlans {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-plans")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local("4", appName = Some("graft-plans"),
+      logLevel = "ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — formatted physical plans of representative queries\n\n")
     sb.append(s"Generated by `graft.tools.DumpPlans` at $sfDir. What to look\n")

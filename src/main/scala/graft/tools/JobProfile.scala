@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Per-JOB wall-time profile of one or more registered queries — the
   * measurement companion to [[graft.Bench]] (guide §1: find where the
@@ -19,15 +18,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, JobRow]()
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String, Int)]()
@@ -59,10 +50,7 @@ object JobProfile {
     }
     spark.sparkContext.addSparkListener(listener)
 
-    // warm-up so JVM/codegen startup is not attributed to the first query
-    try graft.SparkEntry.queries("q_delivery_gap")(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    graft.Bench.warmUp(spark, sfDir)
 
     val iters = sys.env.getOrElse("SPARK_GRAFT_PROFILE_ITERS", "3").toInt
     names.foreach { name =>

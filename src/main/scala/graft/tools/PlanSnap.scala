@@ -2,8 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
-
 /** Writes `plans/<dir>/<query>_<tag>.txt` — the `.explain("formatted")`
   * output of each named query — as the before/after plan evidence an
   * optimization round commits next to its bench numbers.
@@ -16,15 +14,8 @@ object PlanSnap {
     val tag = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.Sessions.local(
+      sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"), logLevel = "ERROR")
     Files.createDirectories(Paths.get(s"plans/$dir"))
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

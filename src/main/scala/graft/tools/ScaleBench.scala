@@ -160,18 +160,13 @@ object ScaleBench {
     // single-host harness bound, not an engine shape. ≤10⁷ keeps lz4
     // so prior figures' conditions are unchanged.
     val shuffleCodec = if (n > 10000000L) "zstd" else "lz4"
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .appName("graft-scale")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", shuffleParts))
-      .config("spark.io.compression.codec",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", shuffleCodec))
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    def session(appName: String): SparkSession =
+      graft.Sessions.local("32", appName = Some(appName),
+        shufflePartitions =
+          Some(sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", shuffleParts)),
+        conf = Map("spark.io.compression.codec" ->
+          sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", shuffleCodec)))
+    val spark = session("graft-scale")
     import spark.implicits._
 
     val dir = java.nio.file.Files.createTempDirectory("graft-scale").toString
@@ -292,8 +287,7 @@ object ScaleBench {
     time("span_scrub") {
       graft.operators.TextOps.spanScrub(spark, dir)
     }
-    // PII scan+redact: row-local regex work — the fused-kernel-vs-chain
-    // A/B runs this shape under SPARK_GRAFT_PII=kernel|regex
+    // PII scan+redact: row-local regex work
     time("pii_redact") {
       graft.operators.Curation.piiRedact(spark, dir)
     }
@@ -328,13 +322,10 @@ object ScaleBench {
       graft.operators.TextOps.curateCorpus(spark, curDir)
     }
     // LSH candidate-stage anatomy — explicit opt-in
-    // (SPARK_GRAFT_SCALE_ONLY=lsh_anatomy): A/Bs the two candidate-pair
-    // forms (band self-join vs single-shuffle bucket aggregation) on
-    // the same banded stream, with the narrow signature pass timed
-    // alone as the floor, plus the full verified pairsOver under each
-    // form. Row-count + xxhash identity is printed per form — the
-    // adjudication record for which form candidatesFromBands defaults
-    // to.
+    // (SPARK_GRAFT_SCALE_ONLY=lsh_anatomy): the band self-join
+    // candidate stage on the banded stream, with the scan, shingle,
+    // signature and banding passes timed alone as its floors, plus the
+    // full verified pairs. Row count + xxhash are printed per shape.
     // same checksum materialization as `time`, minus the name filter —
     // for rungs (lsh_anatomy, salt_vs_aqe) whose opt-in gate is the rung
     // key itself and whose inner shapes print rows + xor for identity
@@ -369,31 +360,27 @@ object ScaleBench {
       timeA("lsh_banded_narrow") {
         graft.operators.NearDup.bandedOver(docs)
       }
-      for (form <- Seq("join", "bucket")) {
-        timeA(s"lsh_candidates_$form") {
-          graft.operators.NearDup.candidatesFromBands(
-            graft.operators.NearDup.bandedOver(docs), form)
-        }
+      timeA("lsh_candidates_join") {
+        graft.operators.NearDup.candidatesFromBands(
+          graft.operators.NearDup.bandedOver(docs))
       }
-      for (form <- Seq("join", "bucket")) {
-        // the historical UNBOUNDED verify shape (full-corpus shingle
-        // join on both sides) — kept as the comparison record for the
-        // candidate-bounded default below
-        timeA(s"lsh_verified_pairs_$form") {
-          graft.operators.NearDup.candidatesFromBands(
-            graft.operators.NearDup.bandedOver(docs), form)
-            .join(docs.select($"doc_id".as("id_a"),
-              graft.functions.VectorExpressions
-                .text_shingles($"text", 3).as("sh_a")), Seq("id_a"))
-            .join(docs.select($"doc_id".as("id_b"),
-              graft.functions.VectorExpressions
-                .text_shingles($"text", 3).as("sh_b")), Seq("id_b"))
-            .withColumn("n_common", graft.functions.VectorExpressions
-              .intersect_count($"sh_a", $"sh_b"))
-            .where($"n_common".cast("double") /
-              (size($"sh_a") + size($"sh_b") - $"n_common") >= 0.8)
-            .select($"id_a", $"id_b")
-        }
+      // the historical UNBOUNDED verify shape (full-corpus shingle
+      // join on both sides) — kept as the comparison record for the
+      // candidate-bounded default below
+      timeA("lsh_verified_pairs_join") {
+        graft.operators.NearDup.candidatesFromBands(
+          graft.operators.NearDup.bandedOver(docs))
+          .join(docs.select($"doc_id".as("id_a"),
+            graft.functions.VectorExpressions
+              .text_shingles($"text", 3).as("sh_a")), Seq("id_a"))
+          .join(docs.select($"doc_id".as("id_b"),
+            graft.functions.VectorExpressions
+              .text_shingles($"text", 3).as("sh_b")), Seq("id_b"))
+          .withColumn("n_common", graft.functions.VectorExpressions
+            .intersect_count($"sh_a", $"sh_b"))
+          .where($"n_common".cast("double") /
+            (size($"sh_a") + size($"sh_b") - $"n_common") >= 0.8)
+          .select($"id_a", $"id_b")
       }
       // the deployed verify (candidate checkpoint + broadcast-capped
       // id semi-filter ahead of the shingle projection) — what
@@ -2230,21 +2217,6 @@ object ScaleBench {
         if (f.isDirectory) f.listFiles().foreach(c => rmp(c.getPath))
         f.delete(); ()
       }
-      def fresh(): SparkSession = {
-        val s2 = SparkSession.builder()
-          .master("local[32]")
-          .appName("graft-scale-staged")
-          .config("spark.sql.shuffle.partitions",
-            sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_PARTS", shuffleParts))
-          .config("spark.io.compression.codec",
-            sys.env.getOrElse("SPARK_GRAFT_SHUFFLE_CODEC", shuffleCodec))
-          .config("spark.sql.adaptive.enabled", "true")
-          .config("spark.sql.session.timeZone", "UTC")
-          .config("spark.ui.enabled", "false")
-          .getOrCreate()
-        s2.sparkContext.setLogLevel("WARN")
-        s2
-      }
       def staged(sec: => Unit): Double = {
         val t0 = System.nanoTime(); sec; (System.nanoTime() - t0) / 1e9
       }
@@ -2258,7 +2230,7 @@ object ScaleBench {
       }
       spark.stop()
       // stage 1: row-local rules + exact-fp dedup → staged.parquet
-      val s1 = fresh()
+      val s1 = session("graft-scale-staged")
       val sec1 = staged {
         graft.operators.TextOps.curateStagedTable(s1, curDir)
           .write.mode("overwrite").parquet(s"$dir/curate_staged.parquet")
@@ -2266,7 +2238,7 @@ object ScaleBench {
       s1.stop()
       rmp(s"$curDir/documents.parquet") // staged table carries the text
       // stage 2: LSH pairs → touched labels → near-dup verdicts
-      val s2 = fresh()
+      val s2 = session("graft-scale-staged")
       var ndSmall = false
       val sec2 = staged {
         val st = s2.read.parquet(s"$dir/curate_staged.parquet")
@@ -2280,7 +2252,7 @@ object ScaleBench {
       graft.Release.transients()
       s2.stop()
       // stage 3: final verdict join + checksum
-      val s3 = fresh()
+      val s3 = session("graft-scale-staged")
       var out = (0L, "0")
       val sec3 = staged {
         val st = s3.read.parquet(s"$dir/curate_staged.parquet")
@@ -2297,7 +2269,7 @@ object ScaleBench {
       if (n <= 20000000L) {
         // parity record: the fused form on the same staged table's
         // SOURCE corpus — regenerate it (dropped above), then compare
-        val s4 = fresh()
+        val s4 = session("graft-scale-staged")
         val regen = {
           import s4.implicits._
           val suffix = " the a of and"

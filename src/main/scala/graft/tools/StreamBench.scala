@@ -359,22 +359,15 @@ object StreamBench {
       "restart_catchup_50k" -> recFig)
   }
 
-  def session(): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
+  def session(): SparkSession =
+    graft.Sessions.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"),
       // micro-batches here are 10³-10⁴ rows: 8 shuffle partitions keep
       // per-trigger task overhead from dominating what is a
       // latency-per-batch measurement (the batch bench uses 32 for its
       // sf0.1 scans; a real cluster sizes this to executor count)
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.adaptive.enabled", "false") // fixed plans per batch
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    spark
-  }
+      shufflePartitions = Some("8"),
+      adaptive = false, // fixed plans per batch
+      logLevel = "ERROR")
 
   def jsonLine(figs: Map[String, Fig]): String = {
     val ratio = figs("dual_write").rowsPerSec /

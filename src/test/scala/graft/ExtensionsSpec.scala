@@ -19,8 +19,7 @@ class ExtensionsSpec extends SparkSpecBase {
          size(band_keys(minhash_sig(array(42L), 8), 2, 4)) AS nbk,
          size(minhash_band_keys(array(42L), 8, 2)) AS nmbk,
          band_keys(minhash_sig(array(42L), 8), 2, 4)
-           = minhash_band_keys(array(42L), 8, 2) AS bk_eq,
-         pii_scan('mail a@b.io ip 1.2.3.4') AS pii
+           = minhash_band_keys(array(42L), 8, 2) AS bk_eq
       """).head()
     assert(row.getAs[Long]("sh") === SimHash.simhash64("a b c"))
     assert(row.getAs[Double]("dot") === 11.0)
@@ -32,9 +31,13 @@ class ExtensionsSpec extends SparkSpecBase {
     assert(row.getAs[Int]("nmbk") === 2)
     // the fused kernel and the two-step form agree key-for-key
     assert(row.getAs[Boolean]("bk_eq"))
-    val pii = row.getAs[org.apache.spark.sql.Row]("pii")
-    assert(pii.getAs[Long]("n_emails") === 1L)
-    assert(pii.getAs[Long]("n_ips") === 1L)
-    assert(pii.getAs[String]("redacted") === "mail <EMAIL> ip <IP>")
+  }
+
+  test("register resolves every name in the function table; pii_scan is gone") {
+    GraftExtensions.register(spark)
+    val names = GraftExtensions.Functions.map(_.name)
+    assert(names.distinct.size === names.size)
+    names.foreach(n => assert(spark.catalog.functionExists(n), n))
+    assert(!spark.catalog.functionExists("pii_scan"))
   }
 }

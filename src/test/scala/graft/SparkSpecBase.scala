@@ -12,17 +12,7 @@ trait SparkSpecBase extends AnyFunSuite {
 }
 
 object SparkSpecBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession
-      .builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Sessions.local("4",
+    appName = Some("graft-test"),
+    conf = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true"))
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.functions.{array_join, exists, filter, lit, lower, regexp_extract_all, regexp_replace, size, split, struct, transform, trim}
+import org.apache.spark.sql.functions.{filter, lower, regexp_replace, size, split, trim}
 
 import graft.operators.TextOps
 
@@ -325,100 +325,6 @@ class TextOpsSpec extends SparkSpecBase {
     rows.foreach { r =>
       assert(r.getString(0) === r.getString(1), r)
       assert(r.getLong(2) === r.getLong(3), r)
-    }
-  }
-
-  test("PiiScan kernel matches the regexp_extract_all/regexp_replace chain exactly") {
-    import spark.implicits._
-    // adversarial: emails whose local part is an IP, phones glued to
-    // emails, boundary-breaking digits, multiple matches per row,
-    // matches at string edges, and rows with none
-    val picked = Seq(
-      "", "plain text no pii here",
-      "u1@ex3.org", "10.2.3.4", "555-0123",
-      "10.2.3.4u@ex.org after", // email whose local part eats an IP
-      "x 555-0123@ex.org y", // phone-shaped local part: email wins
-      "a@b.cd 1.2.3.4 555-9999", "1.2.3.4.5.6", "5555-01234",
-      "mail u17@ex3.org tel 555-017 ip 10.2.17.17",
-      "two a@b.io c@d.io ips 1.1.1.1 2.2.2.2 555-0000 555-1111",
-      "edge@case.fr") // match flush at end of string
-    val rng = new scala.util.Random(17)
-    val alphabet = "ab0.9@-% 5ex.org 10."
-    val fuzz = (1 to 300).map(_ =>
-      (1 to rng.nextInt(50)).map(_ =>
-        alphabet(rng.nextInt(alphabet.length))).mkString)
-    def nMatches(c: org.apache.spark.sql.Column, re: String) =
-      size(regexp_extract_all(c, lit(re), lit(0))).cast("long")
-    import graft.functions.PiiScan
-    val rows = (picked ++ fuzz).toDF("t")
-      .select(
-        nMatches($"t", PiiScan.EmailRe).as("e_ref"),
-        nMatches($"t", PiiScan.IpRe).as("i_ref"),
-        nMatches($"t", PiiScan.PhoneRe).as("p_ref"),
-        regexp_replace(regexp_replace(regexp_replace($"t",
-          PiiScan.EmailRe, "<EMAIL>"), PiiScan.IpRe, "<IP>"),
-          PiiScan.PhoneRe, "<PHONE>").as("r_ref"),
-        PiiScan.pii_scan($"t").as("k"))
-      .collect()
-    rows.foreach { r =>
-      val k = r.getStruct(4)
-      assert(r.getLong(0) === k.getLong(0), r)
-      assert(r.getLong(1) === k.getLong(1), r)
-      assert(r.getLong(2) === k.getLong(2), r)
-      assert(r.getString(3) === k.getString(3), r)
-    }
-  }
-
-  test("ScrubSpans kernel matches the split/filter/exists HOF form exactly") {
-    import spark.implicits._
-    // adversarial token streams: empty text, leading/trailing/multiple
-    // spaces (empty tokens count for split-position semantics),
-    // intervals at the edges, overlapping-coverage positions, unsorted
-    // interval lists, and no intervals at all
-    val cases: Seq[(String, Seq[(Int, Int)])] = Seq(
-      ("", Seq.empty),
-      ("a b c", Seq.empty),
-      ("a b c d e", Seq((2, 3))),
-      ("a b c d e", Seq((1, 5))),
-      ("a b c d e", Seq((4, 5), (1, 2))), // unsorted intervals
-      ("  a  b ", Seq((2, 3))), // empty tokens occupy positions
-      ("one two three four", Seq((1, 1), (4, 4))),
-      (" lead", Seq((1, 1))),
-      ("trail ", Seq((2, 2))))
-    val rng = new scala.util.Random(23)
-    val fuzz = (1 to 200).map { _ =>
-      val nTok = rng.nextInt(12)
-      val text = (1 to nTok).map(_ =>
-        if (rng.nextInt(5) == 0) "" else s"w${rng.nextInt(9)}").mkString(" ")
-      val nIv = rng.nextInt(3)
-      // random DISJOINT intervals over 1..nTok+1, built left to right
-      var cur = 1
-      val iv = (1 to nIv).flatMap { _ =>
-        val s = cur + rng.nextInt(3)
-        val e = s + rng.nextInt(3)
-        cur = e + 2
-        if (s <= nTok + 1) Some((s, math.min(e, nTok + 1))) else None
-      }
-      (text, iv)
-    }
-    import graft.functions.ScrubSpans
-    val rows = (cases ++ fuzz)
-      .toDF("t", "ivr")
-      .select($"t",
-        transform($"ivr", v =>
-          struct(v("_1").as("s"), v("_2").as("e"))).as("iv"))
-      .select(
-        size(split($"t", " ")).cast("long").as("n_ref"),
-        array_join(
-          filter(split($"t", " "), (x, idx) =>
-            !exists($"iv", v => idx + 1 >= v("s") && idx + 1 <= v("e"))),
-          " ").as("c_ref"),
-        ScrubSpans.scrub_spans($"t", $"iv").as("k"))
-      .collect()
-    rows.foreach { r =>
-      val k = r.getStruct(2)
-      assert(r.getLong(0) === k.getLong(0), r)
-      assert(r.getString(1) === k.getString(1), r)
     }
   }
 }
