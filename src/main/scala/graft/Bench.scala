@@ -79,7 +79,7 @@ object Bench {
     try {
       java.nio.file.Files.write(java.nio.file.Paths.get("bench_out.json"),
         (fullLine + "\n").getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable => failed("bench_out.json", e) }
     println(s"""{"metric":"total","value":$total,"unit":"sec",""" +
       s""""failures":$failures,"iters":$iters,"total_median":$totalMed,""" +
       s""""n_queries":${results.size},"queries_file":"bench_out.json",""" +
@@ -91,8 +91,12 @@ object Bench {
     * so a `-1` in the report has a named cause; stdout keeps only the
     * JSON lines. */
   def failed(name: String, e: Throwable): Unit =
-    System.err.println(s"[bench] $name failed: ${e.getClass.getName}: " +
-      s"${e.getMessage}".linesIterator.mkString(" "))
+    System.err.println(s"[bench] $name failed: ${describe(e)}")
+
+  /** `<ExceptionClass>: <message>` on one line — the cause as the
+    * `[bench]` and `[verify]` failure lines print it. */
+  private[graft] def describe(e: Throwable): String =
+    s"${e.getClass.getName}: " + s"${e.getMessage}".linesIterator.mkString(" ")
 
   /** One untimed pass of the flagship, so JVM/codegen startup isn't
     * attributed to the first measured query. */

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.ops.{QueryDef, QueryModule, Tables}
 
 /** Corpus-level operators a training-data pipeline runs before/while
@@ -694,24 +695,6 @@ object Corpus extends QueryModule {
   def bpeMerges(s: SparkSession, d: String): DataFrame =
     bpeTrain(wordHistogram(Tables.documents(s, d)), steps = 6)
 
-  /** One-slot holder for the last encode's persisted vocabulary —
-    * unpersist-first swap on the next call, the [[graft.operators
-    * .Similarity]] cache-lifecycle contract (serial gate/bench use). */
-  private val lastBpeVocab =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Seq(lastBpeVocab, lastBigrams).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.unpersist(false))
-    }
-    Seq(lastStats, lastSketch).foreach { r =>
-      Option(r.getAndSet(null))
-        .foreach(graft.operators.NearDup.freeLocalCheckpoint)
-    }
-  }
-
   /** BPE ENCODING audit — the tokenizer-fertility report over the corpus
     * under the merges [[bpeMerges]] just induced: per document, the
     * whitespace word count and the BPE token count after K merges, plus
@@ -725,7 +708,7 @@ object Corpus extends QueryModule {
     import s.implicits._
     val (_, vocab) = bpeLoop(wordHistogram(Tables.documents(s, d)),
       steps = 6, materializeFinal = true)
-    Option(lastBpeVocab.getAndSet(vocab)).foreach(_.unpersist(false))
+    Scope.hold(vocab)
     val nsym = vocab.select($"w",
       size(split(trim($"sym"), "  ")).cast("long").as("ns"))
     Tables.documents(s, d)
@@ -912,20 +895,13 @@ object Corpus extends QueryModule {
     * score is one join of the doc's bigram stream against those tables
     * and one doc_id aggregate; top-k is a TakeOrdered, never a global
     * sort materialization. */
-  /** Previous [[dsirSelect]] invocation's cached bigram stream —
-    * unpersist-first one-slot swap, the library's standard discipline
-    * for multi-consumer intermediates. */
-  private val lastBigrams =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def dsirSelect(s: SparkSession, d: String, k: Int = 100): DataFrame = {
     import s.implicits._
-    Option(lastBigrams.getAndSet(null)).foreach(_.unpersist(false))
     // the exploded stream feeds FIVE subtrees (target counts + total,
     // raw counts + total, probe side); Catalyst does not CSE across
     // DataFrame reuse, so unpersisted the corpus would be re-tokenized
     // and re-exploded for each
-    val bg = Tables.documents(s, d)
+    val bg = Scope.hold(Tables.documents(s, d)
       .where(size(split($"text", " ")) >= 2)
       .select($"doc_id", $"lang", split($"text", " ").as("toks"))
       .select($"doc_id", $"lang",
@@ -933,8 +909,7 @@ object Corpus extends QueryModule {
         slice($"toks", lit(2), size($"toks") - 1).as("a2"))
       .select($"doc_id", $"lang", explode(arrays_zip($"a1", $"a2")).as("b"))
       .select($"doc_id", $"lang", $"b.a1".as("w1"), $"b.a2".as("w2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastBigrams.set(bg)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val tgt = bg.where($"lang" === "en")
       .groupBy($"w1", $"w2").agg(count(lit(1)).as("ct"))
     val raw = bg.groupBy($"w1", $"w2").agg(count(lit(1)).as("cr"))
@@ -972,11 +947,6 @@ object Corpus extends QueryModule {
       .groupBy($"source", $"token")
       .agg(count(lit(1)).as("tf"), countDistinct($"doc_id").as("df"))
   }
-
-  /** The standing stats checkpoint of the previous [[takedownStats]] —
-    * one-slot swap, [[graft.operators.NearDup]]'s takedown discipline. */
-  private val lastStats =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Takedown through standing CORPUS STATISTICS — the DECOMPOSABLE
     * artifact class, completing the retraction story alongside the
@@ -1023,16 +993,9 @@ object Corpus extends QueryModule {
   def takedownStats(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val standing = sourceTokenStats(docs).localCheckpoint(true)
-    Option(lastStats.getAndSet(standing))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+    val standing = Scope.hold(sourceTokenStats(docs).localCheckpoint(true))
     takedownStatsOn(standing, docs.where(NearDup.TakedownSparkPred))
   }
-
-  /** The previous text-retrieval takedown's standing checkpoints —
-    * one-slot swap, the module-wide takedown discipline. */
-  private val lastRetrieval =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
 
   /** Takedown through the standing BM25 SERVING artifacts — the
     * retrieval-side completion of [[takedownStatsOn]]'s decomposable
@@ -1088,12 +1051,10 @@ object Corpus extends QueryModule {
   def takedownBm25(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val tf = docs
+    val tf = Scope.hold(docs
       .select($"doc_id", explode(split($"text", " ")).as("token"))
       .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    Option(lastRetrieval.getAndSet(Seq(tf)))
-      .foreach(_.foreach(graft.operators.NearDup.freeLocalCheckpoint))
+      .localCheckpoint(true))
     val dl = tf.groupBy($"doc_id").agg(sum($"tf").as("dl"))
     val dfreq = tf.groupBy($"token").agg(count(lit(1)).as("df"))
     val totals = dl.agg(count(lit(1)).as("n"), sum($"dl").as("s"))
@@ -1144,12 +1105,10 @@ object Corpus extends QueryModule {
   def takedownTfidf(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val tf = docs
+    val tf = Scope.hold(docs
       .select($"doc_id", explode(split($"text", " ")).as("token"))
       .groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
-      .localCheckpoint(true)
-    Option(lastRetrieval.getAndSet(Seq(tf)))
-      .foreach(_.foreach(graft.operators.NearDup.freeLocalCheckpoint))
+      .localCheckpoint(true))
     val dfreq = tf.groupBy($"token").agg(count(lit(1)).as("df"))
     val nDocs = docs.agg(count(lit(1)).as("n_docs"))
     takedownTfidfOn(tf, dfreq, nDocs,
@@ -1208,21 +1167,19 @@ object Corpus extends QueryModule {
   def takedownIndex(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val full = docs
+    val full = Scope.hold(docs
       .select($"doc_id",
         explode(array_distinct(split($"text", " "))).as("token"))
       .where(length($"token") > 0)
-      .localCheckpoint(true)
+      .localCheckpoint(true))
     val bk = udaf(new graft.pipeline.Aggregators.BottomKLongAgg(8),
       org.apache.spark.sql.Encoders.scalaLong)
-    val served = full
+    val served = Scope.hold(full
       .groupBy($"token")
       .agg(count(lit(1)).as("df"),
         array_join(transform(bk($"doc_id"), _.cast("string")), ",")
           .as("postings"))
-      .localCheckpoint(true)
-    Option(lastRetrieval.getAndSet(Seq(full, served)))
-      .foreach(_.foreach(graft.operators.NearDup.freeLocalCheckpoint))
+      .localCheckpoint(true))
     takedownIndexOn(full, served,
       docs.where(NearDup.TakedownSparkPred).select($"doc_id", $"text"))
   }
@@ -1268,10 +1225,6 @@ object Corpus extends QueryModule {
       .groupBy($"depth", $"col").agg(sum($"tc").as("cnt"))
   }
 
-  /** The previous [[takedownSketch]] standing checkpoint — one-slot. */
-  private val lastSketch =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   /** GATE: the sketch SERVING point queries — every vocabulary token's
     * count-min estimate (min over the depth rows' cells) next to its
     * exact count; `overcount = est - true_cnt ≥ 0` is the CM
@@ -1282,9 +1235,7 @@ object Corpus extends QueryModule {
   def cmEstimate(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val cells = cmCells(docs).localCheckpoint(true)
-    Option(lastSketch.getAndSet(cells))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+    val cells = Scope.hold(cmCells(docs).localCheckpoint(true))
     val exact = docs.select(explode(split($"text", " ")).as("token"))
       .groupBy($"token").agg(count(lit(1)).as("true_cnt"))
     exact
@@ -1309,9 +1260,7 @@ object Corpus extends QueryModule {
   def takedownSketch(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val standing = cmCells(docs).localCheckpoint(true)
-    Option(lastSketch.getAndSet(standing))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+    val standing = Scope.hold(cmCells(docs).localCheckpoint(true))
     val sub = cmCells(docs.where(NearDup.TakedownSparkPred))
       .select($"depth", $"col", $"cnt".as("cnt_rem"))
     standing.join(broadcast(sub), Seq("depth", "col"), "left")

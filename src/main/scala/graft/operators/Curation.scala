@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.ops.{QueryDef, QueryModule, Tables}
 import graft.sources.Ddl
 
@@ -167,24 +168,6 @@ object Curation extends QueryModule {
     * IVF codebook collect), never a global single-task window. Position
     * values are partitioning-invariant: they equal the global rank of
     * (h, doc_id), whatever the range boundaries sampled. */
-  /** Previous invocation's cached range-partitioned keying, swapped out
-    * on the next call (same single-slot pattern as
-    * [[Similarity.labelBucketTopK]]). The persist is load-bearing for
-    * correctness, not just cost: the offset table is collected from the
-    * SAME materialized partitioning the rank pass reads — re-running
-    * `repartitionByRange` could sample different boundaries between the
-    * two passes and skew every offset. */
-  private val lastKeyed =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Option(lastKeyed.getAndSet(null)).foreach(_.unpersist(false))
-    Option(lastRelease.getAndSet(null))
-      .foreach(_.foreach(NearDup.freeLocalCheckpoint))
-  }
-
   def globalShuffle(s: SparkSession, d: String, parts: Int = 32): DataFrame = {
     import s.implicits._
     // within-partition rank as a STREAMING walk over the range-sorted
@@ -192,7 +175,11 @@ object Curation extends QueryModule {
     // Window.partitionBy(pid): Catalyst cannot know pid IS the ambient
     // partition id, so the window form would re-shuffle the whole corpus
     // by pid — a second full exchange this operator exists to avoid.
-    val keyed = Tables.documents(s, d)
+    // The persist is load-bearing for correctness, not just cost: the
+    // offset table is collected from the SAME materialized partitioning
+    // the rank pass reads — re-running `repartitionByRange` could sample
+    // different boundaries between the two passes and skew every offset.
+    val keyed = Scope.hold(Tables.documents(s, d)
       .select($"doc_id",
         md5(concat(lit("ep1-"), $"doc_id".cast("string"))).as("h"))
       .repartitionByRange(parts, $"h", $"doc_id")
@@ -204,8 +191,7 @@ object Curation extends QueryModule {
         it.map { case (id, _) => rn += 1L; (id, pid, rn) }
       }
       .toDF("doc_id", "pid", "rn")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastKeyed.getAndSet(keyed)).foreach(_.unpersist(false))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // bounded collect: one row per non-empty range partition
     val counts = keyed.groupBy($"pid").agg(count(lit(1)).as("c"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
@@ -562,31 +548,20 @@ object Curation extends QueryModule {
     * the doc_id joins between verdicts, splits, and the corpus —
     * constant-width rows, and text is only re-read for the final
     * delivery scan. */
-  /** Previous release's checkpointed stage outputs, freed on the next
-    * call — the one-slot discipline of the clustering caches. */
-  private val lastRelease =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
-
   def releaseCorpus(
       s: SparkSession, d: String, outDir: String,
       shards: Int = 4): DataFrame = {
     import s.implicits._
-    Option(lastRelease.getAndSet(null))
-      .foreach(_.foreach(NearDup.freeLocalCheckpoint))
     // each stage's (doc-id-sized) output is MATERIALIZED via eager
-    // localCheckpoint before the next stage runs: both stages re-derive
-    // the near-dup clustering internally, and the clustering's one-slot
-    // checkpoint swap frees the PREVIOUS invocation's blocks — a lazy
-    // split plan would read blocks the curation stage just freed
-    // (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND, caught by CurationSpec when
-    // this flow was first composed without the checkpoints)
-    val splits = NearDup.leakageSafeSplit(s, d) // doc_id, cluster_id, split
+    // localCheckpoint: the joined corpus below is read by three
+    // per-split writeShards scans, and without the checkpoints each
+    // scan would re-derive both stages (near-dup clustering included)
+    val splits = Scope.hold(NearDup.leakageSafeSplit(s, d)
       .select($"doc_id", $"split")
-      .localCheckpoint(true)
-    val kept = TextOps.curateCorpus(s, d)
+      .localCheckpoint(true))
+    val kept = Scope.hold(TextOps.curateCorpus(s, d)
       .where($"verdict" === "kept").select($"doc_id")
-      .localCheckpoint(true)
-    lastRelease.set(Seq(splits, kept))
+      .localCheckpoint(true))
     val corpus = Tables.documents(s, d)
       .join(kept, Seq("doc_id"))
       .join(splits, Seq("doc_id"))

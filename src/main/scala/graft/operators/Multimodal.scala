@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.ops.{Par, QueryDef, QueryModule, Tables}
 
 /** One decoded image record (the per-batch output row of the decode
@@ -598,34 +599,21 @@ object Multimodal extends QueryModule {
     * explode); the pair stage is the inverted-index count join with
     * hot chunks (df > `DfCap`, container boilerplate) dropped before
     * the self-join, Σdf² not n². */
-  /** Previous [[mediaChunkDedup]] invocation's cached chunk table —
-    * unpersist-FIRST one-slot swap, same discipline as
-    * [[graft.operators.Similarity]]'s `lastCells`. */
-  private val lastChunks =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit =
-    Option(lastChunks.getAndSet(null)).foreach(_.unpersist(false))
-
   def mediaChunkDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val MinShared = 3
     val DfCap = 64
-    Option(lastChunks.getAndSet(null)).foreach(_.unpersist(false))
     // consumed three times (df filter + both join sides): persist so
     // the payload column is chunked in ONE pass; at deployment the
     // chunk postings are a stored index next to the media table
-    val ch = mediaTable(s, d)
+    val ch = Scope.hold(mediaTable(s, d)
       .select($"doc_id", decode($"payload", "UTF-8").as("txt"))
       .select($"doc_id",
         graft.functions.VectorExpressions.content_chunks($"txt", 5)
           .as("cs"))
       .select($"doc_id", size($"cs").cast("long").as("n_chunks"),
         explode($"cs").as("chunk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastChunks.set(ch)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val keep = ch.groupBy($"chunk").agg(count(lit(1)).as("df"))
       .where($"df" <= DfCap)
       .select($"chunk")

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.functions.SimHash64.simhash64
 import graft.ops.{QueryDef, QueryModule, Tables}
 
@@ -110,13 +111,9 @@ object NearDup extends QueryModule {
   /** Near-duplicate pairs: LSH candidates verified with exact shingle
     * Jaccard >= tau.
     *
-    * Eager + one-slot transient: calling this LAUNCHES jobs at once
-    * (the candidate set is localCheckpoint'ed and counted before the
-    * lazy verify plan is returned) and frees the PREVIOUS invocation's
-    * candidate checkpoint — materialize each returned frame before the
-    * next near-dup-family call, or the earlier frame fails with
-    * CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND (see [[graft.Release]] for the
-    * session contract). */
+    * Eager: calling this LAUNCHES jobs at once (the candidate set is
+    * localCheckpoint'ed and counted before the lazy verify plan is
+    * returned); the checkpoint is held in the caller's [[graft.Scope]]. */
   def minhashNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // r13 measured and NOT spread: Par.spread over this projection was
@@ -131,14 +128,6 @@ object NearDup extends QueryModule {
       .select($"id_a", $"id_b", $"n_common", $"jaccard")
       .orderBy($"id_a", $"id_b")
   }
-
-  /** One-slot free list for the transients the returned (lazy) verify
-    * plan still reads: the candidate-pair checkpoint, plus (above the
-    * broadcast cap, r14) the DISK_ONLY-persisted shingle table — same
-    * swap discipline as [[lastLabels]], freed via [[freeTransient]]
-    * which handles both kinds. */
-  private val lastCand =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
 
   /** Distinct-id count at or under this → the candidate ids broadcast-
     * semi-filter the shingle side (8 B/id ⇒ ≤ ~40 MB broadcast at the
@@ -187,7 +176,7 @@ object NearDup extends QueryModule {
       cap: Long = VerifyIdsBroadcastCap): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val cand = cand0.localCheckpoint(true)
+    val cand = Scope.hold(cand0.localCheckpoint(true))
     val ids = cand.select($"id_a".as("doc_id"))
       .union(cand.select($"id_b".as("doc_id"))).distinct()
     val belowCap = ids.count() <= cap
@@ -198,9 +187,8 @@ object NearDup extends QueryModule {
       graft.functions.VectorExpressions.text_shingles($"text", 3).as("sh"))
     val sh =
       if (belowCap) shBase
-      else shBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY)
-    Option(lastCand.getAndSet(Seq(cand, sh)))
-      .foreach(_.foreach(freeTransient))
+      else Scope.hold(
+        shBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
     cand
       .join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
       .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
@@ -381,10 +369,9 @@ object NearDup extends QueryModule {
     * recursive-CTE transitive closure over the brute-force pair
     * definition.
     *
-    * Eager + one-slot transient: launches jobs at call time (candidate
-    * checkpoint, label iteration) and frees the previous invocation's
-    * checkpoints — materialize each returned frame before the next
-    * near-dup-family call (see [[graft.Release]]). */
+    * Eager: launches jobs at call time (candidate checkpoint, label
+    * iteration); the checkpoints are held in the caller's
+    * [[graft.Scope]]. */
   def dedupClusters(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     connectedComponents(
@@ -549,10 +536,8 @@ object NearDup extends QueryModule {
     * of the join and one exchange on cluster_id. Near-dup clusters are
     * small by construction, so the per-partition sort is bounded.
     *
-    * Eager + one-slot transient: launches jobs at call time and frees
-    * the previous near-dup invocation's checkpoints — materialize each
-    * returned frame before the next family call (see
-    * [[graft.Release]]). */
+    * Eager: launches jobs at call time; the checkpoints are held in the
+    * caller's [[graft.Scope]]. */
   def dedupSurvivor(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     survivorsFrom(Tables.documents(s, d),
@@ -707,10 +692,8 @@ object NearDup extends QueryModule {
     *
     * `standing` is the survivor table — its cluster_id IS the pair
     * graph's component map, so a deployment that keeps both artifacts
-    * pays no extra closure to find the blast radius. `standingCore`
-    * must be storage-backed (checkpointed) by the caller: the re-peel
-    * swaps [[kcoreOnPairs]]'s one-slot free list, which releases the
-    * standing build's transient blocks. */
+    * pays no extra closure to find the blast radius. `standingCore` is
+    * the stored k-core, checkpointed as [[takedownKcore]] builds it. */
   private[graft] def takedownKcoreOn(
       standingCore: DataFrame, // (doc_id, deg) k-core over standing corpus
       standing: DataFrame,     // (doc_id, cluster_id, ...) component map
@@ -788,18 +771,16 @@ object NearDup extends QueryModule {
   def takedownKcore(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true)
+    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
+      .localCheckpoint(true))
     // r13 (guide §2.6): the two standing artifacts read only the pairs
-    // checkpoint and swap DIFFERENT one-slot transients (lastLabels vs
-    // lastCore), so their build jobs — each a chain of bounded rounds
+    // checkpoint, so their build jobs — each a chain of bounded rounds
     // with driver sync points — overlap from two driver threads instead
-    // of serializing ~equal wall times end to end.
+    // of serializing ~equal wall times end to end. Both hold into this
+    // thread's scope (Par runs them under it).
     val (standing, core) = graft.ops.Par.concurrently2(
-      survivorsFrom(docs, pairs).localCheckpoint(true),
-      kcoreOnPairs(pairs).localCheckpoint(true))
-    Option(lastTakedown.getAndSet(Seq(pairs, standing, core)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+      Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true)),
+      Scope.hold(kcoreOnPairs(pairs).localCheckpoint(true)))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownKcoreOn(core, standing, pairs, removed)
   }
@@ -810,10 +791,8 @@ object NearDup extends QueryModule {
   def takedownPagerank(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
+      .localCheckpoint(true))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownPagerankOn(pairs, removed)
   }
@@ -827,11 +806,9 @@ object NearDup extends QueryModule {
   def takedownSurvivor(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true)
-    val standing = survivorsFrom(docs, pairs).localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs, standing)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
+      .localCheckpoint(true))
+    val standing = Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownSurvivors(docs, standing, pairs, removed)
   }
@@ -846,21 +823,19 @@ object NearDup extends QueryModule {
   def takedownCensus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-    val pairs = minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true)
-    val standing = survivorsFrom(docs, pairs).localCheckpoint(true)
+    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
+      .localCheckpoint(true))
+    val standing = Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     val after = takedownSurvivors(docs, standing, pairs, removed)
     // remaining docs, old vs new labels — reused by three aggregates,
     // so it is checkpointed once (forcing `after` exactly once)
-    val cmp = standing
+    val cmp = Scope.hold(standing
       .select($"doc_id", $"cluster_id".as("old_cluster"),
         $"survivor_id".as("old_surv"))
       .join(after.select($"doc_id", $"cluster_id".as("new_cluster"),
         $"survivor_id".as("new_surv")), Seq("doc_id"))
-      .localCheckpoint(true)
-    Option(lastTakedown.getAndSet(Seq(pairs, standing, cmp)))
-      .foreach(_.foreach(freeLocalCheckpoint))
+      .localCheckpoint(true))
     val touched = standing.join(broadcast(removed), Seq("doc_id"),
       "leftsemi")
     // r13 (guide §1.2: don't re-scan what one pass can answer): the
@@ -915,11 +890,6 @@ object NearDup extends QueryModule {
     * long sum, pr' = (15·(SCALE div n)) div 100 + (85·inflow) div 100. */
   def pageRank(s: SparkSession, d: String): DataFrame =
     pageRankOnPairs(minhashNearDup(s, d).select("id_a", "id_b"))
-
-  /** One-slot free list for the edge/degree checkpoints the returned
-    * (lazy) plan still reads — same swap discipline as [[lastLabels]]. */
-  private val lastRank =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Scale shape: the graph is checkpointed ONCE (edges + degrees — both
     * orders of magnitude smaller than the corpus: only documents with a
@@ -982,16 +952,10 @@ object NearDup extends QueryModule {
         .select($"node", $"deg",
           (lit(base) + expr("(85 * coalesce(inflow, 0L)) div 100")).as("pr"))
     }
-    val out = pr.select($"node".as("doc_id"), $"pr".as("pr_scaled"), $"deg")
-      .orderBy($"doc_id")
-    Option(lastRank.getAndSet(out)).foreach(freeLocalCheckpoint)
-    out
+    // the edge/degree checkpoints the returned plan reads
+    Scope.hold(pr.select($"node".as("doc_id"), $"pr".as("pr_scaled"), $"deg")
+      .orderBy($"doc_id"))
   }
-
-  /** Previous [[kcoreOnPairs]] result — one-slot checkpoint free, same
-    * discipline as `lastRank`. */
-  private val lastCore =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** k-CORE of a pair graph via bounded-round peeling: repeatedly drop
     * nodes with fewer than `k` surviving neighbors; what remains is the
@@ -1048,81 +1012,21 @@ object NearDup extends QueryModule {
         .where($"deg" >= k).select($"src".as("node"))
         .localCheckpoint(false)
       val n = next.count() // materialize, then the previous round can go
-      freeLocalCheckpoint(alive)
+      Scope.free(alive)
       alive = next
       aliveN = n
     }
-    val out = edges
+    Scope.hold(edges
       .join(hinted(alive.select($"node".as("src"))), Seq("src"), "leftsemi")
       .join(hinted(alive.select($"node".as("dst"))), Seq("dst"), "leftsemi")
       .groupBy($"src").agg(count(lit(1)).as("deg"))
       .select($"src".as("doc_id"), $"deg")
-      .orderBy($"doc_id")
-    Option(lastCore.getAndSet(out)).foreach(freeLocalCheckpoint)
-    out
+      .orderBy($"doc_id"))
   }
 
   /** Gate form: the 2-core of the verified near-dup pair graph. */
   def kcore(s: SparkSession, d: String): DataFrame =
     kcoreOnPairs(minhashNearDup(s, d).select("id_a", "id_b"))
-
-  /** Free the storage blocks behind every `localCheckpoint` a Dataset's
-    * plan reads. `Dataset.unpersist` only clears CacheManager entries
-    * (plans cached via `.persist`), NOT the RDD blocks a local
-    * checkpoint lives in — those sit behind `LogicalRDD` leaves and
-    * must be unpersisted at the RDD level, else every iteration of a
-    * loop leaks a generation of blocks into storage memory until the
-    * ContextCleaner happens to collect them (the round-4
-    * q_dedup_clusters pathology, which also polluted the queries
-    * benched after it). The plan is WALKED, not root-matched: the
-    * labels handed across invocations are derived plans (a Project or
-    * Aggregate over the checkpoint leaf), so a root-only match would
-    * silently free nothing. Only call this once no live plan
-    * references the checkpoints: local checkpoints cannot be
-    * recomputed. */
-  private[graft] def freeLocalCheckpoint(ds: DataFrame): Unit =
-    ds.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(blocking = false)
-      case _ => ()
-    }
-
-  /** Free a one-slot transient that may be EITHER a localCheckpoint or
-    * a persisted frame (r14: [[verifiedCandidates]]' above-cap shingle
-    * table is a DISK_ONLY persist): `unpersist` is a no-op on frames
-    * that were never persisted, and the checkpoint-RDD sweep is a no-op
-    * on plans without [[org.apache.spark.sql.execution.LogicalRDD]]
-    * leaves, so applying both is safe on every slot. */
-  private[graft] def freeTransient(ds: DataFrame): Unit = {
-    ds.unpersist(blocking = false)
-    freeLocalCheckpoint(ds)
-  }
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Seq(lastRank, lastCore, lastLabels).foreach { r =>
-      Option(r.getAndSet(null)).foreach(freeLocalCheckpoint)
-    }
-    Option(lastWinnowFps.getAndSet(null)).foreach(_.unpersist(false))
-    Seq(lastCand, lastTakedown).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.foreach(freeTransient))
-    }
-  }
-
-  /** The standing-artifact checkpoints (pairs + survivor table) of the
-    * previous takedown query — same one-slot swap as [[lastLabels]]. */
-  private val lastTakedown =
-    new java.util.concurrent.atomic.AtomicReference[Seq[DataFrame]](null)
-
-  /** The FINAL label checkpoint of the previous [[connectedComponents]]
-    * run: the returned plan still reads it (the caller has not
-    * materialized yet), so it can only be freed on the NEXT invocation —
-    * the same one-slot swap [[graft.operators.Similarity]] uses for its
-    * cached cell assignments, and the same serial call pattern
-    * assumption (gate/bench drivers run queries one at a time). */
-  private val lastLabels =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Connected components over an undirected pair list: every `doc_id`
     * in `nodes` → (doc_id, cluster_id = min reachable id). Factored out
@@ -1185,8 +1089,7 @@ object NearDup extends QueryModule {
       if (starContraction) starLabels(pairs)
       else propagateLabels(pairs, propagationRoundCap)
         .getOrElse(starLabels(pairs))
-    Option(lastLabels.getAndSet(labels)).foreach(freeLocalCheckpoint)
-    labels
+    Scope.hold(labels)
   }
 
   /** Min-label propagation: (doc_id, comp) for every node with an edge.
@@ -1241,13 +1144,13 @@ object NearDup extends QueryModule {
           coalesce($"nbr_min" < $"comp", lit(false)).as("chg"))
         .localCheckpoint(eager = false)
       changed = updated.where($"chg").count() // materializes the checkpoint
-      freeLocalCheckpoint(labels) // previous round's blocks, now unreferenced
+      Scope.free(labels) // previous round's blocks, now unreferenced
       labels = updated
       rounds += 1
     }
-    freeLocalCheckpoint(sym)
+    Scope.free(sym)
     if (changed > 0) { // diameter > cap: hand the graph to star contraction
-      freeLocalCheckpoint(labels)
+      Scope.free(labels)
       None
     } else Some(labels.select($"doc_id", $"comp"))
   }
@@ -1303,7 +1206,7 @@ object NearDup extends QueryModule {
       converged = small.exceptAll(edges)
         .union(edges.exceptAll(small))
         .isEmpty
-      freeLocalCheckpoint(edges)
+      Scope.free(edges)
       edges = small
       rounds += 1
     }
@@ -1705,16 +1608,8 @@ object NearDup extends QueryModule {
         explode($"fps").as("fp"))
   }
 
-  /** Previous [[winnowNearDup]] invocation's cached fingerprint table —
-    * unpersist-FIRST one-slot swap, same discipline and reasoning as
-    * [[graft.operators.Similarity]]'s `lastCells` (CacheManager matches
-    * by plan, so persist-then-unpersist would drop the new entry). */
-  private val lastWinnowFps =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def winnowNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastWinnowFps.getAndSet(null)).foreach(_.unpersist(false))
     // the postings table is consumed THREE times (df filter + both join
     // sides); persisted, the narrow extraction runs one corpus scan
     // instead of three — at deployment scale the fingerprint table is a
@@ -1734,12 +1629,11 @@ object NearDup extends QueryModule {
     // postings crossed five exchange/sort stages at 56 B/row and
     // filled >73 GB of scratch at 10⁷ docs (the run died); the 32-byte
     // two-long posting fits the same pipeline in memory.
-    val f = winnowFingerprints(
+    val f = Scope.hold(winnowFingerprints(
       Tables.documents(s, d).select($"doc_id", $"text"))
       .select($"doc_id", $"n_fps", xxhash64($"fp").as("fp"),
         xxhash64(lit(0x5851F42D4C957F2DL), $"fp").as("fp2"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastWinnowFps.set(f)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     // df cap as a broadcast ANTI-join on the HOT set: hot fingerprints
     // (boilerplate head) are few by construction, so the cached
     // postings never re-sort against a corpus-sized keep-list — same

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.functions.VectorFunctions._
 import graft.ops.{QueryDef, QueryModule, Tables}
 
@@ -378,32 +379,8 @@ object Similarity extends QueryModule {
     * K is the lever (K ∝ corpus/target_cell_size keeps cells, and hence
     * per-cell pair counts, constant), exactly how IVF indexes keep
     * "within-cell" work flat as the corpus grows. */
-  /** The previous [[labelBucketTopK]] invocation's cached assignment:
-    * unpersisted BEFORE the new persist registers — a re-run builds the
-    * identical logical plan, so persist-then-unpersist would find the
-    * old CacheManager entry ('Asked to cache already cached data') and
-    * the unpersist of the old handle would then drop the NEW entry too
-    * (CacheManager matches by plan). Unpersist-first keeps a long-lived
-    * session at ONE cached assignment with no warning. The ordering
-    * assumes the gate/bench call pattern — the previous query's result
-    * has been materialized (or abandoned) by the time the operator runs
-    * again. */
-  private val lastCells =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit = {
-    Option(lastSemCand.getAndSet(null))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
-    Seq(lastCells, lastSemCells).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.unpersist(false))
-    }
-  }
-
   def labelBucketTopK(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = Tables.embeddings(s, d)
       .select($"vec_id", $"label", $"embedding".as("v"))
       .withColumn("nrm", l2Norm($"v"))
@@ -413,10 +390,9 @@ object Similarity extends QueryModule {
     // table is the (small) id+vector assignment; a real
     // deployment materializes the IVF assignment as a stored table and
     // joins against that, exactly like [[ivfTopK]] probes [[ivfAssign]].
-    val cells = assignTo(e, centroids(e))
+    val cells = Scope.hold(assignTo(e, centroids(e))
       .select($"label", $"centroid_id", $"vec_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastCells.set(cells)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"label", $"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"label", $"centroid_id", $"vec_id".as("id_b"),
@@ -449,24 +425,12 @@ object Similarity extends QueryModule {
     * vec_id and is a small broadcast side in practice. */
   private val SemDedupTau = 0.3
 
-  /** One-slot free list for [[cascadeDedup]]'s candidate checkpoint —
-    * same swap discipline as [[graft.operators.NearDup]].lastCand. */
-  private val lastSemCand =
-    new java.util.concurrent.atomic.AtomicReference[
-      org.apache.spark.sql.DataFrame](null)
-
-  private val lastSemCells =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    // unpersist-first, same reasoning as [[labelBucketTopK]]'s slot
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
+    val cells = Scope.hold(assignTo(e, centroids(e))
       .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -490,17 +454,15 @@ object Similarity extends QueryModule {
     * affordable (assignment O(√K·D) per vector; the ivf2 rungs carry
     * the cost and recall envelope); at the gate geometry it hash-pins
     * the full hierarchy → cell-pair → verdict pipeline against the
-    * SQL replay. Same one-slot eager-materialization contract as
-    * [[semanticDedup]]. */
+    * SQL replay. Its cell assignment is held in the caller's
+    * [[graft.Scope]], as [[semanticDedup]]'s is. */
   def semanticDedup2(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
     val cb2 = twoLevelFrom(centroids(e), nSuper = 2)
-    val cells = assignTo2(e, cb2, nprobe = 1)
+    val cells = Scope.hold(assignTo2(e, cb2, nprobe = 1)
       .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -537,11 +499,9 @@ object Similarity extends QueryModule {
     * an equi-join Spark plans hash-partitioned (or broadcast when the
     * candidate set is small, the common case).
     *
-    * Eager + one-slot transient: launches jobs at call time (cell
-    * assignments persist, the text-verify candidate set checkpoints)
-    * and frees the previous invocation's transients — materialize each
-    * returned frame before the next dedup-family call (see
-    * [[graft.Release]]). */
+    * Eager: launches jobs at call time (cell assignments persist, the
+    * text-verify candidate set checkpoints); both are held in the
+    * caller's [[graft.Scope]]. */
   def cascadeDedup(s: SparkSession, d: String): DataFrame =
     cascadeDedup(s, d, SemDedupTau)
 
@@ -553,12 +513,10 @@ object Similarity extends QueryModule {
     * threshold buys). */
   def cascadeDedup(s: SparkSession, d: String, tau: Double): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
+    val cells = Scope.hold(assignTo(e, centroids(e))
       .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"))
     val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
@@ -569,13 +527,11 @@ object Similarity extends QueryModule {
     // BEFORE the token-array projection (NearDup.candidateBounded), so
     // the exact-verify stage costs work ∝ the candidate set, never a
     // second full-corpus tokenize + two corpus-width shuffles
-    val cand = a.join(b, Seq("centroid_id"))
+    val cand = Scope.hold(a.join(b, Seq("centroid_id"))
       .select($"id_a", $"id_b",
         cosineWithNorms($"va", $"vb", $"na", $"nb").as("cosine"))
       .where($"id_a" < $"id_b" && $"cosine" >= lit(tau))
-      .localCheckpoint(true)
-    Option(lastSemCand.getAndSet(cand))
-      .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+      .localCheckpoint(true))
     val docs = graft.operators.NearDup.candidateBounded(
         Tables.documents(s, d), cand)
       .select($"doc_id", array_distinct(split($"text", " ")).as("types"))
@@ -609,13 +565,11 @@ object Similarity extends QueryModule {
     * reported: the verdict on the standing corpus cannot change. */
   def incrementalSemanticDedup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    Option(lastSemCells.getAndSet(null)).foreach(_.unpersist(false))
     val e = vecs(s, d)
-    val cells = assignTo(e, centroids(e))
+    val cells = Scope.hold(assignTo(e, centroids(e))
       .select($"vec_id", $"centroid_id", $"v", $"nrm",
         ($"vec_id" % 10 >= 8).as("fresh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSemCells.set(cells)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val index = cells.select($"centroid_id", $"vec_id".as("id_a"),
       $"v".as("va"), $"nrm".as("na"), $"fresh".as("fresh_a"))
     val probe = cells.where($"fresh").select($"centroid_id",
@@ -1159,9 +1113,8 @@ object Similarity extends QueryModule {
     * killed the 10⁸ rung), so it is re-scanned iters+2 times; a frame
     * containing `rand()` / `monotonically_increasing_id()` / any
     * non-deterministic expression would yield DIFFERENT data per scan
-    * and silently corrupt centroids, truth, and the recall figure.
-    * Same one-slot eager-materialization discipline as the NearDup
-    * entry points: materialize such inputs to parquet first. */
+    * and silently corrupt centroids, truth, and the recall figure:
+    * materialize such inputs to parquet first. */
   private[graft] def recallEval(
       vectors: DataFrame, // columns: vec_id LONG, v ARRAY<FLOAT>
       k: Int,

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import graft.Scope
 import graft.ops.{QueryDef, QueryModule, Tables}
 
 /** Text-analysis + deduplication operators over the `documents` table — the
@@ -625,24 +626,6 @@ object TextOps extends QueryModule {
   def sourceOverlap(s: SparkSession, d: String): DataFrame =
     sourceOverlapDocs(Tables.documents(s, d))
 
-  /** One-slot cache for the gram→source-set postings table: it feeds
-    * the source list, the per-source counts, and the pair-intersection
-    * extraction — Catalyst does not CSE the subtree, so without a
-    * persist every consumer re-runs the corpus pass. Unpersist-FIRST
-    * swap, same reasoning as [[graft.operators.Similarity]]'s
-    * assignment cache. */
-  private val lastGrams =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-  private val lastSketch =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
-  /** Free every transient this module still pins — see
-    * [[graft.Release]] for the session-hygiene contract. */
-  private[graft] def releaseTransients(): Unit =
-    Seq(lastGrams, lastSketch, lastSketchOnly, lastCurate).foreach { r =>
-      Option(r.getAndSet(null)).foreach(_.unpersist(false))
-    }
-
   /** 5-token-gram OCCURRENCES as (source, md5-hex) — the shared scan
     * stage of both overlap paths; md5 is the engine-portable key. */
   private def gramOccurrences(docs: DataFrame): DataFrame = {
@@ -687,7 +670,6 @@ object TextOps extends QueryModule {
       docs: DataFrame, k: Int = 128): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    Option(lastGrams.getAndSet(null)).foreach(_.unpersist(false))
     // THE one corpus-grain pass, shared by both answers: gram
     // occurrences aggregated into a source-SET posting per distinct
     // gram. Map-side collect_set partials dedup before the exchange,
@@ -696,11 +678,12 @@ object TextOps extends QueryModule {
     // self-join anywhere. NOTE the postings table itself is
     // corpus-grain state (every distinct gram): right for the bounded
     // audit SFs this query serves; at corpus scale run
-    // [[sourceOverlapSketch]], which never materializes it.
-    val postings = gramOccurrences(docs)
+    // [[sourceOverlapSketch]], which never materializes it. Persisted:
+    // it feeds the source list, the per-source counts and the pair
+    // extraction, and Catalyst does not CSE the subtree.
+    val postings = Scope.hold(gramOccurrences(docs)
       .groupBy($"h").agg(collect_set($"source").as("ss"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastGrams.set(postings)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val expanded = postings.select($"h", explode($"ss").as("source"))
     // per-source KMV sketches as SORTED ARRAYS (S rows total) — all
     // est sides broadcast-consume them, so they are persisted. r13
@@ -709,11 +692,9 @@ object TextOps extends QueryModule {
     // two passes + two exchanges over the corpus-grain expansion).
     val bk = udaf(new graft.pipeline.Aggregators.BottomKAgg(k),
       org.apache.spark.sql.Encoders.STRING)
-    Option(lastSketch.getAndSet(null)).foreach(_.unpersist(false))
-    val perSrc = expanded.groupBy($"source")
+    val perSrc = Scope.hold(expanded.groupBy($"source")
       .agg(bk($"h").as("sk"), count(lit(1)).as("n"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastSketch.set(perSrc)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val skArr = perSrc.select($"source", $"sk")
     val perSrcN = perSrc.select($"source", $"n")
     val est = kmvEstimates(skArr, k)
@@ -760,19 +741,15 @@ object TextOps extends QueryModule {
   def sourceOverlapSketch(s: SparkSession, d: String): DataFrame =
     sourceOverlapSketchDocs(Tables.documents(s, d))
 
-  private val lastSketchOnly =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
-
   private[graft] def sourceOverlapSketchDocs(
       docs: DataFrame, k: Int = 128): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val bk = udaf(new graft.pipeline.Aggregators.BottomKAgg(k),
       org.apache.spark.sql.Encoders.STRING)
-    val skArr = gramOccurrences(docs)
+    val skArr = Scope.hold(gramOccurrences(docs)
       .groupBy($"source").agg(bk($"h").as("sk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    Option(lastSketchOnly.getAndSet(skArr)).foreach(_.unpersist(false))
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     kmvEstimates(skArr, k)
       .select($"src_a", $"src_b", $"sketch_hits", $"k_used",
         when($"k_used" === 0L, 0.0)
@@ -802,33 +779,16 @@ object TextOps extends QueryModule {
     * fingerprint dedup, as (doc_id, text, n_tokens, reason12) where
     * reason12 ∈ {rule name, 'exact_dup', NULL = survivor}.
     *
-    * `narrowFpExchange` selects the physical shape of the fingerprint
-    * dedup (both produce IDENTICAL rows — first-by-doc_id per fp
-    * survives; the ScaleBench `curate_stages` probe measured both,
-    * hash-equal, at 10^6 docs):
-    *
-    *  - `false` (DEFAULT — the measured winner): the original
-    *    one-scan form — a row_number window over (fp, passed) that
-    *    shuffles every full row on fp. 51 s at 10^6 all-pass, 50 s
-    *    with 30% planted rule failures (post-kernel probe — the
-    *    figure of record, same run as COVERAGE round 8).
-    *  - `true`: quality filter AHEAD of the fingerprint stage (the
-    *    window already partitioned failed docs apart, so excluding
-    *    them is a plan change, not a semantic one); the fp exchange
-    *    becomes the map-side-combined aggregate fp → (min doc_id,
-    *    count) and only duplicating fps join back — text bytes cross
-    *    NO exchange. MEASURED SLOWER here: 155 s / 108 s on the same
-    *    corpora — the three separate evaluations of the scan+token
-    *    statistics (groupBy side, join side, fail branch; Catalyst
-    *    does not CSE across DataFrame branches) cost ~3x more than
-    *    the local text-width shuffle they avoid. The shape is kept
-    *    (flag, probe) because its trade reverses exactly when
-    *    shuffle, not CPU, binds — a network-bound multi-rack
-    *    cluster — and the probe prints both figures plus row hashes
-    *    so the adjudication can be re-run on the target fabric.
-    */
-  private[graft] def curateStagedTable(s: SparkSession, d: String,
-      narrowFpExchange: Boolean = false): DataFrame = {
+    * The fingerprint dedup is one row_number window over (fp, passed)
+    * that shuffles every full row on fp: 51 s at 10^6 all-pass, 50 s
+    * with 30% planted rule failures. The narrow form — quality filter
+    * first, fp → (min doc_id, count) aggregate, join back only the
+    * duplicating fps, so text crosses no exchange — returned identical
+    * rows but measured 155 s / 108 s on the same corpora: Catalyst
+    * does not CSE the scan + token statistics across its three
+    * branches, and the three evaluations cost ~3x the local text-width
+    * shuffle they avoid. */
+  private[graft] def curateStagedTable(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val t = $"text"
     val nTokens = tokenCount(t)
@@ -837,41 +797,17 @@ object TextOps extends QueryModule {
       .when($"n_tokens" < 20, "too_short")
       .when($"n_tokens" > 1000, "too_long")
       .when($"n_stop" * 100L < $"n_tokens", "low_stopword")
-    val base = Tables.documents(s, d)
+    val w = Window.partitionBy($"fp", $"pre_reason".isNull)
+      .orderBy($"doc_id")
+    Tables.documents(s, d)
       .select($"doc_id", $"lang", t,
         nTokens.as("n_tokens"), nStop.as("n_stop"))
       .withColumn("pre_reason", preReason)
-    if (narrowFpExchange) {
-      val pass = base.where($"pre_reason".isNull)
-        .select($"doc_id", $"text", $"n_tokens", md5(normalize(t)).as("fp"))
-      val dupFirst = pass
-        .groupBy($"fp")
-        .agg(min($"doc_id").as("first_id"), count(lit(1)).as("n_fp"))
-        .where($"n_fp" > 1)
-        .select($"fp", $"first_id")
-      // null-SAFE fp equality: groupBy groups NULL fps into one group,
-      // so the join-back must match them too — a plain equi-join would
-      // null-reject and silently diverge from the window form on any
-      // corpus with NULL text
-      val passTagged = pass
-        .join(dupFirst, pass("fp") <=> dupFirst("fp"), "left")
-        .select(pass("doc_id"), pass("text"), pass("n_tokens"),
-          when($"first_id".isNotNull && pass("doc_id") =!= $"first_id",
-            "exact_dup").as("reason12"))
-      val fail = base.where($"pre_reason".isNotNull)
-        .select($"doc_id", $"text", $"n_tokens",
-          $"pre_reason".as("reason12"))
-      passTagged.unionByName(fail)
-    } else {
-      val w = Window.partitionBy($"fp", $"pre_reason".isNull)
-        .orderBy($"doc_id")
-      base
-        .withColumn("fp", md5(normalize(t)))
-        .withColumn("rn", row_number().over(w))
-        .withColumn("reason12",
-          coalesce($"pre_reason", when($"rn" > 1, "exact_dup")))
-        .select($"doc_id", $"text", $"n_tokens", $"reason12")
-    }
+      .withColumn("fp", md5(normalize(t)))
+      .withColumn("rn", row_number().over(w))
+      .withColumn("reason12",
+        coalesce($"pre_reason", when($"rn" > 1, "exact_dup")))
+      .select($"doc_id", $"text", $"n_tokens", $"reason12")
   }
 
   def curateCorpus(s: SparkSession, d: String): DataFrame = {
@@ -881,15 +817,12 @@ object TextOps extends QueryModule {
     // plus the node list and the final verdict join) and Catalyst does
     // not CSE across DataFrame reuse, so without materialization every
     // consumer re-runs the scan + fingerprint stage: measured 184 s vs
-    // ~60 s of component cost at 10^6 docs. One-slot unpersist-first
-    // caches (the library-wide serial-consumer discipline) pin the scan
-    // to one evaluation per stage; at deployment scale this
-    // materialization point is where a pipeline would checkpoint
-    // between stages anyway.
-    Option(lastCurate.getAndSet(null)).foreach(_.unpersist(false))
-    val staged = curateStagedTable(s, d)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    lastCurate.set(staged)
+    // ~60 s of component cost at 10^6 docs. The persisted, held staged
+    // table pins the scan to one evaluation per stage; at deployment
+    // scale this materialization point is where a pipeline would
+    // checkpoint between stages anyway.
+    val staged = Scope.hold(curateStagedTable(s, d)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
     val (nd, ndSmall) = curateNd(staged)
     curateVerdict(staged, nd, ndSmall)
   }
@@ -952,11 +885,6 @@ object TextOps extends QueryModule {
         coalesce($"reason12", $"nd_reason", lit("kept")).as("verdict"))
       .orderBy($"doc_id")
   }
-
-  /** One-slot cache for [[curateCorpus]]'s staged table — unpersist-
-    * FIRST swap, same serial-consumer reasoning as [[lastGrams]]. */
-  private val lastCurate =
-    new java.util.concurrent.atomic.AtomicReference[DataFrame](null)
 
   /** Lexical diversity per document: whitespace token count, distinct
     * token ("type") count, and the type-token ratio as exact

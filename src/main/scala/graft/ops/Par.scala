@@ -38,20 +38,21 @@ object Par {
   /** Run independent Spark actions CONCURRENTLY from driver threads
     * (guide §2.6: actions are only sequential because driver code calls
     * them sequentially — overlapping lets the next job's tasks back-fill
-    * executors freed by the current job's straggler tail). Use ONLY for
-    * work with no data or transient-state dependency: one-slot
-    * checkpoint swaps are per-slot atomic, but two tasks touching the
-    * SAME slot would free blocks out from under each other. Exceptions
-    * propagate to the caller; the pool is per-call and bounded by the
-    * task count (2-3 concurrent jobs — enough to fill a tail, not
-    * enough to fight for executors). */
+    * executors freed by the current job's straggler tail). Each task
+    * runs under the caller's [[graft.Scope]], so what a task holds is
+    * freed when the caller closes its scope, and no task frees another
+    * task's blocks. Exceptions propagate to the caller; the pool is
+    * per-call and bounded by the task count (2-3 concurrent jobs —
+    * enough to fill a tail, not enough to fight for executors). */
   def concurrently[A](tasks: Seq[() => A]): Seq[A] = {
     if (tasks.sizeIs <= 1) tasks.map(_())
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(tasks.size)
+      val owner = graft.Scope.owner
       try {
-        val fs = tasks.map(t => pool.submit(
-          new java.util.concurrent.Callable[A] { def call(): A = t() }))
+        val fs = tasks.map(t => pool.submit(new java.util.concurrent.Callable[A] {
+          def call(): A = graft.Scope.within(owner)(t())
+        }))
         fs.map { f =>
           try f.get()
           catch { // unwrap so callers see the real failure
@@ -66,11 +67,14 @@ object Par {
   /** Two-task form of [[concurrently]], keeping the result types. */
   def concurrently2[A, B](a: => A, b: => B): (A, B) = {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    val owner = graft.Scope.owner
     try {
-      val fa = pool.submit(
-        new java.util.concurrent.Callable[A] { def call(): A = a })
-      val fb = pool.submit(
-        new java.util.concurrent.Callable[B] { def call(): B = b })
+      val fa = pool.submit(new java.util.concurrent.Callable[A] {
+        def call(): A = graft.Scope.within(owner)(a)
+      })
+      val fb = pool.submit(new java.util.concurrent.Callable[B] {
+        def call(): B = graft.Scope.within(owner)(b)
+      })
       def unwrap[T](f: java.util.concurrent.Future[T]): T =
         try f.get()
         catch {

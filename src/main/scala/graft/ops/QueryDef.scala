@@ -26,8 +26,15 @@ final case class QueryDef(
 trait QueryModule {
   def defs: Seq[QueryDef]
 
+  /** Each query first closes its thread's [[graft.Scope]]: building
+    * query N+1 frees what query N held. */
   final def queries: Map[String, (SparkSession, String) => DataFrame] =
-    defs.map(d => d.name -> d.fn).toMap
+    defs.map { d =>
+      d.name -> ((s: SparkSession, dir: String) => {
+        graft.Scope.close()
+        d.fn(s, dir)
+      })
+    }.toMap
   final def oracleSql: Map[String, String] =
     defs.flatMap(d => d.oracle.map(d.name -> _)).toMap
 }

@@ -276,8 +276,7 @@ object Ddl {
         spark.read.parquet(m.getPath.toString).count())
     }
     fs.delete(new org.apache.hadoop.fs.Path(root, "_tombstones"), true)
-    ts.foreach(t =>
-      graft.operators.NearDup.freeLocalCheckpoint(t._2))
+    ts.foreach(t => graft.Scope.free(t._2))
     spark.catalog.refreshByPath(path)
     census
   }

@@ -234,8 +234,8 @@ object ScaleBench {
       println(f"""{"shape":"$name","n":$n,"rows":$rows,"sec":$sec%.2f}""")
       // each rung measured from a clean slate: without this, the
       // previous rung's pinned blocks squeeze the execution pool and
-      // inflated a following rung ~2× at 10⁷ (see graft.Release)
-      graft.Release.transients()
+      // inflated a following rung ~2× at 10⁷ (see graft.Scope)
+      graft.Scope.close()
     }
 
     time("minhash_neardup") {
@@ -339,7 +339,7 @@ object ScaleBench {
         .head.toSeq.map(v => Option(v).map(_.toString).getOrElse("0")).toArray
       val sec = (System.nanoTime() - t0) / 1e9
       println(f"""{"shape":"$name","n":$n,"rows":$rows,"xor":"$h","sec":$sec%.2f}""")
-      graft.Release.transients()
+      graft.Scope.close()
     }
     if (only.exists(_.contains("lsh_anatomy"))) {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
@@ -462,11 +462,11 @@ object ScaleBench {
         }
       }
     }
-    // stage attribution + fingerprint-exchange A/B for the cascade —
-    // explicit opt-in (SPARK_GRAFT_SCALE_ONLY=curate_stages): it re-runs
-    // the cascade's stages with materialization barriers between them,
-    // deliberately paying persist costs the fused plan avoids, to ATTRIBUTE
-    // the fused figure, not to add to the default sweep.
+    // stage attribution for the cascade — explicit opt-in
+    // (SPARK_GRAFT_SCALE_ONLY=curate_stages): it re-runs the cascade's
+    // stages with materialization barriers between them, deliberately
+    // paying persist costs the fused plan avoids, to ATTRIBUTE the fused
+    // figure, not to add to the default sweep.
     if (only.exists(_.contains("curate_stages"))) {
       import org.apache.spark.storage.StorageLevel
       def timed[T](name: String)(body: => T): T = {
@@ -476,32 +476,7 @@ object ScaleBench {
           f""""sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
         r
       }
-      // A/B the two staged forms on the all-pass probe corpus and on a
-      // variant with 30% planted rule failures (the regime the
-      // filter-before-exchange order exists for)
-      val curDir30 = s"$dir-curate30"
-      spark.read.parquet(s"$dir/documents.parquet")
-        .withColumn("text",
-          when($"doc_id" % 10 < 3, $"text") // no stopwords -> low_stopword
-            .otherwise(concat($"text", lit(" the a of and"))))
-        .write.mode("overwrite").parquet(s"$curDir30/documents.parquet")
-      Seq(("allpass", curDir), ("fail30", curDir30)).foreach { case (tag, cd) =>
-        Seq(("narrow", true), ("window", false)).foreach { case (form, flag) =>
-          val t0 = System.nanoTime()
-          val df = graft.operators.TextOps
-            .curateStagedTable(spark, cd, narrowFpExchange = flag)
-          val r = df.select(xxhash64(
-              struct(df.columns.toIndexedSeq.map(col): _*)).as("h"))
-            .agg(count(lit(1)), bit_xor($"h")).collect().head
-          // rows+hash printed so the two forms' row-identity is ON RECORD,
-          // not just asserted: same corpus -> same (rows, hash) pair
-          println(f"""{"shape":"curate_stage_staged_${form}_$tag",""" +
-            f""""n":$n,"rows":${r.getLong(0)},"hash":${r.getLong(1)},""" +
-            f""""sec":${(System.nanoTime() - t0) / 1e9}%.2f}""")
-        }
-      }
-      // stage attribution of the cascade (default staged form), with a
-      // barrier after each stage so the clock isolates it
+      // a barrier after each stage so the clock isolates it
       val staged = timed("filter_fp") {
         val df = graft.operators.TextOps.curateStagedTable(spark, curDir)
           .persist(StorageLevel.MEMORY_AND_DISK)
@@ -734,7 +709,7 @@ object ScaleBench {
         f""""n_twin_flagged":${counts.getLong(1)},""" +
         f""""n_control_flagged":${counts.getLong(2)},""" +
         f""""n_flagged":${counts.getLong(0)},"sec":$sec%.2f}""")
-      graft.Release.transients()
+      graft.Scope.close()
     }
     // A/B of the streaming semantic sink's index LAYOUTS at the
     // cell-SPARSE geometry the partitioned form exists for: a standing
@@ -913,7 +888,7 @@ object ScaleBench {
         f""""standing_survivor_sec":$standingSec%.1f,""" +
         f""""incremental_sec":$incSec%.1f,"full_recompute_sec":$fullSec%.1f}""")
       require(bad == 0L, s"takedown parity violated: $bad mismatched rows")
-      graft.Release.transients()
+      graft.Scope.close()
     }
 
     // Retraction through DERIVED standing artifacts — the three honesty
@@ -1004,7 +979,7 @@ object ScaleBench {
         f""""pagerank_rounds_sec":$prSec%.1f,"pagerank_nodes":$nPr}""")
       require(statsBad == 0L && kcoreBad == 0L,
         s"retract_derived parity violated: stats=$statsBad kcore=$kcoreBad")
-      graft.Release.transients()
+      graft.Scope.close()
     }
 
     // Takedown through the CAPPED INVERTED INDEX at scale — the
@@ -1089,7 +1064,7 @@ object ScaleBench {
           f""""full_sec":$fullSec%.1f,"parity_mismatches":$bad}""")
         require(bad == 0L, s"retract_text parity violated: $bad")
         Seq(removed, inc, fPost, fullIdx)
-          .foreach(graft.operators.NearDup.freeLocalCheckpoint)
+          .foreach(graft.Scope.free)
       }
       prevFallback match {
         case Some(v) => spark.conf.set(
@@ -1097,7 +1072,7 @@ object ScaleBench {
         case None => spark.conf.unset(
           "spark.sql.objectHashAggregate.sortBased.fallbackThreshold")
       }
-      graft.Release.transients()
+      graft.Scope.close()
     }
 
     // Standing-stats maintenance economics, end-to-end through the
@@ -1169,7 +1144,7 @@ object ScaleBench {
         f""""retract_sec":$retractSec%.1f,""" +
         f""""parity_mismatches":$bad}""")
       require(bad == 0L, s"stats_stream parity violated: $bad rows")
-      graft.Release.transients()
+      graft.Scope.close()
     }
 
     if (only.forall(_.contains("ivf2_deploy"))) {
@@ -1531,7 +1506,7 @@ object ScaleBench {
         standingF.unpersist(false)
       }
       standing.unpersist(false)
-      graft.Release.transients()
+      graft.Scope.close()
     }
     // Deployment-K codebook TRAINING through the hierarchy — the third
     // leg of the K ∝ corpus lever (build and probe are ivf2_deploy;
@@ -1674,7 +1649,7 @@ object ScaleBench {
           }
           standing.unpersist(false)
       }
-      graft.Release.transients()
+      graft.Scope.close()
     }
 
     if (only.forall(_.contains("ivf2_train"))) {
@@ -1767,7 +1742,7 @@ object ScaleBench {
         f""""recall_ppm_trained":$trainedPpm,""" +
         f""""recall_ppm_analytic":$analyticPpm}""")
       corpus.unpersist(false)
-      graft.Release.transients()
+      graft.Scope.close()
     }
     // SEEDED vs TRAINED PQ sub-codebooks at deployment geometry — the
     // quality axis the hash gates can't price (q_pq_train pins the
@@ -1980,7 +1955,7 @@ object ScaleBench {
         } finally { idxRes.unpersist(false); () }
       }
       indexed.unpersist(false)
-      graft.Release.transients()
+      graft.Scope.close()
     }
     // COMPOSED DEPLOYMENT INDEX at deployment K — q_ivf2pq_trained_topk's
     // chain at scale: two-level coarse assignment (the corpus pass that
@@ -2174,7 +2149,7 @@ object ScaleBench {
         finally { asg.unpersist(false); () }
       }
       corpus.unpersist(false)
-      graft.Release.transients()
+      graft.Scope.close()
     }
     if (only.forall(_.contains("ann_recall_deploy"))) {
       val vecsDf = spark.range(0, n, 1, 32)
@@ -2246,10 +2221,10 @@ object ScaleBench {
         nd.write.mode("overwrite").parquet(s"$dir/curate_nd.parquet")
         ndSmall = small
       }
-      // one-slot module refs (LSH checkpoint, staged cache) must be
-      // cleared while THIS context is alive — a later session's
-      // unpersist-first swap on a dead context NPEs in BlockManager
-      graft.Release.transients()
+      // what this stage held (LSH checkpoint, staged cache) must be
+      // freed while THIS context is alive — freeing it on a dead
+      // context NPEs in BlockManager
+      graft.Scope.close()
       s2.stop()
       // stage 3: final verdict join + checksum
       val s3 = session("graft-scale-staged")
@@ -2259,7 +2234,7 @@ object ScaleBench {
         val nd = s3.read.parquet(s"$dir/curate_nd.parquet")
         out = xorOf(graft.operators.TextOps.curateVerdict(st, nd, ndSmall))
       }
-      graft.Release.transients()
+      graft.Scope.close()
       s3.stop()
       val total = sec1 + sec2 + sec3
       println(f"""{"shape":"curate_staged","n":$n,"rows":${out._1},""" +
@@ -2286,7 +2261,7 @@ object ScaleBench {
           f""""staged_rows":${out._1},"fused_rows":${fused._1},""" +
           f""""staged_xor":"${out._2}","fused_xor":"${fused._2}",""" +
           f""""equal":${out == fused},"fused_sec":$fusedSec%.2f}""")
-        graft.Release.transients()
+        graft.Scope.close()
         s4.stop()
       }
     }
@@ -2299,7 +2274,7 @@ object ScaleBench {
       if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
       f.delete(); ()
     }
-    Seq(dir, s"$dir-curate", s"$dir-curate30", s"$dir-saltjoin")
+    Seq(dir, s"$dir-curate", s"$dir-saltjoin")
       .foreach(rmrf)
   }
 }

@@ -481,6 +481,6 @@ class CorpusSpec extends SparkSpecBase {
     assert(got("calm") === servedRows("calm"))
     assert(got("x") === servedRows("x"))
     assert(got.keySet === Set("hot", "calm", "x"))
-    graft.operators.NearDup.freeLocalCheckpoint(served)
+    graft.Scope.free(served)
   }
 }

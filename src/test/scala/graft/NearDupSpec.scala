@@ -712,7 +712,7 @@ class NearDupSpec extends SparkSpecBase {
   test("above-cap verify: the disk-backed single shingle materialization " +
       "returns the same verified pairs and pins exactly one DISK_ONLY table") {
     import spark.implicits._
-    graft.Release.transients()
+    graft.Scope.close()
     val docs = graft.ops.Tables.documents(spark, sfDir)
       .select($"doc_id", $"text")
     def verified(cap: Long): Set[(Long, Long, Long)] =
@@ -734,7 +734,7 @@ class NearDupSpec extends SparkSpecBase {
       .filter(r => r.getStorageLevel.useDisk && !r.getStorageLevel.useMemory)
     assert(diskOnly.size === 1,
       s"expected exactly the DISK_ONLY shingle table, got ${diskOnly.size}")
-    graft.Release.transients()
+    graft.Scope.close()
     assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
       "release must also free the above-cap shingle table")
   }
@@ -756,20 +756,20 @@ class NearDupSpec extends SparkSpecBase {
     touched.foreach(id => assert(labels(id) === cc(id), s"doc $id"))
   }
 
-  test("Release.transients frees every block the operator family pins " +
+  test("Scope.close frees every block the operator family pins " +
       "and is idempotent") {
     val sc = spark.sparkContext
-    graft.Release.transients() // clear whatever earlier tests pinned
+    graft.Scope.close() // clear whatever earlier tests pinned
     val before = sc.getPersistentRDDs.keySet
     // checkpoint-backed (cand + labels) and window paths both exercised
     NearDup.dedupClusters(spark, sfDir).count()
     NearDup.dedupSurvivor(spark, sfDir).count()
     assert(sc.getPersistentRDDs.keySet.diff(before).nonEmpty,
       "expected the run to pin checkpoint blocks")
-    graft.Release.transients()
+    graft.Scope.close()
     assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty,
       "release must drop every block the run pinned")
-    graft.Release.transients() // idempotent on an empty slate
+    graft.Scope.close() // idempotent on an empty slate
     assert(sc.getPersistentRDDs.keySet.diff(before).isEmpty)
   }
 }

@@ -9,6 +9,11 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpecBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpecBase.session
   def sfDir: String = "/root/testdata/sf0.001"
+
+  /** Each test frees what it held, so no spec runs on blocks an earlier
+    * spec pinned in the shared session. */
+  override def withFixture(test: NoArgTest): org.scalatest.Outcome =
+    try super.withFixture(test) finally Scope.close()
 }
 
 object SparkSpecBase {

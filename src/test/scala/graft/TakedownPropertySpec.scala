@@ -77,7 +77,7 @@ class TakedownPropertySpec extends SparkSpecBase {
       val statsFull = Corpus.sourceTokenStats(fDocs)
         .as[(String, String, Long, Long)].collect().toSeq.sorted
       Seq(pairs, fPairs, standing, core, stats)
-        .foreach(NearDup.freeLocalCheckpoint)
+        .foreach(graft.Scope.free)
       val ok = survInc == survFull && coreInc == coreFull &&
         prInc == prFull && statsInc == statsFull
       if (!ok) println(
