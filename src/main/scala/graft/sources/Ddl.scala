@@ -206,7 +206,7 @@ object Ddl {
       spark.catalog.refreshByPath(norm.toString)
     }
     // MEMBER-level healing for partitioned tables whose partition dirs
-    // are rewritten individually ([[compactPartitions]], or per-cell
+    // are rewritten individually ([[compactPartitions]], or per-member
     // compact calls): a crashed member swap leaves
     // `<part>._compact_old` (data parked — restore if the member is
     // missing, else it is a completed swap's leftover) and possibly

@@ -581,51 +581,16 @@ object StreamingPipeline {
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        // the operator wrote both tables itself, so their schemas are
-        // known: pinning them skips Spark's per-read inference job
-        def readIfExists(dir: String, schema: String): Option[DataFrame] = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          if (fs.exists(p) && fs.listStatus(p).exists(st =>
-              st.getPath.getName.endsWith(".parquet")))
-            Some(s.read.schema(schema).parquet(dir))
-          else None
-        }
         graft.sources.Ddl.recover(s, indexDir)
-        // retraction: tombstoned doc_ids are dropped from BOTH sides —
-        // the standing read (they are logically deleted until the next
-        // compact applies them physically) and the batch itself (a
-        // REPLAYED batch containing a since-retracted doc must not
-        // resurrect its purged hits or re-append its index rows; ids
-        // are never reused — the same monotone-id contract the hits
-        // range pruning already relies on)
-        val tombs = graft.sources.Ddl.tombstonesOf(s, indexDir)
-          .map(t => broadcast(t.select(col("doc_id")).distinct()))
-        def liveIds(df: DataFrame): DataFrame =
-          tombs.map(t => df.join(t, Seq("doc_id"), "left_anti"))
-            .getOrElse(df)
+        val liveIds = liveIdsOf(s, indexDir, "doc_id")
         val shingled = liveIds(batch.toDF()).select(col("doc_id"),
           graft.functions.VectorExpressions
             .text_shingles(col("text"), 3).as("sh"))
         val batchIdx = graft.operators.NearDup.bandIndex(shingled)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          // one pass over batchIdx both materializes it and returns
-          // (min doc_id, max doc_id, rows); it has no exchange, so it is
-          // one job, where an agg(min, max).collect() ran three.
-          // None = an empty batch (every doc tombstoned or shingle-less):
-          // nothing to probe and nothing to write.
-          val range = batchIdx.select($"doc_id").as[Long].rdd
-            .mapPartitions { ids =>
-              var (lo, hi, n) = (Long.MaxValue, Long.MinValue, 0L)
-              ids.foreach { d => lo = math.min(lo, d); hi = math.max(hi, d); n += 1 }
-              Iterator((lo, hi, n))
-            }
-            .collect().filter(_._3 > 0)
-            .reduceOption((a, b) =>
-              (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
-          range.foreach { case (lo, hi, rows) =>
-            val probeSide = readIfExists(indexDir, "doc_id LONG, bkey LONG")
+          batchRange(batchIdx, "doc_id").foreach { case (lo, hi, rows) =>
+            val probeSide = readIfExists(s, indexDir, "doc_id LONG, bkey LONG")
               .map(liveIds).map(_.unionByName(batchIdx)).getOrElse(batchIdx)
             val cand = batchIdx.select($"bkey", $"doc_id".as("id_p"))
               .join(probeSide.select($"bkey", $"doc_id".as("id_i")), Seq("bkey"))
@@ -633,24 +598,12 @@ object StreamingPipeline {
               .select(least($"id_p", $"id_i").as("id_a"),
                 greatest($"id_p", $"id_i").as("id_b"))
               .distinct()
-            // exactly-once anti-join, PRUNED to the batch-relevant slice
-            // of the hits table: every candidate this batch can derive
-            // contains at least one batch doc, so hits rows with BOTH
-            // endpoints outside the batch's doc_id range can never match
-            // — the range predicate is a semantics-preserving superset
-            // filter that parquet min/max stats turn into file skipping
-            // (hits append in batch order, so old files' id ranges are
-            // disjoint under monotone ingest ids). Without it the
-            // anti-join re-scans the sink's whole history every batch.
-            val fresh = readIfExists(hitsDir, "id_a LONG, id_b LONG")
-              .map { h =>
-                val relevant = h.where(
-                  ($"id_a" >= lo && $"id_a" <= hi) ||
-                  ($"id_b" >= lo && $"id_b" <= hi))
-                cand.join(relevant, Seq("id_a", "id_b"), "left_anti")
-              }
-              .getOrElse(cand)
-            fresh.write.mode("append").parquet(hitsDir)
+            // every candidate this batch can derive contains at least one
+            // batch doc, so a hits row with BOTH endpoints outside the
+            // batch's doc_id range can never match
+            appendFreshHits(s, cand, hitsDir, "id_a LONG, id_b LONG",
+              Seq("id_a", "id_b"),
+              ($"id_a" >= lo && $"id_a" <= hi) || ($"id_b" >= lo && $"id_b" <= hi))
             Faults.indexedDedupAfterHits(id)
             // files sized by the batch, not one per source block: every
             // later probe lists and opens each index file
@@ -666,6 +619,73 @@ object StreamingPipeline {
   /** Index rows per file an [[indexedDedupStream]] micro-batch appends
     * (16 B a row unencoded). */
   private val IndexRowsPerFile = 4000000L
+
+  // The maintained-index plumbing both dedup sinks share.
+
+  /** Whether `dir` holds parquet files at its root. */
+  private def hasRootParquet(s: SparkSession, dir: String): Boolean = {
+    val p = new org.apache.hadoop.fs.Path(dir)
+    val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
+    fs.exists(p) && fs.listStatus(p).exists(st =>
+      st.isFile && st.getPath.getName.endsWith(".parquet"))
+  }
+
+  /** `dir` read under `schema`, if it holds root parquet files. The sinks
+    * wrote their tables themselves, so their schemas are known: pinning
+    * them skips Spark's per-read inference job. */
+  private def readIfExists(s: SparkSession, dir: String,
+      schema: String): Option[DataFrame] =
+    if (hasRootParquet(s, dir)) Some(s.read.schema(schema).parquet(dir))
+    else None
+
+  /** Retraction: drops the `idCol` values tombstoned on `indexDir`.
+    * A sink applies it to BOTH sides — the standing read (tombstoned
+    * rows are logically deleted until the next compact applies them
+    * physically) and the batch itself (a REPLAYED batch containing a
+    * since-retracted id must not resurrect its purged hits or re-append
+    * its index rows; ids are never reused — the same monotone-id
+    * contract the hits range pruning relies on). */
+  private def liveIdsOf(s: SparkSession, indexDir: String,
+      idCol: String): DataFrame => DataFrame =
+    graft.sources.Ddl.tombstonesOf(s, indexDir)
+      .map(t => broadcast(t.select(col(idCol)).distinct()))
+      .map(t => (df: DataFrame) => df.join(t, Seq(idCol), "left_anti"))
+      .getOrElse(identity[DataFrame] _)
+
+  /** (min, max, rows) of the LONG column `idCol` of a persisted batch,
+    * or None for an empty batch, which a sink then neither probes nor
+    * writes. The one pass also materializes `df`; it has no exchange,
+    * so it is one job, where an agg(min, max).collect() ran three. */
+  private def batchRange(df: DataFrame,
+      idCol: String): Option[(Long, Long, Long)] =
+    df.select(col(idCol)).rdd
+      .mapPartitions { rows =>
+        var (lo, hi, n) = (Long.MaxValue, Long.MinValue, 0L)
+        rows.foreach { r =>
+          val d = r.getLong(0); lo = math.min(lo, d); hi = math.max(hi, d); n += 1
+        }
+        Iterator((lo, hi, n))
+      }
+      .collect().filter(_._3 > 0)
+      .reduceOption((a, b) =>
+        (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
+
+  /** Appends to `hitsDir` the rows of `cand` it does not already hold:
+    * exactly-once under replay, because a retried batch re-derives the
+    * same rows and the anti-join on `keys` drops them. The anti-join is
+    * PRUNED to the hits rows `relevant` to this batch — a semantics-
+    * preserving superset filter over its id range that parquet min/max
+    * stats turn into file skipping (hits append in batch order, so old
+    * files' id ranges are disjoint under monotone ingest ids). Without
+    * it the anti-join re-scans the sink's whole history every batch. */
+  private def appendFreshHits(s: SparkSession, cand: DataFrame,
+      hitsDir: String, schema: String, keys: Seq[String],
+      relevant: Column): Unit =
+    readIfExists(s, hitsDir, schema)
+      .map(h => cand.join(h.where(relevant).select(keys.map(col): _*), keys,
+        "left_anti"))
+      .getOrElse(cand)
+      .write.mode("append").parquet(hitsDir)
 
   /** MAINTAINED IVF cell index — the embedding-side mirror of
     * [[indexedDedupStream]], streaming the semantics of
@@ -683,63 +703,55 @@ object StreamingPipeline {
     * reports the FRESH vector as the duplicate), and within a batch
     * the lower vec_id wins.
     *
-    * Exactly-once the same storage-level way as [[indexedDedupStream]]:
-    * hits are anti-joined on (vec_id, matched_id) before appending, so
-    * a replayed batch re-derives the same hits and appends nothing;
-    * index rows are immutable facts whose replay duplicates the final
-    * hit `.distinct()` absorbs and [[graft.sources.Ddl.compact]] folds
-    * away.
+    * Exactly-once the same storage-level way as [[indexedDedupStream]],
+    * through the same private helpers: hits are anti-joined on
+    * (vec_id, matched_id) before appending, so a replayed batch
+    * re-derives the same hits and appends nothing; index rows are
+    * immutable facts whose replay duplicates the final hit `.distinct()`
+    * absorbs and compaction folds away. Both tables are read with pinned
+    * schemas, one pass over the persisted batch returns its vec_id
+    * range, and an empty batch (every vector tombstoned) writes nothing;
+    * StreamingSpec pins the steady-state job count.
     *
     * Scale shape: the probe join is one-sided and CELL-BOUNDED
     * (|batch-cell| × |cell| — corpus × corpus never pairs); the
     * codebook is K-row driver metadata riding into codegen
     * ([[graft.functions.NearestCentroidExpr]]), never a join side; the
     * stored index carries precomputed norms so probes never rescan
-    * vector payloads to renormalize. `partitionIndexByCell` chooses the
-    * index layout — a MEASURED trade, not a free win:
-    *  - `false` (default): flat appends, one file per write task per
-    *    batch. Every batch's standing read scans the whole index (the
-    *    touched-cell isin still filters rows before the join). Right
-    *    when batches touch most cells — at the bench geometry (1k
-    *    vecs/trigger over K=64, every cell touched every batch) the
-    *    partitioned form measured 2.8× SLOWER (515 vs 1,433 vecs/s at
-    *    50 batches, p99 3,970 vs 1,138 ms) because it writes one file
-    *    per touched cell per batch (8× the file count, so 8× the
-    *    listing/open cost) and prunes nothing.
-    *  - `true`: the dir is HIVE-PARTITIONED on centroid_id (K dirs —
-    *    bounded, unlike the band index's high-cardinality bkey) and
-    *    each batch's standing read PRUNES to its touched cells: scan
-    *    cost O(touched fraction) instead of O(index), at a per-batch
-    *    FIXED cost (partition discovery lists K dirs every batch).
-    *    Measured crossover (ScaleBench `semstream_layout`, K=1024,
-    *    256-row batches touching 4 cells, local disk): flat p50 grows
-    *    1.23 → 2.05 → 2.52 s across 10⁶ → 10⁷ → 3·10⁷ standing rows
-    *    while partitioned stays ~flat at 2.4-2.7 s — dead heat at
-    *    ~3·10⁷ (~9 GB), partitioned ahead beyond, and the flat form's
-    *    cost keeps growing with the stream's whole history while the
-    *    partitioned form's does not. Choose by standing-index size,
-    *    not taste. Maintenance via [[graft.sources.Ddl.compactPartitions]]
-    *    at the index ROOT — it folds each cell dir's files AND applies
-    *    the root-level tombstones [[takedownVectors]] writes (clearing
-    *    them with the swap). Per-cell `Ddl.compact` calls would fold
-    *    files but NEVER see the root tombstone set: the pending set
-    *    would grow unboundedly and every batch would pay its anti-join
-    *    forever (results stay correct via liveIds; the physical delete
-    *    just never lands).
-    *  - `cellBuckets = Some(B)`: the SHARDED layout for deployments
-    *    past the hive-directory ceiling. The per-cell layout writes K
-    *    directories, and K ∝ corpus (cell size held constant) walks
-    *    that into filesystem-metadata territory around 10⁵-10⁶ dirs
-    *    (≈10⁹-10¹⁰ rows at 4,000/cell) long before data volume hurts.
-    *    Bucketing cells into B dirs (`cell_bucket = centroid_id % B`,
-    *    centroid_id kept as a SORTED data column) caps directory count
-    *    at B while keeping both pruning levers: discovery lists
-    *    O(touched buckets) dirs, and within a bucket the pushed-down
-    *    centroid_id isin skips row groups via the sorted write's
-    *    min/max stats. Maintenance via `Ddl.compactPartitions` (folds
-    *    files AND applies pending tombstones per bucket, layout
-    *    preserved); root-level compact would flatten the layout.
-    *    Measured: ScaleBench `semstream_layout`'s sharded lane.
+    * vector payloads to renormalize. The index has two layouts — a
+    * MEASURED trade, not a free win:
+    *  - flat (the default): one file per write task per batch. Every
+    *    batch's standing read scans the whole index (the touched-cell
+    *    isin still filters rows before the join). Right when batches
+    *    touch most cells — at the bench geometry (1k vecs/trigger over
+    *    K=64, every cell touched every batch) a cell-partitioned layout
+    *    measured 2.8× SLOWER (515 vs 1,433 vecs/s at 50 batches, p99
+    *    3,970 vs 1,138 ms) because it writes one file per touched cell
+    *    per batch (8× the file count, so 8× the listing/open cost) and
+    *    prunes nothing. Maintenance via [[graft.sources.Ddl.compact]].
+    *  - `cellBuckets = Some(B)`: the SHARDED layout, for cell-sparse
+    *    batches over a large standing index. Cells are bucketed into B
+    *    dirs (`cell_bucket = centroid_id % B`, centroid_id kept as a
+    *    SORTED data column): each batch's standing read lists only its
+    *    touched buckets' dirs, and within a bucket the pushed-down
+    *    centroid_id isin skips row groups via the sorted write's min/max
+    *    stats. B above the largest cell id (B = K for ids 0..K-1) gives
+    *    one dir per cell; a smaller B caps the dir count where K ∝
+    *    corpus would walk one-dir-per-cell into filesystem-metadata
+    *    territory around 10⁵-10⁶ dirs (≈10⁹-10¹⁰ rows at 4,000/cell).
+    *    Measured (ScaleBench `semstream_layout`, K=1024, 256-row
+    *    batches touching 4 cells, local disk): flat p50 grows 1.23 →
+    *    2.05 → 2.52 s across 10⁶ → 10⁷ → 3·10⁷ standing rows, while the
+    *    pruned read's does not grow with the stream's history; at 10⁷,
+    *    B=32 (p50 1352 ms, 32 dirs) tied one dir per cell (1317 ms, 1024
+    *    dirs), which is why the separate per-cell layout was removed
+    *    (an index dir it wrote fails the batch). Choose by
+    *    standing-index size, not taste. Maintenance via
+    *    [[graft.sources.Ddl.compactPartitions]] at the index ROOT (folds
+    *    each bucket's files AND applies the root-level tombstones
+    *    [[takedownVectors]] writes, clearing them with the swap, layout
+    *    preserved); a root `Ddl.compact` would flatten the layout, and
+    *    per-bucket `Ddl.compact` calls never see the root tombstone set.
     *    B is FROZEN for the index's life, exactly like the codebook:
     *    `cell_bucket = centroid_id % B` is only invertible under the B
     *    that wrote it, so a standing read under any other B maps
@@ -781,14 +793,10 @@ object StreamingPipeline {
       hitsDir: String,
       checkpointDir: String,
       tau: Double = 0.9,
-      partitionIndexByCell: Boolean = false,
       twoLevelSupers: Option[Int] = None,
       twoLevelNprobe: Int = 1,
       cellBuckets: Option[Int] = None): StreamingQuery = {
     require(codebook.nonEmpty, "semanticDedupStream: empty codebook")
-    require(!(partitionIndexByCell && cellBuckets.isDefined),
-      "semanticDedupStream: partitionIndexByCell and cellBuckets are " +
-        "alternative index layouts — pick one")
     require(cellBuckets.forall(_ >= 1),
       s"semanticDedupStream: cellBuckets must be >= 1, got $cellBuckets")
     require(codebook.map(_._1).sliding(2).forall(
@@ -803,24 +811,12 @@ object StreamingPipeline {
     val cb2 = twoLevelSupers.map(s0 =>
       graft.operators.Similarity.twoLevelFromSeq(codebook, s0,
         refineIters = 2))
+    val indexSchema = "vec_id LONG, centroid_id LONG, v ARRAY<FLOAT>, nrm DOUBLE"
     vecs.writeStream.outputMode("append")
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], id: Long) =>
         val s = batch.sparkSession
         import s.implicits._
-        // data detection must see BOTH layouts: flat .parquet files
-        // (post-compact) and hive partition dirs (centroid_id=N/...)
-        def readIfExists(dir: String): Option[DataFrame] = {
-          val p = new org.apache.hadoop.fs.Path(dir)
-          val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
-          def hasData(d: org.apache.hadoop.fs.Path): Boolean =
-            fs.exists(d) && fs.listStatus(d).exists { st =>
-              (st.isFile && st.getPath.getName.endsWith(".parquet")) ||
-              (st.isDirectory && st.getPath.getName.contains("=") &&
-                hasData(st.getPath))
-            }
-          if (hasData(p)) Some(s.read.parquet(dir)) else None
-        }
         graft.sources.Ddl.recover(s, indexDir)
         validateCellBuckets(s, indexDir, cellBuckets)
         val assignCol = cb2 match {
@@ -830,17 +826,7 @@ object StreamingPipeline {
           case None => graft.functions.VectorExpressions
             .nearest_centroid($"v", $"nrm", cbIds, cbCents, cbNorms)
         }
-        // retraction: tombstoned vec_ids drop from BOTH sides — the
-        // standing read below (logically deleted until compact applies
-        // them) and the batch itself (a REPLAYED batch containing a
-        // since-retracted vector must not resurrect its purged hits or
-        // re-append its index rows; ids are never reused — the same
-        // monotone-id contract the hits range pruning relies on)
-        val tombs = graft.sources.Ddl.tombstonesOf(s, indexDir)
-          .map(t => broadcast(t.select($"vec_id").distinct()))
-        def liveIds(df: DataFrame): DataFrame =
-          tombs.map(t => df.join(t, Seq("vec_id"), "left_anti"))
-            .getOrElse(df)
+        val liveIds = liveIdsOf(s, indexDir, "vec_id")
         val assigned = liveIds(batch.toDF())
           .withColumn("nrm", graft.functions.VectorFunctions.l2Norm($"v"))
           .withColumn("_best", assignCol)
@@ -848,146 +834,100 @@ object StreamingPipeline {
             $"v", $"nrm")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          val batchSide = assigned.select($"centroid_id",
-            $"vec_id".as("id_i"), $"v".as("vi"), $"nrm".as("ni"),
-            lit(false).as("standing"))
-          // the batch's touched cells — ≤ K driver values (the same
-          // bounded-metadata class as the codebook itself). Under the
-          // partitioned layout the isin prunes the standing read to the
-          // touched cells' DIRECTORIES (scan ∝ touched fraction); under
-          // the flat layout it is a pushed-down row filter ahead of the
-          // join.
-          val touched = assigned.select($"centroid_id").distinct()
-            .collect().map(_.getLong(0)).toSeq
-          // the standing side EXCLUDES this batch's own ids: a batch
-          // whose index append landed but whose checkpoint commit did
-          // not is replayed with its own rows already standing, and
-          // without the exclusion a batch-internal pair (a < b) would
-          // re-emit as the reversed (a, matched=b) "standing wins" hit
-          // — replay must derive exactly the first attempt's rows.
-          // Standing read, cheapest listing first: under a PURE
-          // partitioned layout (cell dirs, no root files) the read is
-          // scoped to the TOUCHED cells' directories via basePath —
-          // discovery lists O(touched) dirs instead of all K every
-          // batch (the measured ~2.5 s/batch K-dir listing floor of
-          // the first semstream_layout rung, now amortized away); the
-          // flat and post-compact/mixed layouts keep the full-dir read
-          // whose isin is a pushed-down row filter.
-          val standingRead: Option[DataFrame] = {
-            val root = new org.apache.hadoop.fs.Path(indexDir)
-            val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
-            val rootSt =
-              if (fs.exists(root)) fs.listStatus(root)
-              else Array.empty[org.apache.hadoop.fs.FileStatus]
-            val rootHasFiles = rootSt.exists(st =>
-              st.isFile && st.getPath.getName.endsWith(".parquet"))
-            val cellDirs = rootSt.filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("centroid_id="))
-              .map(_.getPath.getName).toSet
-            val bucketDirs = rootSt.filter(st => st.isDirectory &&
-              st.getPath.getName.startsWith("cell_bucket="))
-              .map(_.getPath.getName).toSet
-            if (!rootHasFiles && cellDirs.nonEmpty) {
-              val dirs = touched.map(c => s"centroid_id=$c")
-                .filter(cellDirs.contains).map(nm => s"$indexDir/$nm")
-              if (dirs.isEmpty) None
-              else Some(s.read.option("basePath", indexDir)
-                .parquet(dirs: _*))
-            } else if (!rootHasFiles && bucketDirs.nonEmpty) {
-              // SHARDED layout: discovery lists O(touched buckets)
-              // dirs (bounded by B, not K); within a bucket the
-              // pushed-down centroid_id isin prunes ROW GROUPS via the
-              // write path's sortWithinPartitions(centroid_id) stats.
-              // cellBuckets is guaranteed defined AND equal to the
-              // marker-pinned modulus here — validateCellBuckets (run
-              // at the top of every batch) fails the query fast
-              // otherwise, because touched→bucket mapping under any
-              // other B silently misses duplicate hits
-              val b = cellBuckets.getOrElse(throw new IllegalStateException(
-                s"semanticDedupStream: cell_bucket= dirs at $indexDir " +
-                  "but cellBuckets is unset (validateCellBuckets missed?)"))
-              val dirs = touched.map(c =>
-                s"cell_bucket=${java.lang.Math.floorMod(c, b.toLong)}")
-                .distinct
-                .filter(bucketDirs.contains).map(nm => s"$indexDir/$nm")
-              if (dirs.isEmpty) None
-              else Some(s.read.option("basePath", indexDir)
-                .parquet(dirs: _*))
-            } else readIfExists(indexDir)
-          }
-          val probeSide = standingRead
-            // partition-column type re-pinned to long: partition
-            // inference types small values as int, and a post-compact
-            // dir carries centroid_id as a data column — the cast makes
-            // both layouts union-compatible with the batch side
-            .map(df => liveIds(df
-              .withColumn("centroid_id", $"centroid_id".cast("long"))
-              .where($"centroid_id".isin(touched: _*)))
-              .join(assigned.select($"vec_id"), Seq("vec_id"),
-                "left_anti")
-              .select($"centroid_id", $"vec_id".as("id_i"),
-                $"v".as("vi"), $"nrm".as("ni"), lit(true).as("standing"))
-              .unionByName(batchSide))
-            .getOrElse(batchSide)
-          val hits = assigned
-            .select($"centroid_id", $"vec_id", $"v".as("vp"),
-              $"nrm".as("np"))
-            .join(probeSide, Seq("centroid_id"))
-            .where($"id_i" =!= $"vec_id" &&
-              ($"standing" || $"id_i" < $"vec_id"))
-            .withColumn("cosine", graft.functions.VectorFunctions
-              .cosineWithNorms($"vp", $"vi", $"np", $"ni"))
-            .where($"cosine" >= lit(tau))
-            .select($"vec_id", $"id_i".as("matched_id"), $"cosine")
-            .distinct()
-          // exactly-once anti-join, PRUNED to the batch-relevant slice
-          // of the hits table: a hit row's vec_id is always the FRESH
-          // side, so rows outside this batch's vec_id range can never
-          // match a new row — the range predicate is a semantics-
-          // preserving superset filter that parquet min/max stats turn
-          // into file skipping (without it the anti-join re-scans the
-          // sink's whole history every batch)
-          val idRange = assigned.agg(min($"vec_id"), max($"vec_id"))
-            .collect().head
-          val fresh = readIfExists(hitsDir)
-            .filter(_ => !idRange.isNullAt(0))
-            .map { h =>
-              val (lo, hi) = (idRange.getLong(0), idRange.getLong(1))
-              hits.join(
-                h.where($"vec_id" >= lo && $"vec_id" <= hi)
-                  .select($"vec_id", $"matched_id"),
-                Seq("vec_id", "matched_id"), "left_anti")
+          batchRange(assigned, "vec_id").foreach { case (lo, hi, _) =>
+            val batchSide = assigned.select($"centroid_id",
+              $"vec_id".as("id_i"), $"v".as("vi"), $"nrm".as("ni"),
+              lit(false).as("standing"))
+            // the batch's touched cells — ≤ K driver values (the same
+            // bounded-metadata class as the codebook itself). Under the
+            // sharded layout they pick the bucket DIRECTORIES the standing
+            // read lists; in both layouts the isin is a pushed-down row
+            // filter ahead of the join.
+            val touched = assigned.select($"centroid_id").distinct()
+              .collect().map(_.getLong(0)).toSeq
+            // Standing read, cheapest listing first: under a PURE sharded
+            // layout (bucket dirs, no root files) it is scoped to the
+            // TOUCHED buckets' directories via basePath — discovery lists
+            // O(touched buckets) dirs, bounded by B — and within a bucket
+            // the isin prunes ROW GROUPS via the write path's
+            // sortWithinPartitions(centroid_id) stats. The flat and
+            // post-compact/mixed layouts keep the full-dir read.
+            val standingRead: Option[DataFrame] = {
+              val root = new org.apache.hadoop.fs.Path(indexDir)
+              val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+              val rootSt =
+                if (fs.exists(root)) fs.listStatus(root)
+                else Array.empty[org.apache.hadoop.fs.FileStatus]
+              val bucketDirs = rootSt.filter(st => st.isDirectory &&
+                st.getPath.getName.startsWith("cell_bucket="))
+                .map(_.getPath.getName).toSet
+              if (bucketDirs.nonEmpty && !rootSt.exists(st =>
+                  st.isFile && st.getPath.getName.endsWith(".parquet"))) {
+                // cellBuckets is guaranteed defined AND equal to the
+                // marker-pinned modulus here — validateCellBuckets (run
+                // at the top of every batch) fails the query fast
+                // otherwise, because touched→bucket mapping under any
+                // other B silently misses duplicate hits
+                val b = cellBuckets.getOrElse(throw new IllegalStateException(
+                  s"semanticDedupStream: cell_bucket= dirs at $indexDir " +
+                    "but cellBuckets is unset (validateCellBuckets missed?)"))
+                val dirs = touched.map(c =>
+                  s"cell_bucket=${java.lang.Math.floorMod(c, b.toLong)}")
+                  .distinct
+                  .filter(bucketDirs.contains).map(nm => s"$indexDir/$nm")
+                if (dirs.isEmpty) None
+                else Some(s.read.schema(indexSchema)
+                  .option("basePath", indexDir).parquet(dirs: _*))
+              } else readIfExists(s, indexDir, indexSchema)
             }
-            .getOrElse(hits)
-          fresh.write.mode("append").parquet(hitsDir)
-          Faults.semanticDedupAfterHits(id)
-          // layout per `partitionIndexByCell` (trade documented in the
-          // scaladoc). Partitioned: the pre-write repartition puts each
-          // touched cell in exactly ONE task → one file per touched
-          // cell per batch. Ddl.compact flattens a partitioned layout
-          // (centroid_id becomes a data column — rows survive, pruning
-          // degrades to a filter); the probe-side cast above keeps both
-          // layouts readable.
-          if (partitionIndexByCell)
-            assigned.repartition(8, $"centroid_id")
-              .write.partitionBy("centroid_id")
-              .mode("append").parquet(indexDir)
-          else cellBuckets match {
-            case Some(b) =>
-              // SHARDED: one dir per bucket (B dirs total — bounded,
-              // where K ∝ corpus is not), one file per touched bucket
-              // per batch, rows SORTED by centroid_id within the file
-              // so parquet min/max stats serve the standing read's
-              // pushed-down isin at row-group grain
-              assigned
-                .withColumn("cell_bucket",
-                  pmod($"centroid_id", lit(b.toLong)))
-                .repartition(math.min(8, b), $"cell_bucket")
-                .sortWithinPartitions($"cell_bucket", $"centroid_id")
-                .write.partitionBy("cell_bucket")
-                .mode("append").parquet(indexDir)
-            case None =>
-              assigned.write.mode("append").parquet(indexDir)
+            // the standing side EXCLUDES this batch's own ids: a batch
+            // whose index append landed but whose checkpoint commit did
+            // not is replayed with its own rows already standing, and
+            // without the exclusion a batch-internal pair (a < b) would
+            // re-emit as the reversed (a, matched=b) "standing wins" hit
+            // — replay must derive exactly the first attempt's rows.
+            val probeSide = standingRead
+              .map(df => liveIds(df.where($"centroid_id".isin(touched: _*)))
+                .join(assigned.select($"vec_id"), Seq("vec_id"),
+                  "left_anti")
+                .select($"centroid_id", $"vec_id".as("id_i"),
+                  $"v".as("vi"), $"nrm".as("ni"), lit(true).as("standing"))
+                .unionByName(batchSide))
+              .getOrElse(batchSide)
+            val hits = assigned
+              .select($"centroid_id", $"vec_id", $"v".as("vp"),
+                $"nrm".as("np"))
+              .join(probeSide, Seq("centroid_id"))
+              .where($"id_i" =!= $"vec_id" &&
+                ($"standing" || $"id_i" < $"vec_id"))
+              .withColumn("cosine", graft.functions.VectorFunctions
+                .cosineWithNorms($"vp", $"vi", $"np", $"ni"))
+              .where($"cosine" >= lit(tau))
+              .select($"vec_id", $"id_i".as("matched_id"), $"cosine")
+              .distinct()
+            // a hit row's vec_id is always the FRESH side, so hits rows
+            // outside this batch's vec_id range can never match
+            appendFreshHits(s, hits, hitsDir,
+              "vec_id LONG, matched_id LONG, cosine DOUBLE",
+              Seq("vec_id", "matched_id"), $"vec_id" >= lo && $"vec_id" <= hi)
+            Faults.semanticDedupAfterHits(id)
+            cellBuckets match {
+              case Some(b) =>
+                // SHARDED: one dir per bucket (B dirs total — bounded,
+                // where K ∝ corpus is not), one file per touched bucket
+                // per batch, rows SORTED by centroid_id within the file
+                // so parquet min/max stats serve the standing read's
+                // pushed-down isin at row-group grain
+                assigned
+                  .withColumn("cell_bucket",
+                    pmod($"centroid_id", lit(b.toLong)))
+                  .repartition(math.min(8, b), $"cell_bucket")
+                  .sortWithinPartitions($"cell_bucket", $"centroid_id")
+                  .write.partitionBy("cell_bucket")
+                  .mode("append").parquet(indexDir)
+              case None =>
+                assigned.write.mode("append").parquet(indexDir)
+            }
           }
         } finally { assigned.unpersist(false); () }
         ()
@@ -1005,9 +945,10 @@ object StreamingPipeline {
     * tmp+rename — atomic, like every marker in this module), and every
     * batch fails fast on any marker/option/dir inconsistency. Adopting
     * a pre-marker index is allowed only when every existing bucket dir
-    * is consistent with the offered B (all indices < B). One marker
-    * read + one root listing per micro-batch — filesystem-metadata
-    * cost, not data cost. */
+    * is consistent with the offered B (all indices < B). An index dir
+    * holding `centroid_id=` dirs, which the removed per-cell layout
+    * wrote, fails too. One marker read + one root listing per
+    * micro-batch — filesystem-metadata cost, not data cost. */
   private[graft] def validateCellBuckets(spark: SparkSession,
       indexDir: String, cellBuckets: Option[Int]): Unit = {
     val root = new org.apache.hadoop.fs.Path(indexDir)
@@ -1020,13 +961,19 @@ object StreamingPipeline {
         in.close()
         Some(t.toInt)
       } else None
-    val bucketIdx: Seq[Long] =
-      if (fs.exists(root))
-        fs.listStatus(root).toSeq.map(_.getPath.getName)
-          .filter(_.startsWith("cell_bucket="))
-          .flatMap(n => scala.util.Try(
-            n.stripPrefix("cell_bucket=").toLong).toOption)
+    val names: Seq[String] =
+      if (fs.exists(root)) fs.listStatus(root).toSeq.map(_.getPath.getName)
       else Seq.empty
+    if (names.exists(_.startsWith("centroid_id=")))
+      throw new IllegalStateException(
+        s"semanticDedupStream: index at $indexDir holds centroid_id= " +
+          "dirs, written by the removed per-cell layout " +
+          "(partitionIndexByCell = true). Rebuild the index dir and start " +
+          "a fresh checkpoint; cellBuckets = Some(B) with B above the " +
+          "largest cell id gives one dir per cell.")
+    val bucketIdx: Seq[Long] = names.filter(_.startsWith("cell_bucket="))
+      .flatMap(n => scala.util.Try(
+        n.stripPrefix("cell_bucket=").toLong).toOption)
     (cellBuckets, pinned) match {
       case (Some(b), Some(m)) if b != m =>
         throw new IllegalStateException(
@@ -1126,11 +1073,7 @@ object StreamingPipeline {
     import spark.implicits._
     graft.sources.Ddl.tombstone(spark, indexDir, ids.toDF(idCol))
     graft.sources.Ddl.recover(spark, hitsDir)
-    val hp = new org.apache.hadoop.fs.Path(hitsDir)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val hasHits = fs.exists(hp) && fs.listStatus(hp).exists(st =>
-      st.isFile && st.getPath.getName.endsWith(".parquet"))
-    if (hasHits)
+    if (hasRootParquet(spark, hitsDir))
       graft.sources.Ddl.rewrite(spark, hitsDir) { h =>
         hitIdCols.foldLeft(h)((acc, c) =>
           acc.join(broadcast(ids.toDF(c)), Seq(c), "left_anti"))

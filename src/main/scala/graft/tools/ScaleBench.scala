@@ -711,16 +711,17 @@ object ScaleBench {
         f""""n_flagged":${counts.getLong(0)},"sec":$sec%.2f}""")
       graft.Scope.close()
     }
-    // A/B of the streaming semantic sink's index LAYOUTS at the
-    // cell-SPARSE geometry the partitioned form exists for: a standing
+    // A/B of the streaming semantic sink's two index LAYOUTS at the
+    // cell-SPARSE geometry the sharded form exists for: a standing
     // index of n vectors spread over K=1024 cells (seeded directly in
     // each layout — byte-for-byte what the sink itself appends), then
     // steady-state probe batches of 256 vectors drawn from 4 cells
     // each, through the REAL semanticDedupStream. The flat layout
-    // must scan the whole standing index every batch; the partitioned
-    // layout prunes to ~4/1024 of it. Complements the StreamBench
-    // lane, whose every-cell-touched geometry measured the flat form
-    // 2.8× FASTER — together they pin where each layout wins.
+    // must scan the whole standing index every batch; the sharded
+    // layout prunes to the touched buckets' dirs. Complements the
+    // StreamBench lane, whose every-cell-touched geometry measured the
+    // flat form 2.8× FASTER than one dir per cell — together they pin
+    // where each layout wins.
     if (only.forall(_.contains("semstream_layout"))) {
       import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
       implicit val sqlCtx: org.apache.spark.sql.SQLContext =
@@ -747,19 +748,14 @@ object ScaleBench {
         .select($"vec_id", $"_best.centroid_id".as("centroid_id"),
           $"v", $"nrm")
       val shardB = 32
-      Seq(("flat", false, None), ("partitioned", true, None),
-        ("sharded", false, Some(shardB))).foreach {
-        case (tag, partitioned, buckets: Option[Int]) =>
+      Seq(("flat", None), ("sharded", Some(shardB))).foreach {
+        case (tag, buckets: Option[Int]) =>
         val indexDir = s"$root/index_$tag"
         val hitsDir = s"$root/hits_$tag"
         val ckpt = s"$root/ckpt_$tag"
         // seed the standing index in this layout — 32 files (flat) /
-        // one file per cell (partitioned) / one sorted file per bucket
-        // (sharded), the sink's own shapes
-        if (partitioned)
-          standing.repartition(32, $"centroid_id")
-            .write.partitionBy("centroid_id").parquet(indexDir)
-        else buckets match {
+        // one sorted file per bucket (sharded), the sink's own shapes
+        buckets match {
           case Some(b) =>
             standing
               .withColumn("cell_bucket", pmod($"centroid_id", lit(b.toLong)))
@@ -771,9 +767,7 @@ object ScaleBench {
         val stream = MemoryStream[(Long, Array[Float])]
         val q = graft.streaming.StreamingPipeline.semanticDedupStream(
           stream.toDF().toDF("vec_id", "v"), codebook,
-          indexDir, hitsDir, ckpt, tau = 0.95,
-          partitionIndexByCell = partitioned,
-          cellBuckets = buckets)
+          indexDir, hitsDir, ckpt, tau = 0.95, cellBuckets = buckets)
         try {
           // warmup batch, then 12 timed cell-sparse batches: batch b
           // draws its 256 vectors from 4 clusters (base ids landing in

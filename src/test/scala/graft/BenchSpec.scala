@@ -20,4 +20,15 @@ class BenchSpec extends SparkSpecBase {
     assert(lines.forall(_.contains(
       "java.lang.IllegalStateException: planted failure")), lines)
   }
+
+  test("PlanSnap names every unregistered query and writes nothing") {
+    val dir = s"planSnapSpec_${System.nanoTime()}"
+    val ex = intercept[IllegalArgumentException] {
+      graft.tools.PlanSnap.main(Array(dir, "before",
+        "q_nope_one,q_delivery_gap,q_nope_two"))
+    }
+    assert(ex.getMessage ===
+      "PlanSnap: not registered in SparkEntry.queries: q_nope_one, q_nope_two")
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"plans/$dir")))
+  }
 }

@@ -1147,7 +1147,7 @@ class StreamingSpec extends SparkSpecBase {
       StreamingPipeline.semanticDedupStream(
         st.toDF().toDF("vec_id", "v"), codebook,
         indexDir, hitsDir, cp, tau = 0.95,
-        partitionIndexByCell = true) // the deployment layout under test
+        cellBuckets = Some(2)) // the deployment layout under test
     val a1 = (1L, Array(0.9f, 0.1f, 0f, 0f)) // cell 0
     val b2 = (2L, Array(0.1f, 0.9f, 0f, 0f)) // cell 5
     val twinA3 = (3L, Array(0.45f, 0.05f, 0f, 0f)) // = a1 scaled: cos 1
@@ -1164,26 +1164,28 @@ class StreamingSpec extends SparkSpecBase {
       q1.processAllAvailable()
       assert(hits() === Set((3L, 1L)), hits())
     } finally q1.stop()
-    // the index landed HIVE-PARTITIONED on the cell (one dir per
-    // centroid): the layout every later batch's isin-pruned standing
-    // read depends on
+    // the index landed HIVE-PARTITIONED on the cell bucket (B = 2 puts
+    // cells 0 and 5 in a dir each): the layout every later batch's
+    // pruned standing read depends on
     val idxFs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDirs = idxFs
       .listStatus(new org.apache.hadoop.fs.Path(indexDir))
       .filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(cellDirs.exists(_.startsWith("centroid_id=")), cellDirs)
-    // and a cell-restricted read prunes at the PARTITION level, not
+    assert(cellDirs.exists(_.startsWith("cell_bucket=")), cellDirs)
+    // and a bucket-restricted read prunes at the PARTITION level, not
     // with a post-scan filter
     val pruned = spark.read.parquet(indexDir)
-      .where($"centroid_id".cast("long") === 0L)
+      .where($"cell_bucket".cast("long") === 0L)
     val scan = pruned.queryExecution.executedPlan.toString
-    assert(scan.contains("centroid_id=0") ||
-      scan.contains("PartitionFilters: [isnotnull(centroid_id") ||
-      scan.contains("PartitionFilters: [(centroid_id"), scan)
-    // maintenance window: compact the index; content must survive
+    assert(scan.contains("cell_bucket=0") ||
+      scan.contains("PartitionFilters: [isnotnull(cell_bucket") ||
+      scan.contains("PartitionFilters: [(cell_bucket"), scan)
+    // maintenance window: compact the index with the layout's own
+    // operation; content must survive
     val before = spark.read.parquet(indexDir).count()
-    graft.sources.Ddl.compact(spark, indexDir, targetBytes = 1L << 30)
+    graft.sources.Ddl.compactPartitions(spark, indexDir,
+      targetBytes = 1L << 30)
     assert(spark.read.parquet(indexDir).count() === before)
     // new process, same checkpoint: standing member always wins (4 and
     // 5 both report matched_id 2), batch-internal lower id wins (5
@@ -1208,65 +1210,6 @@ class StreamingSpec extends SparkSpecBase {
         hits())
       assert(spark.read.parquet(hitsDir).count() === 4L)
     } finally q3.stop()
-  }
-
-  test("partitionIndexByCell maintenance: compactPartitions applies " +
-    "ROOT tombstones per cell dir, preserves the layout, clears the " +
-    "pending set") {
-    implicit val sqlCtx = spark.sqlContext
-    import spark.implicits._
-    val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
-    val codebook = Seq(
-      (0L, Array(1f, 0f, 0f, 0f)), (5L, Array(0f, 1f, 0f, 0f)))
-    val stream = MemoryStream[(Long, Array[Float])]
-    def start() = StreamingPipeline.semanticDedupStream(
-      stream.toDF().toDF("vec_id", "v"), codebook,
-      indexDir, hitsDir, ckpt, tau = 0.95, partitionIndexByCell = true)
-    def hits(): Set[(Long, Long)] = spark.read.parquet(hitsDir)
-      .select($"vec_id", $"matched_id").as[(Long, Long)].collect().toSet
-    def indexIds(): Set[Long] = spark.read.parquet(indexDir)
-      .select($"vec_id").as[Long].collect().toSet
-    val fs = new org.apache.hadoop.fs.Path(indexDir)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def cellDirs(): Set[String] = fs.listStatus(
-        new org.apache.hadoop.fs.Path(indexDir)).toSeq
-      .filter(_.isDirectory).map(_.getPath.getName)
-      .filter(_.startsWith("centroid_id=")).toSet
-    val q1 = start()
-    try {
-      stream.addData((1L, Array(0.9f, 0.1f, 0f, 0f)),
-        (2L, Array(0.1f, 0.9f, 0f, 0f)))
-      q1.processAllAvailable()
-      stream.addData((3L, Array(0.45f, 0.05f, 0f, 0f))) // twin of 1
-      q1.processAllAvailable()
-      assert(hits() === Set((3L, 1L)), hits())
-    } finally q1.stop()
-    // takedown writes tombstones at the index ROOT — the per-cell-dir
-    // `Ddl.compact` maintenance the scaladoc used to point at never
-    // reads that set (tombstonesOf(cellDir) is empty), so the pending
-    // anti-join would run forever; compactPartitions at the ROOT is
-    // the layout's maintenance op: it applies the root set to every
-    // member, keeps the cell dirs, and clears the set with the swap
-    StreamingPipeline.takedownVectors(spark, indexDir, hitsDir, Seq(1L))
-    assert(hits() === Set.empty)
-    assert(graft.sources.Ddl.tombstonesOf(spark, indexDir).isDefined)
-    assert(graft.sources.Ddl.tombstonesOf(spark,
-      s"$indexDir/centroid_id=0").isEmpty) // root set, not per-cell
-    val census = graft.sources.Ddl.compactPartitions(spark, indexDir,
-      targetBytes = 1L << 30)
-    assert(census.toMap ===
-      Map("centroid_id=0" -> 1L, "centroid_id=5" -> 1L), census)
-    assert(indexIds() === Set(2L, 3L))
-    assert(cellDirs() === Set("centroid_id=0", "centroid_id=5"))
-    assert(graft.sources.Ddl.tombstonesOf(spark, indexDir).isEmpty)
-    // the preserved layout still serves pruned standing reads, and the
-    // retracted member never matches again
-    val q2 = start()
-    try {
-      stream.addData((4L, Array(1.8f, 0.2f, 0f, 0f))) // twin of 1 AND 3
-      q2.processAllAvailable()
-      assert(hits() === Set((4L, 3L)), hits())
-    } finally q2.stop()
   }
 
   test("maintained IVF cell index: crash between hits append and index " +
@@ -1480,6 +1423,21 @@ class StreamingSpec extends SparkSpecBase {
         .StreamingQueryException] { qNone.processAllAvailable() }
       assert(msgOf(ex).contains("without cellBuckets"), msgOf(ex))
     } finally qNone.stop()
+    // an index dir written by the removed per-cell layout (one
+    // centroid_id= dir per cell) fails fast
+    val oldIndex = tmp()
+    Seq((6L, 0L, vecOf(0, 1f), 1.0)).toDF("vec_id", "centroid_id", "v", "nrm")
+      .write.parquet(s"$oldIndex/centroid_id=0")
+    val oldStream = MemoryStream[(Long, Array[Float])]
+    val qOld = StreamingPipeline.semanticDedupStream(
+      oldStream.toDF().toDF("vec_id", "v"), codebook,
+      oldIndex, tmp(), tmp(), tau = 0.95, cellBuckets = Some(3))
+    try {
+      oldStream.addData((11L, vecOf(0, 1.2f)))
+      val ex = intercept[org.apache.spark.sql.streaming
+        .StreamingQueryException] { qOld.processAllAvailable() }
+      assert(msgOf(ex).contains("removed per-cell layout"), msgOf(ex))
+    } finally qOld.stop()
     // neither failed start corrupted anything: the original B still
     // serves (resuming the ORIGINAL checkpoint — only new rows replay)
     val qOk = StreamingPipeline.semanticDedupStream(
@@ -1674,6 +1632,81 @@ class StreamingSpec extends SparkSpecBase {
     } finally q2.stop()
   }
 
+  test("maintained IVF cell index: a trigger whose vectors are all " +
+    "tombstoned writes nothing, and the next trigger still finds its twin") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
+    val codebook = Seq(
+      (0L, Array(1f, 0f, 0f, 0f)), (5L, Array(0f, 1f, 0f, 0f)))
+    val stream = MemoryStream[(Long, Array[Float])]
+    def start() = StreamingPipeline.semanticDedupStream(
+      stream.toDF().toDF("vec_id", "v"), codebook,
+      indexDir, hitsDir, ckpt, tau = 0.95)
+    def hits(): Set[(Long, Long)] = spark.read.parquet(hitsDir)
+      .select($"vec_id", $"matched_id").as[(Long, Long)].collect().toSet
+    val q1 = start()
+    try {
+      stream.addData((1L, Array(0.9f, 0.1f, 0f, 0f)),
+        (2L, Array(0.1f, 0.9f, 0f, 0f)))
+      q1.processAllAvailable()
+    } finally q1.stop()
+    // retract two vectors before they arrive: their whole trigger is dead
+    StreamingPipeline.takedownVectors(spark, indexDir, hitsDir, Seq(3L, 4L))
+    val index0 = parquetFiles(indexDir); val hits0 = parquetFiles(hitsDir)
+    val rows0 = spark.read.parquet(indexDir).count()
+    val q2 = start()
+    try {
+      stream.addData((3L, Array(0.45f, 0.05f, 0f, 0f)),
+        (4L, Array(0.2f, 1.8f, 0f, 0f)))
+      q2.processAllAvailable()
+      assert(q2.exception.isEmpty)
+      assert(q2.lastProgress.numInputRows === 2L)
+      assert(parquetFiles(indexDir) === index0)
+      assert(parquetFiles(hitsDir) === hits0)
+      assert(spark.read.parquet(indexDir).count() === rows0)
+      stream.addData((5L, Array(1.8f, 0.2f, 0f, 0f))) // twin of 1
+      q2.processAllAvailable()
+      assert(hits() === Set((5L, 1L)), hits())
+    } finally q2.stop()
+  }
+
+  test("maintained IVF cell index: a steady-state micro-batch runs at most " +
+    "nine Spark jobs") {
+    implicit val sqlCtx = spark.sqlContext
+    import spark.implicits._
+    val indexDir = tmp(); val hitsDir = tmp(); val ckpt = tmp()
+    val codebook = Seq(
+      (0L, Array(1f, 0f, 0f, 0f)), (5L, Array(0f, 1f, 0f, 0f)))
+    val stream = MemoryStream[(Long, Array[Float])]
+    val q = StreamingPipeline.semanticDedupStream(
+      stream.toDF().toDF("vec_id", "v"), codebook,
+      indexDir, hitsDir, ckpt, tau = 0.95)
+    def hits(): Set[(Long, Long)] = spark.read.parquet(hitsDir)
+      .select($"vec_id", $"matched_id").as[(Long, Long)].collect().toSet
+    try {
+      // steady state: both tables exist and hold rows before the
+      // measured batch
+      stream.addData((1L, Array(0.9f, 0.1f, 0f, 0f)),
+        (2L, Array(0.1f, 0.9f, 0f, 0f)))
+      q.processAllAvailable()
+      stream.addData((3L, Array(0.45f, 0.05f, 0f, 0f)))
+      q.processAllAvailable()
+      assert(hits() === Set((3L, 1L)), hits())
+      val jobs = jobsByBatch {
+        stream.addData((4L, Array(0.2f, 1.8f, 0f, 0f)),
+          (5L, Array(0f, 0f, 1f, 0f)))
+        q.processAllAvailable()
+      }
+      val batch = q.lastProgress.batchId
+      assert(q.lastProgress.numInputRows === 2L)
+      val n = jobs.getOrElse(batch, 0)
+      // 13 before the sink shared the pinned reads and the one-pass range
+      assert(n >= 1 && n <= 9, s"micro-batch $batch ran $n jobs: $jobs")
+      assert(hits() === Set((3L, 1L), (4L, 2L)), hits())
+    } finally q.stop()
+  }
+
   test("maintained IVF cell index, TWO-LEVEL quantizer: same hit " +
     "semantics, crash replay exact, restart rebuilds the structure") {
     implicit val sqlCtx = spark.sqlContext
@@ -1694,7 +1727,7 @@ class StreamingSpec extends SparkSpecBase {
       StreamingPipeline.semanticDedupStream(
         st.toDF().toDF("vec_id", "v"), codebook,
         indexDir, hitsDir, cp, tau = 0.95,
-        partitionIndexByCell = true,
+        cellBuckets = Some(2),
         twoLevelSupers = Some(2), twoLevelNprobe = 1)
     val a1 = (1L, Array(0.93f, 0.07f, 0f, 0f)) // e1 group
     val b2 = (2L, Array(0.07f, 0.93f, 0f, 0f)) // e2 group
@@ -1729,14 +1762,14 @@ class StreamingSpec extends SparkSpecBase {
       q2.processAllAvailable()
       assert(hits() === Set((3L, 1L), (4L, 2L)), hits())
     } finally q2.stop()
-    // the index layout is the standard partitioned one — cells are
+    // the index layout is the standard sharded one — cells are
     // child ids, unchanged by the two-level routing
     val idxFs = new org.apache.hadoop.fs.Path(indexDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val cellDirs = idxFs
       .listStatus(new org.apache.hadoop.fs.Path(indexDir))
       .filter(_.isDirectory).map(_.getPath.getName).toSet
-    assert(cellDirs.exists(_.startsWith("centroid_id=")), cellDirs)
+    assert(cellDirs.exists(_.startsWith("cell_bucket=")), cellDirs)
   }
 
   test("TRAINED codebook end to end: trainedCodebook2 feeds the " +
@@ -1757,7 +1790,7 @@ class StreamingSpec extends SparkSpecBase {
     val q = StreamingPipeline.semanticDedupStream(
       stream.toDF().toDF("vec_id", "v"), codebook,
       indexDir, hitsDir, ckpt, tau = 0.95,
-      partitionIndexByCell = true,
+      cellBuckets = Some(2),
       twoLevelSupers = Some(2), twoLevelNprobe = 1)
     try {
       // standing: two fixture vectors; twins: the same vectors scaled
