@@ -401,16 +401,20 @@ object Corpus extends QueryModule {
     val cand = q.join(tf, Seq("token")).where($"doc_id" =!= $"q_id")
     val wt = cand.join(dl, "doc_id").join(dfreq, "token").crossJoin(st)
       .select($"q_id", $"doc_id", $"token",
-        expr("""((2*n - 2*df + 1) * 44 * s * tf) * 1000000
+        // the numerator passes 2⁶³ once n·Σdl·tf passes ~10¹¹ (a
+        // 2000-doc corpus with one keyword-stuffed page does): exact
+        // DECIMAL(38,0) (HUGEINT in the oracles), the quotient a long
+        expr("""CAST(2*n - 2*df + 1 AS DECIMAL(38,0)) * 44 * s * tf * 1000000
                 DIV ((2*df + 1) * (20*s*tf + 6*s + 18*dl*n))""").as("w_micro"))
     // bounded top-K aggregate, not a row_number window: the candidate
     // set is every document sharing a query term — corpus-scaling —
     // and the window form's partial phase sorts each task's full
     // candidate slice (see TopKByScoreBase). The exact Long score
-    // rides as Double (magnitudes ≪ 2⁵³ by the operand bound above —
-    // injective, so tie-break behavior is identical) and n_shared
-    // travels as the aggregate's payload instead of a rejoin that
-    // would re-plan the token join.
+    // rides as Double: the denominator's 20·s·tf term bounds each weight
+    // by 2.2·10⁶·(2n−1)/3 < 1.5·10⁶·n (df ≥ 1), so a score stays below
+    // 2⁵³ — exact, injective, tie-break behavior identical — while
+    // n_shared·n < 6·10⁹. n_shared travels as the aggregate's payload
+    // instead of a rejoin that would re-plan the token join.
     val tk = udaf(new graft.pipeline.Aggregators.TopKScorePayloadAgg(5),
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[(Long, Double, Long)]())
@@ -448,7 +452,7 @@ object Corpus extends QueryModule {
         st AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(dl) AS BIGINT) AS s FROM dl),
         wt AS (SELECT tf.doc_id, tf.token,
-                 ((2*st.n - 2*df.df + 1) * 44 * st.s * tf.tf) * 1000000
+                 CAST(2*st.n - 2*df.df + 1 AS HUGEINT) * 44 * st.s * tf.tf * 1000000
                    // ((2*df.df + 1) * (20*st.s*tf.tf + 6*st.s
                       + 18*dl.dl*st.n)) AS w_micro
                FROM tf JOIN dl USING (doc_id) JOIN df USING (token)
@@ -1302,7 +1306,7 @@ object Corpus extends QueryModule {
         st AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       CAST(sum(dl) AS BIGINT) AS s FROM dl),
         wt AS (SELECT tf.doc_id, tf.token,
-                 ((2*st.n - 2*df.df + 1) * 44 * st.s * tf.tf) * 1000000
+                 CAST(2*st.n - 2*df.df + 1 AS HUGEINT) * 44 * st.s * tf.tf * 1000000
                    // ((2*df.df + 1) * (20*st.s*tf.tf + 6*st.s
                       + 18*dl.dl*st.n)) AS w_micro
                FROM tf JOIN dl USING (doc_id) JOIN df USING (token)

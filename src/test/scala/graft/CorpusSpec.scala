@@ -269,6 +269,37 @@ class CorpusSpec extends SparkSpecBase {
     }
   }
 
+  test("bm25TopK: a keyword-stuffed page ranks as the DuckDB oracle, without overflow") {
+    import spark.implicits._
+    // 2000 documents of 80 words drawn from 4096, plus one page that
+    // repeats word 0 of query document 0 400 times: n·Σdl·tf ≈ 1.3·10¹¹
+    // puts the weight's numerator past 2⁶³
+    def draw(doc: Long, slot: Long): Long = {
+      var z = doc * 0x9E3779B97F4A7C15L + slot * 0xBF58476D1CE4E5B9L + 0x94D049BB133111EBL
+      z = (z ^ (z >>> 30)) * 0xBF58476D1CE4E5B9L
+      z = (z ^ (z >>> 27)) * 0x94D049BB133111EBL
+      java.lang.Long.remainderUnsigned(z ^ (z >>> 31), 4096)
+    }
+    val docs = (0L until 2000L).map(i => i -> (0 until 80).map(j => s"w${draw(i, j)}")
+      .mkString(" ")) :+ (2000L -> Seq.fill(400)(s"w${draw(0, 0)}").mkString(" "))
+    val dir = java.nio.file.Files.createTempDirectory("graft_bm25_stuffed").toString
+    docs.toDF("doc_id", "text").repartition(4).write.parquet(s"$dir/documents.parquet")
+
+    val got = Corpus.bm25TopK(spark, dir).collect().map(_.mkString(",")).toSeq
+    val sqlFile = java.nio.file.Files.createTempFile("graft_bm25_oracle", ".sql")
+    java.nio.file.Files.writeString(sqlFile, SparkEntry.oracleSql("q_bm25_topk"))
+    val script = """import sys, duckdb
+                   |con = duckdb.connect()
+                   |con.execute("CREATE VIEW documents AS SELECT * FROM "
+                   |            f"read_parquet('{sys.argv[1]}/documents.parquet/*.parquet')")
+                   |for r in con.execute(open(sys.argv[2]).read()).fetchall():
+                   |    print(",".join(map(str, r)))""".stripMargin
+    val want = scala.sys.process.Process(Seq("python3", "-c", script, dir, sqlFile.toString))
+      .!!.linesIterator.toSeq
+    assert(got.length === 50)
+    assert(got === want)
+  }
+
   test("weightedSample: inclusion rule is exact and proportional to weight") {
     import spark.implicits._
     val kept = Corpus.weightedSample(spark, sfDir)

@@ -1497,33 +1497,10 @@ class StreamingSpec extends SparkSpecBase {
       .map(_.getName).filter(_.endsWith(".parquet")).toSet
 
   /** Jobs started while `body` runs, by the streaming micro-batch id
-    * Spark tags them with. Listener events arrive asynchronously but in
-    * order, so once a marker job's start is seen every earlier job has
-    * been counted. */
-  private def jobsByBatch(body: => Unit): Map[Long, Int] = {
-    val sc = spark.sparkContext
-    val jobs = scala.collection.mutable.Map.empty[Long, Int]
-    val fence = new java.util.concurrent.CountDownLatch(1)
-    val marker = "jobsByBatch fence"
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        val props = Option(e.properties)
-        props.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
-          .foreach(b => jobs(b.toLong) = jobs.getOrElse(b.toLong, 0) + 1)
-        if (props.exists(_.getProperty("spark.job.description") == marker))
-          fence.countDown()
-      }
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription(marker)
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(fence.await(60, java.util.concurrent.TimeUnit.SECONDS))
-    } finally sc.removeSparkListener(listener)
-    jobs.toMap
-  }
+    * Spark tags them with. */
+  private def jobsByBatch(body: => Unit): Map[Long, Int] =
+    jobsDuring(body)._2.flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+      .groupBy(_.toLong).map { case (b, js) => b -> js.size }
 
   test("maintained band index: a steady-state micro-batch runs at most six Spark jobs") {
     implicit val sqlCtx = spark.sqlContext
