@@ -440,9 +440,12 @@ object Corpus extends QueryModule {
     * (score DESC, doc_id) ties. Callers compose it after `WITH` and
     * select from `rb`; aliases are suffixed (qb/pb/rb) so dense-side
     * CTEs can share one WITH list without collision. */
-  private[graft] val oracleBm25Ranked: String = """
+  private[graft] val oracleBm25Ranked: String = oracleBm25RankedOn("")
+
+  /** [[oracleBm25Ranked]] over the documents that pass `where`. */
+  private def oracleBm25RankedOn(where: String) = s"""
         tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                FROM documents),
+                FROM documents$where),
         tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
                FROM tok GROUP BY doc_id, token),
         dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
@@ -1274,6 +1277,60 @@ object Corpus extends QueryModule {
       .orderBy($"depth", $"col")
   }
 
+  /** The row filter of the takedown oracles: the corpus after the
+    * takedown. */
+  private val TakedownWhere = s"\n WHERE NOT ${NearDup.TakedownSqlPred}"
+
+  /** The [[tfidfTopTerms]] oracle over the documents that pass `where`. */
+  private def oracleTfidf(where: String) = s"""
+        WITH tf AS (
+          SELECT doc_id, token, count(*) AS tf
+          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+                FROM documents$where) t
+          GROUP BY doc_id, token),
+        df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
+        n AS (SELECT count(*) AS n_docs FROM documents$where),
+        scored AS (
+          SELECT tf.doc_id, tf.token, tf.tf, df.df,
+                 tf.tf * (n.n_docs - df.df + 0.5) / (df.df + 0.5) AS score
+          FROM tf JOIN df USING (token) CROSS JOIN n),
+        r AS (
+          SELECT doc_id, token, tf, df, score,
+                 row_number() OVER (PARTITION BY doc_id
+                   ORDER BY score DESC, token) AS rank
+          FROM scored)
+        SELECT doc_id, rank, token, tf, df, score
+        FROM r WHERE rank <= 3 AND doc_id < 50
+        ORDER BY doc_id, rank"""
+
+  /** The [[invertedIndex]] oracle over the documents that pass `where`. */
+  private def oracleInvertedIndex(where: String) = s"""
+        WITH p AS (
+          SELECT DISTINCT doc_id, token
+          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
+                FROM documents$where) t
+          WHERE length(token) > 0),
+        r AS (
+          SELECT doc_id, token,
+                 row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rn
+          FROM p)
+        SELECT token, CAST(count(*) AS BIGINT) AS df,
+               string_agg(CASE WHEN rn <= 8 THEN CAST(doc_id AS VARCHAR) END,
+                          ',' ORDER BY doc_id) AS postings
+        FROM r GROUP BY token ORDER BY token"""
+
+  /** The [[decontaminate]] oracle: the documents whose fingerprint no
+    * benchmark document (doc_id % 25 = 0) shares, per language. */
+  private val oracleDecontaminate = s"""
+        WITH fps AS (
+          SELECT doc_id, lang,
+                 ${TextOps.oracleFingerprint} AS fp
+          FROM documents),
+        bench AS (SELECT fp AS bfp FROM fps WHERE doc_id % 25 = 0)
+        SELECT lang, count(*) AS n_kept
+        FROM fps WHERE fp NOT IN (SELECT bfp FROM bench)
+        GROUP BY lang ORDER BY lang"""
+
   override def defs: Seq[QueryDef] = Seq(
     QueryDef(
       // Spark: standing stats + one removed-docs scan, subtractive
@@ -1294,85 +1351,24 @@ object Corpus extends QueryModule {
       // Oracle: from-scratch BM25 on the filtered corpus — parity
       // proves the maintained tables serve identical rankings.
       "q_takedown_bm25", takedownBm25, Some(s"""
-        WITH tok AS (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                     FROM documents
-                     WHERE NOT ${NearDup.TakedownSqlPred}),
-        tf AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS tf
-               FROM tok GROUP BY doc_id, token),
-        dl AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS dl
-               FROM tok GROUP BY doc_id),
-        df AS (SELECT token, CAST(count(*) AS BIGINT) AS df
-               FROM tf GROUP BY token),
-        st AS (SELECT CAST(count(*) AS BIGINT) AS n,
-                      CAST(sum(dl) AS BIGINT) AS s FROM dl),
-        wt AS (SELECT tf.doc_id, tf.token,
-                 CAST(2*st.n - 2*df.df + 1 AS HUGEINT) * 44 * st.s * tf.tf * 1000000
-                   // ((2*df.df + 1) * (20*st.s*tf.tf + 6*st.s
-                      + 18*dl.dl*st.n)) AS w_micro
-               FROM tf JOIN dl USING (doc_id) JOIN df USING (token)
-               CROSS JOIN st),
-        q AS (SELECT doc_id AS q_id, token FROM tf WHERE doc_id < 10),
-        p AS (SELECT q.q_id, wt.doc_id,
-                     CAST(sum(wt.w_micro) AS BIGINT) AS score_micro,
-                     CAST(count(*) AS BIGINT) AS n_shared
-              FROM q JOIN wt ON wt.token = q.token AND wt.doc_id <> q.q_id
-              GROUP BY q.q_id, wt.doc_id),
-        r AS (SELECT q_id, doc_id, score_micro, n_shared,
-                     CAST(row_number() OVER (PARTITION BY q_id
-                       ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank
-              FROM p)
+        WITH ${oracleBm25RankedOn(TakedownWhere)}
         SELECT q_id, rank, doc_id, score_micro, n_shared
-        FROM r WHERE rank <= 5 ORDER BY q_id, rank""")),
+        FROM rb WHERE rank <= 5 ORDER BY q_id, rank""")),
     QueryDef(
       // same subtractive maintenance on the (tf, df, n_docs) triple;
       // oracle = from-scratch TF-IDF on the filtered corpus
-      "q_takedown_tfidf", takedownTfidf, Some(s"""
-        WITH tf AS (
-          SELECT doc_id, token, count(*) AS tf
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                FROM documents
-                WHERE NOT ${NearDup.TakedownSqlPred}) t
-          GROUP BY doc_id, token),
-        df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        n AS (SELECT count(*) AS n_docs FROM documents
-              WHERE NOT ${NearDup.TakedownSqlPred}),
-        scored AS (
-          SELECT tf.doc_id, tf.token, tf.tf, df.df,
-                 tf.tf * (n.n_docs - df.df + 0.5) / (df.df + 0.5) AS score
-          FROM tf JOIN df USING (token) CROSS JOIN n),
-        r AS (
-          SELECT doc_id, token, tf, df, score,
-                 row_number() OVER (PARTITION BY doc_id
-                   ORDER BY score DESC, token) AS rank
-          FROM scored)
-        SELECT doc_id, rank, token, tf, df, score
-        FROM r WHERE rank <= 3 AND doc_id < 50
-        ORDER BY doc_id, rank""")),
+      "q_takedown_tfidf", takedownTfidf, Some(oracleTfidf(TakedownWhere))),
     QueryDef(
       // Spark: untouched tokens pass through the STANDING capped index
       // byte-identical; affected tokens re-elect bottom-cap postings
       // from the full posting table. Oracle: from-scratch rebuild on
       // the filtered corpus — parity proves re-election AND
       // pass-through exact (a stale pass-through row would mismatch).
-      "q_takedown_index", takedownIndex, Some(s"""
-        WITH p AS (
-          SELECT DISTINCT doc_id, token
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                FROM documents
-                WHERE NOT ${NearDup.TakedownSqlPred}) t
-          WHERE length(token) > 0),
-        r AS (
-          SELECT doc_id, token,
-                 row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rn
-          FROM p)
-        SELECT token, CAST(count(*) AS BIGINT) AS df,
-               string_agg(CASE WHEN rn <= 8 THEN CAST(doc_id AS VARCHAR) END,
-                          ',' ORDER BY doc_id) AS postings
-        FROM r GROUP BY token ORDER BY token""")),
+      "q_takedown_index", takedownIndex, Some(oracleInvertedIndex(TakedownWhere))),
     QueryDef(
       // the CM guarantee per token: est >= true_cnt, both engines
       // deriving estimate and exact independently
-      "q_cm_estimate", cmEstimate, Some("""
+      "q_cm_estimate", cmEstimate, Some(s"""
         WITH tok AS (
           SELECT unnest(string_split(text, ' ')) AS token
           FROM documents),
@@ -1380,12 +1376,7 @@ object Corpus extends QueryModule {
                FROM tok GROUP BY token),
         cells AS (
           SELECT CAST(d.depth AS BIGINT) AS depth,
-                 CAST((strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    token), 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    token), 2, 1)) - 1)
+                 CAST(${graft.ops.HashOracleSql.md5Byte("CAST(d.depth AS VARCHAR) || ':' || token")}
                    AS BIGINT) AS col,
                  CAST(count(*) AS BIGINT) AS cnt
           FROM tok, (SELECT unnest([0, 1, 2, 3]) AS depth) d
@@ -1393,12 +1384,7 @@ object Corpus extends QueryModule {
         pr AS (
           SELECT ex.token, ex.true_cnt,
                  CAST(d.depth AS BIGINT) AS depth,
-                 CAST((strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    ex.token), 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    ex.token), 2, 1)) - 1)
+                 CAST(${graft.ops.HashOracleSql.md5Byte("CAST(d.depth AS VARCHAR) || ':' || ex.token")}
                    AS BIGINT) AS col
           FROM ex, (SELECT unnest([0, 1, 2, 3]) AS depth) d)
         SELECT token, true_cnt, min(cnt) AS est,
@@ -1415,12 +1401,7 @@ object Corpus extends QueryModule {
           FROM documents WHERE NOT ${NearDup.TakedownSqlPred}),
         c AS (
           SELECT CAST(d.depth AS BIGINT) AS depth,
-                 CAST((strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    token), 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                         substr(md5(CAST(d.depth AS VARCHAR) || ':' ||
-                                    token), 2, 1)) - 1)
+                 CAST(${graft.ops.HashOracleSql.md5Byte("CAST(d.depth AS VARCHAR) || ':' || token")}
                    AS BIGINT) AS col
           FROM tok, (SELECT unnest([0, 1, 2, 3]) AS depth) d)
         SELECT depth, col, CAST(count(*) AS BIGINT) AS cnt
@@ -1514,11 +1495,10 @@ object Corpus extends QueryModule {
                  AS chunk_text
         FROM w ORDER BY doc_id, chunk_id""")),
     QueryDef(
-      "q_pack_bins", packBins(_, _), Some("""
+      "q_pack_bins", packBins(_, _), Some(s"""
         WITH RECURSIVE d AS (
           SELECT source, doc_id,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
+                 CAST(${TextOps.oracleTokenCount()}
                    AS BIGINT) AS n_tokens,
                  row_number() OVER (PARTITION BY source ORDER BY doc_id) AS rn
           FROM documents),
@@ -1536,13 +1516,10 @@ object Corpus extends QueryModule {
         SELECT source, doc_id, bin_id, n_tokens
         FROM walk ORDER BY source, doc_id""")),
     QueryDef(
-      "q_shard_assign", shardAssign(_, _), Some("""
+      "q_shard_assign", shardAssign(_, _), Some(s"""
         WITH a AS (
           SELECT doc_id, md5(CAST(doc_id AS VARCHAR)) AS h,
-                 CAST(((strpos('0123456789abcdef',
-                          substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                     + (strpos('0123456789abcdef',
-                          substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)) % 8
+                 CAST((${graft.ops.HashOracleSql.md5Byte("CAST(doc_id AS VARCHAR)")}) % 8
                    AS BIGINT) AS shard
           FROM documents)
         SELECT doc_id, shard,
@@ -1550,28 +1527,12 @@ object Corpus extends QueryModule {
                  AS BIGINT) AS pos
         FROM a ORDER BY doc_id""")),
     QueryDef(
-      "q_inverted_index", invertedIndex(_, _), Some("""
-        WITH p AS (
-          SELECT DISTINCT doc_id, token
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                FROM documents) t
-          WHERE length(token) > 0),
-        r AS (
-          SELECT doc_id, token,
-                 row_number() OVER (PARTITION BY token ORDER BY doc_id) AS rn
-          FROM p)
-        SELECT token, CAST(count(*) AS BIGINT) AS df,
-               string_agg(CASE WHEN rn <= 8 THEN CAST(doc_id AS VARCHAR) END,
-                          ',' ORDER BY doc_id) AS postings
-        FROM r GROUP BY token ORDER BY token""")),
+      "q_inverted_index", invertedIndex(_, _), Some(oracleInvertedIndex(""))),
     QueryDef(
-      "q_sample_deterministic", deterministicSample, Some("""
+      "q_sample_deterministic", deterministicSample, Some(s"""
         SELECT doc_id, lang, n_chars, bucket FROM (
           SELECT doc_id, lang, n_chars,
-                 CAST((strpos('0123456789abcdef',
-                         substr(md5(CAST(doc_id AS VARCHAR)), 1, 1)) - 1) * 16
-                    + (strpos('0123456789abcdef',
-                         substr(md5(CAST(doc_id AS VARCHAR)), 2, 1)) - 1)
+                 CAST(${graft.ops.HashOracleSql.md5Byte("CAST(doc_id AS VARCHAR)")}
                    AS BIGINT) AS bucket
           FROM documents) t
         WHERE bucket < 26 ORDER BY doc_id""")),
@@ -1608,26 +1569,7 @@ object Corpus extends QueryModule {
         SELECT doc_id, lang, rn FROM r
         WHERE rn <= ceil(0.1 * n_lang) ORDER BY doc_id""")),
     QueryDef(
-      "q_tfidf", tfidfTopTerms, Some("""
-        WITH tf AS (
-          SELECT doc_id, token, count(*) AS tf
-          FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS token
-                FROM documents) t
-          GROUP BY doc_id, token),
-        df AS (SELECT token, count(*) AS df FROM tf GROUP BY token),
-        n AS (SELECT count(*) AS n_docs FROM documents),
-        scored AS (
-          SELECT tf.doc_id, tf.token, tf.tf, df.df,
-                 tf.tf * (n.n_docs - df.df + 0.5) / (df.df + 0.5) AS score
-          FROM tf JOIN df USING (token) CROSS JOIN n),
-        r AS (
-          SELECT doc_id, token, tf, df, score,
-                 row_number() OVER (PARTITION BY doc_id
-                   ORDER BY score DESC, token) AS rank
-          FROM scored)
-        SELECT doc_id, rank, token, tf, df, score
-        FROM r WHERE rank <= 3 AND doc_id < 50
-        ORDER BY doc_id, rank""")),
+      "q_tfidf", tfidfTopTerms, Some(oracleTfidf(""))),
     QueryDef(
       "q_token_freq", tokenFrequencies, Some("""
         SELECT token, count(*) AS tf, count(DISTINCT doc_id) AS df
@@ -1635,29 +1577,11 @@ object Corpus extends QueryModule {
               FROM documents) t
         GROUP BY token ORDER BY tf DESC, token LIMIT 50""")),
     QueryDef(
-      "q_decontaminate", decontaminate, Some("""
-        WITH fps AS (
-          SELECT doc_id, lang,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
-          FROM documents),
-        bench AS (SELECT fp AS bfp FROM fps WHERE doc_id % 25 = 0)
-        SELECT lang, count(*) AS n_kept
-        FROM fps WHERE fp NOT IN (SELECT bfp FROM bench)
-        GROUP BY lang ORDER BY lang""")),
+      "q_decontaminate", decontaminate, Some(oracleDecontaminate)),
     QueryDef(
       // same oracle as q_decontaminate: the bloom pre-filter must be
       // result-invisible (no false negatives; positives exactly verified)
-      "q_decontaminate_bloom", decontaminateBloom, Some("""
-        WITH fps AS (
-          SELECT doc_id, lang,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
-          FROM documents),
-        bench AS (SELECT fp AS bfp FROM fps WHERE doc_id % 25 = 0)
-        SELECT lang, count(*) AS n_kept
-        FROM fps WHERE fp NOT IN (SELECT bfp FROM bench)
-        GROUP BY lang ORDER BY lang""")),
+      "q_decontaminate_bloom", decontaminateBloom, Some(oracleDecontaminate)),
     QueryDef(
       "q_chunk_dedup", chunkDupProfile, Some(s"""
         ${graft.ops.HashOracleSql.chunksCte},

@@ -214,10 +214,9 @@ object Curation extends QueryModule {
 
   // -------------------------------------------------------------- oracle
 
-  /** Shared token-cost SQL, identical to the [[Corpus.packBins]] oracle. */
-  private val oracleCost = """
-    CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-      length(text) - length(replace(text, ' ', '')) + 1 END AS BIGINT)"""
+  /** Token cost per document: [[TextOps.oracleTokenCount]] as BIGINT. */
+  private val oracleCost = s"""
+    CAST(${TextOps.oracleTokenCount()} AS BIGINT)"""
 
   /** INGEST DRIFT REPORT — distribution shift between the standing
     * corpus (doc_id % 10 < 8, as in the incremental-dedup split) and a
@@ -577,26 +576,11 @@ object Curation extends QueryModule {
   override def defs: Seq[QueryDef] = Seq(
     QueryDef(
       "q_effective_mix", effectiveMix, Some(s"""
-        ${NearDup.oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
+        ${NearDup.oracleClusters},
         dt AS (
           SELECT d.source, d.doc_id, cl.cluster_id,
-                 CAST(CASE WHEN length(trim(d.text)) = 0 THEN 0 ELSE
-                   length(d.text) - length(replace(d.text, ' ', '')) + 1
-                   END AS BIGINT) AS t
+                 CAST(${TextOps.oracleTokenCount("d.text")}
+                   AS BIGINT) AS t
           FROM documents d JOIN cl USING (doc_id)),
         agg AS (
           SELECT source,
@@ -698,11 +682,10 @@ object Curation extends QueryModule {
                alloc_tokens - least(alloc_tokens, n_tokens * 4) AS shortfall
         FROM p ORDER BY source""")),
     QueryDef(
-      "q_source_concentration", sourceConcentration, Some("""
+      "q_source_concentration", sourceConcentration, Some(s"""
         WITH c AS (
           SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-                 CAST(sum(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END)
+                 CAST(sum(${TextOps.oracleTokenCount()})
                    AS BIGINT) AS n_tokens
           FROM documents GROUP BY source),
         r AS (
@@ -728,26 +711,13 @@ object Curation extends QueryModule {
         SELECT doc_id, source, src_rank, src_rank <= 15 AS keep
         FROM r ORDER BY doc_id""")),
     QueryDef(
-      "q_quality_calibrate", qualityCalibrate(_, _), Some("""
+      "q_quality_calibrate", qualityCalibrate(_, _), Some(s"""
         WITH q AS (
           SELECT doc_id, lang,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                   (CAST(n_stop AS DOUBLE) / n_tokens) * 2.0
-                     + CASE WHEN n_tokens BETWEEN 20 AND 1000
-                            THEN 1.0 ELSE 0.0 END END AS quality_score
+                 ${TextOps.oracleQualityScore("n_stop")} AS quality_score
           FROM (
-            SELECT doc_id, lang,
-                   CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                     length(text) - length(replace(text, ' ', '')) + 1 END
-                     AS BIGINT) AS n_tokens,
-                   CAST(len(list_filter(string_split(text, ' '),
-                          t -> t = 'the'))
-                      + len(list_filter(string_split(text, ' '),
-                          t -> t = 'a'))
-                      + len(list_filter(string_split(text, ' '),
-                          t -> t = 'of'))
-                      + len(list_filter(string_split(text, ' '),
-                          t -> t = 'and')) AS BIGINT) AS n_stop
+            SELECT doc_id, lang, $oracleCost AS n_tokens,
+                   CAST(${TextOps.oracleStopwordCount} AS BIGINT) AS n_stop
             FROM documents))
         SELECT doc_id, lang, quality_score,
                percent_rank() OVER (PARTITION BY lang
@@ -756,10 +726,9 @@ object Curation extends QueryModule {
                  ORDER BY quality_score) >= 0.2 AS keep
         FROM q ORDER BY doc_id""")),
     QueryDef(
-      "q_ingest_drift", ingestDrift, Some("""
+      "q_ingest_drift", ingestDrift, Some(s"""
         WITH b AS (
-          SELECT CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
+          SELECT CAST(${TextOps.oracleTokenCount()}
                    // 16 AS BIGINT) AS bucket,
                  doc_id % 10 >= 8 AS fresh
           FROM documents),

@@ -778,9 +778,9 @@ object NearDup extends QueryModule {
     // with driver sync points — overlap from two driver threads instead
     // of serializing ~equal wall times end to end. Both hold into this
     // thread's scope (Par runs them under it).
-    val (standing, core) = graft.ops.Par.concurrently2(
-      Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true)),
-      Scope.hold(kcoreOnPairs(pairs).localCheckpoint(true)))
+    val Seq(standing, core) = graft.ops.Par.concurrently(Seq(
+      () => Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true)),
+      () => Scope.hold(kcoreOnPairs(pairs).localCheckpoint(true))))
     val removed = docs.where(TakedownSparkPred).select($"doc_id")
     takedownKcoreOn(core, standing, pairs, removed)
   }
@@ -1539,11 +1539,84 @@ object NearDup extends QueryModule {
   private[graft] val oracleShingles = s"""
     WITH s AS ($oracleShingleBody)"""
 
+  /** 3-shingle Jaccard of the shingle sets `$a.sh` and `$b.sh`, as a
+    * double — the similarity every near-dup oracle thresholds. */
+  private[graft] def oracleJaccard(a: String, b: String) =
+    s"""CAST(len(list_intersect($a.sh, $b.sh)) AS DOUBLE) /
+                (len($a.sh) + len($b.sh) - len(list_intersect($a.sh, $b.sh)))"""
+
+  /** `p(id_a, id_b)`: the near-dup pair set over `s` — every doc pair at
+    * Jaccard ≥ 0.8, [[dedupClusters]]'s edge rule. MATERIALIZED because
+    * DuckDB inlines a plain CTE per reference: the peel, rank and
+    * closure stages that read it would each redo the all-pairs join
+    * (hours at sf0.1 instead of minutes). */
+  private[graft] val oraclePairs = s"""
+        p AS MATERIALIZED (
+          SELECT a.doc_id AS id_a, b.doc_id AS id_b
+          FROM s a JOIN s b ON a.doc_id < b.doc_id
+          WHERE ${oracleJaccard("a", "b")}
+                >= 0.8)"""
+
+  /** [[oraclePairs]] plus `e(src, dst)`, its symmetric edge list. */
+  private[graft] val oracleEdges = s"""$oraclePairs,
+        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
+              UNION ALL SELECT id_b, id_a FROM p)"""
+
+  /** `reach`/`cl(doc_id, cluster_id)`: the connected components of `e`
+    * by recursive reachability from every `anchor` document, labelled by
+    * their least member — [[dedupClusters]]'s labels. Needs `WITH
+    * RECURSIVE`. */
+  private[graft] def oracleComponents(anchor: String = "documents") = s"""
+        reach(a, b) AS (
+          SELECT doc_id, doc_id FROM $anchor
+          UNION
+          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
+        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
+               FROM reach GROUP BY a)"""
+
+  /** The whole near-dup cluster chain over the full corpus: shingles,
+    * [[oracleEdges]] and [[oracleComponents]]. */
+  private[graft] val oracleClusters = s"""
+    WITH RECURSIVE s AS ($oracleShingleBody),
+        $oracleEdges,
+        ${oracleComponents()}"""
+
+  /** `s`: the shingles of the corpus after the takedown, for the
+    * oracles that recompute a takedown result from scratch. */
+  private val oracleTakedownShingles = s"""s AS ($oracleShingleBody
+          WHERE NOT $TakedownSqlPred)"""
+
+  /** `j`, `rk` and `surv(cluster_id, survivor_id)` of [[dedupSurvivor]]:
+    * per cluster `cl`, the best [[TextOps.oracleQuality]] document
+    * survives; [[oracleSurvivors]] adds the final select. */
+  private val oracleSurvivorRanks = s"""
+        ${TextOps.oracleQuality},
+        j AS (SELECT cl.doc_id, cl.cluster_id, q.quality_score
+              FROM cl JOIN q ON cl.doc_id = q.doc_id),
+        rk AS (SELECT doc_id, cluster_id,
+                 row_number() OVER (PARTITION BY cluster_id
+                   ORDER BY quality_score DESC, doc_id) AS rn
+               FROM j),
+        surv AS (SELECT cluster_id, doc_id AS survivor_id
+                 FROM rk WHERE rn = 1)"""
+
+  private val oracleSurvivors = s"""$oracleSurvivorRanks
+        SELECT j.doc_id, j.cluster_id, surv.survivor_id,
+               j.doc_id = surv.survivor_id AS keep
+        FROM j JOIN surv ON j.cluster_id = surv.cluster_id
+        ORDER BY j.doc_id"""
+
   /** Unrolled fixed-point PageRank rounds for the DuckDB oracle — the
     * same integral arithmetic as [[pageRankOnPairs]] (`//` is DuckDB's
     * integral division, Spark's `div`; both truncate, and every value is
-    * positive so truncation = floor on both engines). */
-  private def pageRankOracleIters(iters: Int): String =
+    * positive so truncation = floor on both engines) — over the edges
+    * `e`, then the final select. */
+  private def pageRankOracle(iters: Int): String = s"""
+        deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
+                FROM e GROUP BY src),
+        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
+        r0 AS (SELECT node, deg,
+                 1000000000000 // (SELECT n FROM nn) AS pr FROM deg),""" +
     (1 to iters).map { i => s"""
         r$i AS (
           SELECT d.node, d.deg,
@@ -1553,7 +1626,9 @@ object NearDup extends QueryModule {
             SELECT e.dst AS node,
                    CAST(sum(r.pr // r.deg) AS BIGINT) AS inflow
             FROM e JOIN r${i - 1} r ON r.node = e.src
-            GROUP BY e.dst) f ON f.node = d.node)""" }.mkString(",")
+            GROUP BY e.dst) f ON f.node = d.node)""" }.mkString(",") + s"""
+        SELECT node AS doc_id, pr AS pr_scaled, deg
+        FROM r$iters ORDER BY doc_id"""
 
   // ----------------------------------------------------------- winnowing
 
@@ -1689,8 +1764,9 @@ object NearDup extends QueryModule {
     ff AS (SELECT f.* FROM f JOIN k USING (fp))"""
 
   /** Unrolled peel rounds for the k-core oracle — a1/e2/a2/…, matching
-    * [[kcoreOnPairs]] round for round. */
-  private def kcoreOracleRounds(rounds: Int, k: Int): String = {
+    * [[kcoreOnPairs]] round for round — over the edges `e`, then each
+    * core member's degree inside the core. */
+  private def kcoreOracle(rounds: Int, k: Int): String = {
     val steps = (2 to rounds).map { r => s"""
         e$r AS (SELECT e.src, e.dst FROM e
                 JOIN a${r - 1} x ON e.src = x.node
@@ -1699,31 +1775,20 @@ object NearDup extends QueryModule {
                 HAVING count(*) >= $k)""" }.mkString(",")
     s"""
         a1 AS (SELECT src AS node FROM e GROUP BY src
-               HAVING count(*) >= $k),$steps"""
+               HAVING count(*) >= $k),$steps,
+        ef AS (SELECT e.src, e.dst FROM e
+               JOIN a$rounds x ON e.src = x.node
+               JOIN a$rounds y ON e.dst = y.node)
+        SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
+        FROM ef GROUP BY src ORDER BY doc_id"""
   }
 
   override def defs: Seq[QueryDef] = Seq(
     QueryDef(
-      // p/e MATERIALIZED: the peel rounds reference e repeatedly, and
-      // DuckDB inlines plain CTEs per reference — without the hint the
-      // all-pairs verification join recomputes once per round (hours at
-      // sf0.1 instead of minutes)
       "q_kcore", kcore, Some(s"""
         $oracleShingles,
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        ${kcoreOracleRounds(4, 2)},
-        ef AS (SELECT e.src, e.dst FROM e
-               JOIN a4 x ON e.src = x.node
-               JOIN a4 y ON e.dst = y.node)
-        SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
-        FROM ef GROUP BY src ORDER BY doc_id""")),
+        $oracleEdges,
+        ${kcoreOracle(4, 2)}""")),
     QueryDef(
       "q_winnow_neardup", winnowNearDup, Some(s"""
         $oracleWinnowFps
@@ -1736,35 +1801,14 @@ object NearDup extends QueryModule {
         HAVING count(*) >= $WinnowMinShared
         ORDER BY id_a, id_b""")),
     QueryDef(
-      // p/e MATERIALIZED for the same reason as q_kcore: five unrolled
-      // rounds each join e, and plain CTEs re-inline the all-pairs join
       "q_pagerank", pageRank, Some(s"""
         $oracleShingles,
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-                FROM e GROUP BY src),
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-        r0 AS (SELECT node, deg,
-                 1000000000000 // (SELECT n FROM nn) AS pr FROM deg),
-        ${pageRankOracleIters(5)}
-        SELECT node AS doc_id, pr AS pr_scaled, deg
-        FROM r5 ORDER BY doc_id""")),
+        $oracleEdges,
+        ${pageRankOracle(5)}""")),
     QueryDef(
       "q_edit_distance", editDistance, Some(s"""
         $oracleShingles,
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
+        $oraclePairs,
         j AS (
           SELECT p.id_a, p.id_b,
                  CAST(levenshtein(da.text, db.text) AS BIGINT) AS edit_dist,
@@ -1780,12 +1824,7 @@ object NearDup extends QueryModule {
     QueryDef(
       "q_graph_stats", graphStats, Some(s"""
         $oracleShingles,
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
+        $oraclePairs,
         ne AS (SELECT CAST(count(*) AS BIGINT) AS n_edges FROM p),
         nw AS (
           SELECT CAST(coalesce(sum(deg * (deg - 1) // 2), 0) AS BIGINT)
@@ -1809,8 +1848,7 @@ object NearDup extends QueryModule {
         p AS MATERIALIZED (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_common,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 ${oracleJaccard("a", "b")}
                    AS jaccard
           FROM s a JOIN s b ON a.doc_id < b.doc_id)
         SELECT id_a, id_b, n_common, jaccard
@@ -1820,8 +1858,7 @@ object NearDup extends QueryModule {
         $oracleShingles,
         p AS MATERIALIZED (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 ${oracleJaccard("a", "b")}
                    AS jaccard
           FROM s a JOIN s b ON a.doc_id < b.doc_id),
         sw AS (
@@ -1847,8 +1884,7 @@ object NearDup extends QueryModule {
         p AS (
           SELECT a.source, a.doc_id AS id_a, b.doc_id AS id_b,
                  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_common,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 ${oracleJaccard("a", "b")}
                    AS jaccard
           FROM s a JOIN s b ON a.source = b.source AND a.doc_id < b.doc_id
           WHERE len(list_intersect(a.sh, b.sh)) >= 1),
@@ -1861,30 +1897,12 @@ object NearDup extends QueryModule {
         FROM r WHERE rank <= 3 ORDER BY source, rank""")),
     QueryDef(
       "q_dedup_clusters", dedupClusters, Some(s"""
-        ${oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src)
-        SELECT a AS doc_id, min(b) AS cluster_id
-        FROM reach GROUP BY a ORDER BY doc_id""")),
+        $oracleClusters
+        SELECT doc_id, cluster_id FROM cl ORDER BY doc_id""")),
     QueryDef(
       "q_cross_source_dup", crossSourceDup, Some(s"""
         $oracleShingles,
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
+        $oraclePairs,
         lab AS (
           SELECT least(da.source, db.source) AS source_a,
                  greatest(da.source, db.source) AS source_b
@@ -1897,28 +1915,10 @@ object NearDup extends QueryModule {
         ORDER BY source_a, source_b""")),
     QueryDef(
       "q_leakage_split", leakageSafeSplit, Some(s"""
-        ${oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
+        $oracleClusters,
         bk AS (
           SELECT doc_id, cluster_id,
-                 CAST((strpos('0123456789abcdef',
-                         substr(md5(CAST(cluster_id AS VARCHAR)), 1, 1)) - 1)
-                        * 16
-                    + (strpos('0123456789abcdef',
-                         substr(md5(CAST(cluster_id AS VARCHAR)), 2, 1)) - 1)
+                 CAST(${graft.ops.HashOracleSql.md5Byte("CAST(cluster_id AS VARCHAR)")}
                    AS BIGINT) AS bucket
           FROM cl)
         SELECT doc_id, cluster_id,
@@ -1928,26 +1928,11 @@ object NearDup extends QueryModule {
         FROM bk ORDER BY doc_id""")),
     QueryDef(
       "q_effective_tokens", effectiveTokens, Some(s"""
-        ${oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
+        $oracleClusters,
         dt AS (
           SELECT d.source, d.doc_id, cl.cluster_id,
-                 CAST(CASE WHEN length(trim(d.text)) = 0 THEN 0 ELSE
-                   length(d.text) - length(replace(d.text, ' ', '')) + 1
-                   END AS BIGINT) AS t
+                 CAST(${TextOps.oracleTokenCount("d.text")}
+                   AS BIGINT) AS t
           FROM documents d JOIN cl USING (doc_id)),
         agg AS (
           SELECT source,
@@ -1965,21 +1950,7 @@ object NearDup extends QueryModule {
         FROM agg ORDER BY source""")),
     QueryDef(
       "q_cluster_sizes", clusterSizes, Some(s"""
-        ${oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
+        $oracleClusters,
         sz AS (SELECT cluster_id, CAST(count(*) AS BIGINT) AS cluster_size
                FROM cl GROUP BY cluster_id),
         cs AS (SELECT cluster_size, CAST(count(*) AS BIGINT) AS n_clusters
@@ -1993,95 +1964,18 @@ object NearDup extends QueryModule {
       // the oracle recomputes the survivor table FROM SCRATCH on the
       // filtered corpus — the hash compare is the parity proof.
       "q_takedown_survivor", takedownSurvivor, Some(s"""
-        WITH RECURSIVE s AS ($oracleShingleBody
-          WHERE NOT $TakedownSqlPred),
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents WHERE NOT $TakedownSqlPred
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
-        q AS (
-          SELECT doc_id,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                   (CAST(n_stopwords AS DOUBLE) / n_tokens) * 2.0
-                   + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
-                      THEN 1.0 ELSE 0.0 END) END AS quality_score
-          FROM (SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                    length(text) - length(replace(text, ' ', '')) + 1
-                  END AS n_tokens,
-                  len(list_filter(string_split(text, ' '), t -> t = 'the'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'a'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'of'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'and'))
-                    AS n_stopwords
-                FROM documents) b),
-        j AS (SELECT cl.doc_id, cl.cluster_id, q.quality_score
-              FROM cl JOIN q ON cl.doc_id = q.doc_id),
-        rk AS (SELECT doc_id, cluster_id,
-                 row_number() OVER (PARTITION BY cluster_id
-                   ORDER BY quality_score DESC, doc_id) AS rn
-               FROM j),
-        surv AS (SELECT cluster_id, doc_id AS survivor_id
-                 FROM rk WHERE rn = 1)
-        SELECT j.doc_id, j.cluster_id, surv.survivor_id,
-               j.doc_id = surv.survivor_id AS keep
-        FROM j JOIN surv ON j.cluster_id = surv.cluster_id
-        ORDER BY j.doc_id""")),
+        WITH RECURSIVE $oracleTakedownShingles,
+        $oracleEdges,
+        ${oracleComponents(s"documents WHERE NOT $TakedownSqlPred")},
+        $oracleSurvivors""")),
     QueryDef(
       // both engines derive old and new artifacts (DuckDB: two
       // from-scratch closures) and aggregate the same comparison
       "q_takedown_census", takedownCensus, Some(s"""
-        WITH RECURSIVE s AS ($oracleShingleBody),
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
-        q AS (
-          SELECT doc_id,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                   (CAST(n_stopwords AS DOUBLE) / n_tokens) * 2.0
-                   + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
-                      THEN 1.0 ELSE 0.0 END) END AS quality_score
-          FROM (SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                    length(text) - length(replace(text, ' ', '')) + 1
-                  END AS n_tokens,
-                  len(list_filter(string_split(text, ' '), t -> t = 'the'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'a'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'of'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'and'))
-                    AS n_stopwords
-                FROM documents) b),
-        jj AS (SELECT cl.doc_id, cl.cluster_id, q.quality_score
-               FROM cl JOIN q ON cl.doc_id = q.doc_id),
-        rk AS (SELECT doc_id, cluster_id,
-                 row_number() OVER (PARTITION BY cluster_id
-                   ORDER BY quality_score DESC, doc_id) AS rn
-               FROM jj),
-        surv AS (SELECT cluster_id, doc_id AS survivor_id
-                 FROM rk WHERE rn = 1),
-        olds AS (SELECT jj.doc_id, jj.cluster_id, surv.survivor_id
-                 FROM jj JOIN surv ON jj.cluster_id = surv.cluster_id),
+        $oracleClusters,
+        $oracleSurvivorRanks,
+        olds AS (SELECT j.doc_id, j.cluster_id, surv.survivor_id
+                 FROM j JOIN surv ON j.cluster_id = surv.cluster_id),
         rem AS (SELECT doc_id FROM documents WHERE $TakedownSqlPred),
         e2 AS MATERIALIZED (
           SELECT src, dst FROM e
@@ -2131,99 +2025,29 @@ object NearDup extends QueryModule {
       // filtered corpus — hash parity proves component-local peeling
       // commutes with blast-radius-bounded maintenance.
       "q_takedown_kcore", takedownKcore, Some(s"""
-        WITH s AS ($oracleShingleBody
-          WHERE NOT $TakedownSqlPred),
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        ${kcoreOracleRounds(4, 2)},
-        ef AS (SELECT e.src, e.dst FROM e
-               JOIN a4 x ON e.src = x.node
-               JOIN a4 y ON e.dst = y.node)
-        SELECT src AS doc_id, CAST(count(*) AS BIGINT) AS deg
-        FROM ef GROUP BY src ORDER BY doc_id""")),
+        WITH $oracleTakedownShingles,
+        $oracleEdges,
+        ${kcoreOracle(4, 2)}""")),
     QueryDef(
       // Spark: standing pairs reused, 5 fixed-point rounds re-run on
       // surviving edges (teleport's global n makes passthrough
       // impossible — see takedownPagerankOn). Oracle: pairs AND rounds
       // from scratch on the filtered corpus.
       "q_takedown_pagerank", takedownPagerank, Some(s"""
-        WITH s AS ($oracleShingleBody
-          WHERE NOT $TakedownSqlPred),
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        deg AS (SELECT src AS node, CAST(count(*) AS BIGINT) AS deg
-                FROM e GROUP BY src),
-        nn AS (SELECT CAST(count(*) AS BIGINT) AS n FROM deg),
-        r0 AS (SELECT node, deg,
-                 1000000000000 // (SELECT n FROM nn) AS pr FROM deg),
-        ${pageRankOracleIters(5)}
-        SELECT node AS doc_id, pr AS pr_scaled, deg
-        FROM r5 ORDER BY doc_id""")),
+        WITH $oracleTakedownShingles,
+        $oracleEdges,
+        ${pageRankOracle(5)}""")),
     QueryDef(
       "q_dedup_survivor", dedupSurvivor, Some(s"""
-        ${oracleShingles.replace("WITH s AS", "WITH RECURSIVE s AS")},
-        p AS MATERIALIZED (
-          SELECT a.doc_id AS id_a, b.doc_id AS id_b
-          FROM s a JOIN s b ON a.doc_id < b.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
-                >= 0.8),
-        e AS MATERIALIZED (SELECT id_a AS src, id_b AS dst FROM p
-              UNION ALL SELECT id_b, id_a FROM p),
-        reach(a, b) AS (
-          SELECT doc_id, doc_id FROM documents
-          UNION
-          SELECT r.a, e.dst FROM reach r JOIN e ON r.b = e.src),
-        cl AS (SELECT a AS doc_id, min(b) AS cluster_id
-               FROM reach GROUP BY a),
-        q AS (
-          SELECT doc_id,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                   (CAST(n_stopwords AS DOUBLE) / n_tokens) * 2.0
-                   + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
-                      THEN 1.0 ELSE 0.0 END) END AS quality_score
-          FROM (SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                    length(text) - length(replace(text, ' ', '')) + 1
-                  END AS n_tokens,
-                  len(list_filter(string_split(text, ' '), t -> t = 'the'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'a'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'of'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'and'))
-                    AS n_stopwords
-                FROM documents) b),
-        j AS (SELECT cl.doc_id, cl.cluster_id, q.quality_score
-              FROM cl JOIN q ON cl.doc_id = q.doc_id),
-        rk AS (SELECT doc_id, cluster_id,
-                 row_number() OVER (PARTITION BY cluster_id
-                   ORDER BY quality_score DESC, doc_id) AS rn
-               FROM j),
-        surv AS (SELECT cluster_id, doc_id AS survivor_id
-                 FROM rk WHERE rn = 1)
-        SELECT j.doc_id, j.cluster_id, surv.survivor_id,
-               j.doc_id = surv.survivor_id AS keep
-        FROM j JOIN surv ON j.cluster_id = surv.cluster_id
-        ORDER BY j.doc_id""")),
+        $oracleClusters,
+        $oracleSurvivors""")),
     QueryDef(
       "q_incremental_neardup", incrementalNearDup, Some(s"""
         $oracleShingles,
         p AS MATERIALIZED (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                  CAST(len(list_intersect(a.sh, b.sh)) AS BIGINT) AS n_common,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 ${oracleJaccard("a", "b")}
                    AS jaccard
           FROM s a JOIN s b ON a.doc_id < b.doc_id
           WHERE a.doc_id % 10 >= 8 OR b.doc_id % 10 >= 8)
@@ -2234,8 +2058,7 @@ object NearDup extends QueryModule {
         $oracleShingles,
         p AS MATERIALIZED (
           SELECT a.doc_id AS id_a, b.doc_id AS id_b,
-                 CAST(len(list_intersect(a.sh, b.sh)) AS DOUBLE) /
-                   (len(a.sh) + len(b.sh) - len(list_intersect(a.sh, b.sh)))
+                 ${oracleJaccard("a", "b")}
                    AS jaccard
           FROM s a JOIN s b ON a.doc_id < b.doc_id)
         SELECT id_a, id_b, jaccard

@@ -45,17 +45,15 @@ object Similarity extends QueryModule {
     * nprobe = 1) → `asg2(vec_id, super_id, centroid_id, cos)`. Expects
     * [[oracleVecs]]'s `e` in scope. Every stage carries the strict
     * (cos DESC, id ASC) tie rule of the kernels. */
-  private lazy val oracleTwoLevelAsg = """
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
+  private lazy val oracleTwoLevelAsg = s"""
+        $oracleSeeds,
         sup AS (SELECT centroid_id AS super_id, cemb AS semb, cn AS sn
                 FROM c WHERE centroid_id < 2),
         -- child -> super: nearest of the two super seeds
         ca AS (
           SELECT c.centroid_id, sup.super_id,
                  row_number() OVER (PARTITION BY c.centroid_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(c.cemb)),
-                     k -> CAST(c.cemb[k] AS DOUBLE) * CAST(sup.semb[k] AS DOUBLE)))
+                   ${oracleDotOf("c.cemb", "sup.semb")}
                      / (c.cn * sup.sn) DESC, sup.super_id) AS rn
           FROM c CROSS JOIN sup),
         cmap AS (SELECT centroid_id, super_id FROM ca WHERE rn = 1),
@@ -63,17 +61,14 @@ object Similarity extends QueryModule {
         vs AS (
           SELECT e.vec_id, sup.super_id,
                  row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(sup.semb[k] AS DOUBLE)))
+                   ${oracleDotOf("e.embedding", "sup.semb")}
                      / (e.nrm * sup.sn) DESC, sup.super_id) AS rn
           FROM e CROSS JOIN sup),
         vsel AS (SELECT vec_id, super_id FROM vs WHERE rn = 1),
         -- probe -> child, scanning ONLY the selected super's children
         vc AS (
           SELECT e.vec_id, vsel.super_id, c.centroid_id,
-                 list_sum(list_transform(generate_series(1, len(e.embedding)),
-                   k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                   / (e.nrm * c.cn) AS cos
+                 $oracleCellCos AS cos
           FROM e
           JOIN vsel ON vsel.vec_id = e.vec_id
           JOIN cmap ON cmap.super_id = vsel.super_id
@@ -1729,9 +1724,115 @@ object Similarity extends QueryModule {
                AS nrm
       FROM embeddings)"""
 
+  /** Dot product of the float-list columns `x` and `y`, folded left to
+    * right in double like the native kernels. */
+  private def oracleDotOf(x: String, y: String) =
+    s"""list_sum(list_transform(generate_series(1, len($x)),
+        k -> CAST($x[k] AS DOUBLE) * CAST($y[k] AS DOUBLE)))"""
+
   private def oracleDot(a: String, b: String) =
-    s"""list_sum(list_transform(generate_series(1, len($a.embedding)),
-        k -> CAST($a.embedding[k] AS DOUBLE) * CAST($b.embedding[k] AS DOUBLE)))"""
+    oracleDotOf(s"$a.embedding", s"$b.embedding")
+
+  /** `c(centroid_id, cemb, cn)`: the flat codebook, seeded with the
+    * first 8 vectors. Expects [[oracleVecs]]'s `e` in scope. */
+  private val oracleSeeds = """
+        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
+              FROM e WHERE vec_id < 8)"""
+
+  /** Cosine of the vector `e` to the centroid `c`. */
+  private val oracleCellCos =
+    s"""${oracleDotOf("e.embedding", "c.cemb")}
+                     / (e.nrm * c.cn)"""
+
+  /** [[oracleSeeds]], then `name`: every (vector, centroid) pair with
+    * the centroid's rank `rn` for that vector under the kernels' strict
+    * (cos DESC, id ASC) rule — `rn = 1` is the flat assignment of
+    * [[ivfAssign]], `rn <= nprobe` its multi-probe. `cols` are columns
+    * of `e` carried along, each followed by a comma. */
+  private def oracleFlatRank(name: String, cols: String) = s"""$oracleSeeds,
+        $name AS (
+          SELECT e.vec_id, ${cols}c.centroid_id,
+                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
+                   $oracleCellCos DESC, c.centroid_id) AS rn
+          FROM e CROSS JOIN c)"""
+
+  /** `asg(vec_id, centroid_id)`: the flat assignment, from rank `a`. */
+  private val oracleFlatAsg = s"""${oracleFlatRank("a", "")},
+        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1)"""
+
+  /** `cells(vec_id, embedding, nrm, centroid_id)`: the flat assignment
+    * with each vector's embedding and norm, from rank `asg0`. */
+  private val oracleFlatCells =
+    s"""${oracleFlatRank("asg0", "e.embedding, e.nrm, ")},
+        cells AS (SELECT vec_id, embedding, nrm, centroid_id
+                  FROM asg0 WHERE rn = 1)"""
+
+  /** Probes 8..17 against every cell-mate under the assignment `asg`,
+    * as (q_id, neighbor_id, cosine), without the closing paren. */
+  private def oracleCellProbe(asg: String) = s"""
+          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
+                 ${oracleDot("pe", "ee")} / (pe.nrm * ee.nrm) AS cosine
+          FROM $asg pa
+          JOIN e pe ON pe.vec_id = pa.vec_id
+          JOIN $asg ea ON ea.centroid_id = pa.centroid_id
+                     AND ea.vec_id <> pa.vec_id
+          JOIN e ee ON ee.vec_id = ea.vec_id
+          WHERE pa.vec_id >= 8 AND pa.vec_id < 18"""
+
+  /** The top 3 (q_id, neighbor_id) per probe of the cosine pairs `src`
+    * by (cosine DESC, neighbor_id), without the closing paren. */
+  private def oracleTop3(src: String) = s"""
+          SELECT q_id, neighbor_id FROM (
+            SELECT q_id, neighbor_id,
+                   row_number() OVER (PARTITION BY q_id
+                     ORDER BY cosine DESC, neighbor_id) AS rank
+            FROM $src) WHERE rank <= 3"""
+
+  /** `tp`/`t3`: the exact top 3 of probes 8..17 over all vectors — the
+    * truth set of the recall queries. */
+  private val oracleBruteTop3 = s"""
+        tp AS (
+          SELECT qa.vec_id AS q_id, b.vec_id AS neighbor_id,
+                 ${oracleDot("qa", "b")} / (qa.nrm * b.nrm) AS cosine
+          FROM e qa JOIN e b ON b.vec_id <> qa.vec_id
+          WHERE qa.vec_id >= 8 AND qa.vec_id < 18),
+        t3 AS (${oracleTop3("tp")})"""
+
+  /** Per probe, recall@3 of the probe's top 3 `i3` against the exact
+    * top 3 `t3` ([[oracleBruteTop3]]); `cols` are extra leading output
+    * columns, each followed by a comma. */
+  private def oracleRecall(cols: String) = s"""
+        SELECT t.q_id,$cols
+               CAST(count(*) AS BIGINT) AS n_true,
+               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
+                        END) AS BIGINT) AS n_hit,
+               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
+                        END) * 1000000 // count(*) AS BIGINT) AS recall_ppm
+        FROM t3 t LEFT JOIN i3 i USING (q_id, neighbor_id)
+        GROUP BY t.q_id ORDER BY q_id"""
+
+  /** [[oracleCellProbe]] as `p`, ranked, and the top-3 select. */
+  private def oracleProbeTop3(asg: String) = s"""
+        p AS (${oracleCellProbe(asg)}),
+        r AS (SELECT q_id, neighbor_id, cosine,
+                     row_number() OVER (PARTITION BY q_id
+                       ORDER BY cosine DESC, neighbor_id) AS rank
+              FROM p)
+        SELECT q_id, rank, neighbor_id, cosine FROM r WHERE rank <= 3
+        ORDER BY q_id, rank"""
+
+  /** `dup` and the final select of the semantic dedup: a vector is a
+    * dup when a lower id in its cell has cosine ≥ 0.3. Expects `cells`. */
+  private val oracleCellDedup = s"""
+        dup AS (
+          SELECT DISTINCT b.vec_id
+          FROM cells a JOIN cells b
+            ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
+          WHERE ${oracleDot("a", "b")} / (a.nrm * b.nrm) >= 0.3)
+        SELECT c2.vec_id, c2.centroid_id,
+               (d.vec_id IS NOT NULL) AS is_dup
+        FROM cells c2 LEFT JOIN dup d ON c2.vec_id = d.vec_id
+        ORDER BY c2.vec_id"""
 
   /** PQ oracle scaffolding: per-vector codes (argmin sub-centroid per
     * subspace, ties to the lowest code — the same strict-less rule as
@@ -1801,6 +1902,61 @@ object Similarity extends QueryModule {
     s"""list_sum(list_transform(generate_series(1, ${PqM * PqSubDim}),
         kk -> (CAST($qe[kk] AS DOUBLE) - $rv[kk])
             * (CAST($qe[kk] AS DOUBLE) - $rv[kk])))"""
+
+  /** `rk`: the ADC pairs `p(q_id, neighbor_id, adist)` ranked per probe
+    * by (adist, neighbor_id), and the top-5 select. */
+  private val oracleAdcTop5 = """
+        rk AS (SELECT q_id, neighbor_id, adist,
+                      CAST(row_number() OVER (PARTITION BY q_id
+                        ORDER BY adist, neighbor_id) AS BIGINT) AS rank
+               FROM p)
+        SELECT q_id, rank, neighbor_id, adist FROM rk WHERE rank <= 5
+        ORDER BY q_id, rank"""
+
+  /** `p`: probes 20..29 against every cell-mate under `asg2`, by the
+    * squared L2 from the probe's residual `rv0` to the cell-mate's
+    * reconstructed residual `recon.rv`. */
+  private def oracleResidualAdc(recon: String, rv: String) = s"""
+        p AS (
+          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
+                 list_sum(list_transform(generate_series(1, ${PqM * PqSubDim}),
+                   kk -> (pr.rv0[kk] - r.$rv[kk])
+                       * (pr.rv0[kk] - r.$rv[kk]))) AS adist
+          FROM asg2 pa
+          JOIN res pr ON pr.vec_id = pa.vec_id
+          JOIN asg2 ea ON ea.centroid_id = pa.centroid_id
+                      AND ea.vec_id <> pa.vec_id
+          JOIN $recon r ON r.vec_id = ea.vec_id
+          WHERE pa.vec_id >= 20 AND pa.vec_id < 30)"""
+
+  /** The re-rank tail over the ADC pairs `p`: `sl`, the shortlist of
+    * the best `RerankShortlist` by (adist, neighbor_id); `ex`, their
+    * exact squared L2; `fr`, ranked by (dist2, neighbor_id); and the
+    * top-`RerankK` select. */
+  private val oracleRerank = s"""
+        sl AS (
+          SELECT q_id, neighbor_id, adist FROM (
+            SELECT q_id, neighbor_id, adist,
+                   row_number() OVER (PARTITION BY q_id
+                     ORDER BY adist, neighbor_id) AS srank
+            FROM p) WHERE srank <= $RerankShortlist),
+        ex AS (
+          SELECT sl.q_id, sl.neighbor_id, sl.adist,
+                 list_sum(list_transform(generate_series(1, len(qe.embedding)),
+                   kk -> (CAST(qe.embedding[kk] AS DOUBLE)
+                        - CAST(ne.embedding[kk] AS DOUBLE))
+                       * (CAST(qe.embedding[kk] AS DOUBLE)
+                        - CAST(ne.embedding[kk] AS DOUBLE)))) AS dist2
+          FROM sl
+          JOIN embeddings qe ON qe.vec_id = sl.q_id
+          JOIN embeddings ne ON ne.vec_id = sl.neighbor_id),
+        fr AS (SELECT q_id, neighbor_id, adist, dist2,
+                      CAST(row_number() OVER (PARTITION BY q_id
+                        ORDER BY dist2, neighbor_id) AS BIGINT) AS rank
+               FROM ex)
+        SELECT q_id, rank, neighbor_id, dist2, adist
+        FROM fr WHERE rank <= $RerankK
+        ORDER BY q_id, rank"""
 
   /** K-CENTER diversity selection — farthest-point traversal (Gonzalez,
     * "Clustering to minimize the maximum intercluster distance", TCS'85;
@@ -1924,15 +2080,7 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_sim_label_topk", labelBucketTopK, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        asg0 AS (
-          SELECT e.vec_id, e.label, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
+        ${oracleFlatRank("asg0", "e.label, ")},
         cells AS (SELECT vec_id, label, centroid_id FROM asg0 WHERE rn = 1),
         p AS (
           SELECT ca.label, ca.centroid_id, ca.vec_id AS id_a,
@@ -1954,15 +2102,7 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_cluster_purity", clusterPurity, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        asg AS (
-          SELECT e.vec_id, e.label, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
+        ${oracleFlatRank("asg", "e.label, ")},
         cnt AS (SELECT centroid_id, label, CAST(count(*) AS BIGINT) AS n_top
                 FROM asg WHERE rn = 1 GROUP BY 1, 2),
         top AS (SELECT centroid_id, label, n_top,
@@ -1977,13 +2117,10 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_ivf_assign", ivfAssign, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
+        $oracleSeeds,
         a AS (
           SELECT e.vec_id, c.centroid_id,
-                 list_sum(list_transform(generate_series(1, len(e.embedding)),
-                   k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                   / (e.nrm * c.cn) AS cos
+                 $oracleCellCos AS cos
           FROM e CROSS JOIN c),
         r AS (SELECT vec_id, centroid_id, cos,
                      row_number() OVER (PARTITION BY vec_id
@@ -2001,44 +2138,12 @@ object Similarity extends QueryModule {
       "q_ivf2_topk", ivf2TopK, Some(s"""
         $oracleVecs,
         $oracleTwoLevelAsg,
-        p AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 ${oracleDot("pe", "ee")} / (pe.nrm * ee.nrm) AS cosine
-          FROM asg2 pa
-          JOIN e pe ON pe.vec_id = pa.vec_id
-          JOIN asg2 ea ON ea.centroid_id = pa.centroid_id
-                      AND ea.vec_id <> pa.vec_id
-          JOIN e ee ON ee.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 8 AND pa.vec_id < 18),
-        r AS (SELECT q_id, neighbor_id, cosine,
-                     row_number() OVER (PARTITION BY q_id
-                       ORDER BY cosine DESC, neighbor_id) AS rank
-              FROM p)
-        SELECT q_id, rank, neighbor_id, cosine FROM r WHERE rank <= 3
-        ORDER BY q_id, rank""")),
+        ${oracleProbeTop3("asg2")}""")),
     QueryDef(
       "q_semantic_dedup", semanticDedup, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        asg0 AS (
-          SELECT e.vec_id, e.embedding, e.nrm, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        cells AS (SELECT vec_id, embedding, nrm, centroid_id
-                  FROM asg0 WHERE rn = 1),
-        dup AS (
-          SELECT DISTINCT b.vec_id
-          FROM cells a JOIN cells b
-            ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-          WHERE ${oracleDot("a", "b")} / (a.nrm * b.nrm) >= 0.3)
-        SELECT c2.vec_id, c2.centroid_id,
-               (d.vec_id IS NOT NULL) AS is_dup
-        FROM cells c2 LEFT JOIN dup d ON c2.vec_id = d.vec_id
-        ORDER BY c2.vec_id""")),
+        $oracleFlatCells,
+        $oracleCellDedup""")),
     QueryDef(
       "q_semantic_dedup2", semanticDedup2, Some(s"""
         $oracleVecs,
@@ -2046,29 +2151,11 @@ object Similarity extends QueryModule {
         cells AS (
           SELECT a2.vec_id, e2.embedding, e2.nrm, a2.centroid_id
           FROM asg2 a2 JOIN e e2 ON e2.vec_id = a2.vec_id),
-        dup AS (
-          SELECT DISTINCT b.vec_id
-          FROM cells a JOIN cells b
-            ON a.centroid_id = b.centroid_id AND a.vec_id < b.vec_id
-          WHERE ${oracleDot("a", "b")} / (a.nrm * b.nrm) >= 0.3)
-        SELECT c2.vec_id, c2.centroid_id,
-               (d.vec_id IS NOT NULL) AS is_dup
-        FROM cells c2 LEFT JOIN dup d ON c2.vec_id = d.vec_id
-        ORDER BY c2.vec_id""")),
+        $oracleCellDedup""")),
     QueryDef(
       "q_cascade_dedup", cascadeDedup, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        asg0 AS (
-          SELECT e.vec_id, e.embedding, e.nrm, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        cells AS (SELECT vec_id, embedding, nrm, centroid_id
-                  FROM asg0 WHERE rn = 1),
+        $oracleFlatCells,
         cand AS (
           SELECT a.vec_id AS id_a, b.vec_id AS id_b,
                  ${oracleDot("a", "b")} / (a.nrm * b.nrm) AS cosine
@@ -2094,17 +2181,7 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_incremental_semdedup", incrementalSemanticDedup, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        asg0 AS (
-          SELECT e.vec_id, e.embedding, e.nrm, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        cells AS (SELECT vec_id, embedding, nrm, centroid_id
-                  FROM asg0 WHERE rn = 1),
+        $oracleFlatCells,
         dup AS (
           SELECT DISTINCT b.vec_id
           FROM cells a JOIN cells b
@@ -2121,81 +2198,19 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_ivf_topk", ivfTopK, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        a AS (
-          SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
-        p AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 ${oracleDot("pe", "ee")} / (pe.nrm * ee.nrm) AS cosine
-          FROM asg pa
-          JOIN e pe ON pe.vec_id = pa.vec_id
-          JOIN asg ea ON ea.centroid_id = pa.centroid_id
-                     AND ea.vec_id <> pa.vec_id
-          JOIN e ee ON ee.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 8 AND pa.vec_id < 18),
-        r AS (SELECT q_id, neighbor_id, cosine,
-                     row_number() OVER (PARTITION BY q_id
-                       ORDER BY cosine DESC, neighbor_id) AS rank
-              FROM p)
-        SELECT q_id, rank, neighbor_id, cosine FROM r WHERE rank <= 3
-        ORDER BY q_id, rank""")),
+        $oracleFlatAsg,
+        ${oracleProbeTop3("asg")}""")),
     QueryDef(
       // recall@3 of the single-cell IVF probe vs the exact brute top-3:
       // both sides rebuilt from scratch (brute all-pairs for the probe
       // rows; cell assignment + inverted-list ranking), compared by set
       "q_ann_recall", annRecall, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        a AS (
-          SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
-        tp AS (
-          SELECT qa.vec_id AS q_id, b.vec_id AS neighbor_id,
-                 ${oracleDot("qa", "b")} / (qa.nrm * b.nrm) AS cosine
-          FROM e qa JOIN e b ON b.vec_id <> qa.vec_id
-          WHERE qa.vec_id >= 8 AND qa.vec_id < 18),
-        t3 AS (
-          SELECT q_id, neighbor_id FROM (
-            SELECT q_id, neighbor_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM tp) WHERE rank <= 3),
-        ip AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 ${oracleDot("pe", "ee")} / (pe.nrm * ee.nrm) AS cosine
-          FROM asg pa
-          JOIN e pe ON pe.vec_id = pa.vec_id
-          JOIN asg ea ON ea.centroid_id = pa.centroid_id
-                     AND ea.vec_id <> pa.vec_id
-          JOIN e ee ON ee.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 8 AND pa.vec_id < 18),
-        i3 AS (
-          SELECT q_id, neighbor_id FROM (
-            SELECT q_id, neighbor_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM ip) WHERE rank <= 3)
-        SELECT t.q_id,
-               CAST(count(*) AS BIGINT) AS n_true,
-               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
-                        END) AS BIGINT) AS n_hit,
-               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
-                        END) * 1000000 // count(*) AS BIGINT) AS recall_ppm
-        FROM t3 t LEFT JOIN i3 i USING (q_id, neighbor_id)
-        GROUP BY t.q_id ORDER BY q_id""")),
+        $oracleFlatAsg,
+        $oracleBruteTop3,
+        ip AS (${oracleCellProbe("asg")}),
+        i3 AS (${oracleTop3("ip")})
+        ${oracleRecall("")}""")),
     QueryDef(
       // benchmark vectors vs their IVF cellmates; max_cos is the one
       // double column (a single correctly-rounded division per pair,
@@ -2203,16 +2218,7 @@ object Similarity extends QueryModule {
       "q_decontaminate_semantic", (s, d) => semanticDecontaminate(s, d),
       Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        a AS (
-          SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
+        $oracleFlatAsg,
         p AS (
           SELECT b.vec_id AS bench_id, b.centroid_id, x.vec_id,
                  ${oracleDot("be", "xe")} / (be.nrm * xe.nrm) AS cos
@@ -2233,29 +2239,10 @@ object Similarity extends QueryModule {
       "q_ann_recall_multiprobe", (s, d) => annRecallMultiprobe(s, d),
       Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        a AS (
-          SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
+        $oracleFlatAsg,
         pc AS (SELECT vec_id AS q_id, centroid_id FROM a
                WHERE vec_id >= 8 AND vec_id < 18 AND rn <= 3),
-        tp AS (
-          SELECT qa.vec_id AS q_id, b.vec_id AS neighbor_id,
-                 ${oracleDot("qa", "b")} / (qa.nrm * b.nrm) AS cosine
-          FROM e qa JOIN e b ON b.vec_id <> qa.vec_id
-          WHERE qa.vec_id >= 8 AND qa.vec_id < 18),
-        t3 AS (
-          SELECT q_id, neighbor_id FROM (
-            SELECT q_id, neighbor_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM tp) WHERE rank <= 3),
+        $oracleBruteTop3,
         ip AS (
           SELECT pc.q_id, ea.vec_id AS neighbor_id,
                  ${oracleDot("pe", "ee")} / (pe.nrm * ee.nrm) AS cosine
@@ -2264,33 +2251,12 @@ object Similarity extends QueryModule {
           JOIN asg ea ON ea.centroid_id = pc.centroid_id
                      AND ea.vec_id <> pc.q_id
           JOIN e ee ON ee.vec_id = ea.vec_id),
-        i3 AS (
-          SELECT q_id, neighbor_id FROM (
-            SELECT q_id, neighbor_id,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY cosine DESC, neighbor_id) AS rank
-            FROM ip) WHERE rank <= 3)
-        SELECT t.q_id, CAST(3 AS BIGINT) AS nprobe,
-               CAST(count(*) AS BIGINT) AS n_true,
-               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
-                        END) AS BIGINT) AS n_hit,
-               CAST(sum(CASE WHEN i.neighbor_id IS NOT NULL THEN 1 ELSE 0
-                        END) * 1000000 // count(*) AS BIGINT) AS recall_ppm
-        FROM t3 t LEFT JOIN i3 i USING (q_id, neighbor_id)
-        GROUP BY t.q_id ORDER BY q_id""")),
+        i3 AS (${oracleTop3("ip")})
+        ${oracleRecall(" CAST(3 AS BIGINT) AS nprobe,")}""")),
     QueryDef(
       "q_codebook_update", codebookUpdate, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
-        a AS (
-          SELECT e.vec_id, c.centroid_id,
-                 row_number() OVER (PARTITION BY e.vec_id ORDER BY
-                   list_sum(list_transform(generate_series(1, len(e.embedding)),
-                     k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                     / (e.nrm * c.cn) DESC, c.centroid_id) AS rn
-          FROM e CROSS JOIN c),
-        asg AS (SELECT vec_id, centroid_id FROM a WHERE rn = 1),
+        $oracleFlatAsg,
         u AS (
           -- parallel unnests zip element-wise: (position, value) pairs
           SELECT asg.centroid_id,
@@ -2347,12 +2313,7 @@ object Similarity extends QueryModule {
                  ${oracleAdc("pr.qe", "r.rv")} AS adist
           FROM pr CROSS JOIN recon r
           WHERE r.vec_id <> pr.q_id),
-        rk AS (SELECT q_id, neighbor_id, adist,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY adist, neighbor_id) AS BIGINT) AS rank
-               FROM p)
-        SELECT q_id, rank, neighbor_id, adist FROM rk WHERE rank <= 5
-        ORDER BY q_id, rank""")),
+        $oracleAdcTop5""")),
     QueryDef(
       // one exact Lloyd round of the PQ sub-codebooks: seed encode,
       // then the scaled-integer per-(m, code, dim) mean — the same
@@ -2424,12 +2385,7 @@ object Similarity extends QueryModule {
                  ${oracleAdc("pr.qe", "r.rv1")} AS adist
           FROM pr CROSS JOIN recon1 r
           WHERE r.vec_id <> pr.q_id),
-        rk AS (SELECT q_id, neighbor_id, adist,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY adist, neighbor_id) AS BIGINT) AS rank
-               FROM p)
-        SELECT q_id, rank, neighbor_id, adist FROM rk WHERE rank <= 5
-        ORDER BY q_id, rank""")),
+        $oracleAdcTop5""")),
     QueryDef(
       "q_ivfpq_topk", ivfPqTopK, Some(s"""
         $oraclePq,
@@ -2444,34 +2400,14 @@ object Similarity extends QueryModule {
                       AND ea.vec_id <> pa.vec_id
           JOIN recon r ON r.vec_id = ea.vec_id
           WHERE pa.vec_id >= 20 AND pa.vec_id < 30),
-        rk AS (SELECT q_id, neighbor_id, adist,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY adist, neighbor_id) AS BIGINT) AS rank
-               FROM p)
-        SELECT q_id, rank, neighbor_id, adist FROM rk WHERE rank <= 5
-        ORDER BY q_id, rank""")),
+        $oracleAdcTop5""")),
     QueryDef(
       "q_ivfpq_residual_topk", ivfPqResidualTopK, Some(s"""
         $oracleVecs,
         $oracleTwoLevelAsg,
         $oracleResidualRecon,
-        p AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 list_sum(list_transform(generate_series(1, ${PqM * PqSubDim}),
-                   kk -> (pr.rv0[kk] - r.rrv[kk])
-                       * (pr.rv0[kk] - r.rrv[kk]))) AS adist
-          FROM asg2 pa
-          JOIN res pr ON pr.vec_id = pa.vec_id
-          JOIN asg2 ea ON ea.centroid_id = pa.centroid_id
-                      AND ea.vec_id <> pa.vec_id
-          JOIN reconr r ON r.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 20 AND pa.vec_id < 30),
-        rk AS (SELECT q_id, neighbor_id, adist,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY adist, neighbor_id) AS BIGINT) AS rank
-               FROM p)
-        SELECT q_id, rank, neighbor_id, adist FROM rk WHERE rank <= 5
-        ORDER BY q_id, rank""")),
+        ${oracleResidualAdc("reconr", "rrv")},
+        $oracleAdcTop5""")),
     QueryDef(
       // ADC shortlist (rank ≤ R·k by (adist, id)) → exact squared-L2
       // re-rank on the shortlist rows only ((dist2, id) ties) — the
@@ -2481,40 +2417,8 @@ object Similarity extends QueryModule {
         $oracleVecs,
         $oracleTwoLevelAsg,
         $oracleResidualRecon,
-        p AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 list_sum(list_transform(generate_series(1, ${PqM * PqSubDim}),
-                   kk -> (pr.rv0[kk] - r.rrv[kk])
-                       * (pr.rv0[kk] - r.rrv[kk]))) AS adist
-          FROM asg2 pa
-          JOIN res pr ON pr.vec_id = pa.vec_id
-          JOIN asg2 ea ON ea.centroid_id = pa.centroid_id
-                      AND ea.vec_id <> pa.vec_id
-          JOIN reconr r ON r.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 20 AND pa.vec_id < 30),
-        sl AS (
-          SELECT q_id, neighbor_id, adist FROM (
-            SELECT q_id, neighbor_id, adist,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY adist, neighbor_id) AS srank
-            FROM p) WHERE srank <= $RerankShortlist),
-        ex AS (
-          SELECT sl.q_id, sl.neighbor_id, sl.adist,
-                 list_sum(list_transform(generate_series(1, len(qe.embedding)),
-                   kk -> (CAST(qe.embedding[kk] AS DOUBLE)
-                        - CAST(ne.embedding[kk] AS DOUBLE))
-                       * (CAST(qe.embedding[kk] AS DOUBLE)
-                        - CAST(ne.embedding[kk] AS DOUBLE)))) AS dist2
-          FROM sl
-          JOIN embeddings qe ON qe.vec_id = sl.q_id
-          JOIN embeddings ne ON ne.vec_id = sl.neighbor_id),
-        fr AS (SELECT q_id, neighbor_id, adist, dist2,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY dist2, neighbor_id) AS BIGINT) AS rank
-               FROM ex)
-        SELECT q_id, rank, neighbor_id, dist2, adist
-        FROM fr WHERE rank <= $RerankK
-        ORDER BY q_id, rank""")),
+        ${oracleResidualAdc("reconr", "rrv")},
+        $oracleRerank""")),
     QueryDef(
       // The COMPOSED deployment chain: two-level coarse assignment ->
       // residuals -> seed residual book -> ONE exact scaled-integer
@@ -2561,40 +2465,8 @@ object Similarity extends QueryModule {
           SELECT cd.vec_id, flatten(list(b.sub ORDER BY cd.m)) AS rrv1
           FROM codes1 cd JOIN book b ON b.m = cd.m AND b.code = cd.code
           GROUP BY cd.vec_id),
-        p AS (
-          SELECT pa.vec_id AS q_id, ea.vec_id AS neighbor_id,
-                 list_sum(list_transform(generate_series(1, ${PqM * PqSubDim}),
-                   kk -> (pr.rv0[kk] - r.rrv1[kk])
-                       * (pr.rv0[kk] - r.rrv1[kk]))) AS adist
-          FROM asg2 pa
-          JOIN res pr ON pr.vec_id = pa.vec_id
-          JOIN asg2 ea ON ea.centroid_id = pa.centroid_id
-                      AND ea.vec_id <> pa.vec_id
-          JOIN recon1 r ON r.vec_id = ea.vec_id
-          WHERE pa.vec_id >= 20 AND pa.vec_id < 30),
-        sl AS (
-          SELECT q_id, neighbor_id, adist FROM (
-            SELECT q_id, neighbor_id, adist,
-                   row_number() OVER (PARTITION BY q_id
-                     ORDER BY adist, neighbor_id) AS srank
-            FROM p) WHERE srank <= $RerankShortlist),
-        ex AS (
-          SELECT sl.q_id, sl.neighbor_id, sl.adist,
-                 list_sum(list_transform(generate_series(1, len(qe.embedding)),
-                   kk -> (CAST(qe.embedding[kk] AS DOUBLE)
-                        - CAST(ne.embedding[kk] AS DOUBLE))
-                       * (CAST(qe.embedding[kk] AS DOUBLE)
-                        - CAST(ne.embedding[kk] AS DOUBLE)))) AS dist2
-          FROM sl
-          JOIN embeddings qe ON qe.vec_id = sl.q_id
-          JOIN embeddings ne ON ne.vec_id = sl.neighbor_id),
-        fr AS (SELECT q_id, neighbor_id, adist, dist2,
-                      CAST(row_number() OVER (PARTITION BY q_id
-                        ORDER BY dist2, neighbor_id) AS BIGINT) AS rank
-               FROM ex)
-        SELECT q_id, rank, neighbor_id, dist2, adist
-        FROM fr WHERE rank <= $RerankK
-        ORDER BY q_id, rank""")),
+        ${oracleResidualAdc("recon1", "rrv1")},
+        $oracleRerank""")),
     QueryDef(
       "q_embed_neardup", nearDupLsh, Some(s"""
         $oracleVecs
@@ -2606,13 +2478,10 @@ object Similarity extends QueryModule {
     QueryDef(
       "q_cell_sample", cellSample, Some(s"""
         $oracleVecs,
-        c AS (SELECT vec_id AS centroid_id, embedding AS cemb, nrm AS cn
-              FROM e WHERE vec_id < 8),
+        $oracleSeeds,
         a AS (
           SELECT e.vec_id, c.centroid_id,
-                 list_sum(list_transform(generate_series(1, len(e.embedding)),
-                   k -> CAST(e.embedding[k] AS DOUBLE) * CAST(c.cemb[k] AS DOUBLE)))
-                   / (e.nrm * c.cn) AS cos
+                 $oracleCellCos AS cos
           FROM e CROSS JOIN c),
         r AS (SELECT vec_id, centroid_id,
                      row_number() OVER (PARTITION BY vec_id

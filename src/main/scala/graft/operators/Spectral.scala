@@ -322,55 +322,45 @@ object Spectral extends QueryModule {
 
   // ---------------------------------------------------------- oracles
 
-  /** Shared oracle prelude: quantized elements, Gram triangle, mirrored
-    * Gram, and the all-ones (×VScale) starting iterate. The parallel
-    * unnests zip element-wise (same idiom as the codebook oracle in
+  /** `els(vec_id, i, xi)`: the quantized elements. The parallel unnests
+    * zip element-wise (same idiom as the codebook oracle in
     * [[Similarity]]). */
-  private val oraclePrelude: String = s"""
+  private val oracleEls = s"""
     WITH els AS MATERIALIZED (
       SELECT vec_id,
              unnest(generate_series(1, len(embedding))) - 1 AS i,
              CAST(floor(CAST(unnest(embedding) AS DOUBLE) * $Q) AS BIGINT)
                AS xi
-      FROM embeddings),
+      FROM embeddings),"""
+
+  /** `gt`: the Gram triangle of the elements `src`; `gf`: the mirrored
+    * Gram; `v0`: the all-ones (×VScale) starting iterate. */
+  private def oracleGram(src: String) = s"""
     gt AS MATERIALIZED (
       SELECT a.i AS i, b.i AS j, CAST(sum(a.xi * b.xi) AS BIGINT) AS g
-      FROM els a JOIN els b ON a.vec_id = b.vec_id AND b.i >= a.i
+      FROM $src a JOIN $src b ON a.vec_id = b.vec_id AND b.i >= a.i
       GROUP BY a.i, b.i),
     gf AS MATERIALIZED (
       SELECT i, j, g FROM gt
       UNION ALL
       SELECT j AS i, i AS j, g FROM gt WHERE i <> j),
-    v0 AS MATERIALIZED (SELECT DISTINCT i, CAST($VScale AS BIGINT) AS x FROM els)"""
+    v0 AS MATERIALIZED (SELECT DISTINCT i, CAST($VScale AS BIGINT) AS x
+                        FROM $src)"""
+
+  /** Shared oracle prelude: [[oracleEls]] and their [[oracleGram]]. */
+  private val oraclePrelude: String = oracleEls + oracleGram("els")
 
   /** [[oraclePrelude]] with the FIT side restricted to the md5-bucket
     * sample — `els` stays full for the projection; `gt`/`gf`/`v0` (the
     * names [[iterCtes]] chains from) build on the sampled elements. The
-    * hex-to-int spelling matches the `q_sample_deterministic` oracle. */
+    * bucket is `q_sample_deterministic`'s
+    * [[graft.ops.HashOracleSql.md5Byte]]. */
   private val sampledPrelude: String = s"""
-    WITH els AS MATERIALIZED (
-      SELECT vec_id,
-             unnest(generate_series(1, len(embedding))) - 1 AS i,
-             CAST(floor(CAST(unnest(embedding) AS DOUBLE) * $Q) AS BIGINT)
-               AS xi
-      FROM embeddings),
+$oracleEls
     sels AS MATERIALIZED (
       SELECT * FROM els
-      WHERE CAST((strpos('0123456789abcdef',
-                    substr(md5(CAST(vec_id AS VARCHAR)), 1, 1)) - 1) * 16
-               + (strpos('0123456789abcdef',
-                    substr(md5(CAST(vec_id AS VARCHAR)), 2, 1)) - 1)
-              AS BIGINT) < 26),
-    gt AS MATERIALIZED (
-      SELECT a.i AS i, b.i AS j, CAST(sum(a.xi * b.xi) AS BIGINT) AS g
-      FROM sels a JOIN sels b ON a.vec_id = b.vec_id AND b.i >= a.i
-      GROUP BY a.i, b.i),
-    gf AS MATERIALIZED (
-      SELECT i, j, g FROM gt
-      UNION ALL
-      SELECT j AS i, i AS j, g FROM gt WHERE i <> j),
-    v0 AS MATERIALIZED (
-      SELECT DISTINCT i, CAST($VScale AS BIGINT) AS x FROM sels)"""
+      WHERE CAST(${graft.ops.HashOracleSql.md5Byte("CAST(vec_id AS VARCHAR)")}
+              AS BIGINT) < 26),${oracleGram("sels")}"""
 
   /** The [[Iters]] unrolled fixed-point rounds (the k-center oracle uses
     * the same generated-CTE pattern): each round is one mat-vec, one
@@ -389,20 +379,29 @@ object Spectral extends QueryModule {
       FROM u$k, m$k)"""
   }.mkString(",")
 
-  override def defs: Seq[QueryDef] = Seq(
-    QueryDef(
-      "q_gram_matrix", gramMatrix, Some(s"""$oraclePrelude
-        SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, g
-        FROM gt ORDER BY i, j""")),
-    QueryDef(
-      "q_pca_power", pcaPower, Some(s"""$oraclePrelude,$iterCtes,
+  /** `uf`/`ray`: the Rayleigh quotient num/den of the last iterate. */
+  private val oracleRayleigh = s"""
         uf AS MATERIALIZED (
           SELECT gf.i AS i, CAST(sum(gf.g * v$Iters.x) AS BIGINT) AS u
           FROM gf JOIN v$Iters ON v$Iters.i = gf.j GROUP BY gf.i),
         ray AS MATERIALIZED (
           SELECT CAST(sum(v.x * u.u) AS BIGINT) AS num,
                  CAST(sum(v.x * v.x) AS BIGINT) AS den
-          FROM v$Iters v JOIN uf u ON u.i = v.i)
+          FROM v$Iters v JOIN uf u ON u.i = v.i)"""
+
+  /** Each vector's projection on the last iterate. */
+  private val oracleProjection = s"""
+        SELECT e.vec_id, CAST(sum(e.xi * v.x) AS BIGINT) AS proj
+        FROM els e JOIN v$Iters v ON v.i = e.i
+        GROUP BY e.vec_id ORDER BY e.vec_id"""
+
+  override def defs: Seq[QueryDef] = Seq(
+    QueryDef(
+      "q_gram_matrix", gramMatrix, Some(s"""$oraclePrelude
+        SELECT CAST(i AS BIGINT) AS i, CAST(j AS BIGINT) AS j, g
+        FROM gt ORDER BY i, j""")),
+    QueryDef(
+      "q_pca_power", pcaPower, Some(s"""$oraclePrelude,$iterCtes,$oracleRayleigh
         SELECT CAST(v.i AS BIGINT) AS i, v.x AS vi,
                CASE WHEN ray.den = 0 THEN 0.0
                     ELSE CAST(ray.num AS DOUBLE) / CAST(ray.den AS DOUBLE)
@@ -410,23 +409,12 @@ object Spectral extends QueryModule {
         FROM v$Iters v CROSS JOIN ray ORDER BY i""")),
     QueryDef(
       "q_pca_project", pcaProject, Some(s"""$oraclePrelude,$iterCtes
-        SELECT e.vec_id, CAST(sum(e.xi * v.x) AS BIGINT) AS proj
-        FROM els e JOIN v$Iters v ON v.i = e.i
-        GROUP BY e.vec_id ORDER BY e.vec_id""")),
+$oracleProjection""")),
     QueryDef(
       "q_pca_sampled", pcaProjectSampled, Some(s"""$sampledPrelude,$iterCtes
-        SELECT e.vec_id, CAST(sum(e.xi * v.x) AS BIGINT) AS proj
-        FROM els e JOIN v$Iters v ON v.i = e.i
-        GROUP BY e.vec_id ORDER BY e.vec_id""")),
+$oracleProjection""")),
     QueryDef(
-      "q_explained_var", explainedVar, Some(s"""$oraclePrelude,$iterCtes,
-        uf AS MATERIALIZED (
-          SELECT gf.i AS i, CAST(sum(gf.g * v$Iters.x) AS BIGINT) AS u
-          FROM gf JOIN v$Iters ON v$Iters.i = gf.j GROUP BY gf.i),
-        ray AS MATERIALIZED (
-          SELECT CAST(sum(v.x * u.u) AS BIGINT) AS num,
-                 CAST(sum(v.x * v.x) AS BIGINT) AS den
-          FROM v$Iters v JOIN uf u ON u.i = v.i),
+      "q_explained_var", explainedVar, Some(s"""$oraclePrelude,$iterCtes,$oracleRayleigh,
         tr AS MATERIALIZED (
           SELECT CAST(sum(g) AS BIGINT) AS trace FROM gt WHERE i = j)
         SELECT tr.trace, ray.num, ray.den,

@@ -62,7 +62,9 @@ object TextOps extends QueryModule {
   /** The library-wide stopword-count rule (the 4-word English set every
     * quality filter uses), one native pass. */
   private[operators] def stopwordCount(s: Column): Column =
-    tokenSetCount(s, Seq("the", "a", "of", "and"))
+    tokenSetCount(s, StopWords)
+
+  private val StopWords = Seq("the", "a", "of", "and")
 
   /** Whitespace token count for single-space-separated text:
     * #spaces + 1 (0 for empty/blank). */
@@ -81,6 +83,129 @@ object TextOps extends QueryModule {
       (nStop.cast("double") / nTokens) * 2.0
         + when(nTokens >= 20 && nTokens <= 1000, 1.0).otherwise(0.0))
   }
+
+  /** [[tokenCount]] of the text column `t`, in DuckDB SQL. */
+  private[graft] def oracleTokenCount(t: String = "text") =
+    s"""CASE WHEN length(trim($t)) = 0 THEN 0 ELSE
+                   length($t) - length(replace($t, ' ', '')) + 1 END"""
+
+  /** [[stopwordCount]] of `text`, in DuckDB SQL: one whole-token count
+    * per word of the same 4-word set. */
+  private[graft] val oracleStopwordCount =
+    StopWords
+      .map(w => s"len(list_filter(string_split(text, ' '), t -> t = '$w'))")
+      .mkString("\n                  + ")
+
+  /** [[qualityScore]] in DuckDB SQL, over the columns `n_tokens` and
+    * `nStop` (the [[oracleTokenCount]] and [[oracleStopwordCount]]). */
+  private[graft] def oracleQualityScore(nStop: String) = s"""
+                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
+                   (CAST($nStop AS DOUBLE) / n_tokens) * 2.0
+                   + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
+                      THEN 1.0 ELSE 0.0 END) END"""
+
+  /** `q(doc_id, quality_score)`: [[qualityScore]] of every document, the
+    * survivor rank of the near-dup and curation oracles. */
+  private[graft] val oracleQuality = s"""
+        q AS (
+          SELECT doc_id,
+                 ${oracleQualityScore("n_stopwords")} AS quality_score
+          FROM (SELECT doc_id,
+                  ${oracleTokenCount()}
+                    AS n_tokens,
+                  $oracleStopwordCount
+                    AS n_stopwords
+                FROM documents) b)"""
+
+  /** `grams`: every 8-token window `g` of every document, with the
+    * columns `cols` of its start position `pos(doc_id, t, i)`. */
+  private def oracleGrams8(cols: String) = s"""
+        WITH toks AS (
+          SELECT doc_id, string_split(text, ' ') AS t FROM documents),
+        pos AS (
+          SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
+          FROM toks WHERE len(t) >= 8),
+        grams AS (
+          SELECT $cols, array_to_string(t[i:i+7], ' ') AS g FROM pos)"""
+
+  /** The source-overlap sketch: each source's distinct 5-gram set `g`,
+    * its bottom-128 md5 sketch `sk`, every source pair `pairs`, and
+    * `est`, the pair's sketch hits among the bottom 128 of the merged
+    * sketches. */
+  private val oracleSourceSketch = """
+        WITH d AS (
+          SELECT source, string_split(text, ' ') AS t FROM documents),
+        g0 AS (
+          SELECT source,
+                 unnest(list_transform(generate_series(1, len(t) - 4),
+                   i -> array_to_string(t[i:i+4], ' '))) AS g
+          FROM d WHERE len(t) >= 5),
+        g AS (SELECT DISTINCT source, g FROM g0),
+        h AS (SELECT source, md5(g) AS h FROM g),
+        sk AS (
+          SELECT source, h FROM (
+            SELECT source, h,
+                   row_number() OVER (PARTITION BY source ORDER BY h) AS rn
+            FROM h)
+          WHERE rn <= 128),
+        srcs AS (SELECT DISTINCT source FROM g),
+        pairs AS (
+          SELECT a.source AS src_a, b.source AS src_b
+          FROM srcs a JOIN srcs b ON a.source < b.source),
+        m AS (
+          SELECT src_a, src_b, h,
+                 max(in_a) AS in_a, max(in_b) AS in_b
+          FROM (
+            SELECT p.src_a, p.src_b, s.h, 1 AS in_a, 0 AS in_b
+            FROM pairs p JOIN sk s ON s.source = p.src_a
+            UNION ALL
+            SELECT p.src_a, p.src_b, s.h, 0, 1
+            FROM pairs p JOIN sk s ON s.source = p.src_b) u
+          GROUP BY src_a, src_b, h),
+        r AS (
+          SELECT *, row_number() OVER (
+                   PARTITION BY src_a, src_b ORDER BY h) AS rn
+          FROM m),
+        est AS (
+          SELECT src_a, src_b,
+                 CAST(sum(CASE WHEN in_a = 1 AND in_b = 1
+                   THEN 1 ELSE 0 END) AS BIGINT) AS sketch_hits,
+                 CAST(count(*) AS BIGINT) AS k_used
+          FROM r WHERE rn <= 128 GROUP BY src_a, src_b)"""
+
+  /** [[normalize]]d text's md5, the exact-dup key of [[fingerprint]]. */
+  private[graft] val oracleFingerprint =
+    """md5(trim(regexp_replace(regexp_replace(lower(text),
+                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g')))"""
+
+  /** `b`: per document the inputs of the curation filters ([[tokenCount]],
+    * [[stopwordCount]], [[oracleFingerprint]]) plus the columns `cols`. */
+  private def oracleFilterInputs(cols: String) = s"""
+        b AS (
+          SELECT doc_id, $cols,
+                 CAST(${oracleTokenCount()}
+                   AS BIGINT) AS n_tokens,
+                 CAST($oracleStopwordCount
+                   AS BIGINT) AS n_stop,
+                 $oracleFingerprint AS fp
+          FROM documents)"""
+
+  /** [[oracleFilterInputs]], then `r`: the first failed filter rule of
+    * [[curateCorpus]] (NULL when none), and `rk`: the exact-dup rank
+    * `rn` within each (fingerprint, passed-so-far) group. */
+  private val oracleFilterReasons = s"""${oracleFilterInputs("lang")},
+        r AS (
+          SELECT doc_id, n_tokens, fp,
+                 CASE WHEN lang NOT IN ('en', 'de', 'es', 'fr') THEN 'lang'
+                      WHEN n_tokens < 20 THEN 'too_short'
+                      WHEN n_tokens > 1000 THEN 'too_long'
+                      WHEN n_stop * 100 < n_tokens THEN 'low_stopword'
+                 END AS pre_reason
+          FROM b),
+        rk AS (
+          SELECT *, row_number() OVER (
+                   PARTITION BY fp, pre_reason IS NULL ORDER BY doc_id) AS rn
+          FROM r)"""
 
   /** Normalization for fingerprinting: lowercase, strip non-alphanumerics
     * (keeping spaces), collapse runs of whitespace. Native one-pass
@@ -912,32 +1037,8 @@ object TextOps extends QueryModule {
     QueryDef(
       "q_curate_corpus", curateCorpus, Some(
         graft.operators.NearDup.oracleShingles
-          .replace("WITH s AS", "WITH RECURSIVE s AS") + """,
-        b AS (
-          SELECT doc_id, lang,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
-                   AS BIGINT) AS n_tokens,
-                 CAST(len(list_filter(string_split(text, ' '), x -> x = 'the'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'a'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'of'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'and'))
-                   AS BIGINT) AS n_stop,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
-          FROM documents),
-        r AS (
-          SELECT doc_id, n_tokens, fp,
-                 CASE WHEN lang NOT IN ('en', 'de', 'es', 'fr') THEN 'lang'
-                      WHEN n_tokens < 20 THEN 'too_short'
-                      WHEN n_tokens > 1000 THEN 'too_long'
-                      WHEN n_stop * 100 < n_tokens THEN 'low_stopword'
-                 END AS pre_reason
-          FROM b),
-        rk AS (
-          SELECT *, row_number() OVER (
-                   PARTITION BY fp, pre_reason IS NULL ORDER BY doc_id) AS rn
-          FROM r),
+          .replace("WITH s AS", "WITH RECURSIVE s AS") + s""",
+        $oracleFilterReasons,
         st AS (
           SELECT doc_id, n_tokens,
                  coalesce(pre_reason,
@@ -948,8 +1049,7 @@ object TextOps extends QueryModule {
         p AS (
           SELECT a.doc_id AS id_a, b2.doc_id AS id_b
           FROM sh2 a JOIN sh2 b2 ON a.doc_id < b2.doc_id
-          WHERE CAST(len(list_intersect(a.sh, b2.sh)) AS DOUBLE) /
-                (len(a.sh) + len(b2.sh) - len(list_intersect(a.sh, b2.sh)))
+          WHERE ${NearDup.oracleJaccard("a", "b2")}
                 >= 0.8),
         e AS (SELECT id_a AS src, id_b AS dst FROM p
               UNION ALL SELECT id_b, id_a FROM p),
@@ -959,22 +1059,7 @@ object TextOps extends QueryModule {
           SELECT r2.a, e.dst FROM reach r2 JOIN e ON r2.bb = e.src),
         cl AS (SELECT a AS doc_id, min(bb) AS cluster_id
                FROM reach GROUP BY a),
-        q AS (
-          SELECT doc_id,
-                 CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                   (CAST(n_stopwords AS DOUBLE) / n_tokens) * 2.0
-                   + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
-                      THEN 1.0 ELSE 0.0 END) END AS quality_score
-          FROM (SELECT doc_id,
-                  CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                    length(text) - length(replace(text, ' ', '')) + 1
-                  END AS n_tokens,
-                  len(list_filter(string_split(text, ' '), t -> t = 'the'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'a'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'of'))
-                  + len(list_filter(string_split(text, ' '), t -> t = 'and'))
-                    AS n_stopwords
-                FROM documents) bq),
+        $oracleQuality,
         j AS (SELECT cl.doc_id, cl.cluster_id, q.quality_score
               FROM cl JOIN q USING (doc_id)),
         rk2 AS (SELECT doc_id,
@@ -1000,7 +1085,7 @@ object TextOps extends QueryModule {
                n_types * 1000000 // n_tokens AS ttr_ppm
         FROM t ORDER BY doc_id""")),
     QueryDef(
-      "q_linreg_fit", linregFit, Some("""
+      "q_linreg_fit", linregFit, Some(s"""
         WITH t AS (
           SELECT CAST(n AS HUGEINT) AS n,
                  CAST(sum(x) AS HUGEINT) AS sx,
@@ -1010,8 +1095,7 @@ object TextOps extends QueryModule {
                  CAST(sum(y * y) AS HUGEINT) AS syy
           FROM (
             SELECT count(*) OVER () AS n,
-                   CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                     length(text) - length(replace(text, ' ', '')) + 1 END
+                   CAST(${oracleTokenCount()}
                      AS BIGINT) AS x,
                    n_chars AS y
             FROM documents)
@@ -1053,20 +1137,8 @@ object TextOps extends QueryModule {
         FROM bg JOIN c12 USING (w1, w2) JOIN c1 USING (w1)
         GROUP BY bg.doc_id ORDER BY bg.doc_id""")),
     QueryDef(
-      "q_clean_corpus", cleanCorpus, Some("""
-        WITH b AS (
-          SELECT doc_id, lang, source,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
-                   AS BIGINT) AS n_tokens,
-                 CAST(len(list_filter(string_split(text, ' '), x -> x = 'the'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'a'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'of'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'and'))
-                   AS BIGINT) AS n_stop,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
-          FROM documents),
+      "q_clean_corpus", cleanCorpus, Some(s"""
+        WITH ${oracleFilterInputs("lang, source")},
         f AS (
           SELECT * FROM b
           WHERE lang IN ('en', 'de', 'es', 'fr')
@@ -1080,46 +1152,16 @@ object TextOps extends QueryModule {
         FROM k WHERE rn = 1
         GROUP BY lang, source ORDER BY lang, source""")),
     QueryDef(
-      "q_filter_audit", filterAudit, Some("""
-        WITH b AS (
-          SELECT doc_id, lang,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
-                   AS BIGINT) AS n_tokens,
-                 CAST(len(list_filter(string_split(text, ' '), x -> x = 'the'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'a'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'of'))
-                    + len(list_filter(string_split(text, ' '), x -> x = 'and'))
-                   AS BIGINT) AS n_stop,
-                 md5(trim(regexp_replace(regexp_replace(lower(text),
-                   '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
-          FROM documents),
-        r AS (
-          SELECT doc_id, n_tokens, fp,
-                 CASE WHEN lang NOT IN ('en', 'de', 'es', 'fr') THEN 'lang'
-                      WHEN n_tokens < 20 THEN 'too_short'
-                      WHEN n_tokens > 1000 THEN 'too_long'
-                      WHEN n_stop * 100 < n_tokens THEN 'low_stopword'
-                 END AS pre_reason
-          FROM b),
-        rk AS (
-          SELECT *, row_number() OVER (
-                   PARTITION BY fp, pre_reason IS NULL ORDER BY doc_id) AS rn
-          FROM r)
+      "q_filter_audit", filterAudit, Some(s"""
+        WITH $oracleFilterReasons
         SELECT coalesce(pre_reason,
                  CASE WHEN rn > 1 THEN 'exact_dup' ELSE 'kept' END) AS reason,
                CAST(count(*) AS BIGINT) AS n_docs,
                CAST(sum(n_tokens) AS BIGINT) AS n_tokens
         FROM rk GROUP BY reason ORDER BY reason""")),
     QueryDef(
-      "q_decontaminate_ngram", decontaminateNgram, Some("""
-        WITH toks AS (
-          SELECT doc_id, lang, string_split(text, ' ') AS t FROM documents),
-        pos AS (
-          SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
-          FROM toks WHERE len(t) >= 8),
-        grams AS (
-          SELECT doc_id, array_to_string(t[i:i+7], ' ') AS g FROM pos),
+      "q_decontaminate_ngram", decontaminateNgram, Some(s"""
+        ${oracleGrams8("doc_id")},
         bg AS (
           SELECT DISTINCT g FROM grams WHERE doc_id % 25 = 0),
         fl AS (
@@ -1137,39 +1179,30 @@ object TextOps extends QueryModule {
         SELECT min(doc_id) AS keep_id, count(*) AS n_copies
         FROM documents GROUP BY text ORDER BY keep_id""")),
     QueryDef(
-      "q_fingerprint", fingerprint, Some("""
+      "q_fingerprint", fingerprint, Some(s"""
         SELECT min(doc_id) AS keep_id, count(*) AS n_copies
         FROM (SELECT doc_id,
-                     md5(trim(regexp_replace(regexp_replace(lower(text),
-                          '[^a-z0-9 ]', '', 'g'), ' +', ' ', 'g'))) AS fp
+                     $oracleFingerprint AS fp
               FROM documents) t
         GROUP BY fp ORDER BY keep_id""")),
     QueryDef(
-      "q_text_stats", textStats, Some("""
+      "q_text_stats", textStats, Some(raw"""
         WITH b AS (
           SELECT doc_id,
                  CAST(length(text) AS BIGINT) AS n_chars,
-                 CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                   length(text) - length(replace(text, ' ', '')) + 1 END
+                 CAST(${oracleTokenCount()}
                    AS BIGINT) AS n_tokens,
-                 CAST(len(list_filter(string_split(text, ' '), t -> t = 'the'))
-                    + len(list_filter(string_split(text, ' '), t -> t = 'a'))
-                    + len(list_filter(string_split(text, ' '), t -> t = 'of'))
-                    + len(list_filter(string_split(text, ' '), t -> t = 'and'))
+                 CAST($oracleStopwordCount
                    AS BIGINT) AS n_stopwords,
                  CAST(length(text) - length(regexp_replace(text, '[^a-zA-Z0-9\s]', '', 'g'))
                    AS BIGINT) AS n_punct,
                  CAST(length(replace(text, ' ', '')) AS DOUBLE)
-                   / (CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                      length(text) - length(replace(text, ' ', '')) + 1 END)
+                   / (${oracleTokenCount()})
                    AS avg_token_len
           FROM documents)
         SELECT doc_id, n_chars, n_tokens, n_stopwords, n_punct, avg_token_len,
                CAST(n_stopwords AS DOUBLE) / n_tokens AS stopword_ratio,
-               CASE WHEN n_tokens = 0 THEN 0.0 ELSE
-                 (CAST(n_stopwords AS DOUBLE) / n_tokens) * 2.0
-                 + (CASE WHEN n_tokens >= 20 AND n_tokens <= 1000
-                    THEN 1.0 ELSE 0.0 END) END AS quality_score
+               ${oracleQualityScore("n_stopwords")} AS quality_score
         FROM b ORDER BY doc_id""")),
     QueryDef(
       "q_lang_id", langId, Some("""
@@ -1218,24 +1251,17 @@ object TextOps extends QueryModule {
         FROM ta JOIN bg ON ta.doc_id = bg.doc_id
         ORDER BY ta.doc_id""")),
     QueryDef(
-      "q_token_count", tokenCounts, Some("""
+      "q_token_count", tokenCounts, Some(raw"""
         SELECT doc_id,
-               CAST(CASE WHEN length(trim(text)) = 0 THEN 0 ELSE
-                 length(text) - length(replace(text, ' ', '')) + 1 END
+               CAST(${oracleTokenCount()}
                  AS BIGINT) AS n_ws_tokens,
                CAST(length(regexp_extract_all(text,
                  '[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]')) AS BIGINT)
                  AS n_bpe_tokens
         FROM documents ORDER BY doc_id""")),
     QueryDef(
-      "q_dup_spans", dupSpans, Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        pos AS (
-          SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
-          FROM toks WHERE len(t) >= 8),
-        grams AS (
-          SELECT doc_id, array_to_string(t[i:i+7], ' ') AS g FROM pos),
+      "q_dup_spans", dupSpans, Some(s"""
+        ${oracleGrams8("doc_id")},
         pdg AS (
           SELECT g, doc_id, count(*) AS npos FROM grams GROUP BY g, doc_id),
         dup AS (
@@ -1256,14 +1282,8 @@ object TextOps extends QueryModule {
         FROM documents d LEFT JOIN perdoc p ON d.doc_id = p.doc_id
         ORDER BY d.doc_id""")),
     QueryDef(
-      "q_span_scrub", spanScrub, Some("""
-        WITH toks AS (
-          SELECT doc_id, string_split(text, ' ') AS t FROM documents),
-        pos AS (
-          SELECT doc_id, t, unnest(generate_series(1, len(t) - 7)) AS i
-          FROM toks WHERE len(t) >= 8),
-        grams AS (
-          SELECT doc_id, i, array_to_string(t[i:i+7], ' ') AS g FROM pos),
+      "q_span_scrub", spanScrub, Some(s"""
+        ${oracleGrams8("doc_id, i")},
         pdg AS (
           SELECT g, doc_id, list(i) AS ps FROM grams GROUP BY g, doc_id),
         dup AS (
@@ -1328,46 +1348,8 @@ object TextOps extends QueryModule {
         FROM documents d LEFT JOIN per p ON d.doc_id = p.doc_id
         ORDER BY d.doc_id""")),
     QueryDef(
-      "q_source_overlap", sourceOverlap, Some("""
-        WITH d AS (
-          SELECT source, string_split(text, ' ') AS t FROM documents),
-        g0 AS (
-          SELECT source,
-                 unnest(list_transform(generate_series(1, len(t) - 4),
-                   i -> array_to_string(t[i:i+4], ' '))) AS g
-          FROM d WHERE len(t) >= 5),
-        g AS (SELECT DISTINCT source, g FROM g0),
-        h AS (SELECT source, md5(g) AS h FROM g),
-        sk AS (
-          SELECT source, h FROM (
-            SELECT source, h,
-                   row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-            FROM h)
-          WHERE rn <= 128),
-        srcs AS (SELECT DISTINCT source FROM g),
-        pairs AS (
-          SELECT a.source AS src_a, b.source AS src_b
-          FROM srcs a JOIN srcs b ON a.source < b.source),
-        m AS (
-          SELECT src_a, src_b, h,
-                 max(in_a) AS in_a, max(in_b) AS in_b
-          FROM (
-            SELECT p.src_a, p.src_b, s.h, 1 AS in_a, 0 AS in_b
-            FROM pairs p JOIN sk s ON s.source = p.src_a
-            UNION ALL
-            SELECT p.src_a, p.src_b, s.h, 0, 1
-            FROM pairs p JOIN sk s ON s.source = p.src_b) u
-          GROUP BY src_a, src_b, h),
-        r AS (
-          SELECT *, row_number() OVER (
-                   PARTITION BY src_a, src_b ORDER BY h) AS rn
-          FROM m),
-        est AS (
-          SELECT src_a, src_b,
-                 CAST(sum(CASE WHEN in_a = 1 AND in_b = 1
-                   THEN 1 ELSE 0 END) AS BIGINT) AS sketch_hits,
-                 CAST(count(*) AS BIGINT) AS k_used
-          FROM r WHERE rn <= 128 GROUP BY src_a, src_b),
+      "q_source_overlap", sourceOverlap, Some(s"""
+        $oracleSourceSketch,
         n AS (SELECT source, CAST(count(*) AS BIGINT) AS n
               FROM g GROUP BY source),
         ix AS (
@@ -1393,46 +1375,8 @@ object TextOps extends QueryModule {
         JOIN n nb ON nb.source = p.src_b
         ORDER BY p.src_a, p.src_b""")),
     QueryDef(
-      "q_source_overlap_sketch", sourceOverlapSketch, Some("""
-        WITH d AS (
-          SELECT source, string_split(text, ' ') AS t FROM documents),
-        g0 AS (
-          SELECT source,
-                 unnest(list_transform(generate_series(1, len(t) - 4),
-                   i -> array_to_string(t[i:i+4], ' '))) AS g
-          FROM d WHERE len(t) >= 5),
-        g AS (SELECT DISTINCT source, g FROM g0),
-        h AS (SELECT source, md5(g) AS h FROM g),
-        sk AS (
-          SELECT source, h FROM (
-            SELECT source, h,
-                   row_number() OVER (PARTITION BY source ORDER BY h) AS rn
-            FROM h)
-          WHERE rn <= 128),
-        srcs AS (SELECT DISTINCT source FROM g),
-        pairs AS (
-          SELECT a.source AS src_a, b.source AS src_b
-          FROM srcs a JOIN srcs b ON a.source < b.source),
-        m AS (
-          SELECT src_a, src_b, h,
-                 max(in_a) AS in_a, max(in_b) AS in_b
-          FROM (
-            SELECT p.src_a, p.src_b, s.h, 1 AS in_a, 0 AS in_b
-            FROM pairs p JOIN sk s ON s.source = p.src_a
-            UNION ALL
-            SELECT p.src_a, p.src_b, s.h, 0, 1
-            FROM pairs p JOIN sk s ON s.source = p.src_b) u
-          GROUP BY src_a, src_b, h),
-        r AS (
-          SELECT *, row_number() OVER (
-                   PARTITION BY src_a, src_b ORDER BY h) AS rn
-          FROM m),
-        est AS (
-          SELECT src_a, src_b,
-                 CAST(sum(CASE WHEN in_a = 1 AND in_b = 1
-                   THEN 1 ELSE 0 END) AS BIGINT) AS sketch_hits,
-                 CAST(count(*) AS BIGINT) AS k_used
-          FROM r WHERE rn <= 128 GROUP BY src_a, src_b)
+      "q_source_overlap_sketch", sourceOverlapSketch, Some(s"""
+        $oracleSourceSketch
         SELECT p.src_a, p.src_b,
                coalesce(e.sketch_hits, 0) AS sketch_hits,
                coalesce(e.k_used, 0) AS k_used,

@@ -27,6 +27,13 @@ package graft.ops
   */
 object HashOracleSql {
 
+  /** The first byte of md5(`key`) as 0..255, two hex digits read through
+    * strpos over the digit alphabet (DuckDB has no base-16 conv()): the
+    * bucket rule of the md5-prefix samplers, splits and sketch columns. */
+  def md5Byte(key: String): String =
+    s"""(strpos('0123456789abcdef', substr(md5($key), 1, 1)) - 1) * 16
+                    + (strpos('0123456789abcdef', substr(md5($key), 2, 1)) - 1)"""
+
   /** Exact 2^0..2^63 as a HUGEINT list literal (index b+1 = 2^b). */
   private val pow2Lit: String =
     (0 until 64).map(b => BigInt(1) << b).mkString("[", ",", "]")

@@ -63,25 +63,4 @@ object Par {
       } finally pool.shutdown()
     }
   }
-
-  /** Two-task form of [[concurrently]], keeping the result types. */
-  def concurrently2[A, B](a: => A, b: => B): (A, B) = {
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val owner = graft.Scope.owner
-    try {
-      val fa = pool.submit(new java.util.concurrent.Callable[A] {
-        def call(): A = graft.Scope.within(owner)(a)
-      })
-      val fb = pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = graft.Scope.within(owner)(b)
-      })
-      def unwrap[T](f: java.util.concurrent.Future[T]): T =
-        try f.get()
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            throw e.getCause
-        }
-      (unwrap(fa), unwrap(fb))
-    } finally pool.shutdown()
-  }
 }

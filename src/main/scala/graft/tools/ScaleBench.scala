@@ -49,6 +49,45 @@ object ScaleBench {
 
   /** 64-dim float vector; every 97th is its predecessor perturbed in one
     * component (cosine ~ 1), planting semantic near-dups. */
+  /** Recursive delete of a local scratch path. */
+  private def rmrf(p: String): Unit = {
+    val f = new java.io.File(p)
+    if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
+    f.delete(); ()
+  }
+
+  /** Cosine of the 64-dim probe `qv` (norm `qn`) to the centroid `c`
+    * (norm `cn`). */
+  private def cosTo(qv: Array[Float], qn: Double)(c: Array[Double],
+      cn: Double): Double = {
+    var acc = 0.0; var d = 0
+    while (d < 64) { acc += qv(d) * c(d); d += 1 }
+    acc / (qn * cn)
+  }
+
+  /** Probe-side routing of a two-level codebook: the probe's best
+    * `superProbe` supers, then all their children ranked by
+    * (cos DESC, id) — the cell ids in probe order. */
+  private def rankedCells2(cb2: graft.operators.Similarity.Codebook2,
+      qv: Array[Float], superProbe: Int): Array[Long] = {
+    val f = cosTo(qv, math.sqrt(qv.map(x => x.toDouble * x).sum)) _
+    cb2.superCents.indices
+      .sortBy(i => (-f(cb2.superCents(i), cb2.superNorms(i)), i))
+      .take(superProbe)
+      .flatMap(sp => (cb2.offs(sp) until cb2.offs(sp + 1)))
+      .sortBy(j => (-f(cb2.cents(j), cb2.norms(j)), cb2.ids(j)))
+      .map(j => cb2.ids(j)).toArray
+  }
+
+  /** Probe-side routing of a flat codebook: every cell index ranked by
+    * (cos DESC, index). */
+  private def rankedCellsFlat(cents: Array[Array[Double]],
+      norms: Array[Double], qv: Array[Float]): Array[Long] = {
+    val f = cosTo(qv, math.sqrt(qv.map(x => x.toDouble * x).sum)) _
+    cents.indices.sortBy(i => (-f(cents(i), norms(i)), i))
+      .map(_.toLong).toArray
+  }
+
   private def vec(id: Long): Array[Float] = {
     val base = if (id % 97 == 1) id - 1 else id
     val v = Array.tabulate(64) { d =>
@@ -803,12 +842,7 @@ object ScaleBench {
             f""""batch_ms_max":${times.last}%.1f}""")
         } finally q.stop()
       }
-      def rmrfLayout(p: String): Unit = {
-        val f = new java.io.File(p)
-        if (f.isDirectory) f.listFiles().foreach(c => rmrfLayout(c.getPath))
-        f.delete(); ()
-      }
-      rmrfLayout(root)
+      rmrf(root)
     }
     // TWO-LEVEL quantizer at the K ∝ corpus deployment geometry — the
     // rung the flat kernel cannot run: K = m/4000 keeps cells (and so
@@ -1313,13 +1347,8 @@ object ScaleBench {
             f""""n_twins_planted":${8 * 256},"n_twin_flagged":$twins,""" +
             f""""n_control_flagged":$controls}""")
         }
-        def rmIdx(p: String): Unit = {
-          val f = new java.io.File(p)
-          if (f.isDirectory) f.listFiles().foreach(c => rmIdx(c.getPath))
-          f.delete(); ()
-        }
-        rmIdx(idxDir)
-        rmIdx(shardDir)
+        rmrf(idxDir)
+        rmrf(shardDir)
       }
     }
     // Recall cost of the TWO-LEVEL approximation at deployment K — the
@@ -1381,27 +1410,13 @@ object ScaleBench {
         .as[(Long, Seq[Long])].collect()
         .map { case (q, ns) => q -> ns.toSet }.toMap
       val truthSec = (System.nanoTime() - tT0) / 1e9
-      // driver-side two-level cell ranking per probe
-      def rankedCells(qv: Array[Float], superProbe: Int): Array[Long] = {
-        val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-        def cosTo(c: Array[Double], cn: Double): Double = {
-          var acc = 0.0; var d = 0
-          while (d < 64) { acc += qv(d) * c(d); d += 1 }
-          acc / (qn * cn)
-        }
-        val supRank = cb2.superCents.indices
-          .sortBy(i => (-cosTo(cb2.superCents(i), cb2.superNorms(i)), i))
-          .take(superProbe)
-        supRank.flatMap(sp => (cb2.offs(sp) until cb2.offs(sp + 1)))
-          .sortBy(j => (-cosTo(cb2.cents(j), cb2.norms(j)), cb2.ids(j)))
-          .map(j => cb2.ids(j)).toArray
-      }
       def sweep(idx: org.apache.spark.sql.DataFrame, idxSp: Int,
           idxSec: Double, configs: Seq[(Int, Int)]): Unit =
         configs.foreach { case (superProbe, nprobe) =>
           val t0 = System.nanoTime()
           val probeCells = probeRows.flatMap { case (q, qv) =>
-            rankedCells(qv, superProbe).take(nprobe).map(c => (q, c))
+            rankedCells2(cb2, qv, superProbe).take(nprobe)
+              .map(c => (q, c))
           }.toDF("q_id", "centroid_id")
           val approx: Map[Long, Set[Long]] = idx
             .join(broadcast(probeCells), Seq("centroid_id"))
@@ -1460,21 +1475,11 @@ object ScaleBench {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         standingF.count()
         val flatAssignSec = (System.nanoTime() - tF0) / 1e9
-        def rankedCellsFlat(qv: Array[Float]): Array[Long] = {
-          val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-          def cosTo(c: Array[Double], cn: Double): Double = {
-            var acc = 0.0; var d = 0
-            while (d < 64) { acc += qv(d) * c(d); d += 1 }
-            acc / (qn * cn)
-          }
-          cbCentsF.indices
-            .sortBy(i => (-cosTo(cbCentsF(i), cbNormsF(i)), i))
-            .map(_.toLong).toArray
-        }
         Seq(1, 4, 16).foreach { nprobe =>
           val t0 = System.nanoTime()
           val probeCells = probeRows.flatMap { case (q, qv) =>
-            rankedCellsFlat(qv).take(nprobe).map(c => (q, c))
+            rankedCellsFlat(cbCentsF, cbNormsF, qv).take(nprobe)
+              .map(c => (q, c))
           }.toDF("q_id", "centroid_id")
           val approx: Map[Long, Set[Long]] = standingF
             .join(broadcast(probeCells), Seq("centroid_id"))
@@ -1565,31 +1570,8 @@ object ScaleBench {
             .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
             .as[(Long, Seq[Long])].collect()
             .map { case (q, ns) => q -> ns.toSet }.toMap
-          def cosToF(qv: Array[Float], qn: Double)(
-              c: Array[Double], cn: Double): Double = {
-            var acc = 0.0; var d = 0
-            while (d < 64) { acc += qv(d) * c(d); d += 1 }
-            acc / (qn * cn)
-          }
-          def rankedCells(qv: Array[Float], superProbe: Int): Array[Long] = {
-            val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-            val cosTo = cosToF(qv, qn) _
-            cb2.superCents.indices
-              .sortBy(i => (-cosTo(cb2.superCents(i), cb2.superNorms(i)), i))
-              .take(superProbe)
-              .flatMap(sp => (cb2.offs(sp) until cb2.offs(sp + 1)))
-              .sortBy(j => (-cosTo(cb2.cents(j), cb2.norms(j)), cb2.ids(j)))
-              .map(j => cb2.ids(j)).toArray
-          }
           val cbCentsF = codebook.map(_._2.map(_.toDouble)).toArray
           val cbNormsF = cbCentsF.map(c => math.sqrt(c.map(x => x * x).sum))
-          def rankedCellsFlat(qv: Array[Float]): Array[Long] = {
-            val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-            val cosTo = cosToF(qv, qn) _
-            cbCentsF.indices
-              .sortBy(i => (-cosTo(cbCentsF(i), cbNormsF(i)), i))
-              .map(_.toLong).toArray
-          }
           def recallOf(idx: org.apache.spark.sql.DataFrame,
               cellsOf: Array[Float] => Array[Long], nprobe: Int): Long = {
             val probeCells = probeRows.flatMap { case (q, qv) =>
@@ -1624,12 +1606,13 @@ object ScaleBench {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           standingF.count()
           val flatPpm: Map[Int, Long] = Seq(1, 4).map(np =>
-            np -> recallOf(standingF, rankedCellsFlat, np)).toMap
+            np -> recallOf(standingF,
+              rankedCellsFlat(cbCentsF, cbNormsF, _), np)).toMap
           standingF.unpersist(false)
           Seq((1, 1), (1, 4), (2, 4)).foreach { case (superProbe, nprobe) =>
             val t0 = System.nanoTime()
             val ppm = recallOf(standing,
-              qv => rankedCells(qv, superProbe), nprobe)
+              rankedCells2(cb2, _, superProbe), nprobe)
             val sec = (System.nanoTime() - t0) / 1e9
             val fl = flatPpm.getOrElse(nprobe, flatPpm(4))
             val ratioPpm = ppm * 1000000L / math.max(fl, 1)
@@ -1692,23 +1675,8 @@ object ScaleBench {
             .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
             .as[(Long, Seq[Long])].collect()
             .map { case (q, ns) => q -> ns.toSet }.toMap
-          def rankedCells(qv: Array[Float]): Array[Long] = {
-            val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-            def cosTo(c: Array[Double], cn: Double): Double = {
-              var acc = 0.0; var d = 0
-              while (d < 64) { acc += qv(d) * c(d); d += 1 }
-              acc / (qn * cn)
-            }
-            val supRank = cb2.superCents.indices
-              .sortBy(i =>
-                (-cosTo(cb2.superCents(i), cb2.superNorms(i)), i))
-              .take(4)
-            supRank.flatMap(sp => (cb2.offs(sp) until cb2.offs(sp + 1)))
-              .sortBy(j => (-cosTo(cb2.cents(j), cb2.norms(j)), cb2.ids(j)))
-              .take(4).map(j => cb2.ids(j)).toArray
-          }
           val probeCells = probeRows.flatMap { case (q, qv) =>
-            rankedCells(qv).map(c => (q, c))
+            rankedCells2(cb2, qv, 4).take(4).map(c => (q, c))
           }.toDF("q_id", "centroid_id")
           val approx: Map[Long, Set[Long]] = standing
             .join(broadcast(probeCells), Seq("centroid_id"))
@@ -2009,32 +1977,9 @@ object ScaleBench {
         .as[(Long, Seq[Long])].collect()
         .map { case (q, ns) => q -> ns.toSet }.toMap
       val truthSec = (System.nanoTime() - tT0) / 1e9
-      def cosTo(qv: Array[Float], qn: Double)(
-          c: Array[Double], cn: Double): Double = {
-        var acc = 0.0; var d = 0
-        while (d < 64) { acc += qv(d) * c(d); d += 1 }
-        acc / (qn * cn)
-      }
       // probe-side routing: rank superProbe supers, then their
       // children (super_probe = 2 is ivf2_recall's guidance against an
       // sp = 1-assigned index; the sp4 mitigation lane widens both)
-      def cells2(qv: Array[Float], superProbe: Int): Array[Long] = {
-        val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-        val f = cosTo(qv, qn) _
-        cb2.superCents.indices
-          .sortBy(i => (-f(cb2.superCents(i), cb2.superNorms(i)), i))
-          .take(superProbe)
-          .flatMap(sp => (cb2.offs(sp) until cb2.offs(sp + 1)))
-          .sortBy(j => (-f(cb2.cents(j), cb2.norms(j)), cb2.ids(j)))
-          .map(j => cb2.ids(j)).toArray
-      }
-      def cellsFlat(qv: Array[Float]): Array[Long] = {
-        val qn = math.sqrt(qv.map(x => x.toDouble * x).sum)
-        val f = cosTo(qv, qn) _
-        cbCents.indices
-          .sortBy(i => (-f(cbCents(i), cbNorms(i)), i))
-          .map(_.toLong).toArray
-      }
       val nprobe = 4
       def lane(tag: String,
           assigned: org.apache.spark.sql.DataFrame, assignSec: Double,
@@ -2126,7 +2071,7 @@ object ScaleBench {
               org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           asg.count()
           val assignSec = (System.nanoTime() - tA) / 1e9
-          try lane(tag, asg, assignSec, cells2(_, probeSp))
+          try lane(tag, asg, assignSec, rankedCells2(cb2, _, probeSp))
           finally { asg.unpersist(false); () }
       }
       if (n <= 10000000L) {
@@ -2139,7 +2084,8 @@ object ScaleBench {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         asg.count()
         val assignSec = (System.nanoTime() - tA) / 1e9
-        try lane("flat", asg, assignSec, cellsFlat)
+        try lane("flat", asg, assignSec,
+          rankedCellsFlat(cbCents, cbNorms, _))
         finally { asg.unpersist(false); () }
       }
       corpus.unpersist(false)
@@ -2181,11 +2127,6 @@ object ScaleBench {
     // Requires SPARK_GRAFT_SCALE_ONLY=curate_staged (restarts the
     // session, so no other rung may follow in the same run).
     if (only.exists(_.contains("curate_staged"))) {
-      def rmp(p: String): Unit = {
-        val f = new java.io.File(p)
-        if (f.isDirectory) f.listFiles().foreach(c => rmp(c.getPath))
-        f.delete(); ()
-      }
       def staged(sec: => Unit): Double = {
         val t0 = System.nanoTime(); sec; (System.nanoTime() - t0) / 1e9
       }
@@ -2205,7 +2146,7 @@ object ScaleBench {
           .write.mode("overwrite").parquet(s"$dir/curate_staged.parquet")
       }
       s1.stop()
-      rmp(s"$curDir/documents.parquet") // staged table carries the text
+      rmrf(s"$curDir/documents.parquet") // staged table carries the text
       // stage 2: LSH pairs → touched labels → near-dup verdicts
       val s2 = session("graft-scale-staged")
       var ndSmall = false
@@ -2263,11 +2204,6 @@ object ScaleBench {
     // the synthetic corpora are GiB-sized at 10⁷ — delete them on exit
     // (a KILLED run still leaks its dirs; `rm -rf /tmp/graft-scale*`
     // between sessions is the manual sweep for that)
-    def rmrf(p: String): Unit = {
-      val f = new java.io.File(p)
-      if (f.isDirectory) f.listFiles().foreach(c => rmrf(c.getPath))
-      f.delete(); ()
-    }
     Seq(dir, s"$dir-curate", s"$dir-saltjoin")
       .foreach(rmrf)
   }

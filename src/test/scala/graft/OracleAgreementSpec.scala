@@ -1,0 +1,31 @@
+package graft
+
+/** The shared DuckDB oracle fragments under the unit suite: the near-dup
+  * pair set, its symmetric edges and components (q_dedup_clusters), the
+  * quality score and survivor rank on top of them (q_dedup_survivor) and
+  * the flat codebook assignment (q_ivf_topk) each run as registered, on
+  * the sf0.001 fixture, and must equal the Spark result under
+  * `tools/check_oracle.py`'s rule: columns sorted by name, equal row
+  * count, equal values row by row. */
+class OracleAgreementSpec extends SparkSpecBase {
+
+  private val names = Seq("q_dedup_clusters", "q_dedup_survivor", "q_ivf_topk")
+
+  test("the registered oracles of the shared fragments match the engine on sf0.001") {
+    val out = java.nio.file.Files.createTempDirectory("graft_oracle_agreement")
+    names.foreach { name =>
+      SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
+        .parquet(s"$out/$name")
+    }
+    java.nio.file.Files.writeString(out.resolve("oracle_sql.json"),
+      org.json4s.jackson.Serialization.write(
+        names.map(n => n -> SparkEntry.oracleSql(n)).toMap)(
+        org.json4s.DefaultFormats))
+    val log = new StringBuilder
+    val exit = scala.sys.process.Process(
+      Seq("python3", "tools/check_oracle.py", sfDir, out.toString))
+      .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
+    assert(exit === 0, log.toString)
+    assert(log.toString.contains(s"${names.size} ok, 0 bad"), log.toString)
+  }
+}

@@ -361,6 +361,35 @@ class PlanAuditSpec extends SparkSpecBase {
     }
   }
 
+  test("the queries that plan an unpartitioned window are pinned, each with its reason") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    object H extends AdaptiveSparkPlanHelper
+    // a window with no PARTITION BY moves all its input rows into one
+    // task; cached subtrees are searched too
+    def unpartitioned(p: SparkPlan): Int =
+      H.collectWithSubqueries(p) {
+        case w: WindowExec if w.partitionSpec.isEmpty => w
+      }.size + H.collectWithSubqueries(p) {
+        case m: InMemoryTableScanExec => m
+      }.map(m => unpartitioned(m.relation.cachedPlan)).sum
+    // each window's input is bounded by design, not by the corpus
+    val expected = Map(
+      "q_rate_cusum" -> "running CUSUM over the observed-hour series",
+      "q_skew_profile" -> ("cumulative rank over the counts-of-counts " +
+        "histogram (one row per distinct multiplicity)"),
+      "q_source_concentration" -> ("rank and cumulative share over the " +
+        "per-source totals (one row per source)"))
+    val found = SparkEntry.queries.toSeq.sortBy(_._1).collect {
+      case (name, fn)
+          if unpartitioned(fn(spark, sfDir).queryExecution.executedPlan) > 0 =>
+        name
+    }
+    assert(found === expected.keys.toSeq.sorted)
+  }
+
   test("event transitions: full rows cross one exchange; state totals broadcast") {
     // the user_id exchange feeding the lag window is the ONLY one that
     // carries event rows — everything after operates on the |types|²
