@@ -82,9 +82,18 @@ object Corpus extends QueryModule {
     val tf = toks.groupBy($"doc_id", $"token").agg(count(lit(1)).as("tf"))
     val df = tf.groupBy($"token").agg(count(lit(1)).as("df"))
     val n = docs.agg(count(lit(1)).as("n_docs"))
+    tfidfTop3(tf, df, broadcast(n))
+  }
+
+  /** [[tfidfTopTerms]]' ranking over (doc_id, token, tf), (token, df)
+    * and a broadcast 1-row (n_docs) side: the smoothed-idf score and
+    * each document's top 3 terms, for doc_id < 50. */
+  private def tfidfTop3(tf: DataFrame, df: DataFrame,
+      n: DataFrame): DataFrame = {
+    import tf.sparkSession.implicits._
     val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"token")
     tf.join(df, "token")
-      .crossJoin(broadcast(n)) // 1 row
+      .crossJoin(n) // 1 row
       .withColumn("score",
         $"tf" * ($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)))
       .withColumn("rank", row_number().over(w).cast("long"))
@@ -409,7 +418,7 @@ object Corpus extends QueryModule {
     // bounded top-K aggregate, not a row_number window: the candidate
     // set is every document sharing a query term — corpus-scaling —
     // and the window form's partial phase sorts each task's full
-    // candidate slice (see TopKByScoreBase). The exact Long score
+    // candidate slice (see TopKBuffer). The exact Long score
     // rides as Double: the denominator's 20·s·tf term bounds each weight
     // by 2.2·10⁶·(2n−1)/3 < 1.5·10⁶·n (df ≥ 1), so a score stays below
     // 2⁵³ — exact, injective, tie-break behavior identical — while
@@ -520,12 +529,9 @@ object Corpus extends QueryModule {
 
   def packBins(s: SparkSession, d: String, budget: Long = 256L): DataFrame = {
     import s.implicits._
-    val cost = when(length(trim($"text")) === 0, 0L)
-      .otherwise(
-        (length($"text") - length(regexp_replace($"text", " ", ""))).cast("long")
-          + lit(1L))
     val costed = Tables.documents(s, d)
-      .select($"source", $"doc_id", cost.as("n_tokens"))
+      .select($"source", $"doc_id",
+        TextOps.tokenCount($"text").as("n_tokens"))
       .repartition($"source")
       .sortWithinPartitions($"source", $"doc_id")
       .as[(String, Long, Long)]
@@ -984,8 +990,7 @@ object Corpus extends QueryModule {
   ): DataFrame = {
     val s = standing.sparkSession
     import s.implicits._
-    val small = removedDocs.count() <= NearDup.VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val hinted = NearDup.cappedHint(removedDocs.count())
     val sub = sourceTokenStats(removedDocs)
       .select($"source", $"token",
         $"tf".as("tf_rem"), $"df".as("df_rem"))
@@ -1094,17 +1099,8 @@ object Corpus extends QueryModule {
       .select($"token",
         ($"df" - coalesce($"df_rem", lit(0L))).as("df"))
       .where($"df" > 0)
-    val n2 = broadcast(nDocs.crossJoin(rmN)
-      .select(($"n_docs" - $"n_rem").as("n_docs")))
-    val w = Window.partitionBy($"doc_id").orderBy($"score".desc, $"token")
-    tf2.join(df2, "token")
-      .crossJoin(n2) // 1 row
-      .withColumn("score",
-        $"tf" * ($"n_docs" - $"df" + lit(0.5)) / ($"df" + lit(0.5)))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .where($"rank" <= 3 && $"doc_id" < 50)
-      .select($"doc_id", $"rank", $"token", $"tf", $"df", $"score")
-      .orderBy($"doc_id", $"rank")
+    tfidfTop3(tf2, df2, broadcast(nDocs.crossJoin(rmN)
+      .select(($"n_docs" - $"n_rem").as("n_docs"))))
   }
 
   /** GATE: [[takedownTfidfOn]] over in-gate standing tables; oracle =

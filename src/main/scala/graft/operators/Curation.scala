@@ -103,13 +103,6 @@ object Curation extends QueryModule {
 
   // ---------------------------------------------------- mixture sampling
 
-  /** Whitespace token cost, shared identity with [[Corpus.packBins]]
-    * (and its DuckDB oracle): tokens = spaces + 1, 0 for blank text. */
-  private def nTokens(c: Column): Column =
-    when(length(trim(c)) === 0, 0L)
-      .otherwise((length(c) - length(regexp_replace(c, " ", ""))).cast("long")
-        + lit(1L))
-
   /** Source-MIXTURE sampling to a token budget: give each source a
     * mixing weight, split half the corpus' token mass across sources in
     * proportion to weight, and deterministically fill each source's
@@ -129,8 +122,8 @@ object Curation extends QueryModule {
     // deterministic in both engines without a hard-coded source list
     val w = substring($"source", 4, 10).cast("long") % 3L + 1L
     val docs = Tables.documents(s, d)
-      .select($"source", $"doc_id", nTokens($"text").as("n_tokens"),
-        w.as("w"))
+      .select($"source", $"doc_id",
+        TextOps.tokenCount($"text").as("n_tokens"), w.as("w"))
     val totals = broadcast(docs.agg(
       sum($"n_tokens").as("t_total")))                      // 1 row
     val weights = broadcast(docs.groupBy($"source").agg(first($"w").as("w"))
@@ -236,10 +229,8 @@ object Curation extends QueryModule {
     * 1-row broadcast. */
   def ingestDrift(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val nTokens = when(length(trim($"text")) === 0, 0L)
-      .otherwise(length($"text") - length(replace($"text", lit(" "), lit(""))) + 1L)
     val bucketed = Tables.documents(s, d)
-      .select((nTokens.cast("long") / 16L).cast("long").as("bucket"),
+      .select((TextOps.tokenCount($"text") / 16L).cast("long").as("bucket"),
         ($"doc_id" % 10 >= 8).as("fresh"))
     val hist = bucketed.groupBy($"bucket")
       .agg(
@@ -324,12 +315,8 @@ object Curation extends QueryModule {
     * and the grand total rides the same cumulative window. */
   def sourceConcentration(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val cost = when(length(trim($"text")) === 0, 0L)
-      .otherwise(
-        (length($"text") - length(regexp_replace($"text", " ", ""))).cast("long")
-          + lit(1L))
     val bySrc = Tables.documents(s, d)
-      .select($"source", cost.as("t"))
+      .select($"source", TextOps.tokenCount($"text").as("t"))
       .groupBy($"source")
       .agg(count(lit(1)).as("n_docs"), sum($"t").as("n_tokens"))
     val wRank = Window.orderBy($"n_tokens".desc, $"source")
@@ -372,7 +359,8 @@ object Curation extends QueryModule {
   def snapshotDiff(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     def shaped(df: DataFrame): DataFrame = df.select(
-      $"doc_id", $"source", md5($"text").as("fp"), nTokens($"text").as("tk"))
+      $"doc_id", $"source", md5($"text").as("fp"),
+      TextOps.tokenCount($"text").as("tk"))
     val docs = Tables.documents(s, d)
     val old = shaped(docs)
     val kept = docs.where($"doc_id" % 7 =!= 3)
@@ -422,7 +410,7 @@ object Curation extends QueryModule {
   def temperaturePlan(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val bySrc = Tables.documents(s, d)
-      .select($"source", nTokens($"text").as("t"))
+      .select($"source", TextOps.tokenCount($"text").as("t"))
       .groupBy($"source")
       .agg(sum($"t").as("n_tokens"))
       .withColumn("isqrt", floor(sqrt($"n_tokens".cast("double"))))
@@ -477,7 +465,7 @@ object Curation extends QueryModule {
   def mixSchedule(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val docs = Tables.documents(s, d)
-      .select($"doc_id", $"source", nTokens($"text").as("t"))
+      .select($"doc_id", $"source", TextOps.tokenCount($"text").as("t"))
     val weights = docs.groupBy($"source")
       .agg(sum($"t").as("n_tokens"))
       .withColumn("isqrt", floor(sqrt($"n_tokens".cast("double"))))

@@ -135,9 +135,23 @@ object NearDup extends QueryModule {
     * documents collide in some band) the full-corpus join shape is
     * kept: a semi-filter that cannot broadcast would shuffle the
     * text-width table and cost more than it saves. */
-  private[graft] val VerifyIdsBroadcastCap =
+  private val VerifyIdsBroadcastCap =
     sys.env.get("SPARK_GRAFT_VERIFY_IDS_CAP").map(_.toLong)
       .getOrElse(5000000L)
+
+  /** A capped-broadcast decision for a counted side: `small` sides are
+    * hinted to broadcast, larger ones keep the shuffle. Every bounded
+    * metadata side in the engine (candidate ids, touched labels, removal
+    * sets, per-round graph state) takes its hint from [[cappedHint]]. */
+  private[graft] final case class BroadcastHint(small: Boolean) {
+    def apply(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+  }
+
+  /** The hint for a side of `rows` rows: broadcast at or under `cap`
+    * ([[VerifyIdsBroadcastCap]] unless a caller shares it out). */
+  private[graft] def cappedHint(rows: Long,
+      cap: Long = VerifyIdsBroadcastCap): BroadcastHint =
+    BroadcastHint(rows <= cap)
 
   /** The shared exact-verify stage: candidate pairs joined with both
     * sides' shingle sets plus the intersection / Jaccard columns.
@@ -177,18 +191,22 @@ object NearDup extends QueryModule {
     val s = docs.sparkSession
     import s.implicits._
     val cand = Scope.hold(cand0.localCheckpoint(true))
-    val ids = cand.select($"id_a".as("doc_id"))
-      .union(cand.select($"id_b".as("doc_id"))).distinct()
-    val belowCap = ids.count() <= cap
-    val bounded =
-      if (belowCap) docs.join(broadcast(ids), Seq("doc_id"), "leftsemi")
-      else docs
+    val bounded = candidateBounded(docs, cand, cap)
     val shBase = bounded.select($"doc_id",
       graft.functions.VectorExpressions.text_shingles($"text", 3).as("sh"))
+    // above the cap candidateBounded passes `docs` itself through
     val sh =
-      if (belowCap) shBase
+      if (bounded ne docs) shBase
       else Scope.hold(
         shBase.persist(org.apache.spark.storage.StorageLevel.DISK_ONLY))
+    jaccardVerified(cand, sh)
+  }
+
+  /** The exact shingle-Jaccard verify join: candidate (id_a, id_b) pairs
+    * joined with both sides' (doc_id, sh) shingle sets, plus the
+    * intersection size `n_common` and the `jaccard` ratio. */
+  private def jaccardVerified(cand: DataFrame, sh: DataFrame): DataFrame = {
+    import sh.sparkSession.implicits._
     cand
       .join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
       .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
@@ -216,7 +234,7 @@ object NearDup extends QueryModule {
     import s.implicits._
     val ids = cand.select($"id_a".as("doc_id"))
       .union(cand.select($"id_b".as("doc_id"))).distinct()
-    if (ids.count() <= cap)
+    if (cappedHint(ids.count(), cap).small)
       docs.join(broadcast(ids), Seq("doc_id"), "leftsemi")
     else docs
   }
@@ -408,12 +426,10 @@ object NearDup extends QueryModule {
     // pass instead of two plus their join.
     val labels = touchedLabels(
       minhashNearDup(s, d).select($"id_a", $"id_b"))
-    val hinted =
-      if (labels.count() <= VerifyIdsBroadcastCap) broadcast(labels)
-      else labels
+    val hinted = cappedHint(labels.count())
     Tables.documents(s, d)
       .select($"doc_id", $"source", TextOps.tokenCount($"text").as("t"))
-      .join(hinted, Seq("doc_id"), "left")
+      .join(hinted(labels), Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce($"comp", $"doc_id"))
       .groupBy($"source")
       .agg(
@@ -562,8 +578,7 @@ object NearDup extends QueryModule {
     // (adversarial mostly-duplicate corpora) the joins fall back to
     // shuffle.
     val labels = touchedLabels(pairs)
-    val small = labels.count() <= VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val hinted = cappedHint(labels.count())
     val w = Window.partitionBy($"comp")
       .orderBy($"quality_score".desc, $"doc_id")
     // quality_score is row-LOCAL (length/punct/stopword heuristic), so
@@ -630,28 +645,11 @@ object NearDup extends QueryModule {
   ): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val small = removed.count() <= VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val rem = hinted(removed.select($"doc_id"))
-    // clusters with at least one removed member — the blast radius
-    val affected = standing.join(rem, Seq("doc_id"), "leftsemi")
-      .select($"cluster_id").distinct()
+    val BlastRadius(hinted, affected, members, subPairs) =
+      blastRadius(standing, pairs, removed)
     val untouched = standing
       .join(hinted(affected), Seq("cluster_id"), "left_anti")
       .select($"doc_id", $"cluster_id", $"survivor_id", $"keep")
-    // remaining members of affected clusters
-    val members = standing
-      .join(hinted(affected), Seq("cluster_id"), "leftsemi")
-      .join(rem, Seq("doc_id"), "left_anti")
-      .select($"doc_id")
-    // surviving edges of the affected subgraph: both endpoints remain
-    // (endpoints never cross cluster boundaries, so membership in
-    // `members` is exactly "in an affected cluster and not removed")
-    val subPairs = pairs
-      .join(hinted(members.select($"doc_id".as("id_a"))),
-        Seq("id_a"), "leftsemi")
-      .join(hinted(members.select($"doc_id".as("id_b"))),
-        Seq("id_b"), "leftsemi")
     val relabeled = touchedLabels(subPairs) // (doc_id, comp), min-id label
     val labeled = members
       .join(hinted(relabeled), Seq("doc_id"), "left")
@@ -667,6 +665,37 @@ object NearDup extends QueryModule {
       .select($"doc_id", $"cluster_id", $"survivor_id")
       .withColumn("keep", $"doc_id" === $"survivor_id")
     untouched.unionByName(recomputed).orderBy($"doc_id")
+  }
+
+  /** A takedown's blast radius through a standing component map: the
+    * capped-broadcast hint sized by the removal set, the standing
+    * clusters with a removed member, their remaining members, and the
+    * surviving edges among those members. Edges never cross a standing
+    * cluster boundary, so membership in `members` is exactly "in an
+    * affected cluster and not removed". */
+  private final case class BlastRadius(hinted: BroadcastHint,
+      affected: DataFrame, members: DataFrame, subPairs: DataFrame)
+
+  private def blastRadius(
+      standing: DataFrame, // (doc_id, cluster_id, ...) component map
+      pairs: DataFrame,    // (id_a, id_b) verified edges
+      removed: DataFrame   // (doc_id) takedown set
+  ): BlastRadius = {
+    import standing.sparkSession.implicits._
+    val hinted = cappedHint(removed.count())
+    val rem = hinted(removed.select($"doc_id"))
+    val affected = standing.join(rem, Seq("doc_id"), "leftsemi")
+      .select($"cluster_id").distinct()
+    val members = standing
+      .join(hinted(affected), Seq("cluster_id"), "leftsemi")
+      .join(rem, Seq("doc_id"), "left_anti")
+      .select($"doc_id")
+    val subPairs = pairs
+      .join(hinted(members.select($"doc_id".as("id_a"))),
+        Seq("id_a"), "leftsemi")
+      .join(hinted(members.select($"doc_id".as("id_b"))),
+        Seq("id_b"), "leftsemi")
+    BlastRadius(hinted, affected, members, subPairs)
   }
 
   /** Deterministic gate takedown rule (≈6% of the corpus) — both
@@ -702,29 +731,16 @@ object NearDup extends QueryModule {
       k: Int = 2, rounds: Int = 4): DataFrame = {
     val s = standingCore.sparkSession
     import s.implicits._
-    val small = removed.count() <= VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val rem = hinted(removed.select($"doc_id"))
-    val affected = standing.join(rem, Seq("doc_id"), "leftsemi")
-      .select($"cluster_id").distinct()
+    val BlastRadius(hinted, affected, members, subPairs) =
+      blastRadius(standing, pairs, removed)
     val untouched = standingCore
       .join(standing.select($"doc_id", $"cluster_id"), Seq("doc_id"))
       .join(hinted(affected), Seq("cluster_id"), "left_anti")
       .select($"doc_id", $"deg")
-    val members = standing
-      .join(hinted(affected), Seq("cluster_id"), "leftsemi")
-      .join(rem, Seq("doc_id"), "left_anti")
-      .select($"doc_id")
-    // surviving edges of the affected subgraph (explicit reselect:
-    // using-joins hoist their key to the front, and downstream
-    // toDF("id_a", "id_b") renames POSITIONALLY)
-    val subPairs = pairs
-      .join(hinted(members.select($"doc_id".as("id_a"))),
-        Seq("id_a"), "leftsemi")
-      .join(hinted(members.select($"doc_id".as("id_b"))),
-        Seq("id_b"), "leftsemi")
-      .select($"id_a", $"id_b")
-    untouched.unionByName(kcoreOnPairs(subPairs, k, rounds))
+    // explicit reselect: using-joins hoist their key to the front, and
+    // kcoreOnPairs' toDF("id_a", "id_b") renames POSITIONALLY
+    untouched.unionByName(
+      kcoreOnPairs(subPairs.select($"id_a", $"id_b"), k, rounds))
       .orderBy($"doc_id")
   }
 
@@ -747,8 +763,7 @@ object NearDup extends QueryModule {
       pairs: DataFrame, removed: DataFrame): DataFrame = {
     val s = pairs.sparkSession
     import s.implicits._
-    val small = removed.count() <= VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    val hinted = cappedHint(removed.count())
     val subPairs = pairs
       .join(hinted(removed.select($"doc_id".as("id_a"))),
         Seq("id_a"), "left_anti")
@@ -763,38 +778,45 @@ object NearDup extends QueryModule {
     pageRankOnPairs(subPairs, hintBroadcasts = false)
   }
 
+  /** The standing artifacts every takedown gate starts from, built the
+    * way a deployment stores them: the corpus, its verified pair list
+    * (one pair computation, checkpointed) and the gate's removal set;
+    * `survivors()` checkpoints the standing [[survivorsFrom]] table over
+    * them. Both checkpoints are held in the caller's [[graft.Scope]]. */
+  private final class Standing(s: SparkSession, d: String) {
+    import s.implicits._
+    val docs: DataFrame = Tables.documents(s, d)
+    val pairs: DataFrame = Scope.hold(
+      minhashNearDup(s, d).select($"id_a", $"id_b").localCheckpoint(true))
+    val removed: DataFrame = docs.where(TakedownSparkPred).select($"doc_id")
+    def survivors(): DataFrame =
+      Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
+  }
+
   /** GATE: [[takedownKcoreOn]] end-to-end — standing pairs, component
     * map and k-core built once (checkpointed), takedown applied with
     * untouched-component passthrough; the oracle re-peels from scratch
     * on the filtered corpus. Hash equality proves component-local
     * peeling commutes with blast-radius-bounded maintenance. */
   def takedownKcore(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true))
+    val st = new Standing(s, d)
     // r13 (guide §2.6): the two standing artifacts read only the pairs
     // checkpoint, so their build jobs — each a chain of bounded rounds
     // with driver sync points — overlap from two driver threads instead
     // of serializing ~equal wall times end to end. Both hold into this
     // thread's scope (Par runs them under it).
     val Seq(standing, core) = graft.ops.Par.concurrently(Seq(
-      () => Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true)),
-      () => Scope.hold(kcoreOnPairs(pairs).localCheckpoint(true))))
-    val removed = docs.where(TakedownSparkPred).select($"doc_id")
-    takedownKcoreOn(core, standing, pairs, removed)
+      () => st.survivors(),
+      () => Scope.hold(kcoreOnPairs(st.pairs).localCheckpoint(true))))
+    takedownKcoreOn(core, standing, st.pairs, st.removed)
   }
 
   /** GATE: [[takedownPagerankOn]] — standing pairs reused, rounds
     * re-run on the surviving edges; the oracle recomputes pairs AND
     * rounds from scratch on the filtered corpus. */
   def takedownPagerank(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true))
-    val removed = docs.where(TakedownSparkPred).select($"doc_id")
-    takedownPagerankOn(pairs, removed)
+    val st = new Standing(s, d)
+    takedownPagerankOn(st.pairs, st.removed)
   }
 
   /** GATE: [[takedownSurvivors]] end-to-end — build the standing
@@ -804,13 +826,8 @@ object NearDup extends QueryModule {
     * corpus; hash equality proves blast-radius-bounded incremental
     * maintenance derives exactly the full recompute. */
   def takedownSurvivor(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
-    val docs = Tables.documents(s, d)
-    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true))
-    val standing = Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
-    val removed = docs.where(TakedownSparkPred).select($"doc_id")
-    takedownSurvivors(docs, standing, pairs, removed)
+    val st = new Standing(s, d)
+    takedownSurvivors(st.docs, st.survivors(), st.pairs, st.removed)
   }
 
   /** GATE: the takedown's blast-radius census — the summary a
@@ -822,12 +839,9 @@ object NearDup extends QueryModule {
     * component closures) and aggregate the same comparison. */
   def takedownCensus(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
-    val docs = Tables.documents(s, d)
-    val pairs = Scope.hold(minhashNearDup(s, d).select($"id_a", $"id_b")
-      .localCheckpoint(true))
-    val standing = Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
-    val removed = docs.where(TakedownSparkPred).select($"doc_id")
-    val after = takedownSurvivors(docs, standing, pairs, removed)
+    val st = new Standing(s, d)
+    val standing = st.survivors()
+    val after = takedownSurvivors(st.docs, standing, st.pairs, st.removed)
     // remaining docs, old vs new labels — reused by three aggregates,
     // so it is checkpointed once (forcing `after` exactly once)
     val cmp = Scope.hold(standing
@@ -836,7 +850,7 @@ object NearDup extends QueryModule {
       .join(after.select($"doc_id", $"cluster_id".as("new_cluster"),
         $"survivor_id".as("new_surv")), Seq("doc_id"))
       .localCheckpoint(true))
-    val touched = standing.join(broadcast(removed), Seq("doc_id"),
+    val touched = standing.join(broadcast(st.removed), Seq("doc_id"),
       "leftsemi")
     // r13 (guide §1.2: don't re-scan what one pass can answer): the
     // five metrics previously ran five aggregate branches — three
@@ -940,9 +954,9 @@ object NearDup extends QueryModule {
     //    1588→1285 ms with hints off, because the anti-join preamble
     //    already forces AQE replanning per round and the 10 forced
     //    broadcast materializations serialize on the driver.
-    def hinted(df: DataFrame): DataFrame =
-      if (hintBroadcasts && n <= VerifyIdsBroadcastCap / (2L * iters))
-        broadcast(df) else df
+    val hinted =
+      if (hintBroadcasts) cappedHint(n, VerifyIdsBroadcastCap / (2L * iters))
+      else BroadcastHint(false)
     var pr = deg.select($"node", $"deg", lit(init).as("pr"))
     for (_ <- 1 to iters) {
       val contrib = pr.select($"node".as("cnode"), expr("pr div deg").as("c"))
@@ -999,11 +1013,9 @@ object NearDup extends QueryModule {
     // no stats), re-exchanging the edge stream TWICE per round; now the
     // edge stream is never shuffled for the filters — only the degree
     // aggregate moves rows. Above the cap: shuffle fallback, as
-    // everywhere else in this module. aliveN's extra count on round 1
+    // everywhere else in this module. The extra count on round 1
     // replaces the materialization round 2's first action paid anyway.
-    var aliveN = alive.count()
-    def hinted(df: DataFrame): DataFrame =
-      if (aliveN <= VerifyIdsBroadcastCap) broadcast(df) else df
+    var hinted = cappedHint(alive.count())
     for (_ <- 2 to rounds) {
       val e = edges
         .join(hinted(alive.select($"node".as("src"))), Seq("src"), "leftsemi")
@@ -1014,7 +1026,7 @@ object NearDup extends QueryModule {
       val n = next.count() // materialize, then the previous round can go
       Scope.free(alive)
       alive = next
-      aliveN = n
+      hinted = cappedHint(n)
     }
     Scope.hold(edges
       .join(hinted(alive.select($"node".as("src"))), Seq("src"), "leftsemi")
@@ -1066,11 +1078,9 @@ object NearDup extends QueryModule {
     // label count is a bounded read off the checkpoint; under the cap,
     // hint the broadcast the stats would have earned. Above it, fall
     // back to the shuffle — same discipline as [[candidateBounded]].
-    val hinted =
-      if (labels.count() <= VerifyIdsBroadcastCap) broadcast(labels)
-      else labels
+    val hinted = cappedHint(labels.count())
     nodes.select($"doc_id")
-      .join(hinted, Seq("doc_id"), "left")
+      .join(hinted(labels), Seq("doc_id"), "left")
       .select($"doc_id", coalesce($"comp", $"doc_id").as("cluster_id"))
       .orderBy($"doc_id")
   }
@@ -1126,9 +1136,7 @@ object NearDup extends QueryModule {
     // and re-sorted the edge stream AND the label table each round to
     // move node-sized state; now only the per-round min aggregate
     // exchanges rows. Above the cap: shuffle fallback.
-    val labelsN = labels.count()
-    def hinted(df: DataFrame): DataFrame =
-      if (labelsN <= VerifyIdsBroadcastCap) broadcast(df) else df
+    val hinted = cappedHint(labels.count())
     var changed = 1L
     var rounds = 0
     while (changed > 0 && rounds < maxRounds) {
@@ -1244,10 +1252,6 @@ object NearDup extends QueryModule {
     incrementalPairs(sh.where(!fresh), sh.where(fresh))
   }
 
-  /** Verified near-dup pairs touching `fresh`: fresh × (corpus ∪ fresh),
-    * never corpus × corpus. Both inputs are (doc_id, sh) shingle-set
-    * frames ([[hashedShingles]] shape). Factored out so specs can pin
-    * the one-sided-probe semantics on planted splits. */
   /** The LSH band index of a (doc_id, sh) shingle frame: one (bkey,
     * doc_id) row per band — the table a production pipeline PERSISTS
     * (bucketed on bkey via [[graft.sources.Ddl.createBucketedTable]],
@@ -1260,6 +1264,10 @@ object NearDup extends QueryModule {
         $"sh", Perms, Bands)).as("bkey"))
   }
 
+  /** Verified near-dup pairs touching `fresh`: fresh × (corpus ∪ fresh),
+    * never corpus × corpus. Both inputs are (doc_id, sh) shingle-set
+    * frames ([[hashedShingles]] shape). Factored out so specs can pin
+    * the one-sided-probe semantics on planted splits. */
   private[graft] def incrementalPairs(
       corpus: DataFrame, fresh: DataFrame): DataFrame =
     incrementalPairsIndexed(corpus, bandIndex(corpus), fresh)
@@ -1287,15 +1295,7 @@ object NearDup extends QueryModule {
       .select(least($"id_p", $"id_i").as("id_a"),
         greatest($"id_p", $"id_i").as("id_b"))
       .distinct()
-    val all = corpus.unionByName(fresh)
-    candidates
-      .join(all.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
-      .join(all.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.intersect_count($"sh_a", $"sh_b"))
-      .withColumn("jaccard",
-        $"n_common".cast("double") /
-          (size($"sh_a") + size($"sh_b") - $"n_common"))
+    jaccardVerified(candidates, corpus.unionByName(fresh))
       .where(tauPassExact)
       .select($"id_a", $"id_b", $"n_common", $"jaccard")
       .orderBy($"id_a", $"id_b")
@@ -1356,14 +1356,7 @@ object NearDup extends QueryModule {
           lit(t / (1 + t)) * ($"n_a" + $"n_b"))
       .select($"id_a", $"id_b")
       .distinct()
-    candidates
-      .join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
-      .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
-      .withColumn("n_common",
-        graft.functions.VectorExpressions.intersect_count($"sh_a", $"sh_b"))
-      .withColumn("jaccard",
-        $"n_common".cast("double") /
-          (size($"sh_a") + size($"sh_b") - $"n_common"))
+    jaccardVerified(candidates, sh)
       .where($"jaccard" >= t)
       .select($"id_a", $"id_b", $"jaccard")
       .orderBy($"id_a", $"id_b")
@@ -1449,7 +1442,7 @@ object NearDup extends QueryModule {
     // bounded top-K aggregate (pair-keyed variant): the per-source
     // sharing-pair volume is corpus-scaling, and the window form's
     // partial phase sorted each task's full slice of it
-    // (TopKByScoreBase has the scale argument)
+    // (TopKBuffer has the scale argument)
     val tk = udaf(new graft.pipeline.Aggregators.TopKPairsByScoreAgg(3),
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[(Long, Long, Double)]())
@@ -1718,9 +1711,7 @@ object NearDup extends QueryModule {
       .where($"df" > WinnowDfCap)
       .select($"fp", $"fp2")
     val ff =
-      if (hot.count() <= VerifyIdsBroadcastCap)
-        f.join(broadcast(hot), Seq("fp", "fp2"), "left_anti")
-      else f.join(hot, Seq("fp", "fp2"), "left_anti")
+      f.join(cappedHint(hot.count())(hot), Seq("fp", "fp2"), "left_anti")
     ff.select($"fp", $"fp2", $"doc_id".as("id_a"), $"n_fps".as("nf_a"))
       .join(ff.select($"fp", $"fp2", $"doc_id".as("id_b"),
         $"n_fps".as("nf_b")),

@@ -35,11 +35,6 @@ object Retrieval extends QueryModule {
   /** Per-leg and fused list depth. */
   private val TopK = 5
 
-  private def topKPairs(k: Int) =
-    udaf(new graft.pipeline.Aggregators.TopKScorePairsAgg(k),
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[(Long, Double)]())
-
   // ---------------------------------------------------------------------
   // Hybrid sparse + dense retrieval (reciprocal rank fusion)
   // ---------------------------------------------------------------------
@@ -90,11 +85,9 @@ object Retrieval extends QueryModule {
     e.join(probes, $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("doc_id"),
         cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cosine"))
-      .groupBy($"q_id")
-      .agg(topKPairs(TopK)($"doc_id", $"cosine").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", $"col._1".as("doc_id"),
-        ($"pos" + 1).cast("long").as("rank"))
+      .transform(Similarity.rankedNeighbours(_, TopK, "doc_id", $"cosine",
+        _.as("cosine")))
+      .select($"q_id", $"doc_id", $"rank")
   }
 
   /** RRF fuse of ranked lists (each `(q_id, doc_id, rank)`, already
@@ -162,12 +155,8 @@ object Retrieval extends QueryModule {
       .select($"q_id", $"vec_id".as("neighbor_id"),
         expr("""aggregate(zip_with(qsv, recon, (q, r) -> (q - r) * (q - r)),
                 CAST(0 AS BIGINT), (acc, x) -> acc + x)""").as("adist"))
-      .groupBy($"q_id")
-      .agg(topKPairs(TopK)($"neighbor_id", -$"adist".cast("double"))
-        .as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), (-$"col._2").cast("long").as("adist"))
+      .transform(Similarity.rankedNeighbours(_, TopK, "neighbor_id",
+        -$"adist".cast("double"), d => (-d).cast("long").as("adist")))
       .orderBy($"q_id", $"rank")
   }
 

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -91,7 +91,7 @@ object Similarity extends QueryModule {
     * the (score DESC, id ASC) semantics of a `row_number` window with
     * K-entry state instead of a full candidate sort (the scale
     * argument lives on
-    * [[graft.pipeline.Aggregators.TopKByScoreBase]]). */
+    * [[graft.pipeline.Aggregators.TopKBuffer]]). */
   private def topKIds(k: Int) =
     udaf(new graft.pipeline.Aggregators.TopKCosineAgg(k),
       org.apache.spark.sql.catalyst.encoders
@@ -100,6 +100,31 @@ object Similarity extends QueryModule {
     udaf(new graft.pipeline.Aggregators.TopKScorePairsAgg(k),
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[(Long, Double)]())
+
+  /** The ranked-neighbours tail of every top-K surface: per `q_id`, the
+    * bounded top-`k` of (`id`, `score`) candidates as rows (q_id, rank,
+    * `id`, `out(score)`), rank 1 = best — `score` ranks DESC with ties
+    * to the lower id; `out` maps the winning score back to the emitted
+    * column (a distance ranked as its negation turns positive again). */
+  private[graft] def rankedNeighbours(cands: DataFrame, k: Int, id: String,
+      score: Column, out: Column => Column): DataFrame =
+    cands.groupBy(col("q_id"))
+      .agg(topKPairs(k)(col(id), score).as("nbrs"))
+      .select(col("q_id"), posexplode(col("nbrs")))
+      .select(col("q_id"), (col("pos") + 1).cast("long").as("rank"),
+        col("col._1").as(id), out(col("col._2")))
+
+  /** [[rankedNeighbours]] by `cosine`, presented in (q_id, rank) order. */
+  private def nearestByCosine(cands: DataFrame, k: Int): DataFrame =
+    rankedNeighbours(cands, k, "neighbor_id", col("cosine"), _.as("cosine"))
+      .orderBy(col("q_id"), col("rank"))
+
+  /** [[rankedNeighbours]] by ascending ADC distance `adist`, presented
+    * in (q_id, rank) order — the PQ family's tail. */
+  private def nearestByAdc(cands: DataFrame, k: Int): DataFrame =
+    rankedNeighbours(cands, k, "neighbor_id", -col("adist"),
+      d => (-d).as("adist"))
+      .orderBy(col("q_id"), col("rank"))
 
   /** Brute-force-exact top-5 neighbors for a small probe set (vec_id < 20),
     * probe side broadcast. */
@@ -111,17 +136,12 @@ object Similarity extends QueryModule {
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn")))
     // bounded top-K aggregate, not a row_number window: the candidate
     // volume is |probes| × corpus, and the window form sorts ALL of it
-    // (see TopKByScoreBase — map-side partials cap every task's
+    // (see TopKBuffer — map-side partials cap every task's
     // contribution at K rows per probe)
     e.join(probes, $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
         cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cosine"))
-      .groupBy($"q_id")
-      .agg(topKPairs(5)($"neighbor_id", $"cosine").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), $"col._2".as("cosine"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByCosine(_, 5))
   }
 
   /** The IVF coarse codebook: deterministic seed centroids (vec_id < 8)
@@ -421,25 +441,8 @@ object Similarity extends QueryModule {
   private val SemDedupTau = 0.3
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val e = vecs(s, d)
-    val cells = Scope.hold(assignTo(e, centroids(e))
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
-      $"v".as("va"), $"nrm".as("na"))
-    val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
-      $"v".as("vb"), $"nrm".as("nb"))
-    val dropped = a.join(b, Seq("centroid_id"))
-      .where($"id_a" < $"id_b" &&
-        cosineWithNorms($"va", $"vb", $"na", $"nb") >= lit(SemDedupTau))
-      .select($"id_b".as("vec_id")).distinct()
-      .withColumn("hit", lit(true))
-    cells.select($"vec_id", $"centroid_id")
-      .join(dropped, Seq("vec_id"), "left")
-      .select($"vec_id", $"centroid_id",
-        coalesce($"hit", lit(false)).as("is_dup"))
-      .orderBy($"vec_id")
+    semanticDedupOn(assignTo(e, centroids(e)))
   }
 
   /** [[semanticDedup]] through the TWO-LEVEL coarse quantizer — same
@@ -452,16 +455,17 @@ object Similarity extends QueryModule {
     * SQL replay. Its cell assignment is held in the caller's
     * [[graft.Scope]], as [[semanticDedup]]'s is. */
   def semanticDedup2(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val e = vecs(s, d)
     val cb2 = twoLevelFrom(centroids(e), nSuper = 2)
-    val cells = Scope.hold(assignTo2(e, cb2, nprobe = 1)
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
-      $"v".as("va"), $"nrm".as("na"))
-    val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
-      $"v".as("vb"), $"nrm".as("nb"))
+    semanticDedupOn(assignTo2(e, cb2, nprobe = 1))
+  }
+
+  /** The drop rule of both semantic-dedup forms over an `assigned`
+    * corpus (carries vec_id, centroid_id, v, nrm). */
+  private def semanticDedupOn(assigned: DataFrame): DataFrame = {
+    import assigned.sparkSession.implicits._
+    val cells = persistedCells(assigned)
+    val (a, b) = cellSides(cells)
     val dropped = a.join(b, Seq("centroid_id"))
       .where($"id_a" < $"id_b" &&
         cosineWithNorms($"va", $"vb", $"na", $"nb") >= lit(SemDedupTau))
@@ -472,6 +476,26 @@ object Similarity extends QueryModule {
       .select($"vec_id", $"centroid_id",
         coalesce($"hit", lit(false)).as("is_dup"))
       .orderBy($"vec_id")
+  }
+
+  /** The (vec_id, centroid_id, v, nrm) cell table of an assigned corpus,
+    * persisted (the cell pair join reads it on both sides and the
+    * verdict reads it again) and held in the caller's [[graft.Scope]]. */
+  private def persistedCells(assigned: DataFrame): DataFrame = {
+    import assigned.sparkSession.implicits._
+    Scope.hold(assigned
+      .select($"vec_id", $"centroid_id", $"v", $"nrm")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+  }
+
+  /** The two sides of a cell-bounded pair join over `cells`:
+    * (centroid_id, id_a, va, na) and (centroid_id, id_b, vb, nb). */
+  private def cellSides(cells: DataFrame): (DataFrame, DataFrame) = {
+    import cells.sparkSession.implicits._
+    (cells.select($"centroid_id", $"vec_id".as("id_a"),
+      $"v".as("va"), $"nrm".as("na")),
+      cells.select($"centroid_id", $"vec_id".as("id_b"),
+        $"v".as("vb"), $"nrm".as("nb")))
   }
 
   /** Two-stage dedup cascade — the deployed shape of large-scale near-dup
@@ -509,13 +533,7 @@ object Similarity extends QueryModule {
   def cascadeDedup(s: SparkSession, d: String, tau: Double): DataFrame = {
     import s.implicits._
     val e = vecs(s, d)
-    val cells = Scope.hold(assignTo(e, centroids(e))
-      .select($"vec_id", $"centroid_id", $"v", $"nrm")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
-      $"v".as("va"), $"nrm".as("na"))
-    val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
-      $"v".as("vb"), $"nrm".as("nb"))
+    val (a, b) = cellSides(persistedCells(assignTo(e, centroids(e))))
     // checkpointed: the cell-bounded cosine join is the expensive
     // stage-1 pass and would otherwise re-run once per verify-join
     // consumer subtree; the candidate ids then bound the text side
@@ -659,33 +677,32 @@ object Similarity extends QueryModule {
     * subtrees, and re-deriving probes from the corpus assignment would
     * plan the full pass twice). */
   def ivfTopK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val e = vecs(s, d)
     val cents = centroids(e)
-    val indexed = assignTo(e, cents) // the one full corpus×centroids pass
+    cellProbeTopK(e, assignTo(_, cents))
+  }
+
+  /** The inverted-list probe of [[ivfTopK]] and [[ivf2TopK]] under one
+    * `assign`ment (adds centroid_id): the full corpus pass once, the
+    * probes (vec_id 8..17) from their own filtered scan, a cell-bounded
+    * candidate join and the bounded top-3 (cells grow with the corpus —
+    * same sort-elimination as cosineTopK). */
+  private def cellProbeTopK(e: DataFrame,
+      assign: DataFrame => DataFrame): DataFrame = {
+    import e.sparkSession.implicits._
+    val indexed = assign(e) // the one full corpus×centroids pass
       .select($"vec_id", $"v", $"nrm", $"centroid_id")
     val probes = broadcast(
-      assignTo(e.where($"vec_id" >= 8 && $"vec_id" < 18), cents)
+      assign(e.where($"vec_id" >= 8 && $"vec_id" < 18))
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
           $"centroid_id"))
-    // bounded top-K aggregate (cell-bounded candidates, but cells grow
-    // with the corpus — same sort-elimination as cosineTopK)
     indexed.join(probes, Seq("centroid_id"))
       .where($"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
         cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cosine"))
-      .groupBy($"q_id")
-      .agg(topKPairs(3)($"neighbor_id", $"cosine").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), $"col._2".as("cosine"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByCosine(_, 3))
   }
 
-  /** The exact top-K ground truth both recall gates measure against:
-    * brute-force cosine top-K for probes (vec_id 8..17) over the full
-    * corpus, one broadcast-probe scan. Shared so [[annRecall]] and
-    * [[annRecallMultiprobe]] can never drift to different baselines. */
   /** Top-K search THROUGH the two-level index — [[ivfTopK]]'s probe
     * shape with BOTH sides assigned by the hierarchical quantizer
     * ([[twoLevelFrom]] + nprobe = 1): index and probes share the
@@ -697,34 +714,22 @@ object Similarity extends QueryModule {
     * full two-level assignment for corpus AND probes, then the ranked
     * inverted-list probe. */
   def ivf2TopK(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val e = vecs(s, d)
     val cb2 = twoLevelFrom(centroids(e), nSuper = 2)
-    val indexed = assignTo2(e, cb2, nprobe = 1)
-      .select($"vec_id", $"v", $"nrm", $"centroid_id")
-    val probes = broadcast(
-      assignTo2(e.where($"vec_id" >= 8 && $"vec_id" < 18), cb2, nprobe = 1)
-        .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"),
-          $"centroid_id"))
-    indexed.join(probes, Seq("centroid_id"))
-      .where($"vec_id" =!= $"q_id")
-      .select($"q_id", $"vec_id".as("neighbor_id"),
-        cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cosine"))
-      .groupBy($"q_id")
-      .agg(topKPairs(3)($"neighbor_id", $"cosine").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), $"col._2".as("cosine"))
-      .orderBy($"q_id", $"rank")
+    cellProbeTopK(e, assignTo2(_, cb2, nprobe = 1))
   }
 
+  /** The exact top-K ground truth both recall gates measure against:
+    * brute-force cosine top-K for probes (vec_id 8..17) over the full
+    * corpus, one broadcast-probe scan. Shared so [[annRecall]] and
+    * [[annRecallMultiprobe]] can never drift to different baselines. */
   private def bruteTruthTopK(e: DataFrame, k: Int): DataFrame = {
     import e.sparkSession.implicits._
     val probes = broadcast(
       e.where($"vec_id" >= 8 && $"vec_id" < 18)
         .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn")))
     // bounded top-K aggregate over the |probes| × corpus candidate
-    // volume — the window form sorted all of it (TopKByScoreBase)
+    // volume — the window form sorted all of it (TopKBuffer)
     e.join(probes, $"vec_id" =!= $"q_id")
       .select($"q_id", $"vec_id".as("neighbor_id"),
         cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cosine"))
@@ -925,28 +930,7 @@ object Similarity extends QueryModule {
         .select($"iter", $"centroid_id", $"n", $"avg_cos")
         .collect() // K rows
       // spherical update: mean of unit vectors per cell, per dimension
-      val means = assigned
-        .select($"centroid_id", $"nrm", posexplode($"v"))
-        // same zero-norm guard as lloydStep (NULL-skipping avg / NPE)
-        .select($"centroid_id", $"pos",
-          when($"nrm" > 0, $"col".cast("double") / $"nrm")
-            .otherwise(0.0).as("u"))
-        .groupBy($"centroid_id", $"pos")
-        .agg(avg($"u").as("m"))
-        .collect() // K×D rows, index metadata
-        .groupBy(_.getLong(0))
-      val kept = cb.ids.zipWithIndex.map { case (id, i) =>
-        means.get(id) match {
-          case Some(rows) =>
-            val v = new Array[Double](rows.length)
-            rows.foreach(r => v(r.getInt(1)) = r.getDouble(2))
-            (id, v)
-          case None => (id, cb.cents(i)) // empty cell keeps its centroid
-        }
-      }
-      cb = Codebook(kept.map(_._1),
-        kept.map(_._2),
-        kept.map(p => math.sqrt(p._2.map(x => x * x).sum)))
+      cb = recenter(cb, assigned)
       report
     }
     val out = s.createDataFrame(
@@ -956,13 +940,6 @@ object Similarity extends QueryModule {
     out.orderBy($"iter", $"centroid_id")
   }
 
-  /** One spherical-Lloyd update of `cb` over `e` (must carry v, nrm):
-    * assign with the narrow [[assignTo]] scan, then re-center each cell
-    * on the mean of its unit vectors. K×D bounded collect — index
-    * metadata, same class as [[trainCodebook]]'s inline step (which
-    * additionally interleaves its per-iter quality report; this helper
-    * is the report-free form the deployment-geometry eval trains with).
-    * Empty cells keep their centroid. */
   /** [[lloydStep]] with TWO-LEVEL assignment — the round shape that
     * makes deployment-K training affordable: the per-round assignment
     * drops from O(n_train·K·D) to O(n_train·(√K + sp·√K)·D); the
@@ -970,31 +947,11 @@ object Similarity extends QueryModule {
     * driver arithmetic, K×√K×D flops — bounded index metadata). */
   private def lloydStep2(e: DataFrame, cb: Codebook,
       superProbe: Int): Codebook = {
-    import e.sparkSession.implicits._
     val s0 = math.max(8,
       math.ceil(math.sqrt(cb.ids.length.toDouble)).toInt)
     val cb2 = twoLevelFrom(cb, math.min(s0, cb.ids.length),
       refineIters = 1)
-    val means = assignTo2(e, cb2, superProbe)
-      .select($"centroid_id", $"nrm", posexplode($"v"))
-      .select($"centroid_id", $"pos",
-        when($"nrm" > 0, $"col".cast("double") / $"nrm")
-          .otherwise(0.0).as("u"))
-      .groupBy($"centroid_id", $"pos")
-      .agg(avg($"u").as("m"))
-      .collect()
-      .groupBy(_.getLong(0))
-    val kept = cb.ids.zipWithIndex.map { case (id, i) =>
-      means.get(id) match {
-        case Some(rows) =>
-          val v = new Array[Double](cb.cents(i).length)
-          rows.foreach(r => v(r.getInt(1)) = r.getDouble(2))
-          (id, v)
-        case None => (id, cb.cents(i))
-      }
-    }
-    Codebook(kept.map(_._1), kept.map(_._2),
-      kept.map(p => math.sqrt(p._2.map(x => x * x).sum)))
+    recenter(cb, assignTo2(e, cb2, superProbe))
   }
 
   /** Hierarchically-accelerated spherical k-means — the TRAIN leg of
@@ -1047,9 +1004,19 @@ object Similarity extends QueryModule {
     } finally { sample.unpersist(false); () }
   }
 
-  private def lloydStep(e: DataFrame, cb: Codebook): Codebook = {
-    import e.sparkSession.implicits._
-    val means = assignTo(e, cb)
+  /** One spherical-Lloyd update of `cb` over `e` (must carry v, nrm):
+    * assign with the narrow [[assignTo]] scan, then [[recenter]]. */
+  private def lloydStep(e: DataFrame, cb: Codebook): Codebook =
+    recenter(cb, assignTo(e, cb))
+
+  /** Re-center each cell of `cb` on the mean of its `assigned` unit
+    * vectors (rows carry centroid_id, v, nrm) — the spherical update of
+    * every Lloyd round ([[trainCodebook]], [[lloydStep]],
+    * [[lloydStep2]]). K×D bounded collect, index metadata. Empty cells
+    * keep their centroid. */
+  private def recenter(cb: Codebook, assigned: DataFrame): Codebook = {
+    import assigned.sparkSession.implicits._
+    val means = assigned
       .select($"centroid_id", $"nrm", posexplode($"v"))
       // zero-norm guard: /0 yields NULL, which avg would silently skip
       // (biased mean) and an all-zero cell would NPE the driver decode;
@@ -1143,7 +1110,7 @@ object Similarity extends QueryModule {
           .select($"vec_id".as("q_id"), $"v".as("qv"), $"nrm".as("qn"))
         // exact top-K per probe via the BOUNDED aggregate — identical
         // selection+tie semantics to the row_number window it replaces
-        // (TopKByScoreBase scaladoc has the scale argument: the window
+        // (TopKBuffer scaladoc has the scale argument: the window
         // sorted the full probes × corpus candidate volume)
         val tk = topKIds(topK)
         val truth = indexed.join(broadcast(probes), $"vec_id" =!= $"q_id")
@@ -1287,12 +1254,7 @@ object Similarity extends QueryModule {
       .select($"q_id", $"vec_id".as("neighbor_id"),
         graft.functions.VectorExpressions.pq_adc($"qv", $"codes", cb)
           .as("adist"))
-      .groupBy($"q_id")
-      .agg(topKPairs(5)($"neighbor_id", -$"adist").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), (-$"col._2").as("adist"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByAdc(_, 5))
   }
 
   /** Scalar-quantization audit: per-vector reconstruction error of a
@@ -1331,12 +1293,7 @@ object Similarity extends QueryModule {
       .select($"q_id", $"vec_id".as("neighbor_id"),
         graft.functions.VectorExpressions.pq_adc($"qv", $"codes", pqcb)
           .as("adist"))
-      .groupBy($"q_id")
-      .agg(topKPairs(5)($"neighbor_id", -$"adist").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), (-$"col._2").as("adist"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByAdc(_, 5))
   }
 
   /** RESIDUAL IVF-PQ — the faithful FAISS IVFPQ: codes quantize the
@@ -1358,12 +1315,7 @@ object Similarity extends QueryModule {
       .select($"q_id", $"vec_id".as("neighbor_id"),
         graft.functions.VectorExpressions.pq_adc($"qres", $"codes", pqcb)
           .as("adist"))
-      .groupBy($"q_id")
-      .agg(topKPairs(5)($"neighbor_id", -$"adist").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), (-$"col._2").as("adist"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByAdc(_, 5))
   }
 
   /** The per-(subspace, code, dimension) EXACT Lloyd-update cells of the
@@ -1452,12 +1404,7 @@ object Similarity extends QueryModule {
       .select($"q_id", $"vec_id".as("neighbor_id"),
         graft.functions.VectorExpressions.pq_adc($"qv", $"codes", book)
           .as("adist"))
-      .groupBy($"q_id")
-      .agg(topKPairs(5)($"neighbor_id", -$"adist").as("nbrs"))
-      .select($"q_id", posexplode($"nbrs"))
-      .select($"q_id", ($"pos" + 1).cast("long").as("rank"),
-        $"col._1".as("neighbor_id"), (-$"col._2").as("adist"))
-      .orderBy($"q_id", $"rank")
+      .transform(nearestByAdc(_, 5))
   }
 
   /** DEPLOYMENT PQ sub-codebook training — per-subspace k-means with

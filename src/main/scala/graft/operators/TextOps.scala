@@ -358,6 +358,15 @@ object TextOps extends QueryModule {
       .orderBy($"lang", $"source")
   }
 
+  /** The first row-local rule that rejects a document (lang →
+    * too_short → too_long → low_stopword), NULL when all pass — over
+    * the `lang`, `n_tokens` and `n_stop` columns. */
+  private def preReason: Column =
+    when(!col("lang").isin("en", "de", "es", "fr"), "lang")
+      .when(col("n_tokens") < 20, "too_short")
+      .when(col("n_tokens") > 1000, "too_long")
+      .when(col("n_stop") * 100L < col("n_tokens"), "low_stopword")
+
   /** FILTER AUDIT — per-rule drop attribution for the [[cleanCorpus]]
     * cascade: every document gets the FIRST rule that rejects it (rule
     * order fixed: lang → too_short → too_long → low_stopword →
@@ -377,10 +386,6 @@ object TextOps extends QueryModule {
     val t = $"text"
     val nTokens = tokenCount(t)
     val nStop = stopwordCount(t)
-    val preReason = when(!$"lang".isin("en", "de", "es", "fr"), "lang")
-      .when($"n_tokens" < 20, "too_short")
-      .when($"n_tokens" > 1000, "too_long")
-      .when($"n_stop" * 100L < $"n_tokens", "low_stopword")
     // rank only among docs that passed every row-local rule: the window
     // partitions on (fp, passed) so rejected docs sit in a partition a
     // survivor's rank never sees
@@ -918,10 +923,6 @@ object TextOps extends QueryModule {
     val t = $"text"
     val nTokens = tokenCount(t)
     val nStop = stopwordCount(t)
-    val preReason = when(!$"lang".isin("en", "de", "es", "fr"), "lang")
-      .when($"n_tokens" < 20, "too_short")
-      .when($"n_tokens" > 1000, "too_long")
-      .when($"n_stop" * 100L < $"n_tokens", "low_stopword")
     val w = Window.partitionBy($"fp", $"pre_reason".isNull)
       .orderBy($"doc_id")
     Tables.documents(s, d)
@@ -948,43 +949,52 @@ object TextOps extends QueryModule {
     // checkpoint between stages anyway.
     val staged = Scope.hold(curateStagedTable(s, d)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    val (nd, ndSmall) = curateNd(staged)
-    curateVerdict(staged, nd, ndSmall)
+    val (nd, ndHint) = curateNd(staged, curateLabels(staged))
+    curateVerdict(staged, nd, ndHint)
   }
 
-  /** The cascade's near-dup verdict stage over a (materialized) staged
-    * table: LSH pairs → touched labels → per-component quality argmax →
-    * (doc_id, nd_reason = 'near_dup') for every non-survivor. Extracted
-    * so the STAGED execution (ScaleBench `curate_staged`: each stage
-    * its own Spark session writing parquet, shuffle scratch freed at
-    * every stop — the single-host form of checkpoint-between-stages)
-    * runs bit-the-same code as the fused [[curateCorpus]]; parity is
-    * hash-checked across the two forms at scale. Returns the verdict
-    * frame plus whether the label set fit the broadcast cap (the final
-    * join reuses the decision). */
-  private[graft] def curateNd(staged: DataFrame): (DataFrame, Boolean) = {
+  /** The cascade's stage-3 input: the staged rows no stage-1/2 rule
+    * dropped, as (doc_id, text). */
+  private[graft] def curateSurvivors(staged: DataFrame): DataFrame = {
     import staged.sparkSession.implicits._
-    val survivors = staged.where($"reason12".isNull)
-      .select($"doc_id", $"text")
-    // Only documents with at least one VERIFIED near-dup edge can
-    // receive a near_dup verdict, so the survivor-selection stage runs
-    // on the TOUCHED label set (near-dup-family-bounded, checkpointed),
-    // not the corpus: the previous form expanded labels to every
-    // survivor through connectedComponents' left join + total sort,
-    // windowed 10⁷ mostly-singleton rows, and then paid that subtree
-    // AGAIN when the final orderBy's range-partition sampling pass
-    // re-executed it — the dominant unattributed cost between the
-    // stage-barrier figures and the fused figure at 10⁷.
-    val labels = graft.operators.NearDup.touchedLabels(
-      graft.operators.NearDup.pairsOver(survivors))
+    staged.where($"reason12".isNull).select($"doc_id", $"text")
+  }
+
+  /** The touched labels (doc_id, comp) of the survivors' verified
+    * near-dup pairs — eager, checkpointed, held in the caller's
+    * [[graft.Scope]]. */
+  private[graft] def curateLabels(staged: DataFrame): DataFrame =
+    NearDup.touchedLabels(NearDup.pairsOver(curateSurvivors(staged)))
+
+  /** The cascade's near-dup verdict stage over a (materialized) staged
+    * table, from its [[curateLabels]]: per-component quality argmax →
+    * (doc_id, nd_reason = 'near_dup') for every non-survivor. Split at
+    * the label set so the STAGED executions (ScaleBench `curate_staged`:
+    * each stage its own Spark session writing parquet, shuffle scratch
+    * freed at every stop — the single-host form of
+    * checkpoint-between-stages; `curate_stages`: barriers inside one
+    * session) run bit-the-same code as the fused [[curateCorpus]];
+    * parity is hash-checked across the forms at scale. Returns the
+    * verdict frame plus the label set's capped-broadcast hint (the final
+    * join reuses the decision).
+    *
+    * Only documents with at least one VERIFIED near-dup edge can
+    * receive a near_dup verdict, so the survivor-selection stage runs
+    * on the TOUCHED label set (near-dup-family-bounded, checkpointed),
+    * not the corpus: the previous form expanded labels to every
+    * survivor through connectedComponents' left join + total sort,
+    * windowed 10⁷ mostly-singleton rows, and then paid that subtree
+    * AGAIN when the final orderBy's range-partition sampling pass
+    * re-executed it — the dominant unattributed cost between the
+    * stage-barrier figures and the fused figure at 10⁷. */
+  private[graft] def curateNd(staged: DataFrame, labels: DataFrame)
+      : (DataFrame, NearDup.BroadcastHint) = {
+    import staged.sparkSession.implicits._
     // checkpointed → the count is cheap driver metadata; under the cap
     // the label side broadcasts (the cached staged table never
     // re-shuffles), above it (adversarial mostly-duplicate corpora)
     // the joins fall back to shuffle
-    val labelsSmall =
-      labels.count() <= graft.operators.NearDup.VerifyIdsBroadcastCap
-    def hinted(df: DataFrame): DataFrame =
-      if (labelsSmall) broadcast(df) else df
+    val hinted = NearDup.cappedHint(labels.count())
     // quality scores from the staged table, not a second parquet scan
     // through textStats: the label set filters the join BEFORE the
     // text-local qualityScore projection, so scoring work is
@@ -997,15 +1007,15 @@ object TextOps extends QueryModule {
       .withColumn("survivor_id", first($"doc_id").over(wSurv))
       .where($"doc_id" =!= $"survivor_id")
       .select($"doc_id", lit("near_dup").as("nd_reason"))
-    (nd, labelsSmall)
+    (nd, hinted)
   }
 
   /** Final verdict join of the cascade — see [[curateNd]]. */
   private[graft] def curateVerdict(staged: DataFrame, nd: DataFrame,
-      ndSmall: Boolean): DataFrame = {
+      ndHint: NearDup.BroadcastHint): DataFrame = {
     import staged.sparkSession.implicits._
     staged.select($"doc_id", $"n_tokens", $"reason12")
-      .join(if (ndSmall) broadcast(nd) else nd, Seq("doc_id"), "left")
+      .join(ndHint(nd), Seq("doc_id"), "left")
       .select($"doc_id", $"n_tokens",
         coalesce($"reason12", $"nd_reason", lit("kept")).as("verdict"))
       .orderBy($"doc_id")

@@ -81,60 +81,30 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Map[Long, Long]]()
   }
 
-  /** Bottom-k sketch of a hash-valued column: the k SMALLEST DISTINCT
-    * values, kept sorted ascending. A bottom-k (KMV) sketch is the
-    * classic mergeable distinct-set summary — the k smallest of a union
-    * is computable from the k smallest of each part, so Spark's partial
-    * aggregation keeps per-task state at k entries no matter how many
-    * rows flow through, and the result is independent of merge order
-    * (it is a pure set property). Used by
-    * [[graft.operators.TextOps.sourceOverlap]] for cross-source Jaccard
-    * estimation; unlike the estimate-carrying sketches (MG above), the
-    * sketch CONTENT here is deterministic, so it is oracle-gated, not
-    * just spec-pinned.
+  /** The bounded sorted buffer behind every top-K aggregate: the best
+    * `k` elements under the strict total order [[before]], best first —
+    * the bounded-state form of `row_number() OVER (ORDER BY …) <= k`,
+    * with IDENTICAL selection and tie semantics. The window form SORTS
+    * every candidate row of a group; on a probes × corpus truth join
+    * that sort is the engine's largest transient (10¹⁰ rows at 10⁸
+    * vectors × 100 probes — its spill files, not the data, are what die
+    * first on a single host, and on a cluster it is a full extra
+    * exchange+sort of the candidate volume). This buffer carries K
+    * entries per group instead: map-side partial aggregation reduces
+    * each partition to ≤ K rows per group before anything shuffles, so
+    * the exchange is |groups| × K × tasks — kilobytes — and nothing
+    * ever sorts more than K entries.
     *
-    * reduce is O(log k) for the common miss (value above the current
-    * k-th) and O(k) for a hit — fine for k in the hundreds. */
-  /** Exact top-K by (cosine DESC, neighbor_id ASC) — the bounded-state
-    * form of `row_number() OVER (ORDER BY cosine DESC, neighbor_id)
-    * <= k`, with IDENTICAL selection and tie semantics. The window form
-    * SORTS every candidate row of a group; on a probes × corpus truth
-    * join that sort is the engine's largest transient (10¹⁰ rows at
-    * 10⁸ vectors × 100 probes — its spill files, not the data, are
-    * what die first on a single host, and on a cluster it is a full
-    * extra exchange+sort of the candidate volume). This aggregate
-    * carries a K-entry sorted buffer per group instead: map-side
-    * partial aggregation reduces each partition to ≤ K rows per probe
-    * before anything shuffles, so the exchange is |probes| × K × tasks
-    * — kilobytes — and nothing ever sorts more than K entries.
-    *
-    * Output: neighbor ids in rank order (ties already resolved).
-    * reduce is O(k) worst case; k is the top-K ask (≤ tens).
-    *
-    * NaN contract: scores are ordered by `java.lang.Double.compare`,
-    * Spark's own DoubleType sort order — NaN ranks above every finite
-    * score and -0.0 below 0.0 — so the window equivalence holds even
-    * for degenerate scores (cosine of a zero-norm vector). */
-  abstract class TopKByScoreBase[OUT](k: Int)
-      extends Aggregator[(Long, Double), Seq[(Long, Double)], OUT] {
-    // strict total order on (id, score) entries with distinct ids:
-    // rank better = higher score, then lower id. Scores compare via
-    // java.lang.Double.compare — a total order even for NaN (ranked
-    // largest) and -0.0 (< 0.0), exactly Spark's DoubleType sort
-    // ordering, so the window-equivalence contract holds on degenerate
-    // scores (e.g. cosine of a zero-norm vector) too; `>`/`==` would
-    // both be false for NaN and silently break the sorted-buffer
-    // invariant reduce/merge rely on.
-    private def better(a: (Long, Double), b: (Long, Double)): Boolean = {
-      val c = java.lang.Double.compare(a._2, b._2)
-      c > 0 || (c == 0 && a._1 < b._1)
-    }
-    def zero: Seq[(Long, Double)] = Vector.empty
-    def reduce(buf: Seq[(Long, Double)], x: (Long, Double))
-        : Seq[(Long, Double)] = {
-      if (buf.size >= k && !better(x, buf.last)) buf
+    * reduce is O(k) worst case; k is the top-K ask (≤ tens). */
+  abstract class TopKBuffer[E, OUT](k: Int)
+      extends Aggregator[E, Seq[E], OUT] {
+    /** Strict total order on entries: `a` ranks ahead of `b`. */
+    protected def before(a: E, b: E): Boolean
+    def zero: Seq[E] = Vector.empty
+    def reduce(buf: Seq[E], x: E): Seq[E] = {
+      if (buf.size >= k && !before(x, buf.last)) buf
       else {
-        val i = buf.indexWhere(e => better(x, e)) match {
+        val i = buf.indexWhere(e => before(x, e)) match {
           case -1 => buf.size
           case p => p
         }
@@ -142,18 +112,39 @@ object Aggregators {
         ((v.take(i) :+ x) ++ v.drop(i)).take(k)
       }
     }
-    def merge(a: Seq[(Long, Double)], b: Seq[(Long, Double)])
-        : Seq[(Long, Double)] = {
-      val out = Vector.newBuilder[(Long, Double)]
+    def merge(a: Seq[E], b: Seq[E]): Seq[E] = {
+      val out = Vector.newBuilder[E]
       var i = 0; var j = 0; var n = 0
       while (n < k && (i < a.size || j < b.size)) {
-        if (j >= b.size || (i < a.size && better(a(i), b(j)))) {
+        if (j >= b.size || (i < a.size && before(a(i), b(j)))) {
           out += a(i); i += 1
         } else { out += b(j); j += 1 }
         n += 1
       }
       out.result()
     }
+  }
+
+  /** The score-first rank order of every top-K surface: higher score
+    * ahead, equal scores decided by `idsAhead`. Scores compare exactly
+    * as Spark's DoubleType sort does (`SQLOrderingUtil.compareDoubles`):
+    * `java.lang.Double.compare`'s total order — NaN ranked largest, NaN
+    * equal to NaN — except that -0.0 equals 0.0, so the window
+    * equivalence holds on degenerate scores (e.g. cosine of a zero-norm
+    * vector) too; `>`/`==` would both be false for NaN and silently
+    * break the sorted-buffer invariant reduce/merge rely on. */
+  private def scoreAhead(a: Double, b: Double, idsAhead: Boolean): Boolean = {
+    val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil
+      .compareDoubles(a, b)
+    c > 0 || (c == 0 && idsAhead)
+  }
+
+  /** Exact top-K by (score DESC, id ASC) over (id, score) entries — e.g.
+    * (neighbor_id, cosine) per probe. */
+  abstract class TopKByScoreBase[OUT](k: Int)
+      extends TopKBuffer[(Long, Double), OUT](k) {
+    protected def before(a: (Long, Double), b: (Long, Double)): Boolean =
+      scoreAhead(a._2, b._2, a._1 < b._1)
     def bufferEncoder: Encoder[Seq[(Long, Double)]] =
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Seq[(Long, Double)]]()
@@ -167,47 +158,16 @@ object Aggregators {
     * the callers feed it (magnitudes ≪ 2⁵³, injectively mapped, so
     * equality — and therefore tie-break behavior — is preserved). */
   class TopKScorePayloadAgg(k: Int)
-      extends Aggregator[(Long, Double, Long),
-        Seq[(Long, Double, Long)], Seq[(Long, Double, Long)]] {
-    private def better(a: (Long, Double, Long),
-        b: (Long, Double, Long)): Boolean = {
-      // Double.compare: total order under NaN, see TopKByScoreBase.
-      val c = java.lang.Double.compare(a._2, b._2)
-      c > 0 || (c == 0 && a._1 < b._1)
-    }
-    def zero: Seq[(Long, Double, Long)] = Vector.empty
-    def reduce(buf: Seq[(Long, Double, Long)], x: (Long, Double, Long))
-        : Seq[(Long, Double, Long)] = {
-      if (buf.size >= k && !better(x, buf.last)) buf
-      else {
-        val i = buf.indexWhere(e => better(x, e)) match {
-          case -1 => buf.size
-          case p => p
-        }
-        val v = buf.toVector
-        ((v.take(i) :+ x) ++ v.drop(i)).take(k)
-      }
-    }
-    def merge(a: Seq[(Long, Double, Long)], b: Seq[(Long, Double, Long)])
-        : Seq[(Long, Double, Long)] = {
-      val out = Vector.newBuilder[(Long, Double, Long)]
-      var i = 0; var j = 0; var n = 0
-      while (n < k && (i < a.size || j < b.size)) {
-        if (j >= b.size || (i < a.size && better(a(i), b(j)))) {
-          out += a(i); i += 1
-        } else { out += b(j); j += 1 }
-        n += 1
-      }
-      out.result()
-    }
+      extends TopKBuffer[(Long, Double, Long), Seq[(Long, Double, Long)]](k) {
+    protected def before(a: (Long, Double, Long),
+        b: (Long, Double, Long)): Boolean =
+      scoreAhead(a._2, b._2, a._1 < b._1)
     def finish(buf: Seq[(Long, Double, Long)]): Seq[(Long, Double, Long)] =
       buf
     def bufferEncoder: Encoder[Seq[(Long, Double, Long)]] =
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Seq[(Long, Double, Long)]]()
-    def outputEncoder: Encoder[Seq[(Long, Double, Long)]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[(Long, Double, Long)]]()
+    def outputEncoder: Encoder[Seq[(Long, Double, Long)]] = bufferEncoder
   }
 
   /** PAIR-keyed top-K under (score DESC, id_a ASC, id_b ASC) — the
@@ -216,48 +176,17 @@ object Aggregators {
     * source); packing the pair into one long would cap ids at 32 bits,
     * which a 100 TB corpus exceeds. */
   class TopKPairsByScoreAgg(k: Int)
-      extends Aggregator[(Long, Long, Double),
-        Seq[(Long, Long, Double)], Seq[(Long, Long, Double)]] {
-    private def better(a: (Long, Long, Double),
-        b: (Long, Long, Double)): Boolean = {
-      // Double.compare: total order under NaN, see TopKByScoreBase.
-      val c = java.lang.Double.compare(a._3, b._3)
-      c > 0 || (c == 0 &&
-        (a._1 < b._1 || (a._1 == b._1 && a._2 < b._2)))
-    }
-    def zero: Seq[(Long, Long, Double)] = Vector.empty
-    def reduce(buf: Seq[(Long, Long, Double)], x: (Long, Long, Double))
-        : Seq[(Long, Long, Double)] = {
-      if (buf.size >= k && !better(x, buf.last)) buf
-      else {
-        val i = buf.indexWhere(e => better(x, e)) match {
-          case -1 => buf.size
-          case p => p
-        }
-        val v = buf.toVector
-        ((v.take(i) :+ x) ++ v.drop(i)).take(k)
-      }
-    }
-    def merge(a: Seq[(Long, Long, Double)], b: Seq[(Long, Long, Double)])
-        : Seq[(Long, Long, Double)] = {
-      val out = Vector.newBuilder[(Long, Long, Double)]
-      var i = 0; var j = 0; var n = 0
-      while (n < k && (i < a.size || j < b.size)) {
-        if (j >= b.size || (i < a.size && better(a(i), b(j)))) {
-          out += a(i); i += 1
-        } else { out += b(j); j += 1 }
-        n += 1
-      }
-      out.result()
-    }
+      extends TopKBuffer[(Long, Long, Double), Seq[(Long, Long, Double)]](k) {
+    protected def before(a: (Long, Long, Double),
+        b: (Long, Long, Double)): Boolean =
+      scoreAhead(a._3, b._3,
+        a._1 < b._1 || (a._1 == b._1 && a._2 < b._2))
     def finish(buf: Seq[(Long, Long, Double)]): Seq[(Long, Long, Double)] =
       buf
     def bufferEncoder: Encoder[Seq[(Long, Long, Double)]] =
       org.apache.spark.sql.catalyst.encoders
         .ExpressionEncoder[Seq[(Long, Long, Double)]]()
-    def outputEncoder: Encoder[Seq[(Long, Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[(Long, Long, Double)]]()
+    def outputEncoder: Encoder[Seq[(Long, Long, Double)]] = bufferEncoder
   }
 
   /** Ids-only top-K (recall truth sets, hit joins). */
@@ -272,9 +201,7 @@ object Aggregators {
   class TopKScorePairsAgg(k: Int)
       extends TopKByScoreBase[Seq[(Long, Double)]](k) {
     def finish(buf: Seq[(Long, Double)]): Seq[(Long, Double)] = buf
-    def outputEncoder: Encoder[Seq[(Long, Double)]] =
-      org.apache.spark.sql.catalyst.encoders
-        .ExpressionEncoder[Seq[(Long, Double)]]()
+    def outputEncoder: Encoder[Seq[(Long, Double)]] = bufferEncoder
   }
 
   /** Long sibling of [[BottomKAgg]]: the k SMALLEST DISTINCT longs,
@@ -319,6 +246,20 @@ object Aggregators {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder[Seq[Long]]()
   }
 
+  /** Bottom-k sketch of a hash-valued column: the k SMALLEST DISTINCT
+    * values, kept sorted ascending. A bottom-k (KMV) sketch is the
+    * classic mergeable distinct-set summary — the k smallest of a union
+    * is computable from the k smallest of each part, so Spark's partial
+    * aggregation keeps per-task state at k entries no matter how many
+    * rows flow through, and the result is independent of merge order
+    * (it is a pure set property). Used by
+    * [[graft.operators.TextOps.sourceOverlap]] for cross-source Jaccard
+    * estimation; unlike the estimate-carrying sketches (MG above), the
+    * sketch CONTENT here is deterministic, so it is oracle-gated, not
+    * just spec-pinned.
+    *
+    * reduce is O(log k) for the common miss (value above the current
+    * k-th) and O(k) for a hit — fine for k in the hundreds. */
   class BottomKAgg(k: Int)
       extends Aggregator[String, Seq[String], Seq[String]] {
     def zero: Seq[String] = Vector.empty

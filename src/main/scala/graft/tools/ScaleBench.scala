@@ -88,6 +88,29 @@ object ScaleBench {
       .map(_.toLong).toArray
   }
 
+  /** Per q_id, the top-10 vec_id set of (q_id, vec_id, score) candidates
+    * under (score DESC, vec_id) — the bounded top-K aggregate, collected:
+    * the truth and the approximate side of every recall rung. */
+  private def top10Sets(
+      cands: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] = {
+    import cands.sparkSession.implicits._
+    val tk10 = udaf(new graft.pipeline.Aggregators.TopKCosineAgg(10),
+      org.apache.spark.sql.catalyst.encoders
+        .ExpressionEncoder[(Long, Double)]())
+    cands.groupBy($"q_id")
+      .agg(tk10($"vec_id", col(cands.columns(2))).as("nbrs"))
+      .as[(Long, Seq[Long])].collect()
+      .map { case (q, ns) => q -> ns.toSet }.toMap
+  }
+
+  /** (hits, truth size) of `approx` against `truth`, summed over the
+    * truth's probes. */
+  private def recallHits(truth: Map[Long, Set[Long]],
+      approx: Map[Long, Set[Long]]): (Int, Int) =
+    truth.toSeq.map { case (q, ts) =>
+      (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
+    }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+
   private def vec(id: Long): Array[Float] = {
     val base = if (id % 97 == 1) id - 1 else id
     val v = Array.tabulate(64) { d =>
@@ -521,40 +544,21 @@ object ScaleBench {
           .persist(StorageLevel.MEMORY_AND_DISK)
         df.count(); df
       }
-      val survivors = staged.where(col("reason12").isNull)
-        .select(col("doc_id"), col("text"))
       val pairs = timed("lsh_pairs") {
-        val df = graft.operators.NearDup.pairsOver(survivors)
+        val df = graft.operators.NearDup.pairsOver(
+            graft.operators.TextOps.curateSurvivors(staged))
           .persist(StorageLevel.MEMORY_AND_DISK)
         df.count(); df
       }
-      // mirrors the fused pass's TOUCHED-labels survivor stage
-      // (TextOps.curateCorpus): labels cover only docs with a verified
-      // edge, quality is scored post-join on touched rows only, and
-      // the small side broadcasts under the cap
+      // the fused pass's own TOUCHED-labels survivor stage
+      // (TextOps.curateNd), timed behind its own barrier
       val labels = timed("cc") {
         val df = graft.operators.NearDup.touchedLabels(pairs)
         df.count(); df // checkpoint-backed; the count pins the clock
       }
       timed("survivor_verdict") {
-        val small = labels.count() <=
-          graft.operators.NearDup.VerifyIdsBroadcastCap
-        def hinted(df: org.apache.spark.sql.DataFrame) =
-          if (small) broadcast(df) else df
-        val wSurv = org.apache.spark.sql.expressions.Window
-          .partitionBy(col("comp"))
-          .orderBy(col("quality_score").desc, col("doc_id"))
-        val nd = hinted(labels)
-          .join(staged.select(col("doc_id"), col("text")), Seq("doc_id"))
-          .withColumn("quality_score",
-            graft.operators.TextOps.qualityScore(col("text")))
-          .withColumn("survivor_id", first(col("doc_id")).over(wSurv))
-          .where(col("doc_id") =!= col("survivor_id"))
-          .select(col("doc_id"), lit("near_dup").as("nd_reason"))
-        staged.select(col("doc_id"), col("n_tokens"), col("reason12"))
-          .join(hinted(nd), Seq("doc_id"), "left")
-          .select(coalesce(col("reason12"), col("nd_reason"), lit("kept"))
-            .as("verdict"))
+        val (nd, ndHint) = graft.operators.TextOps.curateNd(staged, labels)
+        graft.operators.TextOps.curateVerdict(staged, nd, ndHint)
           .groupBy(col("verdict")).agg(count(lit(1))).collect()
       }
       staged.unpersist(false)
@@ -1178,6 +1182,9 @@ object ScaleBench {
     if (only.forall(_.contains("ivf2_deploy"))) {
       val cellTarget = 4000L
       val ladder = Seq(n / 4, n / 2, n).filter(_ >= 100000L).distinct
+      if (ladder.isEmpty)
+        println(s"""{"shape":"ivf2_deploy","n":$n,""" +
+          """"skipped":"every ladder size n/4, n/2, n is below 100000"}""")
       ladder.foreach { m =>
         val K = math.max(64L, m / cellTarget).toInt
         val S = math.max(8, math.ceil(math.sqrt(K.toDouble)).toInt)
@@ -1396,19 +1403,12 @@ object ScaleBench {
       val probeRows = probeIds.map(id => (id, ivf2Member(id, K)))
       val probesDf = probeRows.toDF("q_id", "qv")
         .withColumn("qn", graft.functions.VectorFunctions.l2Norm($"qv"))
-      val tk10 = udaf(
-        new graft.pipeline.Aggregators.TopKCosineAgg(10),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Long, Double)]())
       val tT0 = System.nanoTime()
-      val truth: Map[Long, Set[Long]] = standing
+      val truth = top10Sets(standing
         .join(broadcast(probesDf), $"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id",
           graft.functions.VectorFunctions
-            .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-        .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-        .as[(Long, Seq[Long])].collect()
-        .map { case (q, ns) => q -> ns.toSet }.toMap
+            .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
       val truthSec = (System.nanoTime() - tT0) / 1e9
       def sweep(idx: org.apache.spark.sql.DataFrame, idxSp: Int,
           idxSec: Double, configs: Seq[(Int, Int)]): Unit =
@@ -1418,20 +1418,15 @@ object ScaleBench {
             rankedCells2(cb2, qv, superProbe).take(nprobe)
               .map(c => (q, c))
           }.toDF("q_id", "centroid_id")
-          val approx: Map[Long, Set[Long]] = idx
+          val approx = top10Sets(idx
             .join(broadcast(probeCells), Seq("centroid_id"))
             .join(broadcast(probesDf), Seq("q_id"))
             .where($"vec_id" =!= $"q_id")
             .select($"q_id", $"vec_id",
               graft.functions.VectorFunctions
-                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
+                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
           val sec = (System.nanoTime() - t0) / 1e9
-          val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-            (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-          }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+          val (hit, tot) = recallHits(truth, approx)
           val ppm = hit.toLong * 1000000L / math.max(tot, 1)
           println(f"""{"shape":"ivf2_recall","n":$n,"k":$K,"s":$S,""" +
             f""""noise":$ivf2Noise%.2f,""" +
@@ -1481,20 +1476,15 @@ object ScaleBench {
             rankedCellsFlat(cbCentsF, cbNormsF, qv).take(nprobe)
               .map(c => (q, c))
           }.toDF("q_id", "centroid_id")
-          val approx: Map[Long, Set[Long]] = standingF
+          val approx = top10Sets(standingF
             .join(broadcast(probeCells), Seq("centroid_id"))
             .join(broadcast(probesDf), Seq("q_id"))
             .where($"vec_id" =!= $"q_id")
             .select($"q_id", $"vec_id",
               graft.functions.VectorFunctions
-                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
+                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
           val sec = (System.nanoTime() - t0) / 1e9
-          val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-            (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-          }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+          val (hit, tot) = recallHits(truth, approx)
           val ppm = hit.toLong * 1000000L / math.max(tot, 1)
           println(f"""{"shape":"ivf2_recall","n":$n,"k":$K,"s":$S,""" +
             f""""super_probe":0,"nprobe":$nprobe,""" +
@@ -1534,10 +1524,6 @@ object ScaleBench {
       val cellTarget = 4000L
       val K = math.max(64L, n / cellTarget).toInt
       val S = math.max(8, math.ceil(math.sqrt(K.toDouble)).toInt)
-      val tk10 = udaf(
-        new graft.pipeline.Aggregators.TopKCosineAgg(10),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Long, Double)]())
       Seq(("isotropic", false), ("clustered", true)).foreach {
         case (tag, hier) =>
           val codebook = (0L until K.toLong).map(c =>
@@ -1562,14 +1548,11 @@ object ScaleBench {
             (id, marginMember(hier, S, K, id)))
           val probesDf = probeRows.toDF("q_id", "qv")
             .withColumn("qn", graft.functions.VectorFunctions.l2Norm($"qv"))
-          val truth: Map[Long, Set[Long]] = standing
+          val truth = top10Sets(standing
             .join(broadcast(probesDf), $"vec_id" =!= $"q_id")
             .select($"q_id", $"vec_id",
               graft.functions.VectorFunctions
-                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
+                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
           val cbCentsF = codebook.map(_._2.map(_.toDouble)).toArray
           val cbNormsF = cbCentsF.map(c => math.sqrt(c.map(x => x * x).sum))
           def recallOf(idx: org.apache.spark.sql.DataFrame,
@@ -1577,19 +1560,14 @@ object ScaleBench {
             val probeCells = probeRows.flatMap { case (q, qv) =>
               cellsOf(qv).take(nprobe).map(c => (q, c))
             }.toDF("q_id", "centroid_id")
-            val approx: Map[Long, Set[Long]] = idx
+            val approx = top10Sets(idx
               .join(broadcast(probeCells), Seq("centroid_id"))
               .join(broadcast(probesDf), Seq("q_id"))
               .where($"vec_id" =!= $"q_id")
               .select($"q_id", $"vec_id",
                 graft.functions.VectorFunctions
-                  .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-              .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-              .as[(Long, Seq[Long])].collect()
-              .map { case (q, ns) => q -> ns.toSet }.toMap
-            val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-              (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-            }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+                  .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
+            val (hit, tot) = recallHits(truth, approx)
             hit.toLong * 1000000L / math.max(tot, 1)
           }
           // the flat-IVF reference: flat assignment + full-K ranking —
@@ -1644,10 +1622,6 @@ object ScaleBench {
       val trainSec = (System.nanoTime() - tT0) / 1e9
       // recall with a given codebook: two-level index (sp=4) + driver
       // cell ranking (sp=4, np=4) vs exact broadcast truth
-      val tk10 = udaf(
-        new graft.pipeline.Aggregators.TopKCosineAgg(10),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Long, Double)]())
       val probeIds = (0 until 100)
         .map(i => java.lang.Math.floorMod(mix(i * 15485863L + 11L), n))
         .distinct
@@ -1667,30 +1641,22 @@ object ScaleBench {
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         standing.count()
         try {
-          val truth: Map[Long, Set[Long]] = standing
+          val truth = top10Sets(standing
             .join(broadcast(probesDf), $"vec_id" =!= $"q_id")
             .select($"q_id", $"vec_id",
               graft.functions.VectorFunctions
-                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
+                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
           val probeCells = probeRows.flatMap { case (q, qv) =>
             rankedCells2(cb2, qv, 4).take(4).map(c => (q, c))
           }.toDF("q_id", "centroid_id")
-          val approx: Map[Long, Set[Long]] = standing
+          val approx = top10Sets(standing
             .join(broadcast(probeCells), Seq("centroid_id"))
             .join(broadcast(probesDf), Seq("q_id"))
             .where($"vec_id" =!= $"q_id")
             .select($"q_id", $"vec_id",
               graft.functions.VectorFunctions
-                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"cos").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
-          val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-            (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-          }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+                .cosineWithNorms($"qv", $"v", $"qn", $"nrm").as("cos")))
+          val (hit, tot) = recallHits(truth, approx)
           hit.toLong * 1000000L / math.max(tot, 1)
         } finally { standing.unpersist(false); () }
       }
@@ -1772,23 +1738,16 @@ object ScaleBench {
         .map(i => java.lang.Math.floorMod(mix(i * 15485863L + 11L), n))
         .distinct
       val probeRows = probeIds.map(id => (id, ivf2Member(id, K)))
-      val tk10 = udaf(
-        new graft.pipeline.Aggregators.TopKCosineAgg(10),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Long, Double)]())
       val probesDf = probeRows.toDF("q_id", "qv")
         .withColumn("qn2",
           graft.functions.VectorExpressions.array_dot($"qv", $"qv"))
       val tT0 = System.nanoTime()
-      val truth: Map[Long, Set[Long]] = indexed
+      val truth = top10Sets(indexed
         .join(broadcast(probesDf), $"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id",
           (-($"qn2" + $"nrm" * $"nrm" - lit(2.0) *
             graft.functions.VectorExpressions.array_dot($"qv", $"v")))
-            .as("score"))
-        .groupBy($"q_id").agg(tk10($"vec_id", $"score").as("nbrs"))
-        .as[(Long, Seq[Long])].collect()
-        .map { case (q, ns) => q -> ns.toSet }.toMap
+            .as("score")))
       val truthSec = (System.nanoTime() - tT0) / 1e9
       // nprobe=4 cells per probe, ranked by exact L2 to the centers
       // (driver: |probes| × K × D — bounded index metadata); the
@@ -1813,17 +1772,12 @@ object ScaleBench {
           score: org.apache.spark.sql.Column,
           avgRecon: Option[Double]): Unit = {
         val t0 = System.nanoTime()
-        val approx: Map[Long, Set[Long]] = idx
+        val approx = top10Sets(idx
           .join(broadcast(probeCells), Seq("centroid_id"))
           .where($"vec_id" =!= $"q_id")
-          .select($"q_id", $"vec_id", score.as("score"))
-          .groupBy($"q_id").agg(tk10($"vec_id", $"score").as("nbrs"))
-          .as[(Long, Seq[Long])].collect()
-          .map { case (q, ns) => q -> ns.toSet }.toMap
+          .select($"q_id", $"vec_id", score.as("score")))
         val sec = (System.nanoTime() - t0) / 1e9
-        val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-          (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-        }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+        val (hit, tot) = recallHits(truth, approx)
         val ppm = hit.toLong * 1000000L / math.max(tot, 1)
         val recon = avgRecon
           .map(r => f""""avg_recon":$r%.4f,""").getOrElse("")
@@ -1891,21 +1845,16 @@ object ScaleBench {
                   .pq_adc($"qres", $"codes", trainedRes)).as("score"))
               .groupBy($"q_id").agg(tkRK($"vec_id", $"score").as("cand"))
               .select($"q_id", explode($"cand").as("vec_id"))
-            val approx: Map[Long, Set[Long]] = sl
+            val approx = top10Sets(sl
               .join(indexed.select($"vec_id", $"v", $"nrm"),
                 Seq("vec_id"))
               .join(broadcast(probesDf), Seq("q_id"))
               .select($"q_id", $"vec_id",
                 (-($"qn2" + $"nrm" * $"nrm" - lit(2.0) *
                   graft.functions.VectorExpressions
-                    .array_dot($"qv", $"v"))).as("score"))
-              .groupBy($"q_id").agg(tk10($"vec_id", $"score").as("nbrs"))
-              .as[(Long, Seq[Long])].collect()
-              .map { case (q, ns) => q -> ns.toSet }.toMap
+                    .array_dot($"qv", $"v"))).as("score")))
             val sec = (System.nanoTime() - t0) / 1e9
-            val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-              (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-            }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+            val (hit, tot) = recallHits(truth, approx)
             val ppm = hit.toLong * 1000000L / math.max(tot, 1)
             println(f"""{"shape":"pq_rerank","n":$n,"k_coarse":$K,""" +
               f""""pq_m":8,"pq_k":$K,"nprobe":$nprobe,"r":$r,""" +
@@ -1962,20 +1911,13 @@ object ScaleBench {
       val probesDf = probeRows.toDF("q_id", "qv")
         .withColumn("qn2",
           graft.functions.VectorExpressions.array_dot($"qv", $"qv"))
-      val tk10 = udaf(
-        new graft.pipeline.Aggregators.TopKCosineAgg(10),
-        org.apache.spark.sql.catalyst.encoders
-          .ExpressionEncoder[(Long, Double)]())
       val tT0 = System.nanoTime()
-      val truth: Map[Long, Set[Long]] = corpus
+      val truth = top10Sets(corpus
         .join(broadcast(probesDf), $"vec_id" =!= $"q_id")
         .select($"q_id", $"vec_id",
           (-($"qn2" + $"nrm" * $"nrm" - lit(2.0) *
             graft.functions.VectorExpressions.array_dot($"qv", $"v")))
-            .as("score"))
-        .groupBy($"q_id").agg(tk10($"vec_id", $"score").as("nbrs"))
-        .as[(Long, Seq[Long])].collect()
-        .map { case (q, ns) => q -> ns.toSet }.toMap
+            .as("score")))
       val truthSec = (System.nanoTime() - tT0) / 1e9
       // probe-side routing: rank superProbe supers, then their
       // children (super_probe = 2 is ivf2_recall's guidance against an
@@ -2027,20 +1969,15 @@ object ScaleBench {
                 .pq_adc($"qres", $"codes", book)).as("score"))
             .groupBy($"q_id").agg(tkR($"vec_id", $"score").as("cand"))
             .select($"q_id", explode($"cand").as("vec_id"))
-          val approx: Map[Long, Set[Long]] = corpus
+          val approx = top10Sets(corpus
             .join(broadcast(sl), Seq("vec_id"))
             .join(broadcast(probesDf), Seq("q_id"))
             .select($"q_id", $"vec_id",
               (-($"qn2" + $"nrm" * $"nrm" - lit(2.0) *
                 graft.functions.VectorExpressions.array_dot($"qv", $"v")))
-                .as("score"))
-            .groupBy($"q_id").agg(tk10($"vec_id", $"score").as("nbrs"))
-            .as[(Long, Seq[Long])].collect()
-            .map { case (q, ns) => q -> ns.toSet }.toMap
+                .as("score")))
           val sec = (System.nanoTime() - t0) / 1e9
-          val (hit, tot) = truth.toSeq.map { case (q, ts) =>
-            (approx.getOrElse(q, Set.empty).intersect(ts).size, ts.size)
-          }.reduce((a, b) => (a._1 + b._1, a._2 + b._2))
+          val (hit, tot) = recallHits(truth, approx)
           val ppm = hit.toLong * 1000000L / math.max(tot, 1)
           println(f"""{"shape":"ivf2pq_deploy","n":$n,"k":$K,"s":$S,""" +
             f""""kernel":"$tag","pq_m":8,"pq_k":256,"nprobe":$nprobe,""" +
@@ -2149,12 +2086,13 @@ object ScaleBench {
       rmrf(s"$curDir/documents.parquet") // staged table carries the text
       // stage 2: LSH pairs → touched labels → near-dup verdicts
       val s2 = session("graft-scale-staged")
-      var ndSmall = false
+      var ndHint = graft.operators.NearDup.BroadcastHint(false)
       val sec2 = staged {
         val st = s2.read.parquet(s"$dir/curate_staged.parquet")
-        val (nd, small) = graft.operators.TextOps.curateNd(st)
+        val (nd, hint) = graft.operators.TextOps.curateNd(st,
+          graft.operators.TextOps.curateLabels(st))
         nd.write.mode("overwrite").parquet(s"$dir/curate_nd.parquet")
-        ndSmall = small
+        ndHint = hint
       }
       // what this stage held (LSH checkpoint, staged cache) must be
       // freed while THIS context is alive — freeing it on a dead
@@ -2167,7 +2105,7 @@ object ScaleBench {
       val sec3 = staged {
         val st = s3.read.parquet(s"$dir/curate_staged.parquet")
         val nd = s3.read.parquet(s"$dir/curate_nd.parquet")
-        out = xorOf(graft.operators.TextOps.curateVerdict(st, nd, ndSmall))
+        out = xorOf(graft.operators.TextOps.curateVerdict(st, nd, ndHint))
       }
       graft.Scope.close()
       s3.stop()

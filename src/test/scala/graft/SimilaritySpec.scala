@@ -7,6 +7,51 @@ class SimilaritySpec extends SparkSpecBase {
   private def physicalPlan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
+  /** Every top-K entry point against its row_number window over a
+    * (q_id, neighbor_id, cosine) frame: per q_id, the aggregate's entries
+    * in rank order equal the window's first `k` rows — ids-only and
+    * (id, score) under (cosine DESC, neighbor_id), the payload form
+    * carrying `pay` through, and the pair-keyed form under (cosine DESC,
+    * id_a, id_b) with id_a = neighbor_id % 5, so equal scores on one
+    * id_a leave id_b (= neighbor_id) to break the tie. */
+  private def assertTopKMatchesWindow(
+      df: org.apache.spark.sql.DataFrame, k: Int): Unit = {
+    import spark.implicits._
+    import org.apache.spark.sql.Column
+    import org.apache.spark.sql.functions._
+    import org.apache.spark.sql.expressions.Window
+    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+    import graft.pipeline.Aggregators._
+    val in = df.withColumn("id_a", $"neighbor_id" % 5)
+      .withColumn("pay", $"neighbor_id" * 3 + $"q_id")
+      .repartition(8) // force multi-partition partial+merge
+    def window(keys: Column*)(out: Column): Map[Long, Seq[Long]] = in
+      .withColumn("rank", row_number().over(
+        Window.partitionBy($"q_id").orderBy($"cosine".desc +: keys: _*)))
+      .where($"rank" <= k)
+      .groupBy($"q_id")
+      .agg(sort_array(collect_list(struct($"rank", out.as("v")))).as("l"))
+      .select($"q_id", $"l.v").as[(Long, Seq[Long])].collect().toMap
+    def topK(agg: org.apache.spark.sql.expressions.UserDefinedFunction,
+        args: Column*)(out: String): Map[Long, Seq[Long]] = in
+      .groupBy($"q_id").agg(agg(args: _*).as("l"))
+      .select($"q_id", col(out)).as[(Long, Seq[Long])].collect().toMap
+    val byId = window($"neighbor_id")($"neighbor_id")
+    val pairEnc = ExpressionEncoder[(Long, Double)]()
+    assert(topK(udaf(new TopKCosineAgg(k), pairEnc),
+      $"neighbor_id", $"cosine")("l") === byId)
+    assert(topK(udaf(new TopKScorePairsAgg(k), pairEnc),
+      $"neighbor_id", $"cosine")("l._1") === byId)
+    assert(topK(udaf(new TopKScorePayloadAgg(k),
+        ExpressionEncoder[(Long, Double, Long)]()),
+      $"neighbor_id", $"cosine", $"pay")("l._3") ===
+      window($"neighbor_id")($"pay"))
+    assert(topK(udaf(new TopKPairsByScoreAgg(k),
+        ExpressionEncoder[(Long, Long, Double)]()),
+      $"id_a", $"neighbor_id", $"cosine")("l._2") ===
+      window($"id_a", $"neighbor_id")($"neighbor_id"))
+  }
+
   test("cosine top-k: ranks ordered by similarity, no cartesian product") {
     import spark.implicits._
     val df = Similarity.cosineTopK(spark, sfDir).cache()
@@ -324,6 +369,9 @@ class SimilaritySpec extends SparkSpecBase {
       .orderBy($"cosine".desc, $"neighbor_id")
       .select($"neighbor_id").as[Long].take(10).toSeq
     assert(ordered === wantOrdered)
+    // the payload and pair-keyed aggregators share the buffer and its
+    // order; the pair form's (cosine, id_a) ties fall to id_b
+    assertTopKMatchesWindow(df, 10)
   }
 
   test("labelBucketTopK planted label skew: the dominant label is " +
@@ -577,8 +625,8 @@ class SimilaritySpec extends SparkSpecBase {
     import org.apache.spark.sql.expressions.Window
     // zero-norm vectors yield cosine = NaN; Spark's DESC sort puts NaN
     // first. A naive `>`/`==` comparator is never true for NaN, which
-    // breaks the sorted-buffer invariant — this pins the
-    // java.lang.Double.compare ordering against the window on a mix of
+    // breaks the sorted-buffer invariant — this pins the buffer's
+    // Double.compare-based ordering against the window on a mix of
     // NaN, negative, -0.0/0.0 and tied finite scores.
     val rows = (for {
       q <- 0L until 3L
@@ -612,6 +660,10 @@ class SimilaritySpec extends SparkSpecBase {
       .select($"q_id", $"neighbor_id")
       .as[(Long, Long)].collect().toSeq
     assert(got === want)
+    // every entry point, over the full ranking: NaN first, -0.0 tied
+    // with 0.0 (Spark's sort treats them as equal, so the id decides),
+    // and the pair form's (score, id_a) ties broken by id_b
+    assertTopKMatchesWindow(df, 40)
   }
 
   test("ann recall: multi-probe dominates single-cell per probe (superset candidates)") {
