@@ -25,9 +25,11 @@ object VectorFunctions {
   def l2Norm(v: Column): Column = sqrt(dot(v, v))
 
   /** Cosine similarity given precomputed norms (preferred: compute each
-    * vector's norm once, not once per pair). */
+    * vector's norm once, not once per pair). NULL when a norm is zero,
+    * as DuckDB's division by zero gives: a try-division, because under
+    * ANSI mode a plain `/` raises DIVIDE_BY_ZERO and fails the query. */
   def cosineWithNorms(a: Column, b: Column, na: Column, nb: Column): Column =
-    dot(a, b) / (na * nb)
+    try_divide(dot(a, b), na * nb)
 
   /** Cosine similarity of two double arrays. */
   def cosine(a: Column, b: Column): Column =

@@ -111,9 +111,12 @@ object NearDup extends QueryModule {
   /** Near-duplicate pairs: LSH candidates verified with exact shingle
     * Jaccard >= tau.
     *
-    * Eager: calling this LAUNCHES jobs at once (the candidate set is
-    * localCheckpoint'ed and counted before the lazy verify plan is
-    * returned); the checkpoint is held in the caller's [[graft.Scope]]. */
+    * Eager: calling this LAUNCHES jobs at once — the candidate plan's
+    * shuffle stages, then ONE pass that materializes the candidate
+    * checkpoint and counts its pairs ([[countedCheckpoint]]); only a
+    * candidate set with 2·pairs above the id cap adds the exact id
+    * census ([[candidateBounded]]). The checkpoint is held in the
+    * caller's [[graft.Scope]]. */
   def minhashNearDup(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     // r13 measured and NOT spread: Par.spread over this projection was
@@ -159,21 +162,22 @@ object NearDup extends QueryModule {
     * Scale shape: the candidate list is localCheckpoint'ed (it is
     * near-dup-family-bounded — orders smaller than the corpus — and is
     * otherwise re-evaluated once per consumer subtree, the single most
-    * expensive recompute in the cascade), and its distinct doc_ids,
-    * when they fit [[VerifyIdsBroadcastCap]], semi-filter the document
-    * side BEFORE the shingle projection: shingle computation and the
-    * verify join then cost work ∝ the candidate set, never ∝ the
-    * corpus — at 10⁷ docs the old shape computed and shuffled 10⁷
-    * shingle arrays twice to serve ~2·10⁵ verified pairs.
+    * expensive recompute in the cascade) and counted by the same job
+    * ([[countedCheckpoint]]), and its doc_ids, when they fit
+    * [[VerifyIdsBroadcastCap]], semi-filter the document side BEFORE
+    * the shingle projection: shingle computation and the verify join
+    * then cost work ∝ the candidate set, never ∝ the corpus — at 10⁷
+    * docs the old shape computed and shuffled 10⁷ shingle arrays twice
+    * to serve ~2·10⁵ verified pairs.
     *
-    * r13 measured and deliberately NOT restructured BELOW the cap:
-    * materializing the bounded (doc_id, sh) table once via
-    * localCheckpoint (to kill the per-side duplicate scan+kernel) was
-    * A/B'd at the bench SF and LOST — the extra eager job +
-    * block-manager serialization of the shingle arrays cost more than
-    * the duplicate ~10³-doc kernel pass it saved (focused min-of-5:
-    * family sum 34.3 s → 40.0 s). Below the cap the dual-compute is
-    * kept (the bench path, byte-identical plans to r13).
+    * BELOW the cap no shingle table is materialized: localCheckpointing
+    * the bounded (doc_id, sh) table was A/B'd at the bench SF and LOST
+    * (the extra eager job + block-manager serialization of the shingle
+    * arrays cost more than the ~10³-doc kernel pass it saved; focused
+    * min-of-5: family sum 34.3 s → 40.0 s). Both verify sides join the
+    * SAME shingle frame ([[jaccardVerified]]), so Spark computes the
+    * semi-filter, the shingle kernel and its broadcast once and reuses
+    * the exchange for the second side.
     *
     * r14, ABOVE the cap only: the unfiltered corpus-sized shingle
     * table persists DISK_ONLY before the two verify-side joins, so the
@@ -190,8 +194,8 @@ object NearDup extends QueryModule {
       cap: Long = VerifyIdsBroadcastCap): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val cand = Scope.hold(cand0.localCheckpoint(true))
-    val bounded = candidateBounded(docs, cand, cap)
+    val (cand, pairs) = countedCheckpoint(cand0)
+    val bounded = candidateBounded(docs, cand, pairs, cap)
     val shBase = bounded.select($"doc_id",
       graft.functions.VectorExpressions.text_shingles($"text", 3).as("sh"))
     // above the cap candidateBounded passes `docs` itself through
@@ -204,12 +208,20 @@ object NearDup extends QueryModule {
 
   /** The exact shingle-Jaccard verify join: candidate (id_a, id_b) pairs
     * joined with both sides' (doc_id, sh) shingle sets, plus the
-    * intersection size `n_common` and the `jaccard` ratio. */
+    * intersection size `n_common` and the `jaccard` ratio. Output:
+    * id_b, id_a, sh_a, sh_b, n_common, jaccard.
+    *
+    * Both sides join `sh` itself and rename only after the joins: sides
+    * renamed before the join (`sh.select(... as sh_a)` vs `... as sh_b`)
+    * differ in their alias names, so Spark cannot see they are the same
+    * plan and computes and exchanges the shingle side twice; joined
+    * unrenamed, the second side is a `ReusedExchange`. */
   private def jaccardVerified(cand: DataFrame, sh: DataFrame): DataFrame = {
     import sh.sparkSession.implicits._
     cand
-      .join(sh.select($"doc_id".as("id_a"), $"sh".as("sh_a")), Seq("id_a"))
-      .join(sh.select($"doc_id".as("id_b"), $"sh".as("sh_b")), Seq("id_b"))
+      .join(sh.as("sa"), $"id_a" === $"sa.doc_id")
+      .join(sh.as("sb"), $"id_b" === $"sb.doc_id")
+      .select($"id_b", $"id_a", $"sa.sh".as("sh_a"), $"sb.sh".as("sh_b"))
       .withColumn("n_common",
         graft.functions.VectorExpressions.intersect_count($"sh_a", $"sh_b"))
       .withColumn("jaccard",
@@ -217,26 +229,43 @@ object NearDup extends QueryModule {
           (size($"sh_a") + size($"sh_b") - $"n_common"))
   }
 
-  /** The verify-side input restricted to ids that actually appear in a
-    * candidate pair: a broadcast semi-filter BEFORE any per-document
-    * projection, so downstream feature computation and join shuffles
-    * cost work ∝ the candidate set, never ∝ the corpus. `cand` must be
-    * cheap to re-evaluate (checkpointed or cache-backed) — the id
-    * census is one bounded driver-side count, the same class of
-    * decision input as a broadcast threshold check. Above
-    * [[VerifyIdsBroadcastCap]] the input passes through unfiltered:
-    * a semi-filter that cannot broadcast would shuffle the full
+  /** `cand` localCheckpoint'ed and its row count, from ONE job: the
+    * checkpoint is lazy and the counting pass ([[graft.ops.Par.idRange]])
+    * is what materializes it, where an eager checkpoint plus a count
+    * ran two. The checkpoint is held in the caller's [[graft.Scope]]. */
+  private[graft] def countedCheckpoint(cand: DataFrame): (DataFrame, Long) = {
+    val cp = Scope.hold(cand.localCheckpoint(false))
+    (cp, graft.ops.Par.idRange(cp, "id_a").fold(0L)(_._3))
+  }
+
+  /** The verify-side input restricted to ids that actually appear in one
+    * of the `pairs` (id_a, id_b) rows of `cand`: a broadcast semi-filter
+    * BEFORE any per-document projection, so downstream feature
+    * computation and join shuffles cost work ∝ the candidate set, never
+    * ∝ the corpus. `cand` must be cheap to re-evaluate (checkpointed or
+    * cache-backed).
+    *
+    * The filter applies exactly when the distinct id census fits
+    * [[VerifyIdsBroadcastCap]], but the census is only taken when the
+    * pair count cannot decide it: the ids number at most 2·pairs, so
+    * 2·pairs ≤ cap proves the census fits, and the filter broadcasts
+    * the id union as it stands (at most `cap` rows; a semi-join
+    * ignores the repeats) with no eager job and no shuffle. Above that
+    * bound the exact distinct count decides, one bounded driver-side
+    * count. Above the cap the input passes through unfiltered: a
+    * semi-filter that cannot broadcast would shuffle the full
     * document-width table and cost more than it saves. */
   private[graft] def candidateBounded(
-      docs: DataFrame, cand: DataFrame,
+      docs: DataFrame, cand: DataFrame, pairs: Long,
       cap: Long = VerifyIdsBroadcastCap): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
     val ids = cand.select($"id_a".as("doc_id"))
-      .union(cand.select($"id_b".as("doc_id"))).distinct()
-    if (cappedHint(ids.count(), cap).small)
-      docs.join(broadcast(ids), Seq("doc_id"), "leftsemi")
-    else docs
+      .union(cand.select($"id_b".as("doc_id")))
+    val semi =
+      if (2L * pairs <= cap) Some(ids)
+      else Some(ids.distinct()).filter(d => cappedHint(d.count(), cap).small)
+    semi.fold(docs)(i => docs.join(broadcast(i), Seq("doc_id"), "leftsemi"))
   }
 
   /** Character-level verification of the near-dup pairs: Levenshtein
@@ -636,17 +665,20 @@ object NearDup extends QueryModule {
     *
     * All three narrow inputs (affected cluster ids, remaining members,
     * removal set) ride capped broadcasts like every other bounded
-    * metadata side in this module. */
+    * metadata side in this module; a caller that already sized the
+    * removal set passes its hint as `removedHint`. */
   private[graft] def takedownSurvivors(
       docs: DataFrame,     // (doc_id, text, ...) the FULL corpus
       standing: DataFrame, // (doc_id, cluster_id, survivor_id, keep)
       pairs: DataFrame,    // (id_a, id_b) verified edges, standing corpus
-      removed: DataFrame   // (doc_id) takedown set
+      removed: DataFrame,  // (doc_id) takedown set
+      removedHint: Option[BroadcastHint] = None
   ): DataFrame = {
     val s = docs.sparkSession
     import s.implicits._
-    val BlastRadius(hinted, affected, members, subPairs) =
-      blastRadius(standing, pairs, removed)
+    val BlastRadius(hinted, affected, members, subPairs) = blastRadius(
+      standing, pairs, removed,
+      removedHint.getOrElse(cappedHint(removed.count())))
     val untouched = standing
       .join(hinted(affected), Seq("cluster_id"), "left_anti")
       .select($"doc_id", $"cluster_id", $"survivor_id", $"keep")
@@ -668,21 +700,21 @@ object NearDup extends QueryModule {
   }
 
   /** A takedown's blast radius through a standing component map: the
-    * capped-broadcast hint sized by the removal set, the standing
-    * clusters with a removed member, their remaining members, and the
-    * surviving edges among those members. Edges never cross a standing
-    * cluster boundary, so membership in `members` is exactly "in an
-    * affected cluster and not removed". */
+    * capped-broadcast hint sized by the removal set (`hinted`), the
+    * standing clusters with a removed member, their remaining members,
+    * and the surviving edges among those members. Edges never cross a
+    * standing cluster boundary, so membership in `members` is exactly
+    * "in an affected cluster and not removed". */
   private final case class BlastRadius(hinted: BroadcastHint,
       affected: DataFrame, members: DataFrame, subPairs: DataFrame)
 
   private def blastRadius(
       standing: DataFrame, // (doc_id, cluster_id, ...) component map
       pairs: DataFrame,    // (id_a, id_b) verified edges
-      removed: DataFrame   // (doc_id) takedown set
+      removed: DataFrame,  // (doc_id) takedown set
+      hinted: BroadcastHint
   ): BlastRadius = {
     import standing.sparkSession.implicits._
-    val hinted = cappedHint(removed.count())
     val rem = hinted(removed.select($"doc_id"))
     val affected = standing.join(rem, Seq("doc_id"), "leftsemi")
       .select($"cluster_id").distinct()
@@ -732,7 +764,7 @@ object NearDup extends QueryModule {
     val s = standingCore.sparkSession
     import s.implicits._
     val BlastRadius(hinted, affected, members, subPairs) =
-      blastRadius(standing, pairs, removed)
+      blastRadius(standing, pairs, removed, cappedHint(removed.count()))
     val untouched = standingCore
       .join(standing.select($"doc_id", $"cluster_id"), Seq("doc_id"))
       .join(hinted(affected), Seq("cluster_id"), "left_anti")
@@ -780,15 +812,18 @@ object NearDup extends QueryModule {
 
   /** The standing artifacts every takedown gate starts from, built the
     * way a deployment stores them: the corpus, its verified pair list
-    * (one pair computation, checkpointed) and the gate's removal set;
-    * `survivors()` checkpoints the standing [[survivorsFrom]] table over
-    * them. Both checkpoints are held in the caller's [[graft.Scope]]. */
+    * (one pair computation, checkpointed) and the gate's removal set
+    * with its capped-broadcast hint (`removedHint`, counted once, on
+    * first use); `survivors()` checkpoints the standing [[survivorsFrom]]
+    * table over them. Both checkpoints are held in the caller's
+    * [[graft.Scope]]. */
   private final class Standing(s: SparkSession, d: String) {
     import s.implicits._
     val docs: DataFrame = Tables.documents(s, d)
     val pairs: DataFrame = Scope.hold(
       minhashNearDup(s, d).select($"id_a", $"id_b").localCheckpoint(true))
     val removed: DataFrame = docs.where(TakedownSparkPred).select($"doc_id")
+    lazy val removedHint: BroadcastHint = cappedHint(removed.count())
     def survivors(): DataFrame =
       Scope.hold(survivorsFrom(docs, pairs).localCheckpoint(true))
   }
@@ -841,7 +876,9 @@ object NearDup extends QueryModule {
     import s.implicits._
     val st = new Standing(s, d)
     val standing = st.survivors()
-    val after = takedownSurvivors(st.docs, standing, st.pairs, st.removed)
+    val hinted = st.removedHint
+    val after = takedownSurvivors(st.docs, standing, st.pairs, st.removed,
+      Some(hinted))
     // remaining docs, old vs new labels — reused by three aggregates,
     // so it is checkpointed once (forcing `after` exactly once)
     val cmp = Scope.hold(standing
@@ -850,7 +887,7 @@ object NearDup extends QueryModule {
       .join(after.select($"doc_id", $"cluster_id".as("new_cluster"),
         $"survivor_id".as("new_surv")), Seq("doc_id"))
       .localCheckpoint(true))
-    val touched = standing.join(broadcast(st.removed), Seq("doc_id"),
+    val touched = standing.join(hinted(st.removed), Seq("doc_id"),
       "leftsemi")
     // r13 (guide §1.2: don't re-scan what one pass can answer): the
     // five metrics previously ran five aggregate branches — three
@@ -870,7 +907,7 @@ object NearDup extends QueryModule {
         .otherwise(0L)), lit(0L)).as("relabeled_docs"),
       coalesce(sum(when($"old_surv" =!= $"new_surv", 1L)
         .otherwise(0L)), lit(0L)).as("survivor_reassigned"))
-    val splitAgg = cmp.join(broadcast(touched.select(
+    val splitAgg = cmp.join(hinted(touched.select(
           $"cluster_id".as("old_cluster")).distinct()),
         Seq("old_cluster"), "leftsemi")
       .groupBy($"old_cluster")

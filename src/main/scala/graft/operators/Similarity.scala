@@ -157,9 +157,10 @@ object Similarity extends QueryModule {
   private def centroids(e: DataFrame): Codebook = {
     import e.sparkSession.implicits._
     // ids ASCENDING: NearestCentroidExpr breaks cosine ties toward the
-    // earliest entry, which must mean the lowest centroid_id
+    // earliest entry, which must mean the lowest centroid_id. Sorted on
+    // the driver: the ≤ 8 rows need no range-sort sample job and shuffle
     val rows = e.where($"vec_id" < 8)
-      .select($"vec_id", $"v", $"nrm").orderBy($"vec_id").collect()
+      .select($"vec_id", $"v", $"nrm").collect().sortBy(_.getLong(0))
     Codebook(
       rows.map(_.getLong(0)),
       rows.map(_.getSeq[Float](1).toArray.map(_.toDouble)),
@@ -436,8 +437,9 @@ object Similarity extends QueryModule {
     * Scale shape: the assignment is the one narrow codebook scan shared
     * with [[ivfAssign]]; the only join is cell-bounded (K is the lever
     * that keeps cells constant-size as the corpus grows — same argument
-    * as [[labelBucketTopK]]); the drop set rejoins the assignment on
-    * vec_id and is a small broadcast side in practice. */
+    * as [[labelBucketTopK]]); the verdict is one existence join of each
+    * vector against its cell-mates, so no drop set is built, deduplicated
+    * or joined back. */
   private val SemDedupTau = 0.3
 
   def semanticDedup(s: SparkSession, d: String): DataFrame = {
@@ -461,41 +463,33 @@ object Similarity extends QueryModule {
   }
 
   /** The drop rule of both semantic-dedup forms over an `assigned`
-    * corpus (carries vec_id, centroid_id, v, nrm). */
+    * corpus (carries vec_id, centroid_id, v, nrm): `is_dup` is a
+    * correlated EXISTS over the vector's lower-id cell-mates, which
+    * Spark plans as ONE ExistenceJoin keyed on the cell — a null cosine
+    * (a zero norm) matches nothing, as in the oracle. */
   private def semanticDedupOn(assigned: DataFrame): DataFrame = {
     import assigned.sparkSession.implicits._
     val cells = persistedCells(assigned)
-    val (a, b) = cellSides(cells)
-    val dropped = a.join(b, Seq("centroid_id"))
-      .where($"id_a" < $"id_b" &&
-        cosineWithNorms($"va", $"vb", $"na", $"nb") >= lit(SemDedupTau))
-      .select($"id_b".as("vec_id")).distinct()
-      .withColumn("hit", lit(true))
-    cells.select($"vec_id", $"centroid_id")
-      .join(dropped, Seq("vec_id"), "left")
-      .select($"vec_id", $"centroid_id",
-        coalesce($"hit", lit(false)).as("is_dup"))
+    // qualified on both sides: an unqualified outer name that the mate
+    // side also carries resolves inside the subquery, as a self-match
+    val dupOf = cells.as("mate").where(
+      $"mate.centroid_id" === $"cell.centroid_id".outer() &&
+        $"mate.vec_id" < $"cell.vec_id".outer() &&
+        cosineWithNorms($"mate.v", $"cell.v".outer(),
+          $"mate.nrm", $"cell.nrm".outer()) >= lit(SemDedupTau))
+    cells.as("cell")
+      .select($"vec_id", $"centroid_id", dupOf.exists().as("is_dup"))
       .orderBy($"vec_id")
   }
 
   /** The (vec_id, centroid_id, v, nrm) cell table of an assigned corpus,
-    * persisted (the cell pair join reads it on both sides and the
-    * verdict reads it again) and held in the caller's [[graft.Scope]]. */
+    * persisted (the cell join reads it on both sides) and held in the
+    * caller's [[graft.Scope]]. */
   private def persistedCells(assigned: DataFrame): DataFrame = {
     import assigned.sparkSession.implicits._
     Scope.hold(assigned
       .select($"vec_id", $"centroid_id", $"v", $"nrm")
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
-
-  /** The two sides of a cell-bounded pair join over `cells`:
-    * (centroid_id, id_a, va, na) and (centroid_id, id_b, vb, nb). */
-  private def cellSides(cells: DataFrame): (DataFrame, DataFrame) = {
-    import cells.sparkSession.implicits._
-    (cells.select($"centroid_id", $"vec_id".as("id_a"),
-      $"v".as("va"), $"nrm".as("na")),
-      cells.select($"centroid_id", $"vec_id".as("id_b"),
-        $"v".as("vb"), $"nrm".as("nb")))
   }
 
   /** Two-stage dedup cascade — the deployed shape of large-scale near-dup
@@ -533,20 +527,23 @@ object Similarity extends QueryModule {
   def cascadeDedup(s: SparkSession, d: String, tau: Double): DataFrame = {
     import s.implicits._
     val e = vecs(s, d)
-    val (a, b) = cellSides(persistedCells(assignTo(e, centroids(e))))
+    val cells = persistedCells(assignTo(e, centroids(e)))
+    val a = cells.select($"centroid_id", $"vec_id".as("id_a"),
+      $"v".as("va"), $"nrm".as("na"))
+    val b = cells.select($"centroid_id", $"vec_id".as("id_b"),
+      $"v".as("vb"), $"nrm".as("nb"))
     // checkpointed: the cell-bounded cosine join is the expensive
     // stage-1 pass and would otherwise re-run once per verify-join
     // consumer subtree; the candidate ids then bound the text side
     // BEFORE the token-array projection (NearDup.candidateBounded), so
     // the exact-verify stage costs work ∝ the candidate set, never a
     // second full-corpus tokenize + two corpus-width shuffles
-    val cand = Scope.hold(a.join(b, Seq("centroid_id"))
-      .select($"id_a", $"id_b",
-        cosineWithNorms($"va", $"vb", $"na", $"nb").as("cosine"))
-      .where($"id_a" < $"id_b" && $"cosine" >= lit(tau))
-      .localCheckpoint(true))
-    val docs = graft.operators.NearDup.candidateBounded(
-        Tables.documents(s, d), cand)
+    val (cand, pairs) = NearDup.countedCheckpoint(
+      a.join(b, Seq("centroid_id"))
+        .select($"id_a", $"id_b",
+          cosineWithNorms($"va", $"vb", $"na", $"nb").as("cosine"))
+        .where($"id_a" < $"id_b" && $"cosine" >= lit(tau)))
+    val docs = NearDup.candidateBounded(Tables.documents(s, d), cand, pairs)
       .select($"doc_id", array_distinct(split($"text", " ")).as("types"))
     cand
       .join(docs.select($"doc_id".as("id_a"), $"types".as("ta")), Seq("id_a"))

@@ -27,13 +27,6 @@ import graft.ops.{QueryDef, QueryModule, Tables}
   */
 object TextOps extends QueryModule {
 
-  /** #occurrences of literal `m` in `s` — exact integer arithmetic.
-    * Non-overlapping (both engines' replace), used only for substring
-    * counts where overlap cannot occur (the single-space count). */
-  private def occurrences(s: Column, m: String): Column =
-    ((length(s) - length(regexp_replace(s, java.util.regex.Pattern.quote(m), "")))
-      / m.length).cast("long")
-
   /** #tokens equal to `w` — token-exact, immune to the adjacent-marker
     * undercount that padded-substring counting has ("a a a" counts 3, not
     * 2): filter over the split array, identical in DuckDB as
@@ -67,10 +60,12 @@ object TextOps extends QueryModule {
   private val StopWords = Seq("the", "a", "of", "and")
 
   /** Whitespace token count for single-space-separated text:
-    * #spaces + 1 (0 for empty/blank). */
+    * #spaces + 1 (0 for empty/blank), the spaces counted as the length
+    * a plain `replace` removes — long arithmetic, no regex. */
   private[graft] def tokenCount(s: Column): Column =
     when(length(trim(s)) === 0, 0L)
-      .otherwise(occurrences(s, " ") + lit(1L))
+      .otherwise(length(s).cast("long") -
+        length(replace(s, lit(" "), lit(""))).cast("long") + lit(1L))
 
   /** The composite quality score (stopword-ratio weight + length-band
     * bonus) — ONE definition shared by [[textStats]] and

@@ -35,6 +35,25 @@ object Par {
     else df.repartition(target, key)
   }
 
+  /** (min, max, rows) of the LONG column `idCol` of `df`, or None when
+    * `df` is empty, from ONE job: a per-partition fold with no exchange,
+    * collected to the driver. Over a persisted or lazily checkpointed
+    * `df` the same pass also materializes it, so a caller gets the
+    * materialization and its census together, where an eager
+    * checkpoint or an agg(min, max).collect() ran extra jobs. */
+  def idRange(df: DataFrame, idCol: String): Option[(Long, Long, Long)] =
+    df.select(org.apache.spark.sql.functions.col(idCol)).rdd
+      .mapPartitions { rows =>
+        var (lo, hi, n) = (Long.MaxValue, Long.MinValue, 0L)
+        rows.foreach { r =>
+          val d = r.getLong(0); lo = math.min(lo, d); hi = math.max(hi, d); n += 1
+        }
+        Iterator((lo, hi, n))
+      }
+      .collect().filter(_._3 > 0)
+      .reduceOption((a, b) =>
+        (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
+
   /** Run independent Spark actions CONCURRENTLY from driver threads
     * (guide §2.6: actions are only sequential because driver code calls
     * them sequentially — overlapping lets the next job's tasks back-fill

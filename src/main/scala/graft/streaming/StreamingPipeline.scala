@@ -589,7 +589,7 @@ object StreamingPipeline {
         val batchIdx = graft.operators.NearDup.bandIndex(shingled)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          batchRange(batchIdx, "doc_id").foreach { case (lo, hi, rows) =>
+          graft.ops.Par.idRange(batchIdx, "doc_id").foreach { case (lo, hi, rows) =>
             val probeSide = readIfExists(s, indexDir, "doc_id LONG, bkey LONG")
               .map(liveIds).map(_.unionByName(batchIdx)).getOrElse(batchIdx)
             val cand = batchIdx.select($"bkey", $"doc_id".as("id_p"))
@@ -651,24 +651,6 @@ object StreamingPipeline {
       .map(t => broadcast(t.select(col(idCol)).distinct()))
       .map(t => (df: DataFrame) => df.join(t, Seq(idCol), "left_anti"))
       .getOrElse(identity[DataFrame] _)
-
-  /** (min, max, rows) of the LONG column `idCol` of a persisted batch,
-    * or None for an empty batch, which a sink then neither probes nor
-    * writes. The one pass also materializes `df`; it has no exchange,
-    * so it is one job, where an agg(min, max).collect() ran three. */
-  private def batchRange(df: DataFrame,
-      idCol: String): Option[(Long, Long, Long)] =
-    df.select(col(idCol)).rdd
-      .mapPartitions { rows =>
-        var (lo, hi, n) = (Long.MaxValue, Long.MinValue, 0L)
-        rows.foreach { r =>
-          val d = r.getLong(0); lo = math.min(lo, d); hi = math.max(hi, d); n += 1
-        }
-        Iterator((lo, hi, n))
-      }
-      .collect().filter(_._3 > 0)
-      .reduceOption((a, b) =>
-        (math.min(a._1, b._1), math.max(a._2, b._2), a._3 + b._3))
 
   /** Appends to `hitsDir` the rows of `cand` it does not already hold:
     * exactly-once under replay, because a retried batch re-derives the
@@ -834,7 +816,7 @@ object StreamingPipeline {
             $"v", $"nrm")
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
         try {
-          batchRange(assigned, "vec_id").foreach { case (lo, hi, _) =>
+          graft.ops.Par.idRange(assigned, "vec_id").foreach { case (lo, hi, _) =>
             val batchSide = assigned.select($"centroid_id",
               $"vec_id".as("id_i"), $"v".as("vi"), $"nrm".as("ni"),
               lit(false).as("standing"))

@@ -687,7 +687,7 @@ class NearDupSpec extends SparkSpecBase {
     val cand = Seq((3L, 7L), (7L, 11L)).toDF("id_a", "id_b")
     // under the cap: exactly the ids appearing in a pair survive, and
     // the filter is a broadcast semi-join (no shuffle on the doc side)
-    val bounded = NearDup.candidateBounded(docs, cand)
+    val bounded = NearDup.candidateBounded(docs, cand, pairs = 2L)
     assert(bounded.select($"doc_id").as[Long].collect().sorted
       === Array(3L, 7L, 11L))
     val plan = bounded.queryExecution.executedPlan.toString
@@ -696,7 +696,7 @@ class NearDupSpec extends SparkSpecBase {
     // over the cap (cap=0 forces it): unfiltered passthrough — a
     // semi-filter that cannot broadcast would shuffle the corpus-width
     // table and cost more than it saves
-    val over = NearDup.candidateBounded(docs, cand, cap = 0L)
+    val over = NearDup.candidateBounded(docs, cand, pairs = 2L, cap = 0L)
     assert(over.count() === n)
     // the bounded verify itself returns the same verified pairs as the
     // corpus-wide gate query (the semi-filter is candidate-complete:
@@ -707,6 +707,32 @@ class NearDupSpec extends SparkSpecBase {
     val viaPairs = NearDup.pairsOver(docs)
       .as[(Long, Long)].collect().toSet
     assert(viaPairs === full)
+  }
+
+  test("candidate census at the bound's edges: every cap verifies the same " +
+      "rows, and the semi-filter applies exactly when the distinct ids fit") {
+    import spark.implicits._
+    val docs = graft.ops.Tables.documents(spark, sfDir)
+      .select($"doc_id", $"text")
+    def cand = NearDup.candidatesFromBands(NearDup.bandedOver(docs))
+    val pairs = cand.count()
+    val ids = cand.select($"id_a".as("id")).union(cand.select($"id_b"))
+      .distinct().count()
+    assert(pairs > 0 && ids < 2 * pairs,
+      s"the fixture must share an id between pairs ($pairs pairs, $ids ids)")
+    def verified(cap: Option[Long]) = {
+      val v = cap.fold(NearDup.verifiedCandidates(docs, cand))(
+        c => NearDup.verifiedCandidates(docs, cand, cap = c))
+      val semi = v.queryExecution.executedPlan.toString.contains("LeftSemi")
+      (v.columns.toSeq, v.collect().toSet, semi)
+    }
+    val (cols, want, _) = verified(None)
+    assert(cols === Seq("id_b", "id_a", "sh_a", "sh_b", "n_common", "jaccard"))
+    for (cap <- Seq(0L, pairs, 2 * pairs - 1, 2 * pairs, ids - 1, ids)) {
+      val (_, got, semi) = verified(Some(cap))
+      assert(got === want, s"cap $cap")
+      assert(semi === (ids <= cap), s"cap $cap: semi-filter $semi, $ids ids")
+    }
   }
 
   test("above-cap verify: the disk-backed single shingle materialization " +

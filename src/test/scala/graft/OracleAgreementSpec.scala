@@ -18,20 +18,6 @@ class OracleAgreementSpec extends SparkSpecBase {
     "q_takedown_survivor")
 
   test("the registered oracles of the shared fragments match the engine on sf0.001") {
-    val out = java.nio.file.Files.createTempDirectory("graft_oracle_agreement")
-    names.foreach { name =>
-      SparkEntry.queries(name)(spark, sfDir).coalesce(1).write
-        .parquet(s"$out/$name")
-    }
-    java.nio.file.Files.writeString(out.resolve("oracle_sql.json"),
-      org.json4s.jackson.Serialization.write(
-        names.map(n => n -> SparkEntry.oracleSql(n)).toMap)(
-        org.json4s.DefaultFormats))
-    val log = new StringBuilder
-    val exit = scala.sys.process.Process(
-      Seq("python3", "tools/check_oracle.py", sfDir, out.toString))
-      .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
-    assert(exit === 0, log.toString)
-    assert(log.toString.contains(s"${names.size} ok, 0 bad"), log.toString)
+    assertOracleAgrees(names, sfDir)
   }
 }

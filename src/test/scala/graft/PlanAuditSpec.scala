@@ -354,6 +354,29 @@ class PlanAuditSpec extends SparkSpecBase {
     assert(!p.contains("Exchange hashpartitioning"), p)
   }
 
+  test("dedup builds stay within their job budgets, and the verify join " +
+      "reuses the shingle side's exchange") {
+    import spark.implicits._
+    // warm the schema memo, so a table's first-read inference is not counted
+    graft.ops.Tables.documents(spark, sfDir)
+    graft.ops.Tables.embeddings(spark, sfDir)
+    // the candidate plan's two shuffle stages and the one pass that
+    // materializes and counts its checkpoint
+    def build(name: String) = jobsDuring(SparkEntry.queries(name)(spark, sfDir))
+    val (_, ndJobs) = build("q_minhash_neardup")
+    assert(ndJobs.size <= 3, s"q_minhash_neardup build: ${ndJobs.size} jobs")
+    // the codebook collect
+    val (_, sdJobs) = build("q_semantic_dedup")
+    assert(sdJobs.size <= 1, s"q_semantic_dedup build: ${sdJobs.size} jobs")
+    val docs = graft.ops.Tables.documents(spark, sfDir)
+      .select($"doc_id", $"text")
+    val v = graft.operators.NearDup.verifiedCandidates(docs,
+      graft.operators.NearDup.candidatesFromBands(
+        graft.operators.NearDup.bandedOver(docs)))
+    v.collect()
+    assert(plan(v).contains("ReusedExchange"), plan(v))
+  }
+
   test("no registered query plans a CartesianProduct") {
     SparkEntry.queries.foreach { case (name, fn) =>
       val p = plan(fn(spark, sfDir))

@@ -101,6 +101,62 @@ class SimilaritySpec extends SparkSpecBase {
     df.unpersist()
   }
 
+  /** A table directory holding `embeddings` as its embeddings table (one
+    * parquet file, as the fixtures ship) and the fixture's other tables,
+    * so every registered query and its DuckDB oracle can run on it. */
+  private def withEmbeddings(
+      embeddings: org.apache.spark.sql.DataFrame): String = {
+    import java.nio.file.{Files, Paths}
+    val dir = Files.createTempDirectory("graft-embeddings")
+    Files.list(Paths.get(sfDir)).forEach { f =>
+      if (f.getFileName.toString != "embeddings.parquet")
+        Files.createSymbolicLink(dir.resolve(f.getFileName), f)
+    }
+    val tmp = dir.resolve("embeddings.tmp")
+    embeddings.coalesce(1).write.parquet(tmp.toString)
+    val part = Files.list(tmp).filter(_.toString.endsWith(".parquet"))
+      .findFirst().get
+    Files.move(part, dir.resolve("embeddings.parquet"))
+    dir.toString
+  }
+
+  test("semantic dedup: an all-zero embedding is no duplicate and every " +
+      "cosine stays defined, flat and two-level, as the oracles say") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions._
+    val zeroId = 100L
+    val dir = withEmbeddings(graft.ops.Tables.embeddings(spark, sfDir)
+      .withColumn("embedding", when($"vec_id" === zeroId,
+        transform($"embedding", _ => lit(0.0f))).otherwise($"embedding")))
+    assertOracleAgrees(Seq("q_semantic_dedup", "q_semantic_dedup2"), dir)
+    Seq(Similarity.semanticDedup(spark, dir),
+        Similarity.semanticDedup2(spark, dir)).foreach { df =>
+      assert(df.where($"vec_id" === zeroId).select($"is_dup")
+        .as[Boolean].collect().toSeq === Seq(false))
+    }
+  }
+
+  test("semantic dedup: a cell-mate at exactly tau is a duplicate, and the " +
+      "higher id is the one dropped") {
+    import spark.implicits._
+    // one seed (vec_id < 8), so every vector shares its cell. cos(10, 11)
+    // = 3 / (1 · 10) = 0.3 exactly in doubles; 13 sits just below tau
+    // against 10 and near 1 against 11; the seed is below tau against all
+    val rows = Seq(
+      0L -> Seq(0f, 0f, 0f, 1f),
+      10L -> Seq(1f, 0f, 0f, 0f),
+      11L -> Seq(3f, 9f, 3f, 1f),
+      13L -> Seq(3f, 9f, 3f, 1.01f))
+    val dir = withEmbeddings(rows.map { case (id, v) => (id, v, 0) }
+      .toDF("vec_id", "embedding", "label"))
+    val got = Similarity.semanticDedup(spark, dir)
+      .as[(Long, Long, Boolean)].collect()
+    assert(got.map(_._2).toSet === Set(0L))
+    assert(got.map(r => r._1 -> r._3).toSeq ===
+      Seq(0L -> false, 10L -> false, 11L -> true, 13L -> true))
+    assertOracleAgrees(Seq("q_semantic_dedup"), dir)
+  }
+
   test("incremental semantic dedup: fresh-only verdicts, corpus always wins, brute-force agrees") {
     import spark.implicits._
     val full = Similarity.semanticDedup(spark, sfDir)

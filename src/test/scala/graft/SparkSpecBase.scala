@@ -40,6 +40,28 @@ trait SparkSpecBase extends AnyFunSuite {
       (out, jobs.toArray(Array.empty[java.util.Properties]).toSeq)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** The registered queries `names`, run on the tables under `dir`, equal
+    * their DuckDB oracles under `tools/check_oracle.py`'s rule: columns
+    * sorted by name, equal row count, equal values row by row. `dir`
+    * must hold every table the script opens. */
+  def assertOracleAgrees(names: Seq[String], dir: String): Unit = {
+    val out = java.nio.file.Files.createTempDirectory("graft_oracle_agreement")
+    names.foreach { name =>
+      SparkEntry.queries(name)(spark, dir).coalesce(1).write
+        .parquet(s"$out/$name")
+    }
+    java.nio.file.Files.writeString(out.resolve("oracle_sql.json"),
+      org.json4s.jackson.Serialization.write(
+        names.map(n => n -> SparkEntry.oracleSql(n)).toMap)(
+        org.json4s.DefaultFormats))
+    val log = new StringBuilder
+    val exit = scala.sys.process.Process(
+      Seq("python3", "tools/check_oracle.py", dir, out.toString))
+      .!(scala.sys.process.ProcessLogger(l => log.append(l).append('\n')))
+    assert(exit === 0, log.toString)
+    assert(log.toString.contains(s"${names.size} ok, 0 bad"), log.toString)
+  }
 }
 
 object SparkSpecBase {
